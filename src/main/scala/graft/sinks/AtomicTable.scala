@@ -271,7 +271,7 @@ object AtomicTable {
         if (liveFiles0.nonEmpty) {
           def shape(s: org.apache.spark.sql.types.StructType) =
             s.fields.map(f => (f.name, f.dataType)).sortBy(_._1).toSeq
-          val liveSchema = spark.read.parquet(liveFiles0.head.toString).schema
+          val liveSchema = Footers.schema(spark, liveFiles0.head)
           if (shape(df.schema) != shape(liveSchema))
             throw new IllegalStateException(
               "append batch schema drifts from the linked live files' " +
@@ -425,7 +425,7 @@ object AtomicTable {
       pruneAgeMs: Long = MergePruneAgeMs, statsCols: Seq[String] = Nil)
       (merge: Option[DataFrame] => DataFrame): String =
     occCommit(root, maxRetries, pruneAgeMs) { (base, stageDir) =>
-      val live = base.map(v => spark.read.parquet(s"$root/$v"))
+      val live = base.map(v => Footers.readDir(spark, Paths.get(root, v)))
       merge(live).write.mode("overwrite").parquet(stageDir.toString)
       // statsCols: index the staged outputs into the version's _KEYSTATS
       // sidecar (one local footer read per fresh file, executor-parallel
@@ -579,7 +579,7 @@ object AtomicTable {
   def read(spark: SparkSession, root: String): DataFrame = {
     val v = currentVersion(root).getOrElse(
       throw new IllegalStateException(s"no committed version at $root"))
-    spark.read.parquet(s"$root/$v")
+    Footers.readDir(spark, Paths.get(root, v))
   }
 
   /** Committed version directories present on disk, oldest first. Live is
@@ -605,7 +605,7 @@ object AtomicTable {
     * back to live data. */
   def readVersion(spark: SparkSession, root: String, version: String): DataFrame = {
     requireRetained(root, version)
-    spark.read.parquet(s"$root/$version")
+    Footers.readDir(spark, Paths.get(root, version))
   }
 
   /** RESTORE a retained version as the NEW live version (Delta `RESTORE

@@ -212,7 +212,7 @@ object BloomManifest {
     require(bits >= 64 && (bits & (bits - 1)) == 0,
       s"bits must be a power of two >= 64: $bits")
     import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
-    val kind = spark.read.parquet(files.head.toString).schema(keyCol).dataType match {
+    val kind = Footers.schema(spark, files.head)(keyCol).dataType match {
       case LongType | IntegerType => "long"
       case StringType => "string"
       case t => throw new IllegalArgumentException(
@@ -225,7 +225,7 @@ object BloomManifest {
       else udf((s: String) =>
         if (s == null) Array.empty[(Int, Long)]
         else positions(KeyBloom.stringBytes(s), bits, k))
-    val masked = spark.read.parquet(files.map(_.toString): _*)
+    val masked = Footers.read(spark, files)
       .select(input_file_name().as("f"), explode(masks(col(keyCol))).as("m"))
     (rowsFromMasks(masked, keyCol, kind, bits, k), kind)
   }
@@ -252,7 +252,7 @@ object BloomManifest {
       require(bits >= 64 && (bits & (bits - 1)) == 0,
         s"bits must be a power of two >= 64: $bits")
       val keyCols = CompositeKey.componentsOf(cname)
-      val schema = spark.read.parquet(files.head.toString).schema
+      val schema = Footers.schema(spark, files.head)
       val kinds = CompositeKey.kindsOf(schema, keyCols).getOrElse(
         throw new IllegalArgumentException(
           s"composite bloom manifest supports BIGINT/INT/STRING components, got " +
@@ -262,7 +262,7 @@ object BloomManifest {
         if (b == null) Array.empty[(Int, Long)] else positions(b, bits, k))
       val bytesCol = CompositeKey.bytesUdf(kinds)(
         struct(CompositeKey.keySelect(kinds, keyCols): _*))
-      val masked = spark.read.parquet(files.map(_.toString): _*)
+      val masked = Footers.read(spark, files)
         .select(input_file_name().as("f"), explode(masks(bytesCol)).as("m"))
       (rowsFromMasks(masked, cname, kind, bits, k), kind)
     }
@@ -343,9 +343,9 @@ object BloomManifest {
     val legacy = shardFiles(manifestPath(liveDir))
     val (carriedRows, carriedHeader) = shardDir(liveDir) match {
       case Some(d) if header.nonEmpty =>
-        (Some(spark.read.parquet(d.toString)), header)
+        (Some(Footers.readDir(spark, d)), header)
       case None if header.nonEmpty && legacy.nonEmpty =>
-        (Some(spark.read.parquet(legacy.map(_.toString): _*)), header)
+        (Some(Footers.read(spark, legacy)), header)
       case _ => (None, Map.empty[(String, String), HeaderRow])
     }
     val all = carriedRows.fold(freshRows)(_.unionByName(freshRows))
@@ -394,7 +394,7 @@ object BloomManifest {
     import spark.implicits._
     val posDf = broadcast(pos.toDF("bits", "k", "idx", "mask", "keyId", "p"))
     val idxs = pos.map(_._3).distinct
-    val m0 = spark.read.parquet(mDir.toString)
+    val m0 = Footers.readDir(spark, mDir)
       .filter(col("cname") === keyCol && col("kind") === kind)
     // scan pushdown on the sorted idx: the manifest prunes its own row
     // groups for a point probe
@@ -474,7 +474,7 @@ object BloomManifest {
           col("m._1").as("idx"), col("m._2").as("mask"),
           base64(col("__k")).as("keyId"), col("m._3").as("p"))
     }
-    val m = spark.read.parquet(mDir.toString)
+    val m = Footers.readDir(spark, mDir)
       .filter(col("cname") === keyCol && col("kind") === kind)
     val admitted = admit(m, posPerCombo.reduce(_.unionByName(_)))
     recordProbe(versionDir, keyCol, mDir, admitted.size)
@@ -549,7 +549,7 @@ object BloomManifest {
       val keepNames = reusedNames.toSeq.toDF("file")
       // explicit shard paths, not the directory: a legacy manifest dir may
       // also hold a crashed rebuild's orphan generation subdirectory
-      val carried = spark.read.parquet(old.map(_.toString): _*)
+      val carried = Footers.read(spark, old)
         .join(keepNames, Seq("file"), "left_semi")
         .select(col("cname"), col("kind"), col("bits"), col("k"),
           col("file"), col("idx"), col("word"))
@@ -578,7 +578,7 @@ object BloomManifest {
     import spark.implicits._
     val liveNames = TargetedDelete.partFiles(liveDir)
       .map(_.getFileName.toString).toDF("file")
-    val compacted = spark.read.parquet(mDir.get.toString)
+    val compacted = Footers.readDir(spark, mDir.get)
       .join(liveNames, Seq("file"), "left_semi")
       .select(col("cname"), col("kind"), col("bits"), col("k"),
         col("file"), col("idx"), col("word"))

@@ -1,5 +1,7 @@
 package graft.sinks
 
+import java.nio.file.Paths
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -156,7 +158,7 @@ object CdcApply {
     // third is written mid-corridor, after the crash window — see below)
     FeedSlices.writeSlices(feed.filter(col("seq") === 1)
       .withColumn(FeedSlices.SliceCol, (col("id") % 2).cast("int")), feedDir, 2)
-    val schema = spark.read.parquet(s"$feedDir/b0").schema
+    val schema = Footers.readDir(spark, Paths.get(feedDir, "b0")).schema
     val applied = new java.util.concurrent.atomic.AtomicInteger(0)
     val redelivered = new java.util.concurrent.atomic.AtomicInteger(0)
     def runStream(): Unit = {
@@ -230,7 +232,7 @@ object CdcApply {
     val feed = Tables.stageLocal(changeFeed(spark, dir))
     FeedSlices.writeSlices(feed.withColumn(FeedSlices.SliceCol,
       when(col("seq") === 2, 2).otherwise(col("id") % 2).cast("int")), feedDir, 3)
-    val schema = spark.read.parquet(s"$feedDir/b0").schema
+    val schema = Footers.readDir(spark, Paths.get(feedDir, "b0")).schema
     val q = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$feedDir/b*")
       .writeStream

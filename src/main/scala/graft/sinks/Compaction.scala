@@ -73,6 +73,9 @@ object Compaction {
       // (AtomicTable's protocol) — here the affected slice is the small
       // fraction being compacted, so an eager local materialization is the
       // same read-before-delete discipline without the extra table layer.
+      // inferred, not footer-read: the table is hive-partitioned, and only
+      // Spark's partition discovery reads the partition column from the
+      // directory names
       val staged = spark.read.parquet(path)
         .filter(col("event_type").isin(affected: _*)) // partition-pruned read
         .withColumn("salt", pmod(col("event_id"), saltFor))
@@ -92,7 +95,7 @@ object Compaction {
   def qS18Compaction(spark: SparkSession, dir: String): DataFrame = {
     val path = fragmentWrite(spark, dir)
     compact(spark, path)
-    spark.read.parquet(path)
+    spark.read.parquet(path) // partitioned: inferred, see compact
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"),
         round(sum(col("value")), 4).as("sum_value"),
@@ -164,7 +167,7 @@ object Compaction {
       val sideRows = TargetedDelete.loadStats(liveDir)
       def rcOf(name: String): Long = sideRows.collectFirst {
         case ((f, _), r) if f == name => r.rowCount }.getOrElse(-1L)
-      spark.read.parquet(small.map(_.toString): _*)
+      Footers.read(spark, small)
         .repartition(n)
         .write.options(KeyBloom.nativeWriteOptionsCols(
           blooms.keys.map(_._2).toSet ++ BloomManifest.coveredColumns(liveDir),
@@ -323,7 +326,7 @@ object Compaction {
         val bytes = comp.map(JFiles.size(_)).sum
         val n = math.max(1L, math.min(comp.size.toLong,
           (bytes + targetBytes - 1) / targetBytes)).toInt
-        spark.read.parquet(comp.map(_.toString): _*)
+        Footers.read(spark, comp)
           .repartitionByRange(n, col(keyCol))
           .sortWithinPartitions(col(keyCol))
       }

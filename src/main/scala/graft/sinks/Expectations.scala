@@ -226,7 +226,7 @@ object Expectations {
     val rules = Seq(
       Expectation("long_enough", col("n_chars") >= MinChars),
       Expectation("allowed_lang", col("lang").isin("en", "fr", "de", "es")))
-    val schema = spark.read.parquet(s"$feedDir/b0").schema
+    val schema = Footers.readDir(spark, Paths.get(feedDir, "b0")).schema
     val applied = new java.util.concurrent.atomic.AtomicInteger(0)
     val redelivered = new java.util.concurrent.atomic.AtomicInteger(0)
     def runStream(): Unit = {

@@ -151,7 +151,7 @@ object KeyBloom {
     * ONE schema open shared by the TSV and manifest maintenance passes
     * (a retyped column lapses like a dropped one). */
   private[sinks] def bloomableCols(spark: SparkSession, file: Path): Set[String] =
-    spark.read.parquet(file.toString).schema.fields.collect {
+    Footers.schema(spark, file).fields.collect {
       case f if Set[org.apache.spark.sql.types.DataType](
         LongType, IntegerType, StringType)(f.dataType) => f.name
     }.toSet
@@ -199,7 +199,7 @@ object KeyBloom {
       bits: Int): Map[(String, String), BloomRow] = {
     require(bits >= 64 && (bits & (bits - 1)) == 0, s"bits must be a power of two >= 64: $bits")
     if (files.isEmpty) return Map.empty
-    val kind = spark.read.parquet(files.head.toString).schema(keyCol).dataType match {
+    val kind = Footers.schema(spark, files.head)(keyCol).dataType match {
       case LongType | IntegerType => "long"
       case StringType => "string"
       case t => throw new IllegalArgumentException(
@@ -210,7 +210,7 @@ object KeyBloom {
         if (k == null) Array.empty[(Int, Long)] else wordMasks(longBytes(k), bits))
       else udf((s: String) =>
         if (s == null) Array.empty[(Int, Long)] else wordMasks(stringBytes(s), bits))
-    val collected = spark.read.parquet(files.map(_.toString): _*)
+    val collected = Footers.read(spark, files)
       .select(input_file_name().as("f"), explode(masks(col(keyCol))).as("m"))
       .groupBy(col("f"), col("m._1").as("w"))
       .agg(expr("bit_or(m._2)").as("word"))
@@ -238,7 +238,7 @@ object KeyBloom {
     require(bits >= 64 && (bits & (bits - 1)) == 0,
       s"bits must be a power of two >= 64: $bits")
     if (files.isEmpty) return Map.empty
-    val schema = spark.read.parquet(files.head.toString).schema
+    val schema = Footers.schema(spark, files.head)
     val kinds = CompositeKey.kindsOf(schema, keyCols).getOrElse(
       throw new IllegalArgumentException(
         s"composite bloom supports BIGINT/INT/STRING components, got " +
@@ -249,7 +249,7 @@ object KeyBloom {
       if (b == null) Array.empty[(Int, Long)] else wordMasks(b, bits))
     val bytesCol = CompositeKey.bytesUdf(kinds)(
       struct(CompositeKey.keySelect(kinds, keyCols): _*))
-    val collected = spark.read.parquet(files.map(_.toString): _*)
+    val collected = Footers.read(spark, files)
       .select(input_file_name().as("f"), explode(masks(bytesCol)).as("m"))
       .groupBy(col("f"), col("m._1").as("w"))
       .agg(expr("bit_or(m._2)").as("word"))

@@ -3,9 +3,6 @@ package graft.sinks
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
 
 /** MANIFEST-HELD per-file column statistics for AtomicTable versions — the
@@ -163,13 +160,8 @@ object KeyStats {
     * holds all columns' block stats, so one open serves them all. */
   def footerStatRows(f: String, keyCols: Seq[String]): Map[String, StatRow] = {
     footerOpens.incrementAndGet()
-    val in = HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(Paths.get(f).toUri), new Configuration())
-    val r = ParquetFileReader.open(in)
-    try {
-      val blocks = r.getFooter.getBlocks.asScala.toSeq
-      keyCols.map(c => c -> statFromBlocks(blocks, c)).toMap
-    } finally r.close()
+    val blocks = Footers.open(f).getBlocks.asScala.toSeq
+    keyCols.map(c => c -> statFromBlocks(blocks, c)).toMap
   }
 
   /** Single-column form of [[footerStatRows]]. */

@@ -371,8 +371,8 @@ object KeyedMerge {
     // base = ONLY the intersecting files' rows; stats-disjoint files cannot
     // hold a matched key, so the kernel never needs to see them
     val base =
-      if (rewrite.nonEmpty) spark.read.parquet(rewrite.map(_.toString): _*)
-      else spark.read.parquet(files.head.toString).where(lit(false))
+      if (rewrite.nonEmpty) Footers.read(spark, rewrite)
+      else Footers.read(spark, files.take(1)).where(lit(false))
     // layout maintenance: range-repartition the rewrite output back onto the
     // key so the clustered layout (and with it, the NEXT merge's pruning)
     // survives the merge instead of shattering into shuffle.partitions-many

@@ -613,7 +613,7 @@ object Maintenance {
             (col("id") * 7L + i).as("bal_c")))
         .withColumn(FeedSlices.SliceCol, lit(i))
     }.reduce(_ unionAll _), feedDir, StreamBatches)
-    val schema = spark.read.parquet(s"$feedDir/b0").schema
+    val schema = Footers.readDir(spark, Paths.get(feedDir, "b0")).schema
     def upsert(b: DataFrame, c: DataFrame): DataFrame =
       b.join(c.select(col("id"), col("bal_c").as("nb")), Seq("id"), "full_outer")
         .select(col("id"), coalesce(col("nb"), col("bal_c")).as("bal_c"))

@@ -10,9 +10,11 @@ import org.apache.spark.sql.expressions.Window
   * deployment each of these becomes one `MERGE INTO` statement with identical
   * semantics and the callers don't change.
   *
-  * Scale: merge is one shuffle on the upsert key (or a broadcast when the
-  * incoming batch is small — ingest batches are ≤ thousands of rows against a
-  * large table, exactly the broadcast-merge case).
+  * Scale: merge is one shuffled full outer join on the upsert key. Spark
+  * cannot broadcast either side of a full outer join, so even a micro-batch
+  * of a few rows shuffles both sides; the stats-pruned merge
+  * ([[KeyedMerge]]) keeps the base side down to the files the batch's keys
+  * can touch.
   */
 object MergeSink {
 

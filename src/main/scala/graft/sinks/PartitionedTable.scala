@@ -46,6 +46,8 @@ object PartitionedTable {
     * days) over the table written by [[writePartitioned]]. Exposed separately
     * so the spec can assert pruning on the exact DataFrame the query runs. */
   def prunedRead(spark: SparkSession, path: String): DataFrame =
+    // inferred, not footer-read: the partition columns live in the
+    // directory names, which only Spark's partition discovery reads
     spark.read.parquet(path)
       .filter(col("event_type") === "purchase" &&
         col("event_date").between("2024-01-10", "2024-01-15"))

@@ -132,8 +132,8 @@ object StatsRead {
     * the producers, which always leave a schema-bearing part file). */
   private def emptyLike(spark: SparkSession, files: Seq[java.nio.file.Path],
       liveDir: java.nio.file.Path): DataFrame =
-    if (files.nonEmpty) spark.read.parquet(files.head.toString).where(lit(false))
-    else spark.read.parquet(liveDir.toString).where(lit(false))
+    (if (files.nonEmpty) Footers.read(spark, files.take(1))
+     else Footers.readDir(spark, liveDir)).where(lit(false))
 
   /** DYNAMIC FILE PRUNING, join-shaped (Delta's DFP, decided from the
     * manifest instead of at runtime): join `probe` against the live version
@@ -171,7 +171,7 @@ object StatsRead {
     val touchedFiles = files.filter(f => touched(f.getFileName.toString))
     val base =
       if (touchedFiles.isEmpty) emptyLike(spark, files, dir)
-      else spark.read.parquet(touchedFiles.map(_.toString): _*)
+      else Footers.read(spark, touchedFiles)
     (base.join(stableProbe, Seq(keyCol), "inner"),
       ReadStats(v, files.size, touchedFiles.size, unknown.size))
   }
@@ -200,7 +200,7 @@ object StatsRead {
     }
     val df =
       if (touched.isEmpty) emptyLike(spark, files, Paths.get(root, v))
-      else preds.foldLeft(spark.read.parquet(touched.map(_.toString): _*)) {
+      else preds.foldLeft(Footers.read(spark, touched)) {
         case (d, (c, ks)) => TargetedDelete.matched(d, c, ks)
       }
     (df, ReadStats(v, files.size, touched.size, opened))
@@ -295,7 +295,7 @@ object StatsRead {
     val df =
       if (touched.isEmpty) emptyLike(spark, files, dir)
       else TargetedDelete.matched(
-        spark.read.parquet(touched.map(_.toString): _*), keyCol, ks)
+        Footers.read(spark, touched), keyCol, ks)
     (df, ReadStats(v, files.size, touched.size, opened, manifested.size))
   }
 
@@ -345,7 +345,7 @@ object StatsRead {
     val touchedFiles = files.filter(f => asg.touched(f.getFileName.toString))
     val base =
       if (touchedFiles.isEmpty) emptyLike(spark, files, dir)
-      else spark.read.parquet(touchedFiles.map(_.toString): _*)
+      else Footers.read(spark, touchedFiles)
     // row-level tail, tiered like every other key filter: a small tuple
     // set becomes a literal OR-of-ANDs (each conjunct's equalities push
     // into the surviving files' row-group stats); larger driver-sized sets
@@ -420,7 +420,7 @@ object StatsRead {
     }.sum
     val scanned =
       if (scanFiles.isEmpty) 0L
-      else spark.read.parquet(scanFiles.map(_.toString): _*)
+      else Footers.read(spark, scanFiles)
         .filter(ks.matchPredicate(keyCol)).count()
     (metaCount + scanned,
       CountStats(live, files.size, metaFiles.size, scanFiles.size, opened))
@@ -467,6 +467,9 @@ object StatsRead {
         // But ONLY for integral columns — on anything else the cast would
         // null out uncastable values and fold a silently PARTIAL answer, so
         // non-integral schema drift fails loudly instead.
+        // Stats-less files are where a retyped key column lands, so this
+        // scan keeps Spark's schema inference instead of trusting the first
+        // file's footer ([[Footers]]) to speak for all of them.
         import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
         val scanDf = spark.read.parquet(scan.map(_.toString): _*)
         scanDf.schema(keyCol).dataType match {
@@ -505,6 +508,7 @@ object StatsRead {
     val scanned =
       if (scan.isEmpty) None
       else {
+        // inferred, not footer-read: see minMaxLong's stats-less scan
         val row = spark.read.parquet(scan.map(_.toString): _*)
           .agg(min(col(keyCol).cast("string")), max(col(keyCol).cast("string"))).head
         if (row.isNullAt(0)) None else Some((row.getString(0), row.getString(1)))
@@ -900,7 +904,7 @@ object StatsRead {
     // saturation premise: the manifest holds ~the dense row count
     val mDir = BloomManifest.shardDir(live).getOrElse(
       throw new IllegalStateException("manifest generation missing"))
-    val mRows = spark.read.parquet(mDir.toString)
+    val mRows = Footers.readDir(spark, mDir)
       .filter(col("cname") === "row_hash").count()
     val nFiles = TargetedDelete.partFiles(live).size
     val dense = nFiles.toLong * (SatBits / 64)

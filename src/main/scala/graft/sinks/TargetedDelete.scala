@@ -463,9 +463,9 @@ object TargetedDelete {
       rowContained(pr.keyRows(f.getFileName.toString), ks))
     // a delete that would drop EVERY file must still publish a READABLE
     // version: demote one dropped file to the rewrite path so its 0-row
-    // rewrite leaves a schema-bearing part file (spark.read.parquet on a
-    // fileless directory cannot infer a schema — the table would be
-    // permanently unreadable)
+    // rewrite leaves a schema-bearing part file (a fileless directory has
+    // no footer to take a schema from — the table would be permanently
+    // unreadable)
     val (dropped, rewrite) =
       if (rewrite0.isEmpty && pr.reused.isEmpty && dropped0.nonEmpty)
         (dropped0.tail, dropped0.take(1))
@@ -475,7 +475,7 @@ object TargetedDelete {
       // one job over ONLY the partially-intersecting files; bloomed tables
       // keep parquet-native blooms in the surviving rewrite too
       val rewriteOut = stageDir.resolve("rewrite")
-      survivors(spark.read.parquet(rewrite.map(_.toString): _*), keyCol, ks)
+      survivors(Footers.read(spark, rewrite), keyCol, ks)
         .write.options(KeyBloom.nativeWriteOptionsCols(
           pr.blooms.keys.map(_._2).toSet ++ BloomManifest.coveredColumns(liveDir),
           KeyBloom.ndvFor(rewrite, n => pr.keyRows(n).rowCount)))
@@ -669,7 +669,7 @@ object TargetedDelete {
         .repartitionByRange(8, col("doc_id"))
         .sortWithinPartitions(col("doc_id")), root)
     deleteKeys(spark, root, "doc_id", deleteSet)
-    spark.read.parquet(s"$root/${AtomicTable.currentVersion(root).get}")
+    AtomicTable.read(spark, root)
       .groupBy(col("lang"), col("source"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_chars")).as("sum_chars"),
@@ -678,7 +678,7 @@ object TargetedDelete {
 
   /** Post-delete survivor aggregate — the shared tail of every s22 query. */
   private def survivorAgg(spark: SparkSession, root: String): DataFrame =
-    spark.read.parquet(s"$root/${AtomicTable.currentVersion(root).get}")
+    AtomicTable.read(spark, root)
       .groupBy(col("lang"), col("source"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_chars")).as("sum_chars"),

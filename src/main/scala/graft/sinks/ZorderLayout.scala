@@ -78,7 +78,7 @@ object ZorderLayout {
     * un-clustered source, covering the whole round trip (code, range
     * write, read, filter). */
   def boxRead(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    Footers.readDir(spark, java.nio.file.Paths.get(path))
       .filter(col("l_partkey") <= 100 && col("l_suppkey") <= 5)
       .groupBy(col("l_suppkey"))
       .agg(count(lit(1)).as("n_rows"),

@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.sinks.{AtomicTable, MergeSink}
 import graft.sources.HttpSource
@@ -20,10 +21,26 @@ import graft.sources.HttpSource
   * manifest-skipped for BOTH the poi table and the quota ledger, so a crash
   * between the two commits converges without double-spend or double-apply).
   *
-  * Scale: admission is one window over the micro-batch + a broadcast join
-  * against the (|api_types|-row) ledger; fetch parallelism = partitions
-  * (each with its own transport + rate limiter); the upsert is the standard
-  * broadcast-merge. Nothing collects to the driver.
+  * One micro-batch evaluates each step once, on first use, so a table that
+  * already absorbed the batch never forces it (a redelivery both tables skip
+  * runs no job and sends no request):
+  *
+  *  1. the ledger (|api_types| rows) is read and collected — one job;
+  *  2. admission is one window over the micro-batch, with the ledger's
+  *     rows as literals, collected — a shuffle-map job and a result job.
+  *     The rows reach the driver: the admitted set is bounded by the daily
+  *     quota, and the new ledger is derived from these rows
+  *     ([[nextLedger]]) instead of re-running the window;
+  *  3. the admitted URLs are fetched and parsed, and the changeset is
+  *     collected once — one job, each admitted request sent once (one
+  *     transport + rate limiter per partition). The stats-pruned merge's
+  *     key probe and its kernel both read this local changeset, so they see
+  *     the same rows and the probe runs no job;
+  *  4. the poi upsert is the stats-pruned keyed merge: the touched files
+  *     (read with their footer schema, no inference job) full-outer-joined
+  *     with the changeset — a shuffled join, one job per exchange plus the
+  *     write;
+  *  5. the new ledger is written from the driver — one job.
   */
 object IngestLoop {
 
@@ -31,53 +48,59 @@ object IngestLoop {
 
   val DayUs: Long = QuotaBucket.DayUs
 
+  /** One api_type's bucket: requests admitted on UTC day `day_idx`. */
+  final case class LedgerRow(api_type: String, day_idx: Long, used: Long)
+
+  /** One request's admission: the ledger count carried into its day
+    * (`prior`) and whether the bucket admitted it. */
+  final case class AdmissionRow(api_type: String, day_idx: Long, prior: Long,
+    admitted: Boolean, url: String)
+
   /** Quota-gate a time-ordered request batch against the persisted ledger.
     * Ledger rows are (api_type, day_idx, used); a request's day past the
     * ledger day refills the bucket (UTC-midnight reset), same-day requests
-    * continue the count. Returns the batch annotated with `admitted` plus
-    * the updated ledger. */
-  def admit(batch: DataFrame, ledger: DataFrame, limit: Int): (DataFrame, DataFrame) = {
+    * continue the count. Returns the batch annotated with `day_idx`, `seq`,
+    * `prior` (the ledger count carried into its day) and `admitted`. */
+  def admit(batch: DataFrame, ledger: Seq[LedgerRow], limit: Int): DataFrame = {
     val w = Window.partitionBy(col("api_type"), col("day_idx"))
       .orderBy(col("ts_us").asc, col("request_id").asc)
-    val seqd = batch
+    // the ledger holds one row per api_type: its fields enter the plan as
+    // per-api_type literals (NULL for an api_type it has never seen)
+    def ledgerField(f: LedgerRow => Long): Column =
+      ledger.foldLeft(lit(null).cast("long")) { (acc, r) =>
+        when(col("api_type") === r.api_type, lit(f(r))).otherwise(acc)
+      }
+    val (ledDay, ledUsed) = (ledgerField(_.day_idx), ledgerField(_.used))
+    batch
       .withColumn("day_idx", expr(s"ts_us div $DayUs"))
       .withColumn("seq", row_number().over(w))
-    val withPrior = seqd.join(
-      broadcast(ledger.select(col("api_type"),
-        col("day_idx").as("led_day"), col("used").as("led_used"))),
-      Seq("api_type"), "left")
       // the ledger count carries over only within the same UTC day
       .withColumn("prior",
-        when(col("led_day") === col("day_idx"), col("led_used")).otherwise(0L))
+        when(ledDay === col("day_idx"), ledUsed).otherwise(0L))
       // a request timestamped BEFORE the ledger's day is a late arrival for a
-      // bucket that already closed — never admit it, and (below) never let it
-      // regress the ledger. The stream form (QuotaBucket.admissionStream)
-      // guards `d > day` the same way.
+      // bucket that already closed — never admit it, and ([[nextLedger]])
+      // never let it regress the ledger. The stream form
+      // (QuotaBucket.admissionStream) guards `d > day` the same way.
       .withColumn("admitted",
-        (col("led_day").isNull || col("day_idx") >= col("led_day")) &&
+        (ledDay.isNull || col("day_idx") >= ledDay) &&
           col("prior") + col("seq") <= limit)
-    val touched = withPrior
-      .groupBy(col("api_type"), col("day_idx"))
-      .agg((max(col("prior")) + sum(when(col("admitted"), 1L).otherwise(0L))).as("used"))
-      // keep only each api_type's newest day: the bucket has no memory
-      // across the reset
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("api_type")).orderBy(col("day_idx").desc)))
-      .filter(col("rk") === 1).drop("rk")
-    // the committed ledger REPLACES the table, so api_types idle in this
-    // micro-batch must carry their rows forward; and per api_type the GREATER
-    // day wins (a micro-batch holding only stale-day stragglers must not roll
-    // the ledger back and refill an exhausted bucket — daily-quota
-    // double-spend). Same day in both → touched wins (its `used` is
-    // prior + newly admitted ≥ the ledger's count, so `used` desc breaks the
-    // tie toward the update).
-    val newLedger = ledger.select(col("api_type"), col("day_idx"), col("used"))
-      .unionByName(touched.select(col("api_type"), col("day_idx"), col("used")))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("api_type"))
-          .orderBy(col("day_idx").desc, col("used").desc)))
-      .filter(col("rk") === 1).drop("rk")
-    (withPrior.drop("led_day", "led_used", "prior"), newLedger)
+  }
+
+  /** The ledger after a batch, from its admission rows. Each touched
+    * (api_type, day) counts `prior` plus its admitted requests. The
+    * committed ledger REPLACES the table, so api_types idle in this batch
+    * carry their rows forward; and per api_type the GREATER day wins (a
+    * batch holding only stale-day stragglers must not roll the ledger back
+    * and refill an exhausted bucket — daily-quota double-spend). Same day in
+    * both → the greater count wins (a touched day's count is prior + newly
+    * admitted ≥ the ledger's). */
+  def nextLedger(ledger: Seq[LedgerRow],
+      admission: Seq[AdmissionRow]): Seq[LedgerRow] = {
+    val touched = admission.groupBy(a => (a.api_type, a.day_idx)).map {
+      case ((api, day), rs) => LedgerRow(api, day, rs.map(_.prior).max + rs.count(_.admitted))
+    }
+    (ledger ++ touched).groupBy(_.api_type).values
+      .map(_.maxBy(r => (r.day_idx, r.used))).toSeq.sortBy(_.api_type)
   }
 
   /** Response schema of the S1-shaped fixture bodies. */
@@ -92,20 +115,24 @@ object IngestLoop {
       limit: Int, asOf: String, appId: String, batchId: Long,
       sleeper: Long => Unit = Thread.sleep(_: Long)): Unit = {
     import spark.implicits._
-    val ledger =
-      if (AtomicTable.currentVersion(ledgerRoot).isDefined) AtomicTable.read(spark, ledgerRoot)
-      else Seq.empty[(String, Long, Long)].toDF("api_type", "day_idx", "used")
-    val (annotated, newLedger) = admit(batch, ledger, limit)
-    val admitted = annotated.filter(col("admitted")).localCheckpoint()
-
-    val fetched = HttpSource.fetch(admitted.select(col("url")), "url",
-      transportFactory, sleeper = sleeper)
-    val parsed = fetched
-      .filter(col("status") === 200)
-      .select(from_json(col("body"),
-        org.apache.spark.sql.types.StructType.fromDDL(ResponseSchema)).as("r"))
-      .select(col("r.*"))
-      .withColumn("first_ingested_at", lit(null).cast("timestamp"))
+    lazy val ledger: Seq[LedgerRow] =
+      if (AtomicTable.currentVersion(ledgerRoot).isEmpty) Nil
+      else AtomicTable.read(spark, ledgerRoot).as[LedgerRow].collect().toSeq
+    lazy val admission: Seq[AdmissionRow] =
+      admit(batch, ledger, limit)
+        .select("api_type", "day_idx", "prior", "admitted", "url")
+        .as[AdmissionRow].collect().toSeq
+    lazy val changes: DataFrame = {
+      val fetched = HttpSource.fetch(
+        admission.filter(_.admitted).map(_.url).toDF("url"), "url",
+        transportFactory, sleeper = sleeper)
+      val parsed = fetched
+        .filter(col("status") === 200)
+        .select(from_json(col("body"), StructType.fromDDL(ResponseSchema)).as("r"))
+        .select(col("r.*"))
+        .withColumn("first_ingested_at", lit(null).cast("timestamp"))
+      spark.createDataFrame(parsed.collectAsList(), parsed.schema)
+    }
 
     // the poi upsert rides the STATS-PRUNED merge once a base version exists
     // (r18): each micro-batch rewrites only the files its keys intersect
@@ -122,8 +149,9 @@ object IngestLoop {
         updateCols = Seq("name", "rating"), asOf = asOf)
     graft.sinks.MultiCommit.commitBatchAll(spark, Seq(
       graft.sinks.MultiCommit.Keyed(poiRoot, "google_place_id",
-        () => parsed, (b, i) => upsertKernel(b, i), Seq("google_place_id")),
-      graft.sinks.MultiCommit.Replace(ledgerRoot, () => newLedger)),
+        () => changes, (b, i) => upsertKernel(b, i), Seq("google_place_id")),
+      graft.sinks.MultiCommit.Replace(ledgerRoot,
+        () => nextLedger(ledger, admission).toDF().coalesce(1))),
       appId, batchId)
     ()
   }

@@ -36,6 +36,24 @@ object IngestLoopSpec {
 
   def mkTransport(): HttpSource.Transport = new HttpSource.ReplayTransport(script)
   val noSleep: Long => Unit = _ => ()
+
+  /** Every URL a [[Counting]] transport sent, in send order (one JVM in
+    * local mode, so executor-side sends land here too). */
+  val sent = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+
+  /** Wraps a transport and records each send in [[sent]]. */
+  final class Counting(inner: HttpSource.Transport) extends HttpSource.Transport {
+    def send(url: String): HttpResponse = { sent.add(url); inner.send(url) }
+  }
+
+  // twenty requests on one day: r3 and r7 answer 503 once before their 200,
+  // r18 and r19 fall past the quota of 18
+  val countedScript: Map[String, Seq[HttpResponse]] = (0 until 20).map { i =>
+    val ok = HttpResponse(200, Map.empty, body(f"g$i%03d", s"Place $i", 4.0))
+    s"r$i" -> (if (i == 3 || i == 7) Seq(HttpResponse(503, Map.empty, ""), ok) else Seq(ok))
+  }.toMap
+  def mkCounting(): HttpSource.Transport =
+    new Counting(new HttpSource.ReplayTransport(countedScript))
 }
 
 class IngestLoopSpec extends AnyFunSuite {
@@ -148,5 +166,44 @@ class IngestLoopSpec extends AnyFunSuite {
       assert(!AtomicTable.read(spark, poiRoot).collect()
         .map(_.getString(0)).contains("g10"))
     } finally q.stop()
+  }
+
+  test("a micro-batch sends each admitted request once; a redelivery sends nothing") {
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("graftingestonce")
+    val (poiRoot, ledgerRoot) = (s"$base/poi", s"$base/ledger")
+    // a committed base, so the upsert takes the stats-pruned merge path
+    // (key probe + kernel), where a lazily re-evaluated changeset would
+    // fetch twice
+    AtomicTable.commit(Seq(("g001", "Old One", 1.0), ("g050", "Old Fifty", 2.0))
+      .toDF("google_place_id", "name", "rating")
+      .withColumn("first_ingested_at", lit(null).cast("timestamp")),
+      poiRoot, Seq("google_place_id"))
+    val batch = (0 until 20)
+      .map(i => FetchRequest(i, "places", 100 * DayUs + i * 1000L, s"r$i")).toDF()
+    def run(): Unit = IngestLoop.processBatch(spark, batch, poiRoot, ledgerRoot,
+      IngestLoopSpec.mkCounting _, limit = 18, asOf = "2025-06-01 00:00:00",
+      appId = "once-spec", batchId = 0L, sleeper = noSleep)
+
+    sent.clear()
+    run()
+    val admitted = (0 until 18).map(i => s"r$i")
+    val counts = sent.toArray.map(_.toString).groupBy(identity).map { case (u, xs) => u -> xs.length }
+    assert(counts.keySet == admitted.toSet, s"sent to ${counts.keySet}")
+    admitted.foreach { u =>
+      val want = if (u == "r3" || u == "r7") 2 else 1
+      assert(counts(u) == want, s"$u sent ${counts(u)} times, want $want")
+    }
+    assert(sent.size == 18 + 2)
+    assert(AtomicTable.read(spark, poiRoot).count() == 2 + 17) // g001 updated in place
+    val led = AtomicTable.read(spark, ledgerRoot).as[(String, Long, Long)].collect()
+    assert(led.toSeq == Seq(("places", 100L, 18L)))
+
+    // the same batch id again: both tables skip, nothing is fetched
+    sent.clear()
+    run()
+    assert(sent.isEmpty, s"a redelivered batch sent ${sent.size} requests")
+    assert(AtomicTable.read(spark, poiRoot).count() == 19)
+    assert(AtomicTable.read(spark, ledgerRoot).as[(String, Long, Long)].collect().toSeq == led.toSeq)
   }
 }
