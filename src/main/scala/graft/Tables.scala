@@ -1,12 +1,19 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Loaders for the driver's deterministic testdata tables (TESTDATA.md).
   *
   * At cluster scale these would be partitioned/bucketed Delta tables; here they
-  * are single parquet files per table. All loads are plain `spark.read.parquet`
-  * so Catalyst's column pruning + predicate pushdown reach the scan.
+  * are one parquet file or one directory of part files per table. A single
+  * file (the pyarrow-written testdata) loads with plain `spark.read.parquet`.
+  * A directory of Spark-written part files loads through
+  * [[graft.sinks.Footers.readDir]]: the schema comes from one driver-side
+  * footer open instead of Spark's schema-inference job. Either way the load
+  * is a plain parquet scan, so Catalyst's column pruning + predicate pushdown
+  * reach it.
   */
 object Tables {
   def region(spark: SparkSession, dir: String): DataFrame    = load(spark, dir, "region")
@@ -63,8 +70,12 @@ object Tables {
   def documents(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "embeddings")
 
-  private def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  private def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val file = s"$dir/$name.parquet"
+    val path = Paths.get(file)
+    if (Files.isDirectory(path)) graft.sinks.Footers.readDir(spark, path)
+    else spark.read.parquet(file)
+  }
 
   /** Fan an UNSPLITTABLE scan out to the session's shuffle width before an
     * expensive derivation chain (opt guide §2.5 "input skew": one huge

@@ -103,12 +103,16 @@ object TextAnalysis {
     * ONE scan: every signal (fingerprint window, token count, quality
     * composite, lang argmax) is a column over the same pass, and the only
     * shuffle is the dup-survivor window keyed by content hash. */
-  def tcCleanCorpus(spark: SparkSession, dir: String): DataFrame = {
+  def tcCleanCorpus(spark: SparkSession, dir: String): DataFrame =
+    cleanCorpusOf(Tables.documentsFanned(spark, dir))
+
+  /** [[tcCleanCorpus]] over a given documents relation. */
+  private def cleanCorpusOf(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val stop = Seq("the", "a", "of", "and")
       .map(w => s"'$w'").mkString("array(", ", ", ")")
     val langs = markers.keys.toSeq.sorted
-    val base = Tables.documentsFanned(spark, dir)
+    val base = docs
       .withColumn("words", split(trim(col("text")), "\\s+"))
       .withColumn("n_words", size(col("words")).cast("long"))
       .withColumn("n_chars_actual", length(trim(col("text"))).cast("long"))
@@ -187,19 +191,24 @@ object TextAnalysis {
     * canonicalization mattered). Shuffles stay those of the two parts: the
     * survivor semi-join is hash-keyed on doc_id, the pair join on the
     * shingle. */
-  def tcCorpusNeardup(spark: SparkSession, dir: String): DataFrame = {
+  def tcCorpusNeardup(spark: SparkSession, dir: String): DataFrame =
+    corpusNeardupOf(Tables.documentsFanned(spark, dir))
+
+  /** [[tcCorpusNeardup]] over a given documents relation, which feeds both
+    * the clean chain and the survivor semi-join. */
+  private def corpusNeardupOf(docs: DataFrame): DataFrame = {
     // the chain verdicts and the survivor shingles each feed multiple
     // consumers and are recomputed per branch here; measured at sf0.1 the
     // recompute is free (persisting them changed nothing warm) — at 100 TB
     // a real curation run would WRITE the survivor corpus between stages
     // (the natural checkpoint), not cache it
-    // staged (lazy localCheckpoint, r21): `cleaned` feeds BOTH the survivor
-    // semi-join and the final verdict join — without the cut each consumer
-    // re-runs the whole clean chain (scan + quality/lang signals + the
-    // dup-survivor window); the staged relation is |docs| × 3 columns
-    val cleaned = tcCleanCorpus(spark, dir).select("doc_id", "keep", "drop_reason")
-      .localCheckpoint(false)
-    val survivors = Tables.documentsFanned(spark, dir)
+    // staged (size-gated lazy localCheckpoint): `cleaned` feeds BOTH the
+    // survivor semi-join and the final verdict join — without the cut each
+    // consumer re-runs the whole clean chain (scan + quality/lang signals +
+    // the dup-survivor window); the staged relation is |docs| × 3 columns
+    val cleaned = Tables.stageLocal(
+      cleanCorpusOf(docs).select("doc_id", "keep", "drop_reason"))
+    val survivors = docs
       .join(cleaned.filter(col("keep")).select("doc_id"), Seq("doc_id"), "left_semi")
     val nearDup = TextDedup.ngramJaccardPairsOf(survivors)
       .select(col("id_b").as("doc_id")).distinct()
@@ -239,11 +248,16 @@ object TextAnalysis {
     * nothing new beyond the stages themselves, and the final verdict/pack
     * joins are hash joins on doc_id. */
   def tcCorpusE2e(spark: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.stageLocal(Tables.documentsFanned(spark, dir))
     // staged: the verdict feeds the final join AND the kept-tokens semi-join
     // — uncut, the second consumer re-runs the entire five-stage ladder
     // (clean chain + near-dup pair join included). |docs| × 3 columns.
-    val verdict = curationVerdict(spark, dir).localCheckpoint(false)
-    val keptTokens = Tables.documentsFanned(spark, dir)
+    // Not through Tables.stageLocal: the optimizer sizes a join as the
+    // product of its sides, so the gate reads this per-doc relation as far
+    // larger than it is (past the 1 GiB default on a corpus of a few
+    // hundred KB) and leaves it unstaged.
+    val verdict = curationVerdict(docs).localCheckpoint(false)
+    val keptTokens = docs
       .join(verdict.filter(col("final_keep")).select("doc_id"), Seq("doc_id"), "left_semi")
       .select(col("doc_id"),
         size(split(trim(col("text")), "\\s+")).cast("long").as("n_tokens"))
@@ -251,13 +265,16 @@ object TextAnalysis {
   }
 
   /** The per-document first-match drop ladder of [[tcCorpusE2e]] — shared
-    * with the data card so the two reports cannot drift. */
-  private def curationVerdict(spark: SparkSession, dir: String): DataFrame =
-    tcCorpusNeardup(spark, dir).select(col("doc_id"), col("drop_reason"))
+    * with the data card so the two reports cannot drift. `docs` is the
+    * documents relation every stage reads: the callers stage it once
+    * (fanned, size-gated), so the corpus is scanned and shuffled once per
+    * report instead of once per stage. */
+  private def curationVerdict(docs: DataFrame): DataFrame =
+    corpusNeardupOf(docs).select(col("doc_id"), col("drop_reason"))
       // eval docs have no decontam row
-      .join(tcDecontaminate(spark, dir).select(col("doc_id"), col("contaminated")),
+      .join(decontaminateOf(docs).select(col("doc_id"), col("contaminated")),
         Seq("doc_id"), "left")
-      .join(tcSampleMix(spark, dir).select(col("doc_id"), col("sampled")), Seq("doc_id"))
+      .join(sampleMixOf(docs).select(col("doc_id"), col("sampled")), Seq("doc_id"))
       .withColumn("drop_stage",
         when(col("drop_reason") =!= "", col("drop_reason"))
           .when(col("doc_id") % EvalMod === 0, "eval_holdout")
@@ -275,14 +292,16 @@ object TextAnalysis {
     * what survived. One hash join of the verdict against the corpus on
     * doc_id, one map-side-combinable aggregate on the (lang, stage) pair —
     * the report relation is O(langs × stages) regardless of corpus size. */
-  def tcDatacard(spark: SparkSession, dir: String): DataFrame =
-    curationVerdict(spark, dir)
-      .join(Tables.documentsFanned(spark, dir).select(col("doc_id"), col("lang"),
+  def tcDatacard(spark: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.stageLocal(Tables.documentsFanned(spark, dir))
+    curationVerdict(docs)
+      .join(docs.select(col("doc_id"), col("lang"),
         size(split(trim(col("text")), "\\s+")).cast("long").as("n_toks")),
         Seq("doc_id"))
       .groupBy(col("lang"),
         when(col("drop_stage") === "", "kept").otherwise(col("drop_stage")).as("stage"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_toks")).as("n_tokens"))
+  }
 
   /** Per-language sampling rates (percent) for the corpus mix — the
     * downsample-high-resource shape of a pretraining data mix. */
@@ -294,13 +313,17 @@ object TextAnalysis {
     * engine-portable), and is kept iff coin < its language's rate. Hash-based
     * coins decorrelate the sample from id ordering and survive repartitioning
     * — the property that makes a 100 TB mix reproducible run-to-run. */
-  def tcSampleMix(spark: SparkSession, dir: String): DataFrame = {
+  def tcSampleMix(spark: SparkSession, dir: String): DataFrame =
+    sampleMixOf(Tables.documents(spark, dir))
+
+  /** [[tcSampleMix]] over a given documents relation. */
+  private def sampleMixOf(docs: DataFrame): DataFrame = {
     val rate = mixRates.foldLeft(lit(0)) { case (acc, (l, r)) =>
       when(col("lang") === l, r).otherwise(acc)
     }
     val hex = md5(col("doc_id").cast("string").cast("binary"))
     val coin = (ascii(substring(hex, 1, 1)) * 256 + ascii(substring(hex, 2, 1))) % 100
-    Tables.documents(spark, dir)
+    docs
       .select(col("doc_id"), col("lang"),
         coin.cast("long").as("coin"),
         rate.cast("long").as("rate"),
@@ -372,8 +395,11 @@ object TextAnalysis {
     * the corpus side streams through a map-side hash join — no shuffle of
     * corpus grams. Per-doc output carries the evidence (distinct grams hit,
     * distinct eval docs hit), not just the flag. */
-  def tcDecontaminate(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documentsFanned(spark, dir)
+  def tcDecontaminate(spark: SparkSession, dir: String): DataFrame =
+    decontaminateOf(Tables.documentsFanned(spark, dir))
+
+  /** [[tcDecontaminate]] over a given documents relation. */
+  private def decontaminateOf(docs: DataFrame): DataFrame = {
     def grams(df: org.apache.spark.sql.DataFrame) = df.select(col("doc_id"),
       explode(graft.expr.functions.word_ngrams(col("text"), lit(DecontamN))).as("g"))
     val evalG = grams(docs.filter(col("doc_id") % EvalMod === 0))

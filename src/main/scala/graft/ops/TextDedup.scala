@@ -133,23 +133,26 @@ object TextDedup {
     * 100 TB the shuffle key is (lang, source, shingle): sparse, skew-safe
     * after the distinct, and linear in matching rows. */
   def ddNgramJaccard(spark: SparkSession, dir: String): DataFrame =
-    ngramJaccardPairsOf(Tables.stageLocal(docsFanned(spark, dir)))
+    ngramJaccardPairsOf(docsFanned(spark, dir))
 
   /** The pair dataflow of [[ddNgramJaccard]] over an arbitrary DOCUMENT
     * relation (doc_id, lang, source, text) — reused by the composed
     * corpus-construction pipeline, which runs it over the cleaning chain's
-    * survivors only. Takes docs rather than shingle rows (r22) so the
-    * per-doc sizes come from a `size(word_shingles(text))` projection
-    * instead of a groupBy over the full explosion — one whole explosion
-    * and its exchange removed (the explosion itself still feeds both join
-    * sides once, via exchange reuse; it stays unstaged — materializing it
-    * measured slower than recomputing the codegen'd explode, r21). Docs in
-    * candidate pairs share ≥1 shingle, so the n_sh=0 rows the projection
-    * adds for shingle-less docs never join. */
+    * survivors only. `word_shingles` is evaluated ONCE per doc: the
+    * (doc_id, lang, source, shingles) projection is staged (size-gated, one
+    * row per doc), and both the explosion and the per-doc sizes derive
+    * from it — the sizes as `size(shingles)` instead of a groupBy over the
+    * full explosion. The explosion itself feeds both join sides once, via
+    * exchange reuse; it stays unstaged — materializing it measured slower
+    * than recomputing the codegen'd explode, r21. Docs in candidate pairs
+    * share ≥1 shingle, so the n_sh=0 rows the projection adds for
+    * shingle-less docs never join. */
   private[ops] def ngramJaccardPairsOf(docs: DataFrame): DataFrame = {
-    val sh = shingleRowsOf(docs)
-    val n = docs.select(col("doc_id"),
-      size(graft.expr.functions.word_shingles(col("text"))).cast("long").as("n_sh"))
+    val shingles = Tables.stageLocal(docs.select(col("doc_id"), col("lang"), col("source"),
+      graft.expr.functions.word_shingles(col("text")).as("shingles")))
+    val sh = shingles.select(col("doc_id"), col("lang"), col("source"),
+      explode(col("shingles")).as("s"))
+    val n = shingles.select(col("doc_id"), size(col("shingles")).cast("long").as("n_sh"))
     val a = sh.select(col("doc_id").as("id_a"), col("lang"), col("source"), col("s"))
     val b = sh.select(col("doc_id").as("id_b"), col("lang"), col("source"), col("s"))
     val inter = a.join(b, Seq("lang", "source", "s"))
@@ -493,7 +496,8 @@ object TextDedup {
     smallStar(largeStar(canonPairs(plantedClusterEdges(spark).toDF("src", "dst"))))
 
   /** Min-label convergence over an undirected pair graph: every node ends
-    * with comp = min node id reachable from it — a unique result independent
+    * with comp = min node id reachable from it, and size = the node count of
+    * its component, in labels (id, comp, size) — a unique result independent
     * of iteration order, which is what makes it oracle-checkable against
     * DuckDB's recursive closure. The loop is the alternating
     * large-star/small-star EDGE CONTRACTION of Kiveris et al. ("Connected
@@ -515,23 +519,6 @@ object TextDedup {
     // dfcapPairsOf: at real cluster scale this is a reliable checkpoint or
     // staged table.
     val caller = pairs.sparkSession
-    val staged = canonPairs(pairs.toDF("src", "dst")).localCheckpoint()
-    val edgeCount = staged.count() // caller-side: sizes the loop partitions
-    // The whole loop runs on a tuned CHILD session ([[LoopSession]]: AQE
-    // off, shuffle width from the edge count — the session's 32 partitions
-    // made this loop 5× slower than 2 on a 60k-edge graph; confs never
-    // leave the child, advisor r11/r12).
-    val loop = LoopSession.forCaller(caller)
-    loop.synchronized {
-    LoopSession.tune(caller, loop, edgeCount)
-    // re-root via the InternalRow RDD (GraftSessionBridge): RDDs are
-    // context-scoped, so the checkpointed edge set moves sessions without
-    // the public-Row conversion pass the old createDataFrame(staged.rdd)
-    // path paid in each direction
-    var edges = org.apache.spark.sql.GraftSessionBridge.reRoot(loop, staged)
-      .localCheckpoint()
-    val nodes = edges.select(col("src").as("id"))
-      .union(edges.select(col("dst").as("id"))).distinct().localCheckpoint()
     // convergence signal: an order-independent (count, hash-xor) fingerprint
     // of the edge set — ONE cheap aggregate per round instead of a
     // symmetric-difference join (xor, not sum: overflow-free under ANSI,
@@ -543,7 +530,27 @@ object TextDedup {
         expr("bit_xor(xxhash64(src, dst))")).first()
       (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
     }
-    var fp = fingerprint(edges)
+    // Setup is ONE action: the canonical pairs are staged lazily, and the
+    // first fingerprint (caller-side) both materializes the staging and
+    // yields the edge count that sizes the loop partitions.
+    val staged = canonPairs(pairs.toDF("src", "dst")).localCheckpoint(false)
+    var fp = fingerprint(staged)
+    // The whole loop runs on a tuned CHILD session ([[LoopSession]]: AQE
+    // off, shuffle width from the edge count — the session's 32 partitions
+    // made this loop 5× slower than 2 on a 60k-edge graph; confs never
+    // leave the child, advisor r11/r12).
+    val loop = LoopSession.forCaller(caller)
+    loop.synchronized {
+    LoopSession.tune(caller, loop, fp._1)
+    // re-root via the InternalRow RDD (GraftSessionBridge): RDDs are
+    // context-scoped, so the checkpointed edge set moves sessions without
+    // the public-Row conversion pass the old createDataFrame(staged.rdd)
+    // path paid in each direction. Its input is already cut, so it needs no
+    // second checkpoint; the node set is derived lazily from it and read
+    // once, by the label plan after the loop.
+    var edges = org.apache.spark.sql.GraftSessionBridge.reRoot(loop, staged)
+    val nodes = edges.select(col("src").as("id"))
+      .union(edges.select(col("dst").as("id"))).distinct()
     var rounds = 0
     var converged = fp._1 == 0L
     while (!converged) {
@@ -567,14 +574,17 @@ object TextDedup {
           println(f"[cc] round $rounds: ${(System.nanoTime() - tR) / 1e9}%.2f s, edges=${fp._1}")
     }
     // terminal state = stars centered on each component's min: a node's
-    // label is its min neighbor (leaves → center), or itself (the center).
-    // Built inside the tuned scope — it is the same tiny-iterate shape as
-    // the rounds.
+    // label is its min neighbor (leaves → center), or itself (the center);
+    // its component's size is a window count over the label. Built inside
+    // the tuned scope — it is the same tiny-iterate shape as the rounds, so
+    // the whole label plan runs as one job.
     val und = edges.union(edges.select(col("dst").as("src"), col("src").as("dst")))
     val labels = nodes
       .join(und.groupBy(col("src")).agg(min(col("dst")).as("mn")),
         nodes("id") === col("src"), "left")
       .select(col("id"), least(col("id"), coalesce(col("mn"), col("id"))).as("comp"))
+      .withColumn("size", count(lit(1)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy(col("comp"))))
     // re-root the result in the CALLER's session — Datasets from different
     // sessions must not mix in downstream joins. The label plan is PLANNED
     // under the child's tuned confs (reRoot takes its physical RDD) but only
@@ -586,15 +596,10 @@ object TextDedup {
     }
   }
 
-  /** Converged labels → (doc_id, canonical_id, cluster_size). The converged
-    * iterate is already staged, so both sides of the size join read one
-    * tiny cached relation. */
-  private[ops] def canonicalClusters(pairs: DataFrame): DataFrame = {
-    val (labels, _) = minLabelConverge(pairs)
-    labels
-      .join(labels.groupBy(col("comp")).agg(count(lit(1)).as("cluster_size")), Seq("comp"))
-      .select(col("id").as("doc_id"), col("comp").as("canonical_id"), col("cluster_size"))
-  }
+  /** Converged labels → (doc_id, canonical_id, cluster_size). */
+  private[ops] def canonicalClusters(pairs: DataFrame): DataFrame =
+    minLabelConverge(pairs)._1.select(col("id").as("doc_id"),
+      col("comp").as("canonical_id"), col("size").as("cluster_size"))
 
   /** Duplicate-CLUSTER canonicalization: connected components over the
     * near-dup pair graph (word-3-gram Jaccard ≥ 0.2 edges), so every member

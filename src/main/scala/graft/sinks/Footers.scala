@@ -10,13 +10,14 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
-/** Reads of parquet part files the engine wrote itself, with the schema
-  * taken from the first file's footer instead of inferred.
+/** Reads of Spark-written parquet part files (the engine's committed
+  * tables, and any input directory a Spark writer produced), with the
+  * schema taken from the first file's footer instead of inferred.
   *
   * `spark.read.parquet(paths)` without a schema runs a Spark job to infer
-  * one (Spark opens the footer of one file inside a task). On tables the
-  * engine committed that job is pure overhead: every part file of a version
-  * carries the same Spark schema in its footer metadata. Here the driver
+  * one (Spark opens the footer of one file inside a task). On Spark-written
+  * files that job is pure overhead: every part file of one write carries
+  * the same Spark schema in its footer metadata. Here the driver
   * opens that footer once, takes the schema Spark's writer recorded there
   * (the record Spark's own inference reads, then every field nullable, as a
   * file relation makes it), and hands it to the reader, so building the

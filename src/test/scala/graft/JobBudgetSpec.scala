@@ -8,6 +8,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.MetadataBuilder
 
+import graft.ops.TextDedup
 import graft.sinks.{AtomicTable, Footers, KeyedMerge, StatsRead, TargetedDelete}
 import graft.sources.HttpSource
 import graft.sources.HttpSource.HttpResponse
@@ -23,9 +24,10 @@ object JobBudgetSpec {
   val noSleep: Long => Unit = _ => ()
 }
 
-/** How many Spark jobs the sink layers launch, counted by a listener, and
-  * that the footer-schema reads ([[Footers]]) see the schema Spark's own
-  * inference would. */
+/** How many Spark jobs the sink and corpus layers launch, counted by a
+  * listener, and that the footer-schema reads ([[Footers]], and
+  * [[Tables]]' loads of Spark-written directories) see the schema Spark's
+  * own inference would. */
 class JobBudgetSpec extends AnyFunSuite {
   import JobBudgetSpec._
 
@@ -146,5 +148,64 @@ class JobBudgetSpec extends AnyFunSuite {
     TargetedDelete.deleteStringKeys(spark, root, "k", Seq("k0001", "k0300"))
     check("deleteStringKeys")
     assert(AtomicTable.read(spark, root).count() == 608)
+  }
+
+  test("Tables.documents over a Spark-written directory runs no job and infers Spark's schema") {
+    val dir = Files.createTempDirectory("budgetdocs").toString
+    val tagged = new MetadataBuilder().putString("comment", "the document body").build()
+    spark.range(300).select(col("id").as("doc_id"), // non-nullable in the writer's schema
+      concat(lit("w"), col("id") % 7, lit(" x"), col("id")).as("text", tagged),
+      lit("en").as("lang"), lit("web").as("source"), (col("id") * 3).as("n_chars"))
+      .repartition(3).write.parquet(s"$dir/documents.parquet")
+    val (df, n) = jobs(Tables.documents(spark, dir))
+    assert(n == 0, s"building the load ran $n jobs")
+    val inferred = spark.read.parquet(s"$dir/documents.parquet").schema
+    assert(df.schema == inferred)
+    assert(df.schema.json == inferred.json) // metadata included
+    assert(df.count() == 300)
+  }
+
+  test("Tables.documents over a single non-Spark file keeps Spark's inferred schema") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    // one parquet file with no Spark schema record, as the testdata tables are
+    val file = Files.createTempDirectory("budgetfile").resolve("documents.parquet")
+    val schema = MessageTypeParser.parseMessageType("message documents { required int64 doc_id; " +
+      "optional binary text (STRING); optional binary lang (STRING); " +
+      "optional binary source (STRING); optional int64 n_chars; }")
+    val rows = new SimpleGroupFactory(schema)
+    val w = ExampleParquetWriter.builder(new org.apache.hadoop.fs.Path(file.toUri))
+      .withType(schema).build()
+    try (0 until 10).foreach { i =>
+      w.write(rows.newGroup().append("doc_id", i.toLong).append("text", s"w$i x")
+        .append("lang", "en").append("source", "web").append("n_chars", 4L))
+    } finally w.close()
+    val inferred = spark.read.parquet(file.toString).schema
+    val loaded = Tables.documents(spark, file.getParent.toString)
+    assert(loaded.schema == inferred)
+    assert(loaded.schema.json == inferred.json)
+    assert(loaded.count() == 10)
+  }
+
+  test("ddDupClusters plus its collect runs at most 11 jobs on a Spark-written corpus") {
+    // 19 with schema inference on the load, a five-job loop setup and a
+    // caller-side cluster-size join
+    // 400 documents of twelve words no other document shares, plus a
+    // near-duplicate of every fifth one (its text with one word appended,
+    // id + 100000), written by Spark as a generated corpus is
+    val dir = Files.createTempDirectory("budgetclusters").toString
+    val docs = spark.range(400).select(col("id").as("doc_id"),
+      expr("concat_ws(' ', transform(sequence(0, 11), k -> concat('w', id, '_', k)))").as("text"),
+      lit("en").as("lang"), lit("web").as("source"))
+    docs.union(docs.filter(col("doc_id") % 5 === 0).select((col("doc_id") + 100000).as("doc_id"),
+        concat(col("text"), lit(" zz")).as("text"), col("lang"), col("source")))
+      .withColumn("n_chars", length(col("text")).cast("long"))
+      .coalesce(1).write.parquet(s"$dir/documents.parquet")
+    val (rows, n) = jobs(TextDedup.ddDupClusters(spark, dir).collect())
+    info(s"ddDupClusters ran $n jobs")
+    val expected = (0L until 400L by 5L).flatMap(i => Seq((i, i, 2L), (i + 100000, i, 2L)))
+    assert(rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq == expected.sorted)
+    assert(n <= 11, s"ddDupClusters ran $n jobs")
   }
 }
