@@ -153,8 +153,7 @@ object PipelineVol {
     val ingested = Ingest.toPoiRows(placesVol(spark, dir)).localCheckpoint()
 
     // SPATIAL — the cell-prefilter path over the real Paris rings
-    val areas = Spatial.loadUrbanAreasJsonl(spark,
-      "/root/reference/neighbourhoods/neighbourhoods_paris.jsonl")
+    val areas = Spatial.loadUrbanAreasJsonl(spark, Spatial.ParisGeometryJsonl)
     val sp = Spatial.assignViaCells(
       ingested.select(col("google_place_id").as("poi_id"), col("lat"), col("lng")),
       areas, spark)

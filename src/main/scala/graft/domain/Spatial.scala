@@ -278,6 +278,12 @@ object Spatial {
       .limit(3)
   }
 
+  /** The reference snapshot's Paris geometry (98 single-ring zones, one
+    * JSON object per line), declared once: the Spark readers and the DuckDB
+    * oracles' `read_json_auto` both read this path. */
+  val ParisGeometryJsonl: String =
+    "/root/reference/neighbourhoods/neighbourhoods_paris.jsonl"
+
   /** J1 over the REAL Paris geometry (98 zones) — polygons aren't expressible
     * in the DuckDB oracle, so this is a rows-only driver check; exact answers
     * are pinned by ParisGeometrySpec landmarks. */
@@ -288,8 +294,7 @@ object Spatial {
       ("sacre_coeur", 48.8867, 2.3431), ("notre_dame", 48.8530, 2.3499),
       ("pere_lachaise", 48.8610, 2.3933), ("la_defense", 48.8920, 2.2358))
       .toDF("poi_id", "lat", "lng")
-    val areas = loadUrbanAreasJsonl(spark,
-      "/root/reference/neighbourhoods/neighbourhoods_paris.jsonl")
+    val areas = loadUrbanAreasJsonl(spark, ParisGeometryJsonl)
     assignViaCells(landmarks, areas, spark)
   }
 
@@ -316,8 +321,7 @@ object Spatial {
     * ray-cast as an exploded-edge equi-join (vectorizes where per-edge list
     * lambdas took ~100 s) with the smallest-area tie-break window. */
   def qParisAssignVol(spark: SparkSession, dir: String): DataFrame = {
-    val areas = loadUrbanAreasJsonl(spark,
-      "/root/reference/neighbourhoods/neighbourhoods_paris.jsonl")
+    val areas = loadUrbanAreasJsonl(spark, ParisGeometryJsonl)
     assignViaCells(volPoints(spark, ParisVolN), areas, spark)
   }
 
@@ -342,8 +346,7 @@ object Spatial {
     * is correctness-gated per round, not only spec-tested. Same oracle as
     * the manual variant (identical semantics by construction). */
   def qParisAssignVolAuto(spark: SparkSession, dir: String): DataFrame = {
-    val areas = loadUrbanAreasJsonl(spark,
-      "/root/reference/neighbourhoods/neighbourhoods_paris.jsonl")
+    val areas = loadUrbanAreasJsonl(spark, ParisGeometryJsonl)
     assign(volPoints(spark, ParisVolN), areas, spark)
   }
 
@@ -383,7 +386,7 @@ object Spatial {
        |  SELECT name AS area_name,
        |    CAST(properties.admin_level AS INTEGER) AS admin_level,
        |    geometry.coordinates[1] AS ring
-       |  FROM read_json_auto('/root/reference/neighbourhoods/neighbourhoods_paris.jsonl',
+       |  FROM read_json_auto('$ParisGeometryJsonl',
        |                      format='newline_delimited')),
        |areas AS (
        |  SELECT area_name, admin_level, ring,
@@ -438,11 +441,11 @@ object Spatial {
       // the same ray-cast over the same 98 real rings, as DuckDB list
       // lambdas (edge pairs (i+1, i+2) = the Scala loop's (current, prev);
       // the closed ring's wrap edge is degenerate and contributes nothing)
-      """WITH areas AS (
+      s"""WITH areas AS (
         |  SELECT name AS area_name,
         |    CAST(properties.admin_level AS INTEGER) AS admin_level,
         |    geometry.coordinates[1] AS ring
-        |  FROM read_json_auto('/root/reference/neighbourhoods/neighbourhoods_paris.jsonl',
+        |  FROM read_json_auto('$ParisGeometryJsonl',
         |                      format='newline_delimited')),
         |lm(poi_id, lat, lng) AS (VALUES
         |  ('louvre', CAST(48.8606 AS DOUBLE), CAST(2.3376 AS DOUBLE)),

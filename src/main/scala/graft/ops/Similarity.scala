@@ -172,7 +172,7 @@ object Similarity {
   /** DISK-BACKED IVF (r19): the inverted lists become TABLE LAYOUT — the
     * corpus is assigned to its nearest cell, range-clustered by `cell_id`
     * into an [[graft.sinks.AtomicTable]] committed with `statsCols`, and a
-    * query's NProbe cells are served by [[graft.sinks.StatsRead.readKeyIn]]
+    * query's NProbe cells are served by [[graft.sinks.StatsRead.read]]
     * FILE SKIPPING: the scan is constructed over only the files whose
     * cell-hull admits a probed cell, zero footer reads (both enforced —
     * the query THROWS otherwise). This is the ANN shape that actually
@@ -182,7 +182,7 @@ object Similarity {
     * rounded cosine, cell tie-break), so the oracle replays the whole
     * dataflow — layout must change IO, never results. */
   def simIvfDisk(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sinks.{AtomicTable, StatsRead}
+    import graft.sinks.{AtomicTable, StatsRead, TargetedDelete}
     val root = annIvfDiskRoot(dir)
     AtomicTable.deleteRecursively(java.nio.file.Paths.get(root))
     val e = Tables.embeddings(spark, dir)
@@ -209,7 +209,8 @@ object Similarity {
     // thing that ever reaches the driver; the corpus stays on disk
     val cells = queryCells.select(col("cell_id")).distinct()
       .collect().map(_.getLong(0)).toSeq
-    val (listed, rs) = StatsRead.readKeyIn(spark, root, "cell_id", cells)
+    val (listed, rs) = StatsRead.read(spark, root,
+      Seq("cell_id" -> TargetedDelete.KeySet.longs(cells)))
     if (rs.footerReads != 0 || rs.filesRead >= rs.totalFiles || rs.filesRead < 1)
       throw new IllegalStateException(
         s"disk IVF probe did not skip files: $rs (probed ${cells.size} of " +
@@ -548,7 +549,7 @@ object Similarity {
     * cell, encoded once ([[graft.expr.functions.pq_cells]] — the persisted
     * ~bytes-per-vector artifact), and committed range-clustered on
     * `cell_id` with stats. A query then (1) reads ONLY the probed lists'
-    * FILES via [[graft.sinks.StatsRead.readKeyIn]] — zero footer reads and
+    * FILES via [[graft.sinks.StatsRead.read]] — zero footer reads and
     * a strict file subset, both THROWN on — (2) ADC-scores the candidates
     * from the codes column against the broadcast per-query lookup table
     * (never touching the stored floats), (3) exact-refines only the
@@ -561,7 +562,7 @@ object Similarity {
     * results. */
   def simPqDisk(spark: SparkSession, dir: String): DataFrame = {
     import graft.expr.{functions => F}
-    import graft.sinks.{AtomicTable, StatsRead}
+    import graft.sinks.{AtomicTable, StatsRead, TargetedDelete}
     val root = annPqDiskRoot(dir)
     AtomicTable.deleteRecursively(java.nio.file.Paths.get(root))
     val e = Tables.embeddings(spark, dir)
@@ -590,7 +591,8 @@ object Similarity {
       "q_id", NProbe)
     val cells = queryCells.select(col("cell_id")).distinct()
       .collect().map(_.getLong(0)).toSeq
-    val (listed, rs) = StatsRead.readKeyIn(spark, root, "cell_id", cells)
+    val (listed, rs) = StatsRead.read(spark, root,
+      Seq("cell_id" -> TargetedDelete.KeySet.longs(cells)))
     if (rs.footerReads != 0 || rs.filesRead >= rs.totalFiles || rs.filesRead < 1)
       throw new IllegalStateException(
         s"disk PQ probe did not skip files: $rs (probed ${cells.size} of " +

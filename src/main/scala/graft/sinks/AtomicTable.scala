@@ -369,6 +369,43 @@ object AtomicTable {
     sys.error("unreachable")
   }
 
+  /** The commit mode of a file-granular stager ([[TargetedDelete.delete]],
+    * [[KeyedMerge.merge]]): [[Writer.Single]] runs [[singleWriterStaged]]
+    * (composes with [[commit]]'s cadence), [[Writer.Occ]] runs the same
+    * staging through [[occCommit]]'s claim/rebase CAS — a lost race re-reads
+    * the new live version and re-stages against it, so the effect lands
+    * exactly once beside interleaved writers. */
+  sealed trait Writer
+  object Writer {
+    case object Single extends Writer
+    final case class Occ(maxRetries: Int = 16,
+        pruneAgeMs: Long = MergePruneAgeMs) extends Writer
+  }
+
+  /** Run `stage(liveVersion, stageDir)` under `writer`'s commit protocol and
+    * return the published version with the result of the attempt that won
+    * (an OCC loser re-stages, so earlier attempts' results are discarded).
+    * `batch` stamps the (appId, batchId) redelivery tag — single-writer
+    * only: the OCC path carries the previous tag forward. */
+  private[sinks] def staged[A](root: String, stagePrefix: String, writer: Writer,
+      batch: Option[(String, Long)] = None)(stage: (String, Path) => A): (String, A) = {
+    @volatile var last: Option[A] = None
+    val v = writer match {
+      case Writer.Single =>
+        singleWriterStaged(root, stagePrefix, batch) { (live, stageDir) =>
+          last = Some(stage(live, stageDir))
+        }
+      case Writer.Occ(maxRetries, pruneAgeMs) =>
+        require(batch.isEmpty, "a batch-tagged commit runs single-writer")
+        occCommit(root, maxRetries, pruneAgeMs) { (base, stageDir) =>
+          val live = base.getOrElse(
+            throw new IllegalStateException(s"no live version at $root"))
+          last = Some(stage(live, stageDir))
+        }
+    }
+    (v, last.get)
+  }
+
   // ------------------------------------------------- multi-writer commits
 
   /** Per-root monitor so two threads in ONE JVM serialize the manifest flip
@@ -437,8 +474,9 @@ object AtomicTable {
 
   /** The OCC claim/rebase core [[mergeCommit]] runs on, factored so OTHER
     * next-state producers compose with the same protocol — notably
-    * [[TargetedDelete.deleteKeysOcc]], whose staged state is a footer-pruned
-    * rewrite + hard links rather than a full Spark write. `stageInto(base,
+    * [[TargetedDelete.delete]] under [[Writer.Occ]], whose staged state is a
+    * footer-pruned rewrite + hard links rather than a full Spark write.
+    * `stageInto(base,
     * stageDir)` must materialize the COMPLETE next version into `stageDir`
     * from the observed `base` (None for a fresh table); a staging that fails
     * because faster winners pruned the base mid-read triggers a rebase, same
@@ -669,8 +707,8 @@ object AtomicTable {
     }
   }
 
-  /** Guard for every explicit-version read (here and [[StatsRead
-    * .readVersionWhereAll]]): the target must be on disk AND no newer than
+  /** Guard for every explicit-version read (here and [[StatsRead.read]]
+    * with a version): the target must be on disk AND no newer than
     * the manifest's live version. `versions()` lists any `vN` directory, so
     * without the second check an UNPUBLISHED claim — a crashed bare stage or
     * an unadopted occCommit claim at v{N+1} — would be accepted as a

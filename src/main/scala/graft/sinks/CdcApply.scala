@@ -171,7 +171,7 @@ object CdcApply {
           // rest — the redelivery guard and the manifest batch tag are
           // commitBatchKeyed's, same exactly-once corridor as before
           KeyedMerge.commitBatchKeyed(spark, tableRoot, "s23-cdc-stream",
-              bid, "id", b, apply) match {
+              bid, Seq("id"), b, apply) match {
             case Some(_) => applied.incrementAndGet()
             case None => redelivered.incrementAndGet()
           }
@@ -240,7 +240,7 @@ object CdcApply {
         // pruned merge per micro-batch; its self-maintained sidecar is what
         // the targeted delete below prunes from (footerReads==0 enforced)
         KeyedMerge.commitBatchKeyed(spark, tableRoot, "s23-cdc-stream-del",
-          bid, "id", b, apply)
+          bid, Seq("id"), b, apply)
         ()
       }
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -250,8 +250,8 @@ object CdcApply {
       q.stop()
       throw new IllegalStateException("s23 cdc stream-delete stream timed out")
     }
-    val stats = TargetedDelete.deleteKeyRange(
-      spark, tableRoot, "id", StreamDeleteFrom, StreamDeleteTo)
+    val stats = TargetedDelete.delete(spark, tableRoot, "id",
+      TargetedDelete.LongRange(StreamDeleteFrom, StreamDeleteTo))
     if (stats.footerReads != 0)
       throw new IllegalStateException(
         s"stream-committed versions were not indexed: $stats")
@@ -286,7 +286,7 @@ object CdcApply {
 
   /** FILE-GRANULAR MERGE under the driver gate: the customer table is
     * committed id-clustered and indexed; the clustered changeset is applied
-    * through [[KeyedMerge.mergeChangesKeyed]] — and the query THROWS unless
+    * through [[KeyedMerge.merge]] — and the query THROWS unless
     * (a) the pruning decision came entirely from the sidecar
     * (footerReads==0), (b) the merge rewrote a MINORITY of the files and
     * linked at least one, and (c) every reused file in the new version is
@@ -304,7 +304,7 @@ object CdcApply {
     AtomicTable.commit(base.repartitionByRange(PrunedFiles, col("id"))
       .sortWithinPartitions(col("id")), root, statsCols = Seq("id"))
     val prev = AtomicTable.currentVersion(root).get
-    val ms = KeyedMerge.mergeChangesKeyed(spark, root, "id",
+    val ms = KeyedMerge.merge(spark, root, Seq("id"),
       prunedFeed(spark, dir), apply)
     if (ms.footerReads != 0 || ms.reusedFiles < 1 ||
         ms.rewrittenFiles * 2 >= ms.totalFiles)
@@ -389,7 +389,7 @@ object CdcApply {
     KeyBloom.indexKeyBloom(spark, root, "doc_hash",
       KeyBloom.bitsFor(nRows / BloomMergeFiles + 1))
     val prev = AtomicTable.currentVersion(root).get
-    val ms = KeyedMerge.mergeChangesKeyed(spark, root, "doc_hash", changes, upsertDocs)
+    val ms = KeyedMerge.merge(spark, root, Seq("doc_hash"), changes, upsertDocs)
     if (ms.footerReads != 0 || ms.bloomSkipped < 1 || ms.rewrittenFiles > 6 ||
         ms.reusedFiles < ms.totalFiles - 6)
       throw new IllegalStateException(

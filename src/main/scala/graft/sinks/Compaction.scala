@@ -164,7 +164,7 @@ object Compaction {
       // bloomed tables keep parquet-native blooms in the coalesced output
       // (NDV from the inputs' sidecar rowCounts, bytes fallback)
       val blooms = KeyBloom.loadBlooms(liveDir)
-      val sideRows = TargetedDelete.loadStats(liveDir)
+      val sideRows = KeyStats.loadStats(liveDir)
       def rcOf(name: String): Long = sideRows.collectFirst {
         case ((f, _), r) if f == name => r.rowCount }.getOrElse(-1L)
       Footers.read(spark, small)
@@ -196,7 +196,7 @@ object Compaction {
           KeyStats.statRowsFor(spark, newFiles, indexedCols)
         }
       if (carried.nonEmpty || fresh.nonEmpty)
-        TargetedDelete.writeStats(stageDir, carried ++ fresh)
+        KeyStats.writeStats(stageDir, carried ++ fresh)
       out = (files.size, small.size, nOut, big.size)
     } catch {
       case AlreadyOptimal(live, n) => return CompactStats(live, n, 0, 0, 0, noOp = true)
@@ -333,7 +333,7 @@ object Compaction {
       val rewriteOut = stageDir.resolve("rewrite")
       // bloomed tables keep parquet-native blooms in the reclustered output
       val blooms = KeyBloom.loadBlooms(liveDir)
-      val sideRows = TargetedDelete.loadStats(liveDir)
+      val sideRows = KeyStats.loadStats(liveDir)
       def rcOf(name: String): Long = sideRows.collectFirst {
         case ((f, _), r) if f == name => r.rowCount }.getOrElse(-1L)
       parts.reduce(_.unionAll(_))
@@ -435,7 +435,8 @@ object Compaction {
     // premise: a high block read plans the interleaved (≥2-file) layout
     val blockFrom = lowCut * 2
     val blockTo = blockFrom + math.max(2L, maxId / 10)
-    val (_, rsBefore) = StatsRead.readKeyRange(spark, root, "id", blockFrom, blockTo)
+    val (_, rsBefore) = StatsRead.read(spark, root,
+      Seq("id" -> TargetedDelete.LongRange(blockFrom, blockTo)))
     if (rsBefore.footerReads != 0 || rsBefore.filesRead < 2)
       throw new IllegalStateException(
         s"fixture premise broken: interleaved layout not visible ($rsBefore)")
@@ -457,7 +458,8 @@ object Compaction {
       case _ => ()
     }
     // payoff 2: the same block read plans strictly fewer files
-    val (_, rsAfter) = StatsRead.readKeyRange(spark, root, "id", blockFrom, blockTo)
+    val (_, rsAfter) = StatsRead.read(spark, root,
+      Seq("id" -> TargetedDelete.LongRange(blockFrom, blockTo)))
     if (rsAfter.footerReads != 0 || rsAfter.filesRead >= rsBefore.filesRead)
       throw new IllegalStateException(
         s"skipping not restored: before=$rsBefore after=$rsAfter")

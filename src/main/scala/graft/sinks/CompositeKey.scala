@@ -320,7 +320,7 @@ object CompositeKey {
         lit("https://new/d999").as("url"), lit(1234L).as("new_score")))
     requireFirstColInsufficient(root,
       MentionChangeIds.map(_ % MentionPoiMod) :+ 2L, 4, "s24_composite_merge")
-    val ms = KeyedMerge.mergeChangesKeyedTuple(spark, root,
+    val ms = KeyedMerge.merge(spark, root,
       Seq("poi_id", "url"), changes,
       (base, c) => base.join(c, Seq("poi_id", "url"), "full_outer")
         .select(col("poi_id"), col("url"),

@@ -11,7 +11,8 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
 /** PER-FILE BLOOM SIDECAR — point-lookup skipping on UNCLUSTERED keys (r17
   * verdict item 2). Min/max statistics prune nothing on a randomly-ordered
   * column: every file's [min,max] on a hash key spans ~the whole key space,
-  * so `readStringKeyIn` over a non-hash-clustered corpus plans every file.
+  * so a min/max-pruned point lookup over a non-hash-clustered corpus plans
+  * every file.
   * This is the Delta bloom-index move: one bloom filter per (file, column)
   * in a `_KEYBLOOM.tsv` beside `_KEYSTATS.tsv`, probed BEFORE min/max — a
   * "seen this doc-hash?" probe (the incremental dedup gate's hot question)
@@ -167,15 +168,17 @@ object KeyBloom {
     val p = versionDir.resolve(BloomFile)
     // counted only when a sidecar actually materializes (a missing file
     // loads nothing — a manifest-backed table stays at zero)
-    if (Files.exists(p)) loadCalls.incrementAndGet()
     if (!Files.exists(p)) Map.empty
-    else Files.readAllLines(p).asScala.filter(_.nonEmpty).map { line =>
-      val a = line.split("\t", 6)
-      val bb = java.nio.ByteBuffer.wrap(java.util.Base64.getDecoder.decode(a(5)))
-      val words = new Array[Long](bb.remaining() / 8)
-      bb.asLongBuffer().get(words)
-      (dec(a(0)), dec(a(1))) -> BloomRow(a(2), a(3).toInt, a(4).toInt, words)
-    }.toMap
+    else {
+      loadCalls.incrementAndGet()
+      Files.readAllLines(p).asScala.filter(_.nonEmpty).map { line =>
+        val a = line.split("\t", 6)
+        val bb = java.nio.ByteBuffer.wrap(java.util.Base64.getDecoder.decode(a(5)))
+        val words = new Array[Long](bb.remaining() / 8)
+        bb.asLongBuffer().get(words)
+        (dec(a(0)), dec(a(1))) -> BloomRow(a(2), a(3).toInt, a(4).toInt, words)
+      }.toMap
+    }
   }
 
   def writeBlooms(versionDir: Path, rows: Map[(String, String), BloomRow]): Unit = {

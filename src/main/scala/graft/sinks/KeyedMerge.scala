@@ -55,11 +55,12 @@ import org.apache.spark.sql.functions._
   * their just-written local footers — so merge after merge stays on the
   * zero-footer-read path.
   *
-  * Concurrency mirrors the delete: [[mergeChangesKeyed]] is the
-  * single-writer path ([[AtomicTable.singleWriterStaged]] — crashed-stage
-  * overwrite, complete-claim adoption + rebase); [[mergeChangesKeyedOcc]]
-  * runs the same staging through [[AtomicTable.occCommit]]'s claim/rebase
-  * CAS; [[commitBatchKeyed]] adds [[AtomicTable.commitBatch]]'s
+  * Concurrency mirrors the delete: [[merge]]'s default
+  * [[AtomicTable.Writer.Single]] is the single-writer path
+  * ([[AtomicTable.singleWriterStaged]] — crashed-stage overwrite,
+  * complete-claim adoption + rebase); [[AtomicTable.Writer.Occ]] runs the
+  * same staging through [[AtomicTable.occCommit]]'s claim/rebase CAS;
+  * [[commitBatchKeyed]] adds [[AtomicTable.commitBatch]]'s
   * (appId, batchId) redelivery guard for Structured Streaming foreachBatch —
   * the streamed CDC apply ([[CdcApply]]) runs on it. */
 object KeyedMerge {
@@ -337,12 +338,12 @@ object KeyedMerge {
     * write the next version's self-maintained `_KEYSTATS`. `keyCols.size
     * == 1` is the single-key fast path ([[touchedNames]]); more columns
     * dispatch to the COMPOSITE assignment ([[CompositeKey.touched]] —
-    * conjunctive hull veto + tuple bloom).
-    * Returns (totalFiles, rewritten, reused, footerReads, bloomSkipped). */
+    * conjunctive hull veto + tuple bloom). The stats row's version is
+    * filled in by the caller once the commit publishes. */
   private def stageMerge(spark: SparkSession, liveDir: Path, stageDir: Path,
       keyCols: Seq[String], changes: DataFrame,
       applyFn: (DataFrame, DataFrame) => DataFrame,
-      driverKeyThreshold: Int): (Int, Int, Int, Int, Int) = {
+      driverKeyThreshold: Int): MergeStats = {
     require(keyCols.nonEmpty, "keyed merge needs at least one key column")
     TargetedDelete.requireFlatLayout(liveDir, "keyed merge")
     val files = TargetedDelete.partFiles(liveDir)
@@ -454,160 +455,80 @@ object KeyedMerge {
       .filter(outCols).toSeq.sorted
     val freshRows = KeyStats.statRowsFor(spark, freshFiles, indexedCols)
     KeyStats.writeStats(stageDir, carried ++ reusedKeyRows ++ freshRows)
-    (files.size, rewrite.size, reused.size, unknown.size, bloomSkipped)
+    MergeStats("", files.size, rewrite.size, reused.size, unknown.size,
+      bloomSkipped)
   }
 
   /** Every merge appends its prune outcome to the table's operations log
     * — the drift signal [[Maintenance.adviseTelemetry]] reads without
     * touching a sidecar (advisory channel: best-effort, never fails the
-    * merge). */
-  private def logged(root: String, keyCol: String, ms: MergeStats): MergeStats = {
-    Maintenance.recordMerge(root, keyCol, ms.totalFiles, ms.rewrittenFiles,
-      ms.bloomSkipped)
+    * merge). A composite key records under [[CompositeKey.colName]]. */
+  private def logged(root: String, keyCols: Seq[String], ms: MergeStats): MergeStats = {
+    Maintenance.recordMerge(root, CompositeKey.colName(keyCols), ms.totalFiles,
+      ms.rewrittenFiles, ms.bloomSkipped)
     ms
   }
 
-  /** Single-writer stats-pruned merge: apply `changes` onto the live version
-    * through `applyFn`, rewriting only key-intersecting files. The table
-    * must have a committed base ([[AtomicTable.commit]] it first — a merge
-    * needs a schema-bearing version to prune against). */
-  def mergeChangesKeyed(spark: SparkSession, root: String, keyCol: String,
+  /** Stats-pruned merge: apply `changes` onto the live version through
+    * `applyFn`, rewriting only key-intersecting files, under `writer`'s
+    * commit mode. One key column takes the single-key assignment
+    * ([[touchedNames]]); several take the composite one (conjunctive hull
+    * veto + composite bloom, [[CompositeKey.touched]]) — the reference's
+    * (poi_id, url) mention upsert rides the pruned path instead of the full
+    * rewrite. Under [[AtomicTable.Writer.Occ]] a lost race re-prunes
+    * against the winner's version (its file set differs), so the changeset
+    * lands exactly once alongside interleaved merges and deletes; stats
+    * reflect the attempt that won. The table must have a committed base
+    * ([[AtomicTable.commit]] it first — a merge needs a schema-bearing
+    * version to prune against). */
+  def merge(spark: SparkSession, root: String, keyCols: Seq[String],
       changes: DataFrame, applyFn: (DataFrame, DataFrame) => DataFrame,
+      writer: AtomicTable.Writer = AtomicTable.Writer.Single,
       driverKeyThreshold: Int = DriverKeyThreshold): MergeStats = {
-    @volatile var last: (Int, Int, Int, Int, Int) = (0, 0, 0, 0, 0)
-    val next = AtomicTable.singleWriterStaged(root, "merge") { (live, stageDir) =>
-      last = stageMerge(spark, Paths.get(root, live), stageDir, Seq(keyCol),
+    val (v, ms) = AtomicTable.staged(root, "merge", writer) { (live, stageDir) =>
+      stageMerge(spark, Paths.get(root, live), stageDir, keyCols,
         changes, applyFn, driverKeyThreshold)
     }
-    logged(root, keyCol,
-      MergeStats(next, last._1, last._2, last._3, last._4, last._5))
+    logged(root, keyCols, ms.copy(version = v))
   }
 
-  /** MULTI-WRITER stats-pruned merge through [[AtomicTable.occCommit]]'s
-    * claim/rebase CAS — a lost race re-prunes against the winner's version
-    * (its file set differs), so the changeset lands exactly once alongside
-    * interleaved merges and deletes. Stats reflect the attempt that won. */
-  def mergeChangesKeyedOcc(spark: SparkSession, root: String, keyCol: String,
-      changes: DataFrame, applyFn: (DataFrame, DataFrame) => DataFrame,
-      maxRetries: Int = 16, pruneAgeMs: Long = AtomicTable.MergePruneAgeMs,
-      driverKeyThreshold: Int = DriverKeyThreshold): MergeStats = {
-    @volatile var last: (Int, Int, Int, Int, Int) = (0, 0, 0, 0, 0)
-    val v = AtomicTable.occCommit(root, maxRetries, pruneAgeMs) { (base, stageDir) =>
-      val live = base.getOrElse(throw new IllegalStateException(
-        s"no live version at $root — commit a base before merging"))
-      last = stageMerge(spark, Paths.get(root, live), stageDir, Seq(keyCol),
-        changes, applyFn, driverKeyThreshold)
-    }
-    logged(root, keyCol,
-      MergeStats(v, last._1, last._2, last._3, last._4, last._5))
-  }
-
-  /** COMPOSITE-KEY stats-pruned merge (r19 verdict item 1): the changeset
-    * carries the key TUPLE's columns and the assignment is the conjunctive
-    * hull veto + composite bloom ([[CompositeKey.touched]]) — the
-    * reference's (poi_id, url) mention upsert rides the pruned path
-    * instead of the full rewrite. Same staging, linking, self-maintained
-    * sidecars, and kernel contract as [[mergeChangesKeyed]]; telemetry
-    * records under the composite column name. Single-writer path. */
-  def mergeChangesKeyedTuple(spark: SparkSession, root: String,
-      keyCols: Seq[String], changes: DataFrame,
-      applyFn: (DataFrame, DataFrame) => DataFrame,
-      driverKeyThreshold: Int = DriverKeyThreshold): MergeStats = {
-    require(keyCols.size >= 2, "use mergeChangesKeyed for a single key column")
-    @volatile var last: (Int, Int, Int, Int, Int) = (0, 0, 0, 0, 0)
-    val next = AtomicTable.singleWriterStaged(root, "merge") { (live, stageDir) =>
-      last = stageMerge(spark, Paths.get(root, live), stageDir, keyCols,
-        changes, applyFn, driverKeyThreshold)
-    }
-    logged(root, CompositeKey.colName(keyCols),
-      MergeStats(next, last._1, last._2, last._3, last._4, last._5))
-  }
-
-  /** [[mergeChangesKeyedTuple]] through [[AtomicTable.occCommit]]'s
-    * claim/rebase CAS — the multi-writer composite upsert. */
-  def mergeChangesKeyedTupleOcc(spark: SparkSession, root: String,
-      keyCols: Seq[String], changes: DataFrame,
-      applyFn: (DataFrame, DataFrame) => DataFrame,
-      maxRetries: Int = 16, pruneAgeMs: Long = AtomicTable.MergePruneAgeMs,
-      driverKeyThreshold: Int = DriverKeyThreshold): MergeStats = {
-    require(keyCols.size >= 2, "use mergeChangesKeyedOcc for a single key column")
-    @volatile var last: (Int, Int, Int, Int, Int) = (0, 0, 0, 0, 0)
-    val v = AtomicTable.occCommit(root, maxRetries, pruneAgeMs) { (base, stageDir) =>
-      val live = base.getOrElse(throw new IllegalStateException(
-        s"no live version at $root — commit a base before merging"))
-      last = stageMerge(spark, Paths.get(root, live), stageDir, keyCols,
-        changes, applyFn, driverKeyThreshold)
-    }
-    logged(root, CompositeKey.colName(keyCols),
-      MergeStats(v, last._1, last._2, last._3, last._4, last._5))
-  }
-
-  /** Idempotent streaming form of [[mergeChangesKeyedTuple]] — the
-    * (appId, batchId) redelivery guard over the composite pruned merge
-    * (the reference's mention-upsert cadence: micro-batches keyed on
-    * (poi_id, url)). `maintainEvery` composes like the single-key form,
-    * through [[Maintenance.autoMaintainMulti]] with `keyCols.head` as the
-    * clustering owner (primary runs the full ladder, the other components
-    * heal index/bloom only). Returns None on a redelivered batch. */
-  def commitBatchKeyedTuple(spark: SparkSession, root: String, appId: String,
+  /** Idempotent streaming form — [[AtomicTable.commitBatch]]'s
+    * (appId, batchId) redelivery guard over the pruned [[merge]]: a
+    * redelivered micro-batch (foreachBatch is at-least-once) is SKIPPED
+    * without evaluating `changes`; a new one stages the pruned merge and
+    * stamps the manifest with its id in the same publish. Returns None on a
+    * skip. One or several key columns, as in [[merge]] (the reference's
+    * mention-upsert cadence: micro-batches keyed on (poi_id, url)).
+    *
+    * `maintainEvery > 0` closes the operations loop INSIDE the cadence
+    * (r18 verdict item 5): after every Nth applied batch the
+    * [[Maintenance.autoMaintainMulti]] ladder runs against the
+    * just-published version with `keyCols.head` as the clustering owner
+    * (it runs the full ladder; other components heal index/bloom only, and
+    * one column is exactly [[Maintenance.autoMaintain]]) — the advisor's
+    * check is metadata-only (free per batch), a heal is an interleaved
+    * sequential commit whose publish carries the (appId, batchId) tag
+    * forward, so the exactly-once guard survives the version flips
+    * (MaintenanceSpec pins it). A redelivered batch skips maintenance too —
+    * no new bytes, no new drift. */
+  def commitBatchKeyed(spark: SparkSession, root: String, appId: String,
       batchId: Long, keyCols: Seq[String], changes: => DataFrame,
       applyFn: (DataFrame, DataFrame) => DataFrame,
       driverKeyThreshold: Int = DriverKeyThreshold,
       maintainEvery: Int = 0,
       maintainTargetBytes: Long = Compaction.TargetBytes): Option[MergeStats] = {
-    require(keyCols.size >= 2, "use commitBatchKeyed for a single key column")
     if (AtomicTable.lastBatch(root).exists { case (app, b) =>
         app == appId && batchId <= b }) None
     else {
       val c = changes
-      @volatile var last: (Int, Int, Int, Int, Int) = (0, 0, 0, 0, 0)
-      val next = AtomicTable.singleWriterStaged(root, "merge",
+      val (v, ms) = AtomicTable.staged(root, "merge", AtomicTable.Writer.Single,
           batch = Some((appId, batchId))) { (live, stageDir) =>
-        last = stageMerge(spark, Paths.get(root, live), stageDir, keyCols,
+        stageMerge(spark, Paths.get(root, live), stageDir, keyCols,
           c, applyFn, driverKeyThreshold)
       }
-      val out = Some(logged(root, CompositeKey.colName(keyCols),
-        MergeStats(next, last._1, last._2, last._3, last._4, last._5)))
+      val out = Some(logged(root, keyCols, ms.copy(version = v)))
       if (maintainEvery > 0 && batchId % maintainEvery == 0)
         Maintenance.autoMaintainMulti(spark, root, keyCols, maintainTargetBytes)
-      out
-    }
-  }
-
-  /** Idempotent streaming form — [[AtomicTable.commitBatch]]'s
-    * (appId, batchId) redelivery guard over the pruned merge: a redelivered
-    * micro-batch (foreachBatch is at-least-once) is SKIPPED without
-    * evaluating `changes`; a new one stages the pruned merge and stamps the
-    * manifest with its id in the same publish. Returns None on a skip.
-    *
-    * `maintainEvery > 0` closes the operations loop INSIDE the cadence
-    * (r18 verdict item 5): after every Nth applied batch the
-    * [[Maintenance.autoMaintain]] ladder runs against the just-published
-    * version — the advisor's check is metadata-only (free per batch), a
-    * heal is an interleaved sequential commit whose publish carries the
-    * (appId, batchId) tag forward, so the exactly-once guard survives the
-    * version flips (MaintenanceSpec pins it). A redelivered batch skips
-    * maintenance too — no new bytes, no new drift. */
-  def commitBatchKeyed(spark: SparkSession, root: String, appId: String,
-      batchId: Long, keyCol: String, changes: => DataFrame,
-      applyFn: (DataFrame, DataFrame) => DataFrame,
-      driverKeyThreshold: Int = DriverKeyThreshold,
-      maintainEvery: Int = 0,
-      maintainTargetBytes: Long = Compaction.TargetBytes): Option[MergeStats] = {
-    if (AtomicTable.lastBatch(root).exists { case (app, b) =>
-        app == appId && batchId <= b }) None
-    else {
-      val c = changes
-      @volatile var last: (Int, Int, Int, Int, Int) = (0, 0, 0, 0, 0)
-      val next = AtomicTable.singleWriterStaged(root, "merge",
-          batch = Some((appId, batchId))) { (live, stageDir) =>
-        last = stageMerge(spark, Paths.get(root, live), stageDir, Seq(keyCol),
-          c, applyFn, driverKeyThreshold)
-      }
-      val out = Some(logged(root, keyCol,
-        MergeStats(next, last._1, last._2, last._3, last._4, last._5)))
-      if (maintainEvery > 0 && batchId % maintainEvery == 0)
-        Maintenance.autoMaintain(spark, root, keyCol, maintainTargetBytes)
       out
     }
   }

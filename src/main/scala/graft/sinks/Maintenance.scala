@@ -342,6 +342,25 @@ object Maintenance {
       ratio, action, bloomCov)
   }
 
+  /** The `bloom` heal: rebuild `keyCol`'s blooms with the table's own
+    * sizing AND backend — a manifest-backed key heals through the sharded
+    * manifest (its widest bits and k), a TSV key through the sidecar (its
+    * widest bits, at least [[KeyBloom.DefaultBits]]). */
+  private def healBloom(spark: SparkSession, root: String, keyCol: String): Unit = {
+    val live = Paths.get(root, AtomicTable.currentVersion(root).get)
+    val mHeader = BloomManifest.loadHeader(live)
+      .collect { case ((_, c), h) if c == keyCol => h }
+    if (mHeader.nonEmpty)
+      BloomManifest.indexBloomManifest(spark, root, keyCol,
+        mHeader.map(_.bits).max, mHeader.map(_.k).max)
+    else {
+      val bits = KeyBloom.loadBlooms(live)
+        .collect { case ((_, c), b) if c == keyCol => b.bits }
+        .foldLeft(KeyBloom.DefaultBits)(math.max)
+      KeyBloom.indexKeyBloom(spark, root, keyCol, bits)
+    }
+  }
+
   /** Advise → execute → re-advise, to the ladder's fixed point (each
     * action runs at most once). Returns every Health reading taken — the
     * last one is the post-maintenance state, `action == "none"` when the
@@ -356,22 +375,7 @@ object Maintenance {
       ran += h.action
       h.action match {
         case "index" => TargetedDelete.indexKeyStats(spark, root, keyCol)
-        case "bloom" =>
-          // carry the table's own sizing AND backend: a manifest-backed
-          // key heals through the sharded manifest, a TSV key through
-          // the sidecar — the widest existing bits either way
-          val live = Paths.get(root, AtomicTable.currentVersion(root).get)
-          val mHeader = BloomManifest.loadHeader(live)
-            .collect { case ((_, c), h) if c == keyCol => h }
-          if (mHeader.nonEmpty)
-            BloomManifest.indexBloomManifest(spark, root, keyCol,
-              mHeader.map(_.bits).max, mHeader.map(_.k).max)
-          else {
-            val bits = KeyBloom.loadBlooms(live)
-              .collect { case ((_, c), b) if c == keyCol => b.bits }
-              .foldLeft(KeyBloom.DefaultBits)(math.max)
-            KeyBloom.indexKeyBloom(spark, root, keyCol, bits)
-          }
+        case "bloom" => healBloom(spark, root, keyCol)
         case "compact" =>
           Compaction.compactVersion(spark, root, targetBytes, Some(keyCol))
         case "recluster" =>
@@ -434,19 +438,7 @@ object Maintenance {
         ran += h.action
         h.action match {
           case "index" => TargetedDelete.indexKeyStats(spark, root, c)
-          case "bloom" =>
-            val live = Paths.get(root, AtomicTable.currentVersion(root).get)
-            val mHeader = BloomManifest.loadHeader(live)
-              .collect { case ((_, cc), hh) if cc == c => hh }
-            if (mHeader.nonEmpty)
-              BloomManifest.indexBloomManifest(spark, root, c,
-                mHeader.map(_.bits).max, mHeader.map(_.k).max)
-            else {
-              val bits = KeyBloom.loadBlooms(live)
-                .collect { case ((_, cc), b) if cc == c => b.bits }
-                .foldLeft(KeyBloom.DefaultBits)(math.max)
-              KeyBloom.indexKeyBloom(spark, root, c, bits)
-            }
+          case "bloom" => healBloom(spark, root, c)
         }
         h = adviseMulti(spark, root, Seq(keyCols.head, c), targetBytes)(1)._2
         trail += h
@@ -523,14 +515,15 @@ object Maintenance {
       .unionAll(spark.range(AutoInserts.toLong)
         .select((lit(AutoInsertBase) + col("id")).as("id"),
           (col("id") * 7L).as("bal_c")))
-    KeyedMerge.mergeChangesKeyed(spark, root, "id", changes,
+    KeyedMerge.merge(spark, root, Seq("id"), changes,
       (b, c) => b.join(c.select(col("id"), col("bal_c").as("nb")), Seq("id"), "full_outer")
         .select(col("id"), coalesce(col("nb"), col("bal_c")).as("bal_c")))
     val hDrift = advise(spark, root, "id", targetBytes)
     if (hDrift.action != "recluster" || hDrift.overlapRatio <= OverlapThreshold)
       throw new IllegalStateException(
         s"merge drift not detected from metadata: $hDrift")
-    val (_, rsBefore) = StatsRead.readKeyRange(spark, root, "id", blockFrom, blockTo)
+    val (_, rsBefore) = StatsRead.read(spark, root,
+      Seq("id" -> TargetedDelete.LongRange(blockFrom, blockTo)))
     // the drifted wide file plus the block's own natural file: >= 2 planned
     if (rsBefore.footerReads != 0 || rsBefore.filesRead < 2)
       throw new IllegalStateException(
@@ -544,7 +537,8 @@ object Maintenance {
     // legitimately straddle one recluster output boundary — the gate must
     // not depend on where RangePartitioner's per-run sample lands), never
     // more, and never more than before
-    val (_, rsAfter) = StatsRead.readKeyRange(spark, root, "id", blockFrom, blockTo)
+    val (_, rsAfter) = StatsRead.read(spark, root,
+      Seq("id" -> TargetedDelete.LongRange(blockFrom, blockTo)))
     if (rsAfter.footerReads != 0 || rsAfter.filesRead > 2 ||
         rsAfter.filesRead > rsBefore.filesRead)
       throw new IllegalStateException(
@@ -622,9 +616,9 @@ object Maintenance {
       .writeStream
       .foreachBatch { (b: DataFrame, bid: Long) =>
         val stable = b.localCheckpoint(true) // one eval, two tables
-        KeyedMerge.commitBatchKeyed(spark, mRoot, "s18-stream-m", bid, "id",
+        KeyedMerge.commitBatchKeyed(spark, mRoot, "s18-stream-m", bid, Seq("id"),
           stable, upsert, maintainEvery = 1, maintainTargetBytes = targetBytes)
-        KeyedMerge.commitBatchKeyed(spark, cRoot, "s18-stream-c", bid, "id",
+        KeyedMerge.commitBatchKeyed(spark, cRoot, "s18-stream-c", bid, Seq("id"),
           stable, upsert)
         ()
       }

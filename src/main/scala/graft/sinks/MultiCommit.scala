@@ -86,7 +86,7 @@ object MultiCommit {
           AtomicTable.commitAppendBatch(df(), root, appId, batchId, statsCols)
         case Keyed(root, keyCol, changes, applyFn, statsCols) =>
           if (AtomicTable.currentVersion(root).isDefined)
-            KeyedMerge.commitBatchKeyed(spark, root, appId, batchId, keyCol,
+            KeyedMerge.commitBatchKeyed(spark, root, appId, batchId, Seq(keyCol),
               changes(), applyFn).isDefined
           else {
             lazy val c = changes()

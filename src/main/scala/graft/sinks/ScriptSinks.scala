@@ -52,8 +52,7 @@ object ScriptSinks {
   }
 
   def qS14SqlCodegen(spark: SparkSession, dir: String): DataFrame =
-    geometrySqlStatements(spark,
-      "/root/reference/neighbourhoods/neighbourhoods_paris.jsonl")
+    geometrySqlStatements(spark, graft.domain.Spatial.ParisGeometryJsonl)
 
   /** Assemble and write the full .sql script (header + BEGIN/COMMIT framing,
     * generate_geometry_sql.py:33-38,83): the file-sink step over the
@@ -114,9 +113,9 @@ object ScriptSinks {
 
   val oracles: Map[String, String] = Map(
     "s14_sql_codegen" ->
-      """WITH r AS (
+      s"""WITH r AS (
         |  SELECT * FROM read_json_auto(
-        |    '/root/reference/neighbourhoods/neighbourhoods_paris.jsonl',
+        |    '${graft.domain.Spatial.ParisGeometryJsonl}',
         |    format='newline_delimited')),
         |g AS (
         |  SELECT name AS area_name,

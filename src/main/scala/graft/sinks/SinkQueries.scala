@@ -79,10 +79,11 @@ object SinkQueries {
   /** S9 through the MULTI-WRITER path: seed the table with one
     * [[AtomicTable.mergeCommit]] (replacing whatever a previous run left
     * live, so re-runs are deterministic), then apply the incoming batch
-    * through the STATS-PRUNED OCC merge ([[KeyedMerge.mergeChangesKeyedOcc]]
-    * — r18: the upsert producer rides the file-granular path, rewriting only
-    * key-intersecting files; on this fixture that is the whole single-file
-    * table, but the code path is the one a 10⁶-file poi table runs). A lost
+    * through the STATS-PRUNED OCC merge ([[KeyedMerge.merge]] under
+    * [[AtomicTable.Writer.Occ]] — r18: the upsert producer rides the
+    * file-granular path, rewriting only key-intersecting files; on this
+    * fixture that is the whole single-file table, but the code path is the
+    * one a 10⁶-file poi table runs). A lost
     * CAS race re-prunes against the winner's version, the exact shape a
     * concurrent ingester uses. The driver's hash gate then proves the
     * optimistic pruned path is value-identical to the single-writer round
@@ -90,10 +91,11 @@ object SinkQueries {
   def qS9OptimisticUpsert(spark: SparkSession, dir: String): DataFrame = {
     val root = "spark-warehouse/s9_opt_" + new java.io.File(dir).getName
     AtomicTable.mergeCommit(spark, root) { _ => existingDf(spark) }
-    KeyedMerge.mergeChangesKeyedOcc(spark, root, "google_place_id",
+    KeyedMerge.merge(spark, root, Seq("google_place_id"),
       incomingDf(spark),
       (base, inc) => MergeSink.upsert(base, inc, "google_place_id",
-        updateCols = Seq("name", "rating", "reviews_count"), asOf = Fixtures.asOf))
+        updateCols = Seq("name", "rating", "reviews_count"), asOf = Fixtures.asOf),
+      AtomicTable.Writer.Occ())
     AtomicTable.read(spark, root)
       .select(col("google_place_id"), col("name"), col("rating"), col("reviews_count"),
         date_format(col("first_ingested_at"), "yyyy-MM-dd").as("first_ingested_date"))
@@ -150,8 +152,8 @@ object SinkQueries {
       classOf[java.nio.file.attribute.BasicFileAttributes]).fileKey()
     val v1Keys = TargetedDelete.partFiles(Paths.get(root, v1))
       .map(p => p.getFileName.toString -> keyOf(p)).toMap
-    TargetedDelete.deleteKeyRange(spark, root, "doc_id",
-      StatsRead.ReadFrom, StatsRead.ReadTo)
+    TargetedDelete.delete(spark, root, "doc_id",
+      TargetedDelete.LongRange(StatsRead.ReadFrom, StatsRead.ReadTo))
     val v3 = AtomicTable.restoreVersion(root, v1)
     val restored = TargetedDelete.partFiles(Paths.get(root, v3))
     if (restored.isEmpty ||
@@ -160,8 +162,8 @@ object SinkQueries {
           v1Keys(p.getFileName.toString) == keyOf(p)))
       throw new IllegalStateException(
         "restore must hard-link the target version's exact file set")
-    val (df, rs) = StatsRead.readKeyRange(spark, root, "doc_id",
-      StatsRead.ReadFrom, StatsRead.ReadTo)
+    val (df, rs) = StatsRead.read(spark, root, Seq("doc_id" ->
+      TargetedDelete.LongRange(StatsRead.ReadFrom, StatsRead.ReadTo)))
     if (rs.footerReads != 0 || rs.filesRead >= rs.totalFiles)
       throw new IllegalStateException(
         s"restored version lost its skipping sidecar: $rs")

@@ -42,12 +42,13 @@ import graft.Tables
   * the live files (different device), the file is copied — same semantics,
   * the reuse is an optimization, not a correctness dependency.
   *
-  * Concurrency: [[deleteKeys]] is the single-writer path (composes with
-  * [[AtomicTable.commit]]'s cadence); [[deleteKeysOcc]] runs the SAME
-  * staged prune/rewrite/link through [[AtomicTable.occCommit]]'s
-  * claim/rebase protocol, so multi-writer deployments get the targeted
-  * delete raced safely against concurrent [[AtomicTable.mergeCommit]]s —
-  * a loser rebases on the winner's version and re-prunes. */
+  * Concurrency: [[delete]]'s default [[AtomicTable.Writer.Single]] is the
+  * single-writer path (composes with [[AtomicTable.commit]]'s cadence);
+  * [[AtomicTable.Writer.Occ]] runs the SAME staged prune/rewrite/link
+  * through [[AtomicTable.occCommit]]'s claim/rebase protocol, so
+  * multi-writer deployments get the targeted delete raced safely against
+  * concurrent [[AtomicTable.mergeCommit]]s — a loser rebases on the
+  * winner's version and re-prunes. */
 object TargetedDelete {
 
   /** What the delete touched — the audit row a maintenance job logs.
@@ -87,6 +88,16 @@ object TargetedDelete {
       * ranges (a range is two comparisons no matter how many keys it spans —
       * macro-expanding it into a join side would be backwards). */
     def preferPredicate: Boolean = size <= IsinKeyThreshold
+  }
+
+  /** The enumerated key-set constructors: drop nulls, dedupe, sort — the
+    * condition the binary-searched stats probes of [[LongKeys]] and
+    * [[StringKeys]] rely on, established here once. */
+  object KeySet {
+    def longs(keys: Seq[Long]): LongKeys = LongKeys(keys.distinct.sorted.toArray)
+    /** Sorted under [[KeyStats.Utf8Order]], parquet's stats byte order. */
+    def strings(keys: Seq[String]): StringKeys =
+      StringKeys(keys.filter(_ != null).distinct.sorted(KeyStats.Utf8Order).toArray)
   }
 
   final case class LongKeys(sorted: Array[Long]) extends KeySet {
@@ -210,8 +221,8 @@ object TargetedDelete {
     override def preferPredicate: Boolean = true
   }
 
-  /** `sorted` MUST be sorted under [[KeyStats.Utf8Order]] (the companion
-    * constructor [[TargetedDelete.stringKeySet]] guarantees it) — the range
+  /** `sorted` MUST be sorted under [[KeyStats.Utf8Order]] (the constructor
+    * [[KeySet.strings]] guarantees it) — the range
     * probe replays parquet's unsigned-UTF-8-byte stats order, which Java's
     * default String order diverges from on supplementary-plane content. */
   final case class StringKeys(sorted: Array[String]) extends KeySet {
@@ -289,17 +300,6 @@ object TargetedDelete {
   val StatsFile: String = KeyStats.StatsFile
   val ParallelFooterThreshold: Int = KeyStats.ParallelFooterThreshold
 
-  private[sinks] def loadStats(versionDir: Path): Map[(String, String), StatRow] =
-    KeyStats.loadStats(versionDir)
-  private[sinks] def writeStats(versionDir: Path,
-      rows: Map[(String, String), StatRow]): Unit =
-    KeyStats.writeStats(versionDir, rows)
-  private[sinks] def footerStatRow(f: String, keyCol: String): StatRow =
-    KeyStats.footerStatRow(f, keyCol)
-  private[sinks] def statRowsFor(spark: SparkSession, files: Seq[Path],
-      keyCol: String): Map[String, StatRow] =
-    KeyStats.statRowsFor(spark, files, keyCol)
-
   /** Build (or extend) the LIVE version's `_KEYSTATS` index for `keyCols`:
     * footer-read each unindexed file ONCE — one open serves ALL requested
     * columns (the footer holds every column's block stats; k columns must
@@ -312,13 +312,13 @@ object TargetedDelete {
     val live = AtomicTable.currentVersion(root).getOrElse(
       throw new IllegalStateException(s"no live version at $root"))
     val liveDir = Paths.get(root, live)
-    val old = loadStats(liveDir)
+    val old = KeyStats.loadStats(liveDir)
     // a file missing ANY requested column gets one open extracting all of
     // them (recomputing an already-present row lands the identical value)
     val missing = partFiles(liveDir).filter(f =>
       keyCols.exists(c => !old.contains((f.getFileName.toString, c))))
     val fresh = KeyStats.statRowsFor(spark, missing, keyCols)
-    if (fresh.nonEmpty) writeStats(liveDir, old ++ fresh)
+    if (fresh.nonEmpty) KeyStats.writeStats(liveDir, old ++ fresh)
     missing.size
   }
 
@@ -395,12 +395,12 @@ object TargetedDelete {
     * re-reads it. */
   private[sinks] def pruneFiles(spark: SparkSession, liveDir: Path, files: Seq[Path],
       keyCol: String, ks: KeySet): Pruned = {
-    val sideAll = loadStats(liveDir)
+    val sideAll = KeyStats.loadStats(liveDir)
     val side = sideAll.collect {
       case ((f, c), row) if c == keyCol => f -> row
     }
     val unknown = files.filterNot(f => side.contains(f.getFileName.toString))
-    val rows = side ++ statRowsFor(spark, unknown, keyCol)
+    val rows = side ++ KeyStats.statRowsFor(spark, unknown, keyCol)
     val (touched0, reused0) =
       files.partition(f => rowIntersects(rows(f.getFileName.toString), ks))
     // sharded-manifest probe for enumerated key sets (one distributed job,
@@ -452,10 +452,10 @@ object TargetedDelete {
     * files get `keyCol` rows from their just-written local footers, so a
     * delete's output version is always fully indexed on the delete column
     * and the next delete on it needs ZERO footer reads. Shared by the
-    * single-writer and OCC paths.
-    * Returns (total, rewritten, dropped, reused, footerReads, bloomSkipped). */
+    * single-writer and OCC paths; the stats row's version is filled in by
+    * the caller once the commit publishes. */
   private def stageDelete(spark: SparkSession, liveDir: Path, stageDir: Path,
-      keyCol: String, ks: KeySet): (Int, Int, Int, Int, Int, Int) = {
+      keyCol: String, ks: KeySet): DeleteStats = {
     requireFlatLayout(liveDir, "targeted delete")
     val files = partFiles(liveDir)
     val pr = pruneFiles(spark, liveDir, files, keyCol, ks)
@@ -498,9 +498,9 @@ object TargetedDelete {
     // zero-footer-read reads; r18 verdict item 2)
     val indexedCols = (pr.allSideRows.keys.map(_._2).toSet + keyCol).toSeq.sorted
     val freshRows = KeyStats.statRowsFor(spark, freshFiles, indexedCols)
-    writeStats(stageDir, carried ++ reusedKeyRows ++ freshRows)
-    (files.size, rewrite.size, dropped.size, pr.reused.size, pr.footerReads,
-      pr.bloomSkipped)
+    KeyStats.writeStats(stageDir, carried ++ reusedKeyRows ++ freshRows)
+    DeleteStats("", files.size, rewrite.size, pr.reused.size, pr.footerReads,
+      dropped.size, pr.bloomSkipped)
   }
 
   /** Move a staged rewrite's part files up into `stageDir`, then remove the
@@ -540,95 +540,34 @@ object TargetedDelete {
         Files.copy(src, dst)
     }
 
-  private def longKeySet(keys: Seq[Long]): KeySet =
-    LongKeys(keys.distinct.sorted.toArray)
-  private def stringKeySet(keys: Seq[String]): KeySet =
-    StringKeys(keys.filter(_ != null).distinct.sorted(KeyStats.Utf8Order).toArray)
-
-  /** Delete all rows whose BIGINT `keyCol` is in `keys` from the live
-    * version, publishing the result as the next version. Single-writer path
-    * (composes with [[AtomicTable.commit]]'s cadence; for concurrent
-    * writers use [[deleteKeysOcc]]). */
-  def deleteKeys(spark: SparkSession, root: String, keyCol: String,
-      keys: Seq[Long]): DeleteStats =
-    deleteKeySet(spark, root, keyCol, longKeySet(keys))
-
-  /** [[deleteKeys]] for STRING-keyed tables (doc hashes): the footer stats
-    * decode as UTF-8 binary, so an id-clustered string layout prunes the
-    * same way a BIGINT one does. */
-  def deleteStringKeys(spark: SparkSession, root: String, keyCol: String,
-      keys: Seq[String]): DeleteStats =
-    deleteKeySet(spark, root, keyCol, stringKeySet(keys))
-
-  /** Delete a CONTIGUOUS BIGINT key range [lo, hi] — the "one withdrawn
-    * source's id block" shape, expressed as a two-comparison predicate no
-    * matter how many keys the range spans (a 10⁹-key GDPR block must not be
-    * enumerated). */
-  def deleteKeyRange(spark: SparkSession, root: String, keyCol: String,
-      lo: Long, hi: Long): DeleteStats =
-    deleteKeySet(spark, root, keyCol, LongRange(lo, hi))
-
-  /** [[deleteKeyRange]] for STRING keys under UTF-8 byte order. Contained
-    * files drop whole, same as the long form. For "everything with prefix p"
-    * use [[deleteStringKeyPrefix]] — an inclusive range cannot express a
-    * prefix block. */
-  def deleteStringKeyRange(spark: SparkSession, root: String, keyCol: String,
-      lo: String, hi: String): DeleteStats =
-    deleteKeySet(spark, root, keyCol, StringRange(lo, hi))
-
-  /** Delete EVERY key starting with `prefix` — the withdrawn-source
-    * hash-prefix block, complete by construction (astral and max-byte
-    * suffixes included, which no inclusive [p, p+X] range can promise).
-    * Contained files drop whole. */
-  def deleteStringKeyPrefix(spark: SparkSession, root: String, keyCol: String,
-      prefix: String): DeleteStats =
-    deleteKeySet(spark, root, keyCol, StringPrefix(prefix))
-
-  private def deleteKeySet(spark: SparkSession, root: String, keyCol: String,
-      ks: KeySet): DeleteStats = {
+  /** Delete every row whose `keyCol` matches `ks` from the live version,
+    * publishing the result as the next version under `writer`'s commit
+    * mode. Ranges and prefixes ([[LongRange]], [[StringRange]],
+    * [[StringPrefix]]) are two-comparison predicates no matter how many keys
+    * they span (a 10⁹-key GDPR block is never enumerated), and files their
+    * stats prove fully inside the set drop whole. Under
+    * [[AtomicTable.Writer.Occ]] a lost race re-reads the new live version
+    * and RE-PRUNES against it (the winner's files differ), so the delete's
+    * effect lands exactly once alongside interleaved [[AtomicTable
+    * .mergeCommit]]s; stats reflect the attempt that won. */
+  def delete(spark: SparkSession, root: String, keyCol: String, ks: KeySet,
+      writer: AtomicTable.Writer = AtomicTable.Writer.Single): DeleteStats = {
     // orphan handling (crashed-bare-stage overwrite vs complete-claim
     // adoption + rebase) lives in [[AtomicTable.singleWriterStaged]],
     // shared with the keyed merge
-    @volatile var last: (Int, Int, Int, Int, Int, Int) = (0, 0, 0, 0, 0, 0)
-    val next = AtomicTable.singleWriterStaged(root, "del") { (live, stageDir) =>
-      last = stageDelete(spark, Paths.get(root, live), stageDir, keyCol, ks)
+    val (v, stats) = AtomicTable.staged(root, "del", writer) { (live, stageDir) =>
+      stageDelete(spark, Paths.get(root, live), stageDir, keyCol, ks)
     }
-    DeleteStats(next, last._1, last._2, last._4, last._5, last._3, last._6)
+    stats.copy(version = v)
   }
 
-  /** MULTI-WRITER targeted delete: the same staged prune/rewrite/link run
-    * through [[AtomicTable.occCommit]]'s claim/rebase protocol — the CAS
-    * rename claims v{N+1}, a lost race re-reads the new live version and
-    * RE-PRUNES against it (the winner's files differ), so the delete's
-    * effect lands exactly once alongside any interleaved [[AtomicTable
-    * .mergeCommit]]s. Stats reflect the attempt that won. */
-  def deleteKeysOcc(spark: SparkSession, root: String, keyCol: String,
-      keys: Seq[Long], maxRetries: Int = 16,
-      pruneAgeMs: Long = AtomicTable.MergePruneAgeMs): DeleteStats =
-    deleteKeySetOcc(spark, root, keyCol, longKeySet(keys), maxRetries, pruneAgeMs)
-
-  /** [[deleteKeysOcc]] for STRING-keyed tables. */
-  def deleteStringKeysOcc(spark: SparkSession, root: String, keyCol: String,
-      keys: Seq[String], maxRetries: Int = 16,
-      pruneAgeMs: Long = AtomicTable.MergePruneAgeMs): DeleteStats =
-    deleteKeySetOcc(spark, root, keyCol, stringKeySet(keys), maxRetries, pruneAgeMs)
-
-  /** [[deleteKeyRange]] through the OCC claim/rebase protocol. */
-  def deleteKeyRangeOcc(spark: SparkSession, root: String, keyCol: String,
-      lo: Long, hi: Long, maxRetries: Int = 16,
-      pruneAgeMs: Long = AtomicTable.MergePruneAgeMs): DeleteStats =
-    deleteKeySetOcc(spark, root, keyCol, LongRange(lo, hi), maxRetries, pruneAgeMs)
-
-  private def deleteKeySetOcc(spark: SparkSession, root: String, keyCol: String,
-      ks: KeySet, maxRetries: Int, pruneAgeMs: Long): DeleteStats = {
-    @volatile var last: (Int, Int, Int, Int, Int, Int) = (0, 0, 0, 0, 0, 0)
-    val v = AtomicTable.occCommit(root, maxRetries, pruneAgeMs) { (base, stageDir) =>
-      val liveV = base.getOrElse(
-        throw new IllegalStateException(s"no live version at $root"))
-      last = stageDelete(spark, Paths.get(root, liveV), stageDir, keyCol, ks)
-    }
-    DeleteStats(v, last._1, last._2, last._4, last._5, last._3, last._6)
-  }
+  /** [[delete]] of a STRING key set, single-writer. Kept as a named entry
+    * point because the repository benchmark's upkeep workload
+    * (`perfbench/.../Upkeep.scala`) calls it by this name, and the benchmark
+    * is measured unchanged across engine changes. */
+  def deleteStringKeys(spark: SparkSession, root: String, keyCol: String,
+      keys: Seq[String]): DeleteStats =
+    delete(spark, root, keyCol, KeySet.strings(keys))
 
   /** COMPOSITE-KEY targeted delete (r19 verdict item 1): remove exact key
     * TUPLES — the "(poi_id, url) pair withdrawn" shape. `tuples` is a frame
@@ -639,7 +578,7 @@ object TargetedDelete {
     * always survive, matching the single-key three-valued-logic contract. */
   def deleteTupleKeys(spark: SparkSession, root: String, keyCols: Seq[String],
       tuples: DataFrame): KeyedMerge.MergeStats =
-    KeyedMerge.mergeChangesKeyedTuple(spark, root, keyCols, tuples,
+    KeyedMerge.merge(spark, root, keyCols, tuples,
       (base, c) => base.join(
         c.select(keyCols.map(col): _*).na.drop("any").distinct(),
         keyCols, "left_anti"))
@@ -668,7 +607,7 @@ object TargetedDelete {
       Tables.documents(spark, dir)
         .repartitionByRange(8, col("doc_id"))
         .sortWithinPartitions(col("doc_id")), root)
-    deleteKeys(spark, root, "doc_id", deleteSet)
+    delete(spark, root, "doc_id", KeySet.longs(deleteSet))
     AtomicTable.read(spark, root)
       .groupBy(col("lang"), col("source"))
       .agg(count(lit(1)).as("n_docs"),
@@ -685,7 +624,8 @@ object TargetedDelete {
         sum(col("doc_id")).as("sum_ids"))
 
   /** Same delete through the MULTI-WRITER path: table seeded via
-    * mergeCommit, keys removed via [[deleteKeysOcc]] — the OCC
+    * mergeCommit, keys removed via [[delete]] under
+    * [[AtomicTable.Writer.Occ]] — the OCC
     * claim/rebase/marker corridor under the driver's hash gate (the RACE
     * itself is TargetedDeleteSpec territory; this pins the protocol's
     * sequential correctness cross-engine). */
@@ -699,7 +639,8 @@ object TargetedDelete {
       Tables.documents(spark, dir)
         .repartitionByRange(8, col("doc_id"))
         .sortWithinPartitions(col("doc_id")))
-    val stats = deleteKeysOcc(spark, root, "doc_id", deleteSet)
+    val stats = delete(spark, root, "doc_id", KeySet.longs(deleteSet),
+      AtomicTable.Writer.Occ())
     if (stats.footerReads != 0)
       throw new IllegalStateException(
         s"merge-committed version was not indexed: $stats")
@@ -721,7 +662,7 @@ object TargetedDelete {
       Tables.documents(spark, dir)
         .repartitionByRange(24, col("doc_id"))
         .sortWithinPartitions(col("doc_id")), root)
-    deleteKeys(spark, root, "doc_id", volDeleteSet)
+    delete(spark, root, "doc_id", KeySet.longs(volDeleteSet))
     survivorAgg(spark, root)
   }
 
@@ -739,7 +680,7 @@ object TargetedDelete {
         .repartitionByRange(8, col("doc_id"))
         .sortWithinPartitions(col("doc_id")), root)
     indexKeyStats(spark, root, "doc_id")
-    val stats = deleteKeys(spark, root, "doc_id", deleteSet)
+    val stats = delete(spark, root, "doc_id", KeySet.longs(deleteSet))
     if (stats.footerReads != 0)
       throw new IllegalStateException(
         s"indexed delete read ${stats.footerReads} footers — sidecar not used")
@@ -762,10 +703,9 @@ object TargetedDelete {
       Tables.documents(spark, dir)
         .repartitionByRange(StatsRead.CountFiles, col("doc_id"))
         .sortWithinPartitions(col("doc_id")), root, statsCols = Seq("doc_id"))
-    StatsRead.requireContainedFile(root, "doc_id",
-      StatsRead.CountFrom, StatsRead.CountTo, "s22_targeted_delete_range")
-    val stats = deleteKeyRange(spark, root, "doc_id",
-      StatsRead.CountFrom, StatsRead.CountTo)
+    val block = LongRange(StatsRead.CountFrom, StatsRead.CountTo)
+    StatsRead.requireContainedFile(root, "doc_id", block, "s22_targeted_delete_range")
+    val stats = delete(spark, root, "doc_id", block)
     if (stats.footerReads != 0 || stats.droppedFiles < 1 || stats.rewrittenFiles > 2)
       throw new IllegalStateException(
         s"range delete containment did not engage: $stats " +
@@ -802,7 +742,7 @@ object TargetedDelete {
         s"fixture premise broken: min/max pruned a scattered hash ($rsStats)")
     KeyBloom.indexKeyBloom(spark, root, "doc_hash",
       KeyBloom.bitsFor(nRows / 16 + 1))
-    val stats = deleteStringKeys(spark, root, "doc_hash", delHashes)
+    val stats = delete(spark, root, "doc_hash", KeySet.strings(delHashes))
     if (stats.footerReads != 0 || stats.bloomSkipped < 1 ||
         stats.rewrittenFiles > 6 || stats.reusedFiles < stats.totalFiles - 6)
       throw new IllegalStateException(

@@ -94,7 +94,7 @@ object ZorderLayout {
   /** The z-layout's FILE-LEVEL payoff (r17): the same z-clustered write
     * committed as an AtomicTable version indexed on BOTH dimensions (one
     * footer open per file), then the box predicate runs through
-    * [[StatsRead.readWhereAll]] — each file is a small rectangle of the
+    * [[StatsRead.read]] — each file is a small rectangle of the
     * (partkey, suppkey) plane, so the CONJUNCTION of the two per-dimension
     * stats ranges excludes files that either dimension alone admits. The
     * query throws unless the pruning came entirely from the sidecar
@@ -113,7 +113,7 @@ object ZorderLayout {
         .sortWithinPartitions(col("zcode"))
         .drop("zcode"),
       root, statsCols = Seq("l_partkey", "l_suppkey"))
-    val (df, rs) = StatsRead.readWhereAll(spark, root, Seq(
+    val (df, rs) = StatsRead.read(spark, root, Seq(
       "l_partkey" -> TargetedDelete.LongRange(0L, 100L),
       "l_suppkey" -> TargetedDelete.LongRange(0L, 5L)))
     if (rs.footerReads != 0 || rs.filesRead >= rs.totalFiles)
@@ -154,7 +154,7 @@ object ZorderLayout {
       root, statsCols = Seq("l_partkey", "l_suppkey"))
     val changes = spark.range(MergeKeyFrom, MergeKeyTo + 1)
       .select(col("id").as("l_partkey"), lit(MergeDelta).as("dq"))
-    val ms = KeyedMerge.mergeChangesKeyed(spark, root, "l_partkey", changes,
+    val ms = KeyedMerge.merge(spark, root, Seq("l_partkey"), changes,
       (base, c) => base.join(c, Seq("l_partkey"), "left")
         .withColumn("l_quantity",
           col("l_quantity") + coalesce(col("dq"), lit(0.0)))
@@ -163,7 +163,7 @@ object ZorderLayout {
         ms.rewrittenFiles >= ms.totalFiles)
       throw new IllegalStateException(
         s"z-layout merge did not prune from the sidecar: $ms")
-    val (df, rs) = StatsRead.readWhereAll(spark, root, Seq(
+    val (df, rs) = StatsRead.read(spark, root, Seq(
       "l_partkey" -> TargetedDelete.LongRange(0L, 100L),
       "l_suppkey" -> TargetedDelete.LongRange(0L, 5L)))
     if (rs.footerReads != 0 || rs.filesRead >= rs.totalFiles)

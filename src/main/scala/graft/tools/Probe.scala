@@ -78,7 +78,7 @@ object Probe {
         // zones: true polygon cover vs the old bbox cover
         import spark.implicits._
         val areas = graft.domain.Spatial.loadUrbanAreasJsonl(spark,
-          "/root/reference/neighbourhoods/neighbourhoods_paris.jsonl")
+          graft.domain.Spatial.ParisGeometryJsonl)
         val rings = areas.select("area_id", "ring").collect()
           .map(r => (r.getString(0), r.getSeq[scala.collection.Seq[Double]](1)
             .map(_.toArray).toArray))
@@ -104,7 +104,7 @@ object Probe {
         val resL = (if (args.length > 1) args(1) else "11,12,13")
           .split(",").map(_.trim.toInt)
         val ringRows = graft.domain.Spatial.loadUrbanAreasJsonl(spark,
-          "/root/reference/neighbourhoods/neighbourhoods_paris.jsonl")
+          graft.domain.Spatial.ParisGeometryJsonl)
           .select("ring").collect()
           .map(_.getSeq[scala.collection.Seq[Double]](0).map(_.toArray).toArray)
         println(s"[cover] rings=${ringRows.length} " +
@@ -125,7 +125,7 @@ object Probe {
         val resList = (if (args.length > 1) args(1) else "11,12,13")
           .split(",").map(_.trim.toInt)
         val areas = graft.domain.Spatial.loadUrbanAreasJsonl(spark,
-          "/root/reference/neighbourhoods/neighbourhoods_paris.jsonl")
+          graft.domain.Spatial.ParisGeometryJsonl)
         val pts = graft.domain.Spatial.volPoints(spark, graft.domain.Spatial.ParisVolN)
         resList.foreach { res =>
           val t0 = System.nanoTime()

@@ -7,6 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.sinks.{AtomicTable, BloomManifest, KeyBloom, KeyedMerge,
   Maintenance, StatsRead, TargetedDelete}
+import graft.sinks.TargetedDelete.LongRange
 
 /** Sharded-manifest contracts the declared query proves only in aggregate:
   * the distributed probe's verdicts match the driver-materialized TSV
@@ -80,7 +81,7 @@ class BloomManifestSpec extends AnyFunSuite {
     import spark.implicits._
     assert(out.select("id").as[Long].collect().toSet == Set(17L) ||
       rs.filesRead >= 30) // stats path plans ~all; value check is below
-    val (out2, rs2) = StatsRead.readStringKeyInBloom(spark, root, "h",
+    val (out2, rs2) = StatsRead.readStringKeyIn(spark, root, "h",
       Seq(md5hex("17")))
     assert(out2.select("id").as[Long].collect().toSet == Set(17L))
     assert(rs2.footerReads == 0 && rs2.filesRead <= 4, rs2.toString)
@@ -92,7 +93,7 @@ class BloomManifestSpec extends AnyFunSuite {
     val dir = liveDir(root)
     assert(!Files.exists(dir.resolve(KeyBloom.BloomFile)))
     val loads0 = KeyBloom.loadCalls.get()
-    val (out, rs) = StatsRead.readStringKeyInBloom(spark, root, "h",
+    val (out, rs) = StatsRead.readStringKeyIn(spark, root, "h",
       Seq(md5hex("1234")))
     import spark.implicits._
     assert(out.select("id").as[Long].collect().toSet == Set(1234L))
@@ -101,7 +102,7 @@ class BloomManifestSpec extends AnyFunSuite {
     assert(KeyBloom.loadCalls.get() == loads0,
       "probe materialized a TSV sidecar that does not exist")
     // absent key: covered everywhere, admitted ~nowhere
-    val (miss, rsMiss) = StatsRead.readStringKeyInBloom(spark, root, "h",
+    val (miss, rsMiss) = StatsRead.readStringKeyIn(spark, root, "h",
       Seq(md5hex("nope")))
     assert(miss.count() == 0 && rsMiss.filesRead <= 2, rsMiss.toString)
   }
@@ -109,7 +110,7 @@ class BloomManifestSpec extends AnyFunSuite {
   test("targeted delete self-maintains the manifest: carry, rebuild, drop") {
     val root = "spark-warehouse/test_bmanifest_maint"
     buildManifested(root)
-    val del = TargetedDelete.deleteKeyRange(spark, root, "id", 1050L, 1949L)
+    val del = TargetedDelete.delete(spark, root, "id", LongRange(1050L, 1949L))
     assert(del.reusedFiles >= 1 && del.rewrittenFiles >= 1, del.toString)
     val dir = liveDir(root)
     val header = BloomManifest.loadHeader(dir)
@@ -119,12 +120,12 @@ class BloomManifestSpec extends AnyFunSuite {
     assert(header.size == names.size,
       s"stale manifest entries for removed files: ${header.keys}")
     // a surviving key is found; a DELETED key's probe plans zero files
-    val (out, rs) = StatsRead.readStringKeyInBloom(spark, root, "h",
+    val (out, rs) = StatsRead.readStringKeyIn(spark, root, "h",
       Seq(md5hex("50")))
     import spark.implicits._
     assert(out.select("id").as[Long].collect().toSet == Set(50L))
     assert(rs.footerReads == 0 && rs.manifestFiles == names.size, rs.toString)
-    val (gone, rsGone) = StatsRead.readStringKeyInBloom(spark, root, "h",
+    val (gone, rsGone) = StatsRead.readStringKeyIn(spark, root, "h",
       Seq(md5hex("1500")))
     assert(gone.count() == 0L && rsGone.filesRead == 0,
       s"deleted key admitted by a stale manifest bloom: $rsGone")
@@ -136,7 +137,7 @@ class BloomManifestSpec extends AnyFunSuite {
     val changes = spark.createDataFrame(
       Seq((md5hex("77"), 770L), (md5hex("2048"), -1L)))
       .toDF("h", "grp")
-    val ms = KeyedMerge.mergeChangesKeyed(spark, root, "h", changes,
+    val ms = KeyedMerge.merge(spark, root, Seq("h"), changes,
       (base, c) => base.select(col("id"), col("h"), col("grp"))
         .join(c.select(col("h"), col("grp").as("ng")), Seq("h"), "left")
         .select(coalesce(col("id"), lit(-1L)).as("id"), col("h"),
@@ -185,7 +186,7 @@ class BloomManifestSpec extends AnyFunSuite {
     // prune must still clear non-matching files via the manifest
     val changes = spark.createDataFrame(
       Seq((md5hex("77"), 770L), (md5hex("2048"), -1L))).toDF("h", "grp")
-    val ms = KeyedMerge.mergeChangesKeyed(spark, root, "h", changes,
+    val ms = KeyedMerge.merge(spark, root, Seq("h"), changes,
       (base, c) => base.select(col("id"), col("h"), col("grp"))
         .join(c.select(col("h"), col("grp").as("ng")), Seq("h"), "left")
         .select(coalesce(col("id"), lit(-1L)).as("id"), col("h"),
@@ -205,7 +206,7 @@ class BloomManifestSpec extends AnyFunSuite {
     assert(shard0.nonEmpty)
     // a staging pass with drops + rewrites: predecessor shards must link
     // forward untouched, fresh rows append as new shards
-    TargetedDelete.deleteKeyRange(spark, root, "id", 1050L, 1949L)
+    TargetedDelete.delete(spark, root, "id", LongRange(1050L, 1949L))
     val dir1 = liveDir(root)
     val gen1 = BloomManifest.shardDir(dir1).get
     shard0.foreach { n =>
@@ -229,11 +230,11 @@ class BloomManifestSpec extends AnyFunSuite {
       "compaction left stale rows")
     // probes stay exact through delta AND compaction
     import spark.implicits._
-    val (out, rs) = StatsRead.readStringKeyInBloom(spark, root, "h",
+    val (out, rs) = StatsRead.readStringKeyIn(spark, root, "h",
       Seq(md5hex("50")))
     assert(out.select("id").as[Long].collect().toSet == Set(50L))
     assert(rs.footerReads == 0 && rs.manifestFiles == live1.size, rs.toString)
-    val (gone, rsGone) = StatsRead.readStringKeyInBloom(spark, root, "h",
+    val (gone, rsGone) = StatsRead.readStringKeyIn(spark, root, "h",
       Seq(md5hex("1500")))
     assert(gone.count() == 0L && rsGone.filesRead == 0, rsGone.toString)
   }
@@ -262,16 +263,16 @@ class BloomManifestSpec extends AnyFunSuite {
     // row is still found (coverage-without-rows must never read as skip)
     val (out, _) = StatsRead.readStringKeyIn(spark, root, "h", Seq(md5hex("123")))
     assert(out.select("id").as[Long].collect().toSet == Set(123L))
-    TargetedDelete.deleteKeyRange(spark, root, "id", 100L, 199L)
+    TargetedDelete.delete(spark, root, "id", LongRange(100L, 199L))
     val dir2 = liveDir(root)
     assert(BloomManifest.shardDir(dir2).isDefined,
       "staging pass dropped the legacy manifest instead of migrating it")
-    val (out2, rs2) = StatsRead.readStringKeyInBloom(spark, root, "h",
+    val (out2, rs2) = StatsRead.readStringKeyIn(spark, root, "h",
       Seq(md5hex("1234")))
     assert(out2.select("id").as[Long].collect().toSet == Set(1234L))
     assert(rs2.footerReads == 0 && rs2.manifestFiles == rs2.totalFiles &&
       rs2.filesRead <= 4, rs2.toString)
-    val (gone, rsGone) = StatsRead.readStringKeyInBloom(spark, root, "h",
+    val (gone, rsGone) = StatsRead.readStringKeyIn(spark, root, "h",
       Seq(md5hex("150"))) // deleted
     assert(gone.count() == 0L && rsGone.filesRead == 0, rsGone.toString)
     // path 2: an INDEX EXTENSION (new column) carries the legacy rows into
@@ -297,11 +298,11 @@ class BloomManifestSpec extends AnyFunSuite {
     val root = "spark-warehouse/test_bmanifest_restore"
     buildManifested(root)
     val v1 = AtomicTable.currentVersion(root).get
-    TargetedDelete.deleteKeyRange(spark, root, "id", 0L, 999L)
+    TargetedDelete.delete(spark, root, "id", LongRange(0L, 999L))
     AtomicTable.restoreVersion(root, v1)
     val dir = liveDir(root)
     assert(BloomManifest.exists(dir), "restore dropped the manifest")
-    val (out, rs) = StatsRead.readStringKeyInBloom(spark, root, "h",
+    val (out, rs) = StatsRead.readStringKeyIn(spark, root, "h",
       Seq(md5hex("500"))) // deleted in v2, alive again after restore
     import spark.implicits._
     assert(out.select("id").as[Long].collect().toSet == Set(500L))
@@ -351,7 +352,7 @@ class BloomManifestSpec extends AnyFunSuite {
     BloomManifest.indexBloomManifest(spark, root, "h")
     val changes = spark.range(2L).select(
       (col("id") * 150L).as("id"), lit(-1L).as("grp"))
-    val st = KeyedMerge.mergeChangesKeyed(spark, root, "id", changes,
+    val st = KeyedMerge.merge(spark, root, Seq("id"), changes,
       (b, c) => b.select(col("id"), col("grp"))
         .join(c.select(col("id"), col("grp").as("ng")), Seq("id"), "full_outer")
         .select(col("id"), coalesce(col("ng"), col("grp")).as("grp")))
@@ -408,7 +409,7 @@ class BloomManifestSpec extends AnyFunSuite {
     assert(colScan * 4 <= total * 3,
       s"cname scan read $colScan of $total — bulk probe cost not ∝ column slice")
     // and the probe itself still lands through the dense manifest
-    val (out, rs) = StatsRead.readStringKeyInBloom(spark, root, "h",
+    val (out, rs) = StatsRead.readStringKeyIn(spark, root, "h",
       Seq(md5hex("4242")))
     import spark.implicits._
     assert(out.select("id").as[Long].collect().toSeq == Seq(4242L))

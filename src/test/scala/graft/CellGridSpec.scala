@@ -184,7 +184,7 @@ class CellGridSpec extends AnyFunSuite {
     // old per-cell implementation evaluated directly
     val spark = graft.Sessions.local(4)
     val rings = graft.domain.Spatial.loadUrbanAreasJsonl(spark,
-      "/root/reference/neighbourhoods/neighbourhoods_paris.jsonl")
+      graft.domain.Spatial.ParisGeometryJsonl)
       .select("ring").collect()
       .map(_.getSeq[scala.collection.Seq[Double]](0).map(_.toArray).toArray)
     assert(rings.length == 98)

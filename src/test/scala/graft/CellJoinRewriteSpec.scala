@@ -17,8 +17,8 @@ class CellJoinRewriteSpec extends AnyFunSuite {
 
   lazy val spark = Sessions.local(4)
 
-  private lazy val parisAreas = Spatial.loadUrbanAreasJsonl(spark,
-    "/root/reference/neighbourhoods/neighbourhoods_paris.jsonl")
+  private lazy val parisAreas =
+    Spatial.loadUrbanAreasJsonl(spark, Spatial.ParisGeometryJsonl)
 
   private def planOf(df: org.apache.spark.sql.DataFrame) =
     df.queryExecution.optimizedPlan

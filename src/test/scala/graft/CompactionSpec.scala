@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sinks.Compaction
+import graft.sinks.TargetedDelete.KeySet
 
 /** Pins the three compaction claims the driver's hash row can't see: the
   * size-target bin-packing actually bounds per-directory file counts, the
@@ -123,7 +124,7 @@ class CompactionSpec extends AnyFunSuite {
     // nothing lost, nothing duplicated
     assert(AtomicTable.read(spark, root).count() == nBefore)
     // stats lifecycle: a delete on the compacted version reads ZERO footers
-    val d = TargetedDelete.deleteKeys(spark, root, "id", Seq(5L, 100050L))
+    val d = TargetedDelete.delete(spark, root, "id", KeySet.longs(Seq(5L, 100050L)))
     assert(d.footerReads == 0, s"compaction degraded the stats index: $d")
     assert(AtomicTable.read(spark, root).count() == nBefore - 2)
     // idempotence: an already-optimal version does not churn a new version,
@@ -211,14 +212,15 @@ class CompactionSpec extends AnyFunSuite {
     assert(!st.noOp && st.rewrittenFiles >= 2, st.toString)
     // every live file carries BOTH columns' rows — a box read over (id, v)
     // still plans from the sidecar with zero footer reads
-    val (_, rs) = graft.sinks.StatsRead.readWhereAll(spark, root, Seq(
+    val (_, rs) = graft.sinks.StatsRead.read(spark, root, Seq(
       "id" -> graft.sinks.TargetedDelete.LongRange(100L, 200L),
       "v" -> graft.sinks.TargetedDelete.LongRange(300L, 600L)))
     assert(rs.footerReads == 0,
       s"recluster degraded the second column to footer fallback: $rs")
     // same contract through the delete path
-    graft.sinks.TargetedDelete.deleteKeyRange(spark, root, "id", 500L, 600L)
-    val (_, rs2) = graft.sinks.StatsRead.readWhereAll(spark, root, Seq(
+    graft.sinks.TargetedDelete.delete(spark, root, "id",
+      graft.sinks.TargetedDelete.LongRange(500L, 600L))
+    val (_, rs2) = graft.sinks.StatsRead.read(spark, root, Seq(
       "id" -> graft.sinks.TargetedDelete.LongRange(100L, 200L),
       "v" -> graft.sinks.TargetedDelete.LongRange(300L, 600L)))
     assert(rs2.footerReads == 0,

@@ -95,7 +95,7 @@ class CompositeKeySpec extends AnyFunSuite {
     import spark.implicits._
     val changes = Seq((2L, "n0998", -7L), (3L, "n0999", -8L), (1L, "zzz-new", -9L))
       .toDF("grp", "name", "nv")
-    val ms = KeyedMerge.mergeChangesKeyedTuple(spark, root, Seq("grp", "name"),
+    val ms = KeyedMerge.merge(spark, root, Seq("grp", "name"),
       changes, (b, c) => b.join(c, Seq("grp", "name"), "full_outer")
         .select(col("grp"), col("name"), coalesce(col("nv"), col("v")).as("v")))
     assert(ms.footerReads == 0 && ms.rewrittenFiles <= 3 && ms.rewrittenFiles >= 1 &&
@@ -112,7 +112,7 @@ class CompositeKeySpec extends AnyFunSuite {
     assert(AtomicTable.read(spark, root).count() == 1601L)
     // the NEXT tuple merge still prunes with zero footer reads — the
     // sidecar self-maintained through the staging pass
-    val ms2 = KeyedMerge.mergeChangesKeyedTuple(spark, root, Seq("grp", "name"),
+    val ms2 = KeyedMerge.merge(spark, root, Seq("grp", "name"),
       Seq((0L, "n0004", -11L)).toDF("grp", "name", "nv"),
       (b, c) => b.join(c, Seq("grp", "name"), "full_outer")
         .select(col("grp"), col("name"), coalesce(col("nv"), col("v")).as("v")))
@@ -151,7 +151,7 @@ class CompositeKeySpec extends AnyFunSuite {
     assert(out.select("id").as[Long].collect().toSeq == Seq(42L))
     assert(rs.footerReads == 0 && rs.filesRead <= 3, rs.toString)
     // merge through the same bloom; fresh files get composite rows REBUILT
-    val ms = KeyedMerge.mergeChangesKeyedTuple(spark, root, Seq("h1", "h2"),
+    val ms = KeyedMerge.merge(spark, root, Seq("h1", "h2"),
       Seq((hx("42"), hx("10041"), -1L)).toDF("h1", "h2", "nv"),
       (b, c) => b.join(c, Seq("h1", "h2"), "left")
         .select(col("id"), col("h1"), col("h2"),
@@ -175,17 +175,19 @@ class CompositeKeySpec extends AnyFunSuite {
     val root = fresh("occ")
     mentionsTable(root)
     import spark.implicits._
-    val ms = KeyedMerge.mergeChangesKeyedTupleOcc(spark, root, Seq("grp", "name"),
+    val ms = KeyedMerge.merge(spark, root, Seq("grp", "name"),
       Seq((2L, "n0998", -7L)).toDF("grp", "name", "nv"),
       (b, c) => b.join(c, Seq("grp", "name"), "full_outer")
-        .select(col("grp"), col("name"), coalesce(col("nv"), col("v")).as("v")))
+        .select(col("grp"), col("name"), coalesce(col("nv"), col("v")).as("v")),
+      AtomicTable.Writer.Occ())
     assert(ms.footerReads == 0 && ms.rewrittenFiles <= 2, ms.toString)
     assert(AtomicTable.read(spark, root).filter(col("v") === -7L).count() == 1L)
     // the OCC claim left a marker-bearing version the next writer adopts
-    val ms2 = KeyedMerge.mergeChangesKeyedTupleOcc(spark, root, Seq("grp", "name"),
+    val ms2 = KeyedMerge.merge(spark, root, Seq("grp", "name"),
       Seq((3L, "n0999", -8L)).toDF("grp", "name", "nv"),
       (b, c) => b.join(c, Seq("grp", "name"), "full_outer")
-        .select(col("grp"), col("name"), coalesce(col("nv"), col("v")).as("v")))
+        .select(col("grp"), col("name"), coalesce(col("nv"), col("v")).as("v")),
+      AtomicTable.Writer.Occ())
     assert(ms2.footerReads == 0, ms2.toString)
     assert(AtomicTable.read(spark, root).filter(col("v") < 0).count() == 2L)
   }
@@ -197,7 +199,7 @@ class CompositeKeySpec extends AnyFunSuite {
     def kern(b: org.apache.spark.sql.DataFrame, c: org.apache.spark.sql.DataFrame) =
       b.join(c, Seq("grp", "name"), "full_outer")
         .select(col("grp"), col("name"), coalesce(col("nv"), col("v")).as("v"))
-    val st0 = KeyedMerge.commitBatchKeyedTuple(spark, root, "ck-stream", 0L,
+    val st0 = KeyedMerge.commitBatchKeyed(spark, root, "ck-stream", 0L,
       Seq("grp", "name"), Seq((2L, "n0998", -7L)).toDF("grp", "name", "nv"), kern)
     assert(st0.exists(s => s.footerReads == 0 && s.rewrittenFiles <= 2), st0.toString)
     // redelivery (crash before the engine checkpointed offsets): the batch
@@ -205,10 +207,10 @@ class CompositeKeySpec extends AnyFunSuite {
     val boom = spark.range(1).select(
       raise_error(lit("evaluated")).cast("long").as("grp"),
       lit("x").as("name"), lit(0L).as("nv"))
-    assert(KeyedMerge.commitBatchKeyedTuple(spark, root, "ck-stream", 0L,
+    assert(KeyedMerge.commitBatchKeyed(spark, root, "ck-stream", 0L,
       Seq("grp", "name"), boom, kern).isEmpty)
     // the next batch applies and the tuple prune still holds
-    val st1 = KeyedMerge.commitBatchKeyedTuple(spark, root, "ck-stream", 1L,
+    val st1 = KeyedMerge.commitBatchKeyed(spark, root, "ck-stream", 1L,
       Seq("grp", "name"), Seq((3L, "n0999", -8L)).toDF("grp", "name", "nv"), kern)
     assert(st1.exists(s => s.footerReads == 0 && s.rewrittenFiles <= 2), st1.toString)
     val neg = AtomicTable.read(spark, root).filter(col("v") < 0)
@@ -234,7 +236,7 @@ class CompositeKeySpec extends AnyFunSuite {
     val ids = Seq(3L, 42L, 777L, 1500L, 1999L)
     val changes = ids.map(i => (hx(i.toString), hx((i + 9999L).toString), -i))
       .toDF("h1", "h2", "nv")
-    val ms = KeyedMerge.mergeChangesKeyedTuple(spark, root, Seq("h1", "h2"),
+    val ms = KeyedMerge.merge(spark, root, Seq("h1", "h2"),
       changes, (b, c) => b.join(c, Seq("h1", "h2"), "left")
         .select(col("id"), col("h1"), col("h2"),
           coalesce(col("nv"), col("v")).as("v")),

@@ -108,7 +108,8 @@ class ExpectationsSpec extends AnyFunSuite {
     val st = Expectations.commitExpect(spark, df, root, q,
       Seq(Expectation("n_ok", col("n") >= 0L)), statsCols = Seq("id"))
     assert(st.quarantined == 0)
-    val (_, rs) = graft.sinks.StatsRead.readKeyRange(spark, root, "id", 100L, 150L)
+    val (_, rs) = graft.sinks.StatsRead.read(spark, root,
+      Seq("id" -> graft.sinks.TargetedDelete.LongRange(100L, 150L)))
     assert(rs.footerReads == 0 && rs.filesRead < rs.totalFiles,
       s"expectation commit fell off the stats path: $rs")
   }

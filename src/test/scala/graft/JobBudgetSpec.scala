@@ -140,7 +140,7 @@ class JobBudgetSpec extends AnyFunSuite {
     AtomicTable.commitAppend(seed.limit(10)
       .withColumn("k", concat(lit("z"), col("k"))), root)
     check("commitAppend")
-    KeyedMerge.mergeChangesKeyed(spark, root, "k",
+    KeyedMerge.merge(spark, root, Seq("k"),
       seed.filter(col("n") % 97 === 0).withColumn("n", col("n") + 1),
       (b, c) => b.join(c.select(col("k"), col("n").as("cn")), Seq("k"), "left")
         .select(col("k"), coalesce(col("cn"), col("n")).as("n"), col("v"), col("nested"), col("kv")))

@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.sinks.{AtomicTable, KeyBloom, StatsRead, TargetedDelete}
+import graft.sinks.TargetedDelete.{KeySet, LongRange}
 
 /** Bloom-sidecar contracts the hash gate proves only in aggregate: a probe
   * of present keys finds every row while planning ~|keys| files on a layout
@@ -47,13 +48,13 @@ class KeyBloomSpec extends AnyFunSuite {
     assert(rsStats.filesRead >= rsStats.totalFiles - 2,
       s"fixture premise: stats should plan ~all files, got $rsStats")
     assert(KeyBloom.indexKeyBloom(spark, root, "h") == 32)
-    val (df, rs) = StatsRead.readStringKeyInBloom(spark, root, "h", probes)
+    val (df, rs) = StatsRead.readStringKeyIn(spark, root, "h", probes)
     import spark.implicits._
     assert(df.select("id").as[Long].collect().toSet == Set(11L, 1234L, 3999L))
     assert(rs.footerReads == 0 && rs.filesRead <= 6,
       s"bloom did not skip: $rs")
     // absent key: ~zero files planned, empty result, schema intact
-    val (miss, rsMiss) = StatsRead.readStringKeyInBloom(spark, root, "h",
+    val (miss, rsMiss) = StatsRead.readStringKeyIn(spark, root, "h",
       Seq(md5hex("not-a-key")))
     assert(miss.count() == 0 && rsMiss.filesRead <= 2, rsMiss.toString)
     assert(miss.columns.contains("grp"))
@@ -70,13 +71,13 @@ class KeyBloomSpec extends AnyFunSuite {
       df.repartitionByRange(32, col("h")).sortWithinPartitions(col("h"))
         .select(col("id"), col("h")), root)
     KeyBloom.indexKeyBloom(spark, root, "id")
-    val (hit, rs) = StatsRead.readKeyInBloom(spark, root, "id", Seq(5L, 2718L))
+    val (hit, rs) = StatsRead.read(spark, root, Seq("id" -> KeySet.longs(Seq(5L, 2718L))))
     import spark.implicits._
     assert(hit.select("id").as[Long].collect().toSet == Set(5L, 2718L))
     assert(rs.filesRead <= 5, rs.toString)
     // row predicate re-applies inside survivors: a key ABSENT from the data
     // returns zero rows even if a bloom false-positive plans its file
-    val (none, _) = StatsRead.readKeyInBloom(spark, root, "id", Seq(999999L))
+    val (none, _) = StatsRead.read(spark, root, Seq("id" -> KeySet.longs(Seq(999999L))))
     assert(none.count() == 0)
   }
 
@@ -88,7 +89,7 @@ class KeyBloomSpec extends AnyFunSuite {
       df.repartitionByRange(8, col("id")).sortWithinPartitions(col("id")),
       root, statsCols = Seq("id"))
     // NO bloom built: the bloom read must still answer via min/max stats
-    val (out, rs) = StatsRead.readKeyInBloom(spark, root, "id", Seq(42L, 900L))
+    val (out, rs) = StatsRead.read(spark, root, Seq("id" -> KeySet.longs(Seq(42L, 900L))))
     import spark.implicits._
     assert(out.select("id").as[Long].collect().toSet == Set(42L, 900L))
     assert(rs.footerReads == 0 && rs.filesRead < rs.totalFiles,
@@ -101,7 +102,7 @@ class KeyBloomSpec extends AnyFunSuite {
     KeyBloom.indexKeyBloom(spark, root, "h")
     // delete an id block deliberately MISALIGNED with file boundaries:
     // interior files drop whole, boundary files rewrite, the rest hard-link
-    val del = TargetedDelete.deleteKeyRange(spark, root, "id", 1050L, 1949L)
+    val del = TargetedDelete.delete(spark, root, "id", LongRange(1050L, 1949L))
     assert(del.reusedFiles >= 1 && del.rewrittenFiles >= 1, del.toString)
     val live = Paths.get(root, AtomicTable.currentVersion(root).get)
     val blooms = KeyBloom.loadBlooms(live)
@@ -115,12 +116,12 @@ class KeyBloomSpec extends AnyFunSuite {
     // the maintained sidecar still answers point reads: a surviving key is
     // found; a DELETED key's probe plans ZERO files (its rebuilt bloom no
     // longer contains it)
-    val (out, rs) = StatsRead.readStringKeyInBloom(spark, root, "h",
+    val (out, rs) = StatsRead.readStringKeyIn(spark, root, "h",
       Seq(md5hex("50")))
     import spark.implicits._
     assert(out.select("id").as[Long].collect().toSet == Set(50L))
     assert(rs.footerReads == 0, rs.toString)
-    val (gone, rsGone) = StatsRead.readStringKeyInBloom(spark, root, "h",
+    val (gone, rsGone) = StatsRead.readStringKeyIn(spark, root, "h",
       Seq(md5hex("1500")))
     assert(gone.count() == 0L)
     assert(rsGone.filesRead == 0,
@@ -141,7 +142,7 @@ class KeyBloomSpec extends AnyFunSuite {
     // before the r19 fix, maintainStage's bloom rebuild threw on h
     val changes = spark.range(2L).select(
       (col("id") * 150L).as("id"), lit(-1L).as("grp"))
-    val st = KeyedMerge.mergeChangesKeyed(spark, root, "id", changes,
+    val st = KeyedMerge.merge(spark, root, Seq("id"), changes,
       (b, c) => b.select(col("id"), col("grp"))
         .join(c.select(col("id"), col("grp").as("ng")), Seq("id"), "full_outer")
         .select(col("id"), coalesce(col("ng"), col("grp")).as("grp")))
@@ -183,7 +184,7 @@ class KeyBloomSpec extends AnyFunSuite {
     buildHashed(rootB)
     KeyBloom.indexKeyBloom(spark, rootB, "h")
     val prevB = AtomicTable.currentVersion(rootB).get
-    KeyedMerge.mergeChangesKeyed(spark, rootB, "h", changes(), upsert)
+    KeyedMerge.merge(spark, rootB, Seq("h"), changes(), upsert)
     val fb = freshFiles(rootB, prevB)
     assert(fb.nonEmpty && fb.forall(nativeBloom(_, "h")),
       "bloomed table's rewrite lost the parquet-native bloom")
@@ -191,12 +192,12 @@ class KeyBloomSpec extends AnyFunSuite {
     val rootN = "spark-warehouse/test_bloom_native_n"
     buildHashed(rootN)
     val prevN = AtomicTable.currentVersion(rootN).get
-    KeyedMerge.mergeChangesKeyed(spark, rootN, "h", changes(), upsert)
+    KeyedMerge.merge(spark, rootN, Seq("h"), changes(), upsert)
     val fn = freshFiles(rootN, prevN)
     assert(fn.nonEmpty && !fn.exists(nativeBloom(_, "h")),
       "unbloomed table's rewrite unexpectedly carries a native bloom")
     // correctness through the native-bloomed file: point read finds the row
-    val (out, _) = StatsRead.readStringKeyInBloom(spark, rootB, "h",
+    val (out, _) = StatsRead.readStringKeyIn(spark, rootB, "h",
       Seq(md5hex("997")))
     import spark.implicits._
     assert(out.select("id").as[Long].collect().toSet == Set(-1L))
@@ -211,7 +212,7 @@ class KeyBloomSpec extends AnyFunSuite {
     AtomicTable.commit(rows.toDF("k", "v").coalesce(1), root)
     KeyBloom.indexKeyBloom(spark, root, "k")
     rows.foreach { case (s, i) =>
-      val (out, _) = StatsRead.readStringKeyInBloom(spark, root, "k", Seq(s))
+      val (out, _) = StatsRead.readStringKeyIn(spark, root, "k", Seq(s))
       assert(out.select("v").as[Long].collect().toSeq == Seq(i), s"key $s")
     }
   }

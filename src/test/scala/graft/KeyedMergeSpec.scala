@@ -63,7 +63,7 @@ class KeyedMergeSpec extends AnyFunSuite {
     val root = freshRoot("eq")
     commitClustered(root)
     val prev = AtomicTable.currentVersion(root).get
-    val ms = KeyedMerge.mergeChangesKeyed(spark, root, "id", feed(), CdcApply.apply)
+    val ms = KeyedMerge.merge(spark, root, Seq("id"), feed(), CdcApply.apply)
     assert(ms.footerReads == 0, s"indexed table read footers: $ms")
     assert(ms.reusedFiles >= 1 && ms.rewrittenFiles * 2 < ms.totalFiles,
       s"pruning did not engage on the clustered feed: $ms")
@@ -88,7 +88,7 @@ class KeyedMergeSpec extends AnyFunSuite {
     val second = Tables.customer(spark, sf).select(col("c_custkey").as("id"))
       .filter(col("id").between(400, 449))
       .select(col("id"), lit(1L).as("seq"), lit("U").as("op"), lit(1L).as("bal_c"))
-    val ms2 = KeyedMerge.mergeChangesKeyed(spark, root, "id", second, CdcApply.apply)
+    val ms2 = KeyedMerge.merge(spark, root, Seq("id"), second, CdcApply.apply)
     assert(ms2.footerReads == 0, s"second merge fell off the sidecar path: $ms2")
     assert(ms2.rewrittenFiles * 2 < ms2.totalFiles, s"clustering decayed: $ms2")
   }
@@ -96,8 +96,8 @@ class KeyedMergeSpec extends AnyFunSuite {
   test("distributed key->files regime (threshold 0) lands the identical state") {
     val rootA = freshRoot("distA"); val rootB = freshRoot("distB")
     commitClustered(rootA); commitClustered(rootB)
-    val msDriver = KeyedMerge.mergeChangesKeyed(spark, rootA, "id", feed(), CdcApply.apply)
-    val msDist = KeyedMerge.mergeChangesKeyed(spark, rootB, "id", feed(), CdcApply.apply,
+    val msDriver = KeyedMerge.merge(spark, rootA, Seq("id"), feed(), CdcApply.apply)
+    val msDist = KeyedMerge.merge(spark, rootB, Seq("id"), feed(), CdcApply.apply,
       driverKeyThreshold = 0)
     assert(sortedState(AtomicTable.read(spark, rootA)) ==
       sortedState(AtomicTable.read(spark, rootB)))
@@ -112,7 +112,7 @@ class KeyedMergeSpec extends AnyFunSuite {
     commitClustered(root)
     val ins = spark.range(25).select((lit(3000000L) + col("id")).as("id"),
       lit(1L).as("seq"), lit("I").as("op"), lit(5L).as("bal_c"))
-    val ms = KeyedMerge.mergeChangesKeyed(spark, root, "id", ins, CdcApply.apply)
+    val ms = KeyedMerge.merge(spark, root, Seq("id"), ins, CdcApply.apply)
     assert(ms.rewrittenFiles == 0 && ms.reusedFiles == ms.totalFiles,
       s"net-new inserts must not rewrite any existing file: $ms")
     val n = AtomicTable.read(spark, root).count()
@@ -122,16 +122,16 @@ class KeyedMergeSpec extends AnyFunSuite {
   test("commitBatchKeyed skips a redelivered batch without evaluating it") {
     val root = freshRoot("redeliver")
     commitClustered(root)
-    val first = KeyedMerge.commitBatchKeyed(spark, root, "km-spec", 0L, "id",
+    val first = KeyedMerge.commitBatchKeyed(spark, root, "km-spec", 0L, Seq("id"),
       feed(), CdcApply.apply)
     assert(first.nonEmpty)
     var evaluated = false
-    val skipped = KeyedMerge.commitBatchKeyed(spark, root, "km-spec", 0L, "id",
+    val skipped = KeyedMerge.commitBatchKeyed(spark, root, "km-spec", 0L, Seq("id"),
       { evaluated = true; feed() }, CdcApply.apply)
     assert(skipped.isEmpty && !evaluated,
       "redelivered batch must be skipped manifest-only")
     // a NEW id under a DIFFERENT appId applies (fresh-checkpoint contract)
-    val other = KeyedMerge.commitBatchKeyed(spark, root, "km-spec-2", 0L, "id",
+    val other = KeyedMerge.commitBatchKeyed(spark, root, "km-spec-2", 0L, Seq("id"),
       spark.range(1).select(lit(4000000L).as("id"), lit(1L).as("seq"),
         lit("I").as("op"), lit(9L).as("bal_c")), CdcApply.apply)
     assert(other.nonEmpty)
@@ -158,11 +158,11 @@ class KeyedMergeSpec extends AnyFunSuite {
       merged
     }
     val rootA = "spark-warehouse/kmspec_strA"; build(rootA)
-    val msA = KeyedMerge.mergeChangesKeyed(spark, rootA, "k", strChanges(), upsert)
+    val msA = KeyedMerge.merge(spark, rootA, Seq("k"), strChanges(), upsert)
     assert(msA.footerReads == 0 && msA.reusedFiles >= 20 &&
       msA.rewrittenFiles <= 6, s"string pruning did not engage: $msA")
     val rootB = "spark-warehouse/kmspec_strB"; build(rootB)
-    val msB = KeyedMerge.mergeChangesKeyed(spark, rootB, "k", strChanges(), upsert,
+    val msB = KeyedMerge.merge(spark, rootB, Seq("k"), strChanges(), upsert,
       driverKeyThreshold = 0)
     assert(msB.rewrittenFiles == msA.rewrittenFiles &&
       msB.reusedFiles == msA.reusedFiles, s"regimes diverged: $msA vs $msB")
@@ -177,7 +177,8 @@ class KeyedMergeSpec extends AnyFunSuite {
   test("OCC merge variant lands the same state through the claim/rebase CAS") {
     val root = freshRoot("occ")
     commitClustered(root)
-    val ms = KeyedMerge.mergeChangesKeyedOcc(spark, root, "id", feed(), CdcApply.apply)
+    val ms = KeyedMerge.merge(spark, root, Seq("id"), feed(), CdcApply.apply,
+      AtomicTable.Writer.Occ())
     assert(ms.footerReads == 0 && ms.reusedFiles >= 1)
     assert(sortedState(AtomicTable.read(spark, root)) ==
       sortedState(CdcApply.apply(base(), feed())))
@@ -210,7 +211,7 @@ class KeyedMergeSpec extends AnyFunSuite {
     val root = freshRoot("bloom")
     buildHashed(root)
     // premise + control: WITHOUT a bloom the hash-key merge rewrites ~all
-    val msNone = KeyedMerge.mergeChangesKeyed(spark, root, "h",
+    val msNone = KeyedMerge.merge(spark, root, Seq("h"),
       hashChanges(), hashUpsert)
     assert(msNone.bloomSkipped == 0 &&
       msNone.rewrittenFiles >= msNone.totalFiles - 2,
@@ -220,7 +221,7 @@ class KeyedMergeSpec extends AnyFunSuite {
     graft.sinks.KeyBloom.indexKeyBloom(spark, root + "_b", "h",
       graft.sinks.KeyBloom.bitsFor(4000L / 16 + 1))
     val prev = AtomicTable.currentVersion(root + "_b").get
-    val ms = KeyedMerge.mergeChangesKeyed(spark, root + "_b", "h",
+    val ms = KeyedMerge.merge(spark, root + "_b", Seq("h"),
       hashChanges(), hashUpsert)
     assert(ms.footerReads == 0 && ms.bloomSkipped >= 1 &&
       ms.rewrittenFiles <= 5 && ms.reusedFiles >= ms.totalFiles - 5,
@@ -241,7 +242,7 @@ class KeyedMergeSpec extends AnyFunSuite {
         s"linked file $n lost its bloom row across the merge"))
     val second = spark.range(1L).select(
       md5(lit(1777L).cast("string")).as("h"), lit(-3L).as("nv"))
-    val ms2 = KeyedMerge.mergeChangesKeyed(spark, root + "_b", "h",
+    val ms2 = KeyedMerge.merge(spark, root + "_b", Seq("h"),
       second, hashUpsert)
     assert(ms2.footerReads == 0 && ms2.bloomSkipped >= 1,
       s"second merge fell off the carried-bloom path: $ms2")
@@ -254,8 +255,8 @@ class KeyedMergeSpec extends AnyFunSuite {
       graft.sinks.KeyBloom.indexKeyBloom(spark, r, "h",
         graft.sinks.KeyBloom.bitsFor(4000L / 16 + 1))
     }
-    val msA = KeyedMerge.mergeChangesKeyed(spark, rootA, "h", hashChanges(), hashUpsert)
-    val msB = KeyedMerge.mergeChangesKeyed(spark, rootB, "h", hashChanges(), hashUpsert,
+    val msA = KeyedMerge.merge(spark, rootA, Seq("h"), hashChanges(), hashUpsert)
+    val msB = KeyedMerge.merge(spark, rootB, Seq("h"), hashChanges(), hashUpsert,
       driverKeyThreshold = 0)
     assert(msB.footerReads == 0 && msB.bloomSkipped >= 1,
       s"distributed regime did not bloom-prune: $msB")
@@ -274,7 +275,7 @@ class KeyedMergeSpec extends AnyFunSuite {
       graft.sinks.KeyBloom.bitsFor(4000L / 16 + 1))
     val ins = spark.range(4L).select(
       md5((lit(8000000L) + col("id")).cast("string")).as("h"), lit(-9L).as("nv"))
-    val ms = KeyedMerge.mergeChangesKeyed(spark, root, "h", ins, hashUpsert)
+    val ms = KeyedMerge.merge(spark, root, Seq("h"), ins, hashUpsert)
     assert(ms.rewrittenFiles == 0 && ms.reusedFiles == ms.totalFiles,
       s"net-new hashes must not rewrite any file under a sized bloom: $ms")
     assert(AtomicTable.read(spark, root).count() == 4004L)

@@ -72,7 +72,7 @@ class MaintenanceSpec extends AnyFunSuite {
     val changes = spark.range(500L, 560L).select(col("id"), lit(-1L).as("nv"))
       .unionAll(spark.range(20L).select((lit(9000000L) + col("id")).as("id"),
         lit(-2L).as("nv")))
-    KeyedMerge.mergeChangesKeyed(spark, root, "id", changes,
+    KeyedMerge.merge(spark, root, Seq("id"), changes,
       (b, c) => b.join(c, Seq("id"), "full_outer")
         .select(col("id"), coalesce(col("nv"), col("v")).as("v")))
     val h = Maintenance.advise(spark, root, "id", t)
@@ -125,7 +125,7 @@ class MaintenanceSpec extends AnyFunSuite {
     val changes = spark.range(3000L, 3060L).select(col("id"), lit(-1L).as("nv"))
       .unionAll(spark.range(10L).select((lit(9000000L) + col("id")).as("id"),
         lit(-2L).as("nv")))
-    KeyedMerge.mergeChangesKeyed(spark, root, "id", changes,
+    KeyedMerge.merge(spark, root, Seq("id"), changes,
       (b, c) => b.join(c, Seq("id"), "full_outer")
         .select(col("id"), coalesce(col("nv"), col("v")).as("v")))
     val h = Maintenance.advise(spark, root, "id", t)
@@ -166,7 +166,7 @@ class MaintenanceSpec extends AnyFunSuite {
     val changes = spark.range(0L, 60L).select(col("id"), lit(-1L).as("nv"))
       .unionAll(spark.range(10L).select((lit(9000000L) + col("id")).as("id"),
         lit(-2L).as("nv")))
-    KeyedMerge.mergeChangesKeyed(spark, root, "id", changes,
+    KeyedMerge.merge(spark, root, Seq("id"), changes,
       (b, c) => b.join(c, Seq("id"), "full_outer")
         .select(col("id"), coalesce(col("nv"), col("v")).as("v")))
     val h = Maintenance.advise(spark, root, "id", t)
@@ -228,7 +228,7 @@ class MaintenanceSpec extends AnyFunSuite {
     val root3 = fresh("telem3")
     AtomicTable.commit(spark.range(500L).select(col("id"), col("id").as("v"))
       .repartitionByRange(4, col("id")), root3, statsCols = Seq("id"))
-    KeyedMerge.mergeChangesKeyed(spark, root3, "id",
+    KeyedMerge.merge(spark, root3, Seq("id"),
       spark.range(5L).select(col("id"), lit(-1L).as("nv")),
       (b, c) => b.join(c, Seq("id"), "left")
         .select(col("id"), coalesce(col("nv"), col("v")).as("v")))
@@ -256,7 +256,7 @@ class MaintenanceSpec extends AnyFunSuite {
         .unionAll(spark.range(10L).select(
           (lit(9000000L) + lit(i * 100L) + col("id")).as("id"), lit(-9L).as("nv")))
       val ms = KeyedMerge.commitBatchKeyed(spark, root, "maint-stream", i.toLong,
-        "id", batch, upsert)
+        Seq("id"), batch, upsert)
       assert(ms.nonEmpty, s"batch $i skipped unexpectedly")
       Maintenance.autoMaintain(spark, root, "id", t)
       val h = Maintenance.advise(spark, root, "id", t)
@@ -265,7 +265,7 @@ class MaintenanceSpec extends AnyFunSuite {
     // redelivery of batch 2 after maintenance flipped versions: still skipped
     var evaluated = false
     val skipped = KeyedMerge.commitBatchKeyed(spark, root, "maint-stream", 2L,
-      "id", { evaluated = true; spark.range(1).select(col("id"), lit(0L).as("nv")) },
+      Seq("id"), { evaluated = true; spark.range(1).select(col("id"), lit(0L).as("nv")) },
       upsert)
     assert(skipped.isEmpty && !evaluated,
       "maintenance commits must not reset the streaming redelivery guard")
@@ -299,7 +299,7 @@ class MaintenanceSpec extends AnyFunSuite {
     def hx(s: String) = java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
     def probeOnce(i: Long): Unit = {
-      val (out, rs) = StatsRead.readStringKeyInBloom(spark, root, "h",
+      val (out, rs) = StatsRead.readStringKeyIn(spark, root, "h",
         Seq(hx(i.toString)))
       assert(out.count() == 1L && rs.footerReads == 0, rs.toString)
     }
@@ -312,7 +312,7 @@ class MaintenanceSpec extends AnyFunSuite {
     // bloat the delta ledger: each keyed merge's staging pass links the
     // shard set forward and appends fresh shards
     (1 to 10).foreach { i =>
-      KeyedMerge.mergeChangesKeyed(spark, root, "h",
+      KeyedMerge.merge(spark, root, Seq("h"),
         spark.range(1).select(md5(lit((i * 100).toString)).as("h"), lit(-i.toLong).as("nv")),
         (b, c) => b.join(c, Seq("h"), "left")
           .select(col("id"), col("h"), coalesce(col("nv"), col("v")).as("v")))
@@ -362,7 +362,7 @@ class MaintenanceSpec extends AnyFunSuite {
     assert(Maintenance.adviseManifest(root, cname).isEmpty)
     // bloat the ledger through tuple merges, then observe through probes
     (1 to 10).foreach { i =>
-      KeyedMerge.mergeChangesKeyedTuple(spark, root, Seq("h1", "h2"),
+      KeyedMerge.merge(spark, root, Seq("h1", "h2"),
         spark.range(1).select(md5(lit((i * 100).toString)).as("h1"),
           md5(lit((i * 100 + 7777).toString)).as("h2"), lit(-i.toLong).as("nv")),
         (b, c) => b.join(c, Seq("h1", "h2"), "left")

@@ -9,7 +9,7 @@ import graft.domain.Spatial
 class ParisGeometrySpec extends AnyFunSuite {
 
   lazy val spark = Sessions.local(4)
-  private val jsonl = "/root/reference/neighbourhoods/neighbourhoods_paris.jsonl"
+  private val jsonl = Spatial.ParisGeometryJsonl
 
   private lazy val areas = Spatial.loadUrbanAreasJsonl(spark, jsonl)
 

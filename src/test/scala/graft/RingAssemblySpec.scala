@@ -75,7 +75,7 @@ class RingAssemblySpec extends AnyFunSuite {
   test("ETL path: real Paris rings reassemble from shuffled member segments") {
     val spark = Sessions.local(4)
     import spark.implicits._
-    val jsonl = "/root/reference/neighbourhoods/neighbourhoods_paris.jsonl"
+    val jsonl = Spatial.ParisGeometryJsonl
     val areas = Spatial.loadUrbanAreasJsonl(spark, jsonl)
     val rows = areas.select("area_id", "area_name", "admin_level", "ring").collect()
     val rnd = new scala.util.Random(7)

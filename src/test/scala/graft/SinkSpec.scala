@@ -162,7 +162,7 @@ class SinkSpec extends AnyFunSuite {
     }
     val probe = java.security.MessageDigest.getInstance("MD5")
       .digest("1005".getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val (out, rs) = graft.sinks.StatsRead.readStringKeyInBloom(spark, root, "h", Seq(probe))
+    val (out, rs) = graft.sinks.StatsRead.readStringKeyIn(spark, root, "h", Seq(probe))
     assert(out.select("id").as[Long].collect().toSeq == Seq(1005L))
     assert(rs.footerReads == 0 && rs.filesRead <= 2, rs.toString)
   }

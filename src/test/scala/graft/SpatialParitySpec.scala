@@ -38,8 +38,8 @@ class SpatialParitySpec extends AnyFunSuite {
     assert(viaCells == direct)
   }
 
-  private lazy val parisAreas = Spatial.loadUrbanAreasJsonl(spark,
-    "/root/reference/neighbourhoods/neighbourhoods_paris.jsonl")
+  private lazy val parisAreas =
+    Spatial.loadUrbanAreasJsonl(spark, Spatial.ParisGeometryJsonl)
 
   test("cell prefilter PRUNES at volume: candidates << points x areas") {
     // the 100 TB claim of the cell path (SURVEY §4 item 2): the equi-join on

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.sinks.{AtomicTable, KeyStats, StatsRead, TargetedDelete}
+import graft.sinks.TargetedDelete.{KeySet, LongRange, StringPrefix, StringRange}
 
 /** The read-path data-skipping contracts the driver's hash gate can't see:
   * a stats-pruned read plans a strict SUBSET of the live files yet returns
@@ -34,7 +35,7 @@ class StatsReadSpec extends AnyFunSuite {
   test("range read plans a strict subset with row parity against the full scan") {
     val root = "spark-warehouse/test_s16_range"
     buildTable(root, 8000, statsCols = Seq("id"))
-    val (df, rs) = StatsRead.readKeyRange(spark, root, "id", 1000L, 1200L)
+    val (df, rs) = StatsRead.read(spark, root, Seq("id" -> LongRange(1000L, 1200L)))
     assert(rs.footerReads == 0, s"indexed read should not open footers: $rs")
     assert(rs.filesRead >= 1 && rs.filesRead <= 2,
       s"clustered range should plan 1-2 of ${rs.totalFiles} files: $rs")
@@ -58,7 +59,7 @@ class StatsReadSpec extends AnyFunSuite {
   test("a range no file can contain returns empty without a data scan, schema intact") {
     val root = "spark-warehouse/test_s16_empty"
     buildTable(root, 2000, statsCols = Seq("id"))
-    val (df, rs) = StatsRead.readKeyRange(spark, root, "id", 500000L, 600000L)
+    val (df, rs) = StatsRead.read(spark, root, Seq("id" -> LongRange(500000L, 600000L)))
     assert(rs.filesRead == 0 && rs.footerReads == 0, rs.toString)
     assert(df.count() == 0)
     assert(df.columns.toSeq == Seq("id", "grp", "payload"),
@@ -68,7 +69,7 @@ class StatsReadSpec extends AnyFunSuite {
   test("unindexed table falls back to footer reads, then the sidecar serves the next read") {
     val root = "spark-warehouse/test_s16_fallback"
     buildTable(root, 4000)
-    val (df, rs) = StatsRead.readKeyIn(spark, root, "id", Seq(50L, 60L, 3999L))
+    val (df, rs) = StatsRead.read(spark, root, Seq("id" -> KeySet.longs(Seq(50L, 60L, 3999L))))
     assert(rs.footerReads == rs.totalFiles,
       s"unindexed read should footer-read every file: $rs")
     // 50/60 share the head file(s) unless a sampled range boundary falls
@@ -78,7 +79,7 @@ class StatsReadSpec extends AnyFunSuite {
     assert(df.count() == 3)
     // explicit index → second read is zero-footer
     TargetedDelete.indexKeyStats(spark, root, "id")
-    val (_, rs2) = StatsRead.readKeyIn(spark, root, "id", Seq(50L, 60L, 3999L))
+    val (_, rs2) = StatsRead.read(spark, root, Seq("id" -> KeySet.longs(Seq(50L, 60L, 3999L))))
     assert(rs2.footerReads == 0, rs2.toString)
   }
 
@@ -87,7 +88,7 @@ class StatsReadSpec extends AnyFunSuite {
     buildTable(root, 6000, statsCols = Seq("id"))
     val keys = (0L until 6000L).filter(_ % 4 == 0) // 1500 > threshold
     assert(keys.size > TargetedDelete.IsinKeyThreshold)
-    val (df, rs) = StatsRead.readKeyIn(spark, root, "id", keys)
+    val (df, rs) = StatsRead.read(spark, root, Seq("id" -> KeySet.longs(keys)))
     assert(rs.footerReads == 0)
     assert(df.count() == keys.size)
     assert(df.filter(col("id") % 4 =!= 0).count() == 0)
@@ -118,8 +119,8 @@ class StatsReadSpec extends AnyFunSuite {
     assert(KeyStats.footerOpens.get() - before == 8,
       s"2-column index must cost ONE open per file, took ${KeyStats.footerOpens.get() - before}")
     // both columns landed in the sidecar: reads on either are zero-footer
-    val (_, rsId) = StatsRead.readKeyRange(spark, root, "id", 100L, 200L)
-    val (dfGrp, rsGrp) = StatsRead.readKeyIn(spark, root, "grp", Seq(3L))
+    val (_, rsId) = StatsRead.read(spark, root, Seq("id" -> LongRange(100L, 200L)))
+    val (dfGrp, rsGrp) = StatsRead.read(spark, root, Seq("grp" -> KeySet.longs(Seq(3L))))
     assert(rsId.footerReads == 0 && rsGrp.footerReads == 0,
       s"$rsId / $rsGrp")
     // grp is scattered 0..6 in every file: stats can't prune, rows still right
@@ -145,11 +146,11 @@ class StatsReadSpec extends AnyFunSuite {
         .drop("z"),
       root, statsCols = Seq("x", "y"))
     val box = Seq(
-      "x" -> TargetedDelete.LongRange(10L, 20L),
-      "y" -> TargetedDelete.LongRange(10L, 20L))
-    val (out, rs) = StatsRead.readWhereAll(spark, root, box)
-    val (_, rx) = StatsRead.readKeyRange(spark, root, "x", 10L, 20L)
-    val (_, ry) = StatsRead.readKeyRange(spark, root, "y", 10L, 20L)
+      "x" -> LongRange(10L, 20L),
+      "y" -> LongRange(10L, 20L))
+    val (out, rs) = StatsRead.read(spark, root, box)
+    val (_, rx) = StatsRead.read(spark, root, Seq("x" -> LongRange(10L, 20L)))
+    val (_, ry) = StatsRead.read(spark, root, Seq("y" -> LongRange(10L, 20L)))
     assert(rs.footerReads == 0, rs.toString)
     assert(rs.filesRead <= rx.filesRead && rs.filesRead <= ry.filesRead,
       s"conjunction must never admit more than a single dimension: $rs vs $rx / $ry")
@@ -162,26 +163,26 @@ class StatsReadSpec extends AnyFunSuite {
   test("time-travel stats read prunes from the retained version's own sidecar") {
     val root = "spark-warehouse/test_s16_asof"
     buildTable(root, 8000, statsCols = Seq("id"))
-    TargetedDelete.deleteKeyRange(spark, root, "id", 1000L, 1200L) // v2
+    TargetedDelete.delete(spark, root, "id", LongRange(1000L, 1200L)) // v2
     val prev = AtomicTable.previousVersion(root).get
-    val (hist, rs) = StatsRead.readVersionWhereAll(spark, root,
-      Seq("id" -> TargetedDelete.LongRange(1000L, 1200L)), Some(prev))
+    val (hist, rs) = StatsRead.read(spark, root,
+      Seq("id" -> LongRange(1000L, 1200L)), Some(prev))
     assert(rs.version == prev && rs.footerReads == 0 &&
       rs.filesRead >= 1 && rs.filesRead <= 2, rs.toString)
     assert(hist.count() == 201, "history must still serve the deleted block")
-    val (live, _) = StatsRead.readKeyRange(spark, root, "id", 1000L, 1200L)
+    val (live, _) = StatsRead.read(spark, root, Seq("id" -> LongRange(1000L, 1200L)))
     assert(live.count() == 0)
     // fails loudly for a pruned / never-committed version (readVersion contract)
     intercept[IllegalStateException] {
-      StatsRead.readVersionWhereAll(spark, root,
-        Seq("id" -> TargetedDelete.LongRange(0L, 1L)), Some("v99"))
+      StatsRead.read(spark, root,
+        Seq("id" -> LongRange(0L, 1L)), Some("v99"))
     }
   }
 
   test("range delete removes the block with the same pruned selectivity") {
     val root = "spark-warehouse/test_s16_rangedel"
     buildTable(root, 8000, statsCols = Seq("id"))
-    val stats = TargetedDelete.deleteKeyRange(spark, root, "id", 2000L, 2150L)
+    val stats = TargetedDelete.delete(spark, root, "id", LongRange(2000L, 2150L))
     assert(stats.footerReads == 0, stats.toString)
     assert(stats.rewrittenFiles + stats.droppedFiles >= 1 &&
       stats.rewrittenFiles + stats.droppedFiles <= 2, stats.toString)
@@ -201,7 +202,7 @@ class StatsReadSpec extends AnyFunSuite {
     AtomicTable.commit(
       df.repartitionByRange(64, col("id")).sortWithinPartitions(col("id")),
       root, statsCols = Seq("id"))
-    val stats = TargetedDelete.deleteKeyRange(spark, root, "id", 1000L, 2000L)
+    val stats = TargetedDelete.delete(spark, root, "id", LongRange(1000L, 2000L))
     assert(stats.footerReads == 0, stats.toString)
     assert(stats.droppedFiles >= 4,
       s"interior files should drop whole: $stats")
@@ -223,7 +224,7 @@ class StatsReadSpec extends AnyFunSuite {
     AtomicTable.commit(rows.toDF("id", "payload")
       .repartitionByRange(8, col("id")).sortWithinPartitions(col("id")),
       root2, statsCols = Seq("id"))
-    val s2 = TargetedDelete.deleteKeyRange(spark, root2, "id", 0L, 999L)
+    val s2 = TargetedDelete.delete(spark, root2, "id", LongRange(0L, 999L))
     val live2 = AtomicTable.read(spark, root2)
     assert(live2.count() == 10 && live2.filter(col("id").isNull).count() == 10,
       s"NULL-key rows lost by a whole-file drop: $s2")
@@ -239,12 +240,12 @@ class StatsReadSpec extends AnyFunSuite {
     AtomicTable.commit(
       df.repartitionByRange(64, col("doc_id")).sortWithinPartitions(col("doc_id")),
       root, statsCols = Seq("doc_id"))
-    val (out, rs) = StatsRead.readStringKeyRange(
-      spark, root, "doc_id", "doc01000", "doc01999")
+    val (out, rs) = StatsRead.read(
+      spark, root, Seq("doc_id" -> StringRange("doc01000", "doc01999")))
     assert(rs.footerReads == 0 && rs.filesRead < rs.totalFiles, rs.toString)
     assert(out.count() == 1000)
-    val stats = TargetedDelete.deleteStringKeyRange(
-      spark, root, "doc_id", "doc01000", "doc01999")
+    val stats = TargetedDelete.delete(
+      spark, root, "doc_id", StringRange("doc01000", "doc01999"))
     assert(stats.footerReads == 0, stats.toString)
     assert(stats.droppedFiles >= 4, s"interior prefix files should drop: $stats")
     assert(stats.rewrittenFiles <= 2, stats.toString)
@@ -258,7 +259,7 @@ class StatsReadSpec extends AnyFunSuite {
     import spark.implicits._
     AtomicTable.commit(Seq(("￿", 1L), ("😀", 2L), ("😀zz", 3L))
       .toDF("doc_id", "v").coalesce(1), root2, statsCols = Seq("doc_id"))
-    val (out2, _) = StatsRead.readStringKeyRange(spark, root2, "doc_id", "￿", "😀")
+    val (out2, _) = StatsRead.read(spark, root2, Seq("doc_id" -> StringRange("￿", "😀")))
     assert(out2.select("doc_id").as[String].collect().toSet == Set("￿", "😀"),
       "UTF-8 byte-order range misjudged supplementary-plane bounds")
   }
@@ -277,11 +278,11 @@ class StatsReadSpec extends AnyFunSuite {
       ("src0zz", 5L), ("src2aa", 6L))
     AtomicTable.commit(rows.toDF("doc_id", "v").coalesce(1),
       root, statsCols = Seq("doc_id"))
-    val (out, _) = StatsRead.readStringKeyPrefix(spark, root, "doc_id", "src1")
+    val (out, _) = StatsRead.read(spark, root, Seq("doc_id" -> StringPrefix("src1")))
     assert(out.select("doc_id").as[String].collect().toSet ==
       Set("src1/a", "src1/￿", "src1/😀doc", "src10x"),
       "prefix read missed a suffix the byte order puts inside the block")
-    val del = TargetedDelete.deleteStringKeyPrefix(spark, root, "doc_id", "src1")
+    val del = TargetedDelete.delete(spark, root, "doc_id", StringPrefix("src1"))
     val live = AtomicTable.read(spark, root)
     assert(live.select("doc_id").as[String].collect().toSet ==
       Set("src0zz", "src2aa"),
@@ -295,7 +296,7 @@ class StatsReadSpec extends AnyFunSuite {
       df.repartitionByRange(64, col("doc_id")).sortWithinPartitions(col("doc_id")),
       root2, statsCols = Seq("doc_id"))
     // "doc01" block = doc01000..doc01999, ~8 of 64 files
-    val stats = TargetedDelete.deleteStringKeyPrefix(spark, root2, "doc_id", "doc01")
+    val stats = TargetedDelete.delete(spark, root2, "doc_id", StringPrefix("doc01"))
     assert(stats.footerReads == 0 && stats.droppedFiles >= 4 &&
       stats.rewrittenFiles <= 2, stats.toString)
     val live2 = AtomicTable.read(spark, root2)
@@ -309,14 +310,14 @@ class StatsReadSpec extends AnyFunSuite {
     // every file is fully contained: without the demote-one guard the next
     // version would hold zero parquet files and schema inference would
     // throw on every later read — the table permanently unreadable
-    val stats = TargetedDelete.deleteKeyRange(spark, root, "id", 0L, 99999L)
+    val stats = TargetedDelete.delete(spark, root, "id", LongRange(0L, 99999L))
     assert(stats.rewrittenFiles == 1 && stats.droppedFiles == stats.totalFiles - 1,
       s"drop-all must demote exactly one file to keep the schema: $stats")
     val live = AtomicTable.read(spark, root) // must not throw
     assert(live.count() == 0)
     assert(live.columns.toSeq == Seq("id", "grp", "payload"))
     // and the emptied table stays writable/deletable
-    val again = TargetedDelete.deleteKeyRange(spark, root, "id", 0L, 10L)
+    val again = TargetedDelete.delete(spark, root, "id", LongRange(0L, 10L))
     assert(again.totalFiles >= 1, again.toString)
   }
 
@@ -327,7 +328,7 @@ class StatsReadSpec extends AnyFunSuite {
     AtomicTable.commit(
       df.repartitionByRange(64, col("id")).sortWithinPartitions(col("id")),
       root, statsCols = Seq("id"))
-    val (n, cs) = StatsRead.countKeyRange(spark, root, "id", 1000L, 2000L)
+    val (n, cs) = StatsRead.countWhere(spark, root, "id", LongRange(1000L, 2000L))
     assert(n == 1001, cs.toString)
     assert(cs.footerReads == 0 && cs.metadataFiles >= 4 && cs.scannedFiles <= 2,
       cs.toString)
@@ -339,7 +340,7 @@ class StatsReadSpec extends AnyFunSuite {
       (if (i % 10 == 9) Option.empty[Long] else Option(i), s"p$i"))
     AtomicTable.commit(rows.toDF("id", "payload").coalesce(1),
       root2, statsCols = Seq("id"))
-    val (n2, cs2) = StatsRead.countKeyRange(spark, root2, "id", 0L, 999L)
+    val (n2, cs2) = StatsRead.countWhere(spark, root2, "id", LongRange(0L, 999L))
     assert(n2 == 900, s"null keys counted as matches: $n2 / $cs2")
     assert(cs2.metadataFiles == 1 && cs2.scannedFiles == 0,
       s"single contained file should count metadata-only: $cs2")
@@ -370,13 +371,13 @@ class StatsReadSpec extends AnyFunSuite {
       df.repartitionByRange(64, col("doc_id")).sortWithinPartitions(col("doc_id")),
       root, statsCols = Seq("doc_id"))
     // contiguous string block [doc01000, doc02000]: interiors metadata-count
-    val (n, cs) = StatsRead.countStringKeyRange(
-      spark, root, "doc_id", "doc01000", "doc02000")
+    val (n, cs) = StatsRead.countWhere(
+      spark, root, "doc_id", StringRange("doc01000", "doc02000"))
     assert(n == 1001, cs.toString)
     assert(cs.footerReads == 0 && cs.metadataFiles >= 4 && cs.scannedFiles <= 2,
       cs.toString)
     // prefix-block count: "doc01" = exactly 1000 keys, interiors metadata-only
-    val (np, csp) = StatsRead.countStringKeyPrefix(spark, root, "doc_id", "doc01")
+    val (np, csp) = StatsRead.countWhere(spark, root, "doc_id", StringPrefix("doc01"))
     assert(np == 1000, csp.toString)
     assert(csp.footerReads == 0 && csp.metadataFiles >= 4 && csp.scannedFiles <= 2,
       csp.toString)
@@ -404,7 +405,7 @@ class StatsReadSpec extends AnyFunSuite {
       (if (i % 10 == 9) Option.empty[String] else Option(f"k$i%04d"), i))
     AtomicTable.commit(rows.toDF("k", "v").coalesce(1),
       root3, statsCols = Seq("k"))
-    val (n3, cs3) = StatsRead.countStringKeyRange(spark, root3, "k", "k0000", "k0999")
+    val (n3, cs3) = StatsRead.countWhere(spark, root3, "k", StringRange("k0000", "k0999"))
     assert(n3 == 900, s"null keys counted: $n3 / $cs3")
     assert(cs3.metadataFiles == 1 && cs3.scannedFiles == 0, cs3.toString)
   }

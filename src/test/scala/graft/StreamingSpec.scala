@@ -608,7 +608,7 @@ class StreamingSpec extends AnyFunSuite {
         // form additionally rewrites only the files the day's keys intersect
         // — the deployed shape after r18's pruned-merge rebase
         assert(graft.sinks.KeyedMerge.commitBatchKeyed(spark, stateRoot,
-          "pipe-cycle", bid, "google_place_id", pois,
+          "pipe-cycle", bid, Seq("google_place_id"), pois,
           (base: org.apache.spark.sql.DataFrame, inc: org.apache.spark.sql.DataFrame) =>
             MergeSink.upsert(base, inc, "google_place_id",
               SinkQueries.pipeVolUpdateCols, asOf = day)).nonEmpty,
@@ -684,7 +684,7 @@ class StreamingSpec extends AnyFunSuite {
             .withColumn("first_ingested_at", nullTs)
             .withColumn("last_scored_at", nullTs)
           graft.sinks.KeyedMerge.commitBatchKeyed(spark, stateRoot,
-            "pipe-restart", bid, "google_place_id", pois,
+            "pipe-restart", bid, Seq("google_place_id"), pois,
             (base: org.apache.spark.sql.DataFrame, inc: org.apache.spark.sql.DataFrame) =>
               MergeSink.upsert(base, inc, "google_place_id",
                 SinkQueries.pipeVolUpdateCols, asOf = day))

@@ -5,6 +5,7 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.sinks.{AtomicTable, TargetedDelete}
+import graft.sinks.TargetedDelete.{KeySet, LongRange}
 
 /** The file-level contracts of the S22 targeted delete that the hash gate
   * cannot see: footer pruning actually engages (rewritten ⊂ all files),
@@ -43,7 +44,7 @@ class TargetedDeleteSpec extends AnyFunSuite {
     buildTable(root, 8000)
     val v1files = partFiles(Paths.get(root, "v1")).map(p => p.getFileName.toString -> fileKey(p)).toMap
     // one contiguous block: on the range-partitioned layout it lives in 1-2 files
-    val stats = TargetedDelete.deleteKeys(spark, root, "id", (100L to 250L))
+    val stats = TargetedDelete.delete(spark, root, "id", KeySet.longs(100L to 250L))
     assert(stats.version == "v2")
     assert(stats.rewrittenFiles >= 1 && stats.rewrittenFiles <= 2,
       s"expected the clustered block to touch 1-2 of 8 files, got ${stats.rewrittenFiles}")
@@ -64,6 +65,25 @@ class TargetedDeleteSpec extends AnyFunSuite {
     // time travel: the PRIOR version still serves the deleted rows
     val prev = AtomicTable.readVersion(spark, root, "v1")
     assert(prev.filter(col("id").between(100, 250)).count() == 151)
+    // the commit mode changes the protocol, not the outcome: restore v1 on
+    // the same table and run the same delete under Writer.Occ — the same
+    // surviving rows and the same audit row, apart from the version name
+    def liveRows() = AtomicTable.read(spark, root).orderBy(col("id")).collect().toSeq
+    val singleRows = liveRows()
+    AtomicTable.restoreVersion(root, "v1")
+    val occ = TargetedDelete.delete(spark, root, "id", KeySet.longs(100L to 250L),
+      AtomicTable.Writer.Occ())
+    assert(occ.version == "v4")
+    assert(occ.copy(version = stats.version) == stats)
+    assert(liveRows() == singleRows)
+  }
+
+  test("KeySet constructors drop nulls, dedupe and sort in stats order") {
+    val astral = new String(Character.toChars(0x1F600)) // 4 UTF-8 bytes
+    val ks = KeySet.strings(Seq("b", null, "\uFFFF", astral, "a", "b", null, astral))
+    // UTF-8 byte order puts the astral key above U+FFFF (UTF-16 order would not)
+    assert(ks.sorted.toSeq == Seq("a", "b", "\uFFFF", astral))
+    assert(KeySet.longs(Seq(3L, -1L, 3L, 2L)).sorted.toSeq == Seq(-1L, 2L, 3L))
   }
 
   test("scattered delete degenerates to full rewrite, still correct") {
@@ -72,7 +92,7 @@ class TargetedDeleteSpec extends AnyFunSuite {
     // one key per ACTUAL file (its min id): every footer intersects
     val keys = partFiles(Paths.get(root, "v1")).map { f =>
       spark.read.parquet(f.toString).agg(min(col("id"))).head.getLong(0) }
-    val stats = TargetedDelete.deleteKeys(spark, root, "id", keys)
+    val stats = TargetedDelete.delete(spark, root, "id", KeySet.longs(keys))
     assert(stats.rewrittenFiles == stats.totalFiles && stats.reusedFiles == 0)
     val live = spark.read.parquet(s"$root/${AtomicTable.currentVersion(root).get}")
     assert(live.count() == 4000 - keys.size)
@@ -89,7 +109,7 @@ class TargetedDeleteSpec extends AnyFunSuite {
     val rows = (0L until 200L).map(i =>
       (if (i % 4 == 3) Option.empty[Long] else Option(i), s"p$i"))
     AtomicTable.commit(rows.toDF("id", "payload").repartition(4), root)
-    val stats = TargetedDelete.deleteKeys(spark, root, "id", Seq(8L, 16L))
+    val stats = TargetedDelete.delete(spark, root, "id", KeySet.longs(Seq(8L, 16L)))
     val live = spark.read.parquet(s"$root/${stats.version}")
     assert(live.filter(col("id").isNull).count() == 50L,
       "NULL-key rows were lost by the delete rewrite")
@@ -153,7 +173,7 @@ class TargetedDeleteSpec extends AnyFunSuite {
     val nFiles = partFiles(Paths.get(root, "v1")).size
     assert(nFiles > TargetedDelete.ParallelFooterThreshold,
       s"fixture must exceed the parallel threshold, got $nFiles files")
-    val stats = TargetedDelete.deleteKeys(spark, root, "id", (100L to 250L))
+    val stats = TargetedDelete.delete(spark, root, "id", KeySet.longs(100L to 250L))
     assert(stats.totalFiles == nFiles)
     assert(stats.rewrittenFiles <= 2,
       s"parallel pruning lost selectivity: rewrote ${stats.rewrittenFiles}")
@@ -172,7 +192,7 @@ class TargetedDeleteSpec extends AnyFunSuite {
     AtomicTable.commit(rows.toDF("id", "payload").repartition(4), root)
     val keys = (0L until 6000L).filter(_ % 4 == 0)  // 1500 > threshold
     assert(keys.size > TargetedDelete.IsinKeyThreshold)
-    val stats = TargetedDelete.deleteKeys(spark, root, "id", keys)
+    val stats = TargetedDelete.delete(spark, root, "id", KeySet.longs(keys))
     val live = spark.read.parquet(s"$root/${stats.version}")
     val nNull = rows.count(_._1.isEmpty)
     assert(live.filter(col("id").isNull).count() == nNull,
@@ -195,7 +215,8 @@ class TargetedDeleteSpec extends AnyFunSuite {
     val pool = Executors.newFixedThreadPool(2)
     val fDel = pool.submit(new java.util.concurrent.Callable[TargetedDelete.DeleteStats] {
       def call() = { gate.await();
-        TargetedDelete.deleteKeysOcc(spark, root, "id", (100L to 250L)) }
+        TargetedDelete.delete(spark, root, "id", KeySet.longs(100L to 250L),
+          AtomicTable.Writer.Occ()) }
     })
     val fMerge = pool.submit(new java.util.concurrent.Callable[String] {
       def call() = { gate.await();
@@ -226,13 +247,13 @@ class TargetedDeleteSpec extends AnyFunSuite {
     // un-indexed first delete: every pruning decision is a footer read,
     // but the OUTPUT version's sidecar is written (reused rows carried,
     // fresh rewrite rows computed)
-    val d1 = TargetedDelete.deleteKeys(spark, root, "id", (100L to 250L))
+    val d1 = TargetedDelete.delete(spark, root, "id", KeySet.longs(100L to 250L))
     assert(d1.footerReads == d1.totalFiles,
       s"un-indexed delete should footer-read every file, read ${d1.footerReads}")
     assert(Files.exists(Paths.get(root, d1.version, TargetedDelete.StatsFile)))
     // second delete on the self-maintained index: ZERO footer reads, same
     // clustered selectivity
-    val d2 = TargetedDelete.deleteKeys(spark, root, "id", (4000L to 4150L))
+    val d2 = TargetedDelete.delete(spark, root, "id", KeySet.longs(4000L to 4150L))
     assert(d2.footerReads == 0,
       s"sidecar-indexed delete read ${d2.footerReads} footers")
     assert(d2.rewrittenFiles >= 1 && d2.rewrittenFiles <= 2)
@@ -245,7 +266,7 @@ class TargetedDeleteSpec extends AnyFunSuite {
     buildTable(root2, 4000)
     assert(TargetedDelete.indexKeyStats(spark, root2, "id") == 8)
     assert(TargetedDelete.indexKeyStats(spark, root2, "id") == 0) // idempotent
-    val d3 = TargetedDelete.deleteKeys(spark, root2, "id", (100L to 200L))
+    val d3 = TargetedDelete.delete(spark, root2, "id", KeySet.longs(100L to 200L))
     assert(d3.footerReads == 0 && d3.rewrittenFiles <= 2)
     assert(spark.read.parquet(s"$root2/${d3.version}").count() == 4000 - 101)
     // every producer path can emit indexed versions: plain commit and
@@ -255,10 +276,10 @@ class TargetedDeleteSpec extends AnyFunSuite {
     val df3 = spark.range(4000).select(col("id"), (col("id") % 7).as("grp"))
       .repartitionByRange(8, col("id")).sortWithinPartitions(col("id"))
     AtomicTable.commit(df3, root3, statsCols = Seq("id"))
-    val d4 = TargetedDelete.deleteKeys(spark, root3, "id", (100L to 200L))
+    val d4 = TargetedDelete.delete(spark, root3, "id", KeySet.longs(100L to 200L))
     assert(d4.footerReads == 0, s"commit(statsCols) did not index: $d4")
     assert(AtomicTable.commitBatch(df3, root3, "app", 1L, statsCols = Seq("id")))
-    val d5 = TargetedDelete.deleteKeys(spark, root3, "id", (300L to 400L))
+    val d5 = TargetedDelete.delete(spark, root3, "id", KeySet.longs(300L to 400L))
     assert(d5.footerReads == 0, s"commitBatch(statsCols) did not index: $d5")
   }
 
@@ -270,7 +291,7 @@ class TargetedDeleteSpec extends AnyFunSuite {
     val orphan = Paths.get(root, "v2")
     Files.createDirectories(orphan)
     Files.writeString(orphan.resolve("junk.parquet"), "not parquet")
-    val stats = TargetedDelete.deleteKeys(spark, root, "id", Seq(5L, 6L))
+    val stats = TargetedDelete.delete(spark, root, "id", KeySet.longs(Seq(5L, 6L)))
     assert(stats.version == "v2")
     val live = spark.read.parquet(s"$root/v2")
     assert(live.count() == 1998 && live.filter(col("id").isin(5L, 6L)).count() == 0)
@@ -293,7 +314,7 @@ class TargetedDeleteSpec extends AnyFunSuite {
     spark.read.parquet(s"$root/v1").unionByName(extra)
       .write.mode("overwrite").parquet(claim.toString)
     Files.write(claim.resolve("_GRAFT_COMMITTED"), Array.emptyByteArray)
-    val stats = TargetedDelete.deleteKeys(spark, root, "id", Seq(5L, 6L))
+    val stats = TargetedDelete.delete(spark, root, "id", KeySet.longs(Seq(5L, 6L)))
     assert(stats.version == "v3",
       s"delete must rebase ON TOP of the adopted claim, got ${stats.version}")
     val live = AtomicTable.read(spark, root)
@@ -315,7 +336,7 @@ class TargetedDeleteSpec extends AnyFunSuite {
       .parquet(sub.resolve("inner").toString)
     val before = AtomicTable.currentVersion(root)
     val e1 = intercept[IllegalStateException] {
-      TargetedDelete.deleteKeys(spark, root, "id", Seq(5L))
+      TargetedDelete.delete(spark, root, "id", KeySet.longs(Seq(5L)))
     }
     assert(e1.getMessage.contains("FLAT version layout"), e1.getMessage)
     val e2 = intercept[IllegalStateException] {
@@ -323,7 +344,7 @@ class TargetedDeleteSpec extends AnyFunSuite {
     }
     assert(e2.getMessage.contains("FLAT version layout"), e2.getMessage)
     val e3 = intercept[IllegalStateException] {
-      graft.sinks.StatsRead.readKeyRange(spark, root, "id", 0L, 10L)
+      graft.sinks.StatsRead.read(spark, root, Seq("id" -> LongRange(0L, 10L)))
     }
     assert(e3.getMessage.contains("FLAT version layout"), e3.getMessage)
     assert(AtomicTable.currentVersion(root) == before,
@@ -333,9 +354,9 @@ class TargetedDeleteSpec extends AnyFunSuite {
   test("pruning old versions unlinks names, never the live version's inodes") {
     val root = "spark-warehouse/test_s22_prune"
     buildTable(root, 4000)
-    TargetedDelete.deleteKeys(spark, root, "id", Seq(10L))          // v2 (links most of v1)
-    TargetedDelete.deleteKeys(spark, root, "id", Seq(20L))          // v3 (links most of v2)
-    TargetedDelete.deleteKeys(spark, root, "id", Seq(30L))          // v4 -> v1, v2 pruned
+    TargetedDelete.delete(spark, root, "id", KeySet.longs(Seq(10L))) // v2 (links most of v1)
+    TargetedDelete.delete(spark, root, "id", KeySet.longs(Seq(20L))) // v3 (links most of v2)
+    TargetedDelete.delete(spark, root, "id", KeySet.longs(Seq(30L))) // v4 -> v1, v2 pruned
     assert(!Files.exists(Paths.get(root, "v1")) && !Files.exists(Paths.get(root, "v2")))
     val live = spark.read.parquet(s"$root/${AtomicTable.currentVersion(root).get}")
     assert(live.count() == 4000 - 3)
@@ -379,7 +400,7 @@ class TargetedDeleteSpec extends AnyFunSuite {
     assert(state(root) == state(root + "_b"))
     assert(AtomicTable.read(spark, root + "_b").count() == 3997L)
     // a range KeySet never bloom-probes (unbounded keys): conservative path
-    val s2 = TargetedDelete.deleteKeyRange(spark, root + "_b", "v", 100L, 120L)
+    val s2 = TargetedDelete.delete(spark, root + "_b", "v", LongRange(100L, 120L))
     assert(s2.bloomSkipped == 0, s"range delete must not claim bloom prunes: $s2")
   }
 }

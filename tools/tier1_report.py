@@ -9,6 +9,11 @@ names every failure that is not one of the KNOWN failures below, and exits
 1 if there is such a failure (2 if there are no reports). It only reads
 the reports; it runs, skips and changes no test.
 
+sbt never deletes a report, so a spec class that was deleted or renamed
+leaves its last report behind. A report whose spec class has no compiled
+`.class` file under target/scala-2.13/test-classes/ is therefore stale: it
+is named as such and left out of the counts.
+
 KNOWN lists the 19 tests that fail when the reference snapshot's Paris
 geometry (neighbourhoods_paris.jsonl) is absent: each reads that file, or
 plans a query that does, and fails with PATH_NOT_FOUND (ROADMAP.md, open
@@ -42,11 +47,17 @@ KNOWN = {
 }
 
 
-def outcomes(reports_dir):
-    """(test id, outcome, first message line) for every test case."""
-    out = []
+def outcomes(reports_dir, classes_dir):
+    """(test id, outcome, first message line) for every test case of a
+    live spec, and the names of the stale reports' spec classes."""
+    out, stale = [], []
     for path in sorted(glob.glob(os.path.join(reports_dir, "*.xml"))):
-        for case in ET.parse(path).getroot().iter("testcase"):
+        suite = ET.parse(path).getroot()
+        spec = suite.get("name") or os.path.basename(path)[len("TEST-"):-len(".xml")]
+        if not os.path.isfile(os.path.join(classes_dir, *spec.split(".")) + ".class"):
+            stale.append(spec)
+            continue
+        for case in suite.iter("testcase"):
             tid = f"{case.get('classname')}::{case.get('name')}"
             bad = [c for c in case if c.tag in ("failure", "error")]
             if bad:
@@ -56,13 +67,15 @@ def outcomes(reports_dir):
                 out.append((tid, "skipped", ""))
             else:
                 out.append((tid, "passed", ""))
-    return out
+    return out, stale
 
 
 def main():
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     reports = sys.argv[1] if len(sys.argv) > 1 else os.path.join(root, "target", "test-reports")
-    rows = outcomes(reports)
+    rows, stale = outcomes(reports, os.path.join(root, "target", "scala-2.13", "test-classes"))
+    for spec in stale:
+        print(f"  stale report skipped (no compiled spec class): {spec}")
     if not rows:
         print(f"tier1: no test reports under {reports}", file=sys.stderr)
         return 2
