@@ -288,9 +288,7 @@ object AtomicTable {
         val counts = side.values.map(_.rowCount).filter(_ >= 0L)
         val ndv = if (counts.isEmpty) 1024L else counts.sum / counts.size
         val rewriteOut = stageDir.resolve("rewrite")
-        df.write.options(KeyBloom.nativeWriteOptionsCols(
-            blooms.keys.map(_._2).toSet ++ BloomManifest.coveredColumns(liveDir),
-            ndv))
+        df.write.options(KeyBloom.rewriteOptions(liveDir, blooms, ndv))
           .mode("overwrite").parquet(rewriteOut.toString)
         TargetedDelete.moveStagedParts(rewriteOut, stageDir)
         val liveFiles = liveFiles0

@@ -448,8 +448,8 @@ object BloomManifest {
       keys.toDF("__k").select(toBytes(col("__k")).as("__k")))
   }
 
-  /** The BYTES-generic bulk probe both the typed form and the COMPOSITE
-    * assignment feed ([[CompositeKey.touched]]'s distributed regime): the
+  /** The BYTES-generic bulk probe both the typed form and the
+    * distributed assignment feed ([[FileAdmission.assign]]): the
     * key frame arrives as ONE binary column of canonical bytes, explodes
     * to positions executor-side, and joins the manifest
     * distributed-to-distributed — the probe layer never knows whether the

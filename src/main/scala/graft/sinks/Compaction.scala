@@ -169,8 +169,7 @@ object Compaction {
         case ((f, _), r) if f == name => r.rowCount }.getOrElse(-1L)
       Footers.read(spark, small)
         .repartition(n)
-        .write.options(KeyBloom.nativeWriteOptionsCols(
-          blooms.keys.map(_._2).toSet ++ BloomManifest.coveredColumns(liveDir),
+        .write.options(KeyBloom.rewriteOptions(liveDir, blooms,
           KeyBloom.ndvFor(small, rcOf)))
         .mode("overwrite").parquet(rewriteOut.toString)
       nOut = TargetedDelete.moveStagedParts(rewriteOut, stageDir)
@@ -337,8 +336,7 @@ object Compaction {
       def rcOf(name: String): Long = sideRows.collectFirst {
         case ((f, _), r) if f == name => r.rowCount }.getOrElse(-1L)
       parts.reduce(_.unionAll(_))
-        .write.options(KeyBloom.nativeWriteOptionsCols(
-          blooms.keys.map(_._2).toSet ++ BloomManifest.coveredColumns(liveDir),
+        .write.options(KeyBloom.rewriteOptions(liveDir, blooms,
           KeyBloom.ndvFor(multi.flatten, rcOf)))
         .mode("overwrite").parquet(rewriteOut.toString)
       val nOut = TargetedDelete.moveStagedParts(rewriteOut, stageDir)

@@ -20,12 +20,9 @@ import graft.Tables
   *  - **Conjunctive hull veto.** A file can contain tuple (a, b) only if
   *    its per-column [min,max] hulls admit BOTH components — the same
   *    per-column stats the sidecar already holds ([[KeyStats]]), no new
-  *    metadata. The driver regime tests each tuple exactly (∃tuple
-  *    ∀component); past [[KeyedMerge.DriverKeyThreshold]] tuples the
-  *    assignment intersects the per-COLUMN distributed assignments
-  *    ([[KeyedMerge.touchedNames]] per component over the checkpointed
-  *    distinct tuples — each an over-approximation of the tuple-touch,
-  *    so the intersection still never misses a matched row).
+  *    metadata. [[FileAdmission]] tests each collected tuple exactly;
+  *    past [[KeyedMerge.DriverKeyThreshold]] tuples a file must be hit on
+  *    every column by the distributed boundary-index lookup.
   *  - **Composite bloom over canonical tuple bytes.** On keys whose hulls
   *    prune nothing (two hash columns), the tuple gets its own bloom
   *    under ONE sidecar/manifest column — the component names joined by
@@ -39,10 +36,10 @@ import graft.Tables
   *    self-maintain composite rows whenever every component survives the
   *    rewrite.
   *
-  * Single-key stays the fast path: [[KeyedMerge.stageMerge]] dispatches
-  * here only for keyCols.size > 1. NULL semantics match the rest of the
-  * stats ladder: a tuple with any NULL component is not a key (matches
-  * nothing, prunes nothing, passes every survivor filter). */
+  * One key column and several take the same admission
+  * ([[FileAdmission]]): a single key is a 1-tuple. NULL semantics match
+  * the rest of the stats ladder: a tuple with any NULL component is not a
+  * key (matches nothing, prunes nothing, passes every survivor filter). */
 object CompositeKey {
 
   /** Separator of component names inside a composite sidecar/manifest
@@ -76,32 +73,41 @@ object CompositeKey {
     * ignores the rows (conservative) instead of hashing different bytes. */
   def kindName(kinds: Seq[String]): String = "tuple:" + kinds.mkString(",")
 
+  private def canonicalBytes(kind: String, v: Any): Array[Byte] = kind match {
+    case "long" => KeyBloom.longBytes(v.asInstanceOf[Number].longValue)
+    case "string" => KeyBloom.stringBytes(v.asInstanceOf[String])
+    case k => throw new IllegalArgumentException(s"unsupported kind $k")
+  }
+
   /** Length-framed canonical tuple bytes: per component a 4-byte
     * big-endian length then the component's canonical bytes. The framing
     * is what makes the encoding injective — unframed concatenation would
     * alias ("ab","c") with ("a","bc"). */
   def tupleBytes(kinds: Seq[String], values: Seq[Any]): Array[Byte] = {
-    val parts = kinds.zip(values).map {
-      case ("long", v) => KeyBloom.longBytes(v.asInstanceOf[Number].longValue)
-      case ("string", v) => KeyBloom.stringBytes(v.asInstanceOf[String])
-      case (k, _) => throw new IllegalArgumentException(s"unsupported kind $k")
-    }
+    val parts = kinds.zip(values).map { case (k, v) => canonicalBytes(k, v) }
     val bb = java.nio.ByteBuffer.allocate(parts.map(_.length + 4).sum)
     parts.foreach { p => bb.putInt(p.length); bb.put(p) }
     bb.array()
   }
 
-  /** Executor-side canonical-bytes column over `struct(keyCols)` — the
-    * build/probe sides of the composite bloom share [[tupleBytes]]
-    * exactly. NULL when any component is NULL (a null tuple is not a
-    * key). Callers must pre-cast integer components to LONG. */
+  /** A key's bloom bytes, for every build and probe site: one column's
+    * canonical bytes (8-byte big-endian long, UTF-8 string), several
+    * columns' [[tupleBytes]]. */
+  private[sinks] def keyBytes(kinds: Seq[String], values: Seq[Any]): Array[Byte] =
+    if (kinds.size == 1) canonicalBytes(kinds.head, values.head)
+    else tupleBytes(kinds, values)
+
+  /** Executor-side [[keyBytes]] column over `struct(keyCols)` — the
+    * build and probe sides share the bytes exactly. NULL when any
+    * component is NULL (a null tuple is not a key). Callers must pre-cast
+    * integer components to LONG. */
   private[sinks] def bytesUdf(kinds: Seq[String]) = udf { (r: Row) =>
     val n = kinds.length
     var i = 0
     var ok = true
     while (i < n && ok) { if (r.isNullAt(i)) ok = false; i += 1 }
     if (!ok) null
-    else tupleBytes(kinds, (0 until n).map(r.get))
+    else keyBytes(kinds, (0 until n).map(r.get))
   }
 
   /** The normalized key projection: integer components cast to LONG so
@@ -112,16 +118,15 @@ object CompositeKey {
       case (_, c) => col(c)
     }
 
-  private def anyNull(keyCols: Seq[String]): Column =
-    keyCols.map(col(_).isNull).reduce(_ || _)
-
-  /** OR-of-ANDs literal tuple membership — scan-pushable while the tuple
-    * set is small (the [[TargetedDelete.IsinKeyThreshold]] tiering). */
+  /** Literal tuple membership — an IN list for one column, OR-of-ANDs for
+    * several; scan-pushable while the tuple set is small (the
+    * [[TargetedDelete.IsinKeyThreshold]] tiering). */
   private[sinks] def matchPredicate(keyCols: Seq[String],
       tuples: Seq[Seq[Any]]): Column =
-    tuples.map(t =>
+    if (keyCols.size == 1) col(keyCols.head).isin(tuples.map(_.head): _*)
+    else tuples.map(t =>
       keyCols.zip(t).map { case (c, v) => col(c) === lit(v) }.reduce(_ && _))
-      .reduce(_ || _)
+      .foldLeft(lit(false))(_ || _)
 
   /** One-frame form of a tuple set, for the semi/anti joins past the
     * literal threshold. */
@@ -133,111 +138,6 @@ object CompositeKey {
     })
     spark.createDataFrame(
       java.util.Arrays.asList(tuples.map(t => Row(t: _*)): _*), schema)
-  }
-
-  /** Does one component's stat row admit the value? Foreign/absent stats
-    * are conservative-true (they cannot veto). */
-  private def componentIntersects(row: KeyStats.StatRow, kind: String,
-      v: Any): Boolean = row.kind match {
-    case "long" if kind == "long" =>
-      val x = v.asInstanceOf[Number].longValue
-      row.min.toLong <= x && x <= row.max.toLong
-    case "string" if kind == "string" =>
-      val s = v.asInstanceOf[String]
-      KeyStats.Utf8Order.compare(row.min, s) <= 0 &&
-        KeyStats.Utf8Order.compare(s, row.max) <= 0
-    case _ => true
-  }
-
-  /** The composite assignment — [[KeyedMerge.touchedNames]]'s tuple twin,
-    * same [[KeyedMerge.Assignment]] contract (touched names, bloom-skip
-    * count, the STABLE changeset downstream evaluation must consume). */
-  private[sinks] def touched(files: Seq[Path],
-      rows: Map[(String, String), KeyStats.StatRow], keyCols: Seq[String],
-      changes: DataFrame, driverKeyThreshold: Int,
-      blooms: Map[(String, String), KeyBloom.BloomRow],
-      liveDir: Option[Path]): KeyedMerge.Assignment = {
-    require(keyCols.size >= 2, "composite assignment needs >= 2 key columns")
-    val names = files.map(_.getFileName.toString)
-    kindsOf(changes.schema, keyCols) match {
-      case None => KeyedMerge.Assignment(names.toSet, 0, changes)
-      case Some(kinds) =>
-        val spark = changes.sparkSession
-        val cname = colName(keyCols)
-        val kind = kindName(kinds)
-        // regime probe: one shuffle-free CollectLimit, rows deduped on the
-        // driver (same contract as the single-key probe)
-        val probe = changes.select(keySelect(kinds, keyCols): _*)
-          .na.drop("any").limit(driverKeyThreshold + 1).collect()
-        if (probe.length <= driverKeyThreshold) {
-          val tuples: Seq[Seq[Any]] =
-            probe.map(r => keyCols.indices.map(r.get): Seq[Any]).toSeq.distinct
-          if (tuples.isEmpty)
-            // every change row has a NULL component: nothing can match a
-            // linked file — null-key rows still flow to the kernel
-            return KeyedMerge.Assignment(Set.empty, 0,
-              changes.filter(anyNull(keyCols)))
-          def hullAdmits(n: String, t: Seq[Any]): Boolean =
-            keyCols.indices.forall { i =>
-              componentIntersects(
-                rows.getOrElse((n, keyCols(i)), KeyStats.StatRow("none", "", "")),
-                kinds(i), t(i))
-            }
-          val statsTouched = names.filter(n => tuples.exists(t => hullAdmits(n, t)))
-          val tb = tuples.map(t => tupleBytes(kinds, t))
-          // composite bloom ladders, conjunctive past the hulls: the
-          // distributed manifest first, the TSV sidecar as the small-table
-          // fast path — a covered, non-admitted file is provably
-          // tuple-free
-          val manifest =
-            if (statsTouched.isEmpty) None
-            else liveDir.filter(BloomManifest.exists).flatMap(d =>
-              BloomManifest.probe(spark, d, cname, kind, tb))
-          def mOk(n: String) = manifest.forall(p => !p.covered(n) || p.admitted(n))
-          val touchedSet = statsTouched.filter { n =>
-            mOk(n) && blooms.get((n, cname)).filter(_.kind == kind)
-              .forall(b => tb.exists(b.mightContain))
-          }.toSet
-          // consistency filter (driver regime saw every row): restrict the
-          // downstream evaluation to the probed tuples; null-component
-          // rows pass — they match nothing, affect no linked file
-          val stable =
-            if (tuples.size <= TargetedDelete.IsinKeyThreshold)
-              changes.filter(anyNull(keyCols) || matchPredicate(keyCols, tuples))
-            else changes.filter(anyNull(keyCols)).unionAll(
-              changes.join(broadcast(tupleFrame(spark, keyCols, kinds, tuples)),
-                keyCols, "left_semi"))
-          KeyedMerge.Assignment(touchedSet,
-            statsTouched.size - touchedSet.size, stable)
-        } else {
-          // distributed regime: checkpoint the DISTINCT tuples once, then
-          // intersect the per-COLUMN distributed assignments — each is an
-          // over-approximation of the tuple-touch (its hulls/blooms veto
-          // per component), so the intersection still covers every file a
-          // matched row can live in; the composite manifest's bulk probe
-          // (bytes exploded executor-side) tightens it tuple-exactly
-          val keyed = changes.select(keySelect(kinds, keyCols): _*)
-            .na.drop("any").distinct().localCheckpoint(true)
-          val stable = changes.filter(anyNull(keyCols))
-            .unionAll(changes.join(keyed, keyCols, "left_semi"))
-          val perCol = keyCols.map { c =>
-            val colRows = rows.collect { case ((f, cc), r) if cc == c => f -> r }
-            KeyedMerge.touchedNames(files, colRows, c, keyed,
-              driverKeyThreshold, blooms, liveDir).touched
-          }
-          val inter = perCol.reduce(_ intersect _)
-          val mProbe =
-            if (inter.isEmpty) None
-            else liveDir.filter(BloomManifest.exists).flatMap { d =>
-              val bytesDf = keyed.select(
-                bytesUdf(kinds)(struct(keyCols.map(col): _*)).as("__k")).na.drop()
-              BloomManifest.probeBulkBytes(spark, d, cname, kind, bytesDf)
-            }
-          def mOk(n: String) = mProbe.forall(p => !p.covered(n) || p.admitted(n))
-          val touchedAll = inter.filter(mOk)
-          KeyedMerge.Assignment(touchedAll, inter.size - touchedAll.size, stable)
-        }
-    }
   }
 
   // ---- declared queries ---------------------------------------------------
@@ -368,6 +268,29 @@ object CompositeKey {
     mentionAgg(AtomicTable.read(spark, root))
   }
 
+  /** PREMISE gate of the two (h1, h2) bloom queries, from the committed
+    * sidecar alone: the table holds >= `minFiles` files and even the
+    * CONJUNCTION of both hash hulls admits at least half of them for
+    * `tuples` — scattered keys, so the tuple bloom does the pruning. */
+  private def requireHullsPowerless(root: String, tuples: Seq[Seq[Any]],
+      minFiles: Int, why: String): Unit = {
+    val live = Paths.get(root, AtomicTable.currentVersion(root).get)
+    val hulls = KeyStats.loadStats(live)
+    val files = TargetedDelete.partFiles(live).map(_.getFileName.toString)
+    val statsPlanned = files.count { n =>
+      tuples.exists(t => Seq("h1", "h2").zipWithIndex.forall { case (c, i) =>
+        val r = hulls.getOrElse((n, c), KeyStats.StatRow("none", "", ""))
+        r.kind != "string" ||
+          (KeyStats.Utf8Order.compare(r.min, t(i).asInstanceOf[String]) <= 0 &&
+            KeyStats.Utf8Order.compare(t(i).asInstanceOf[String], r.max) <= 0)
+      })
+    }
+    if (files.size < minFiles || statsPlanned < files.size / 2)
+      throw new IllegalStateException(
+        s"fixture premise broken: conjunctive hulls planned $statsPlanned of " +
+          s"${files.size} (want >= half of >= $minFiles)$why")
+  }
+
   /** The probed ids — distinct from the merge set so fixtures stay
     * independent; < 500 at every SF. */
   val BloomTupleIds: Seq[Long] = Seq(11L, 222L, 433L)
@@ -397,25 +320,10 @@ object CompositeKey {
       root, statsCols = Seq("h1", "h2"))
     val tuples: Seq[Seq[Any]] = BloomTupleIds.map(i =>
       Seq[Any](KeyBloom.md5hex(i.toString), KeyBloom.md5hex((i * 31 + 7).toString)))
-    // premise from the sidecar alone: even the CONJUNCTION of both hash
-    // hulls admits at least half the files — scattered keys, hulls
-    // powerless, the tuple bloom is load-bearing
-    val live = Paths.get(root, AtomicTable.currentVersion(root).get)
-    val hulls = KeyStats.loadStats(live)
-    val files = TargetedDelete.partFiles(live).map(_.getFileName.toString)
-    val statsPlanned = files.count { n =>
-      tuples.exists(t => Seq("h1", "h2").zipWithIndex.forall { case (c, i) =>
-        val r = hulls.getOrElse((n, c), KeyStats.StatRow("none", "", ""))
-        r.kind != "string" ||
-          (KeyStats.Utf8Order.compare(r.min, t(i).asInstanceOf[String]) <= 0 &&
-            KeyStats.Utf8Order.compare(t(i).asInstanceOf[String], r.max) <= 0)
-      })
-    }
-    if (files.size < 24 || statsPlanned < files.size / 2)
-      throw new IllegalStateException(
-        s"fixture premise broken: conjunctive hulls planned $statsPlanned of " +
-          s"${files.size} (want >= half of >= 24) — the tuple bloom is not " +
-          "load-bearing here")
+    // premise from the sidecar alone: scattered keys, hulls powerless,
+    // the tuple bloom is load-bearing
+    requireHullsPowerless(root, tuples, 24,
+      " — the tuple bloom is not load-bearing here")
     KeyBloom.loadCalls.get() // touch to force init before the flat check
     val loads0 = KeyBloom.loadCalls.get()
     BloomManifest.indexBloomManifestTuple(spark, root, Seq("h1", "h2"),
@@ -496,21 +404,7 @@ object CompositeKey {
     val tuples: Seq[Seq[Any]] = CompShardProbeRanks
       .map(r => Seq[Any](ranked(r - 1).getString(0), ranked(r - 1).getString(1)))
       .distinct
-    val live = Paths.get(root, AtomicTable.currentVersion(root).get)
-    val hulls = KeyStats.loadStats(live)
-    val files = TargetedDelete.partFiles(live).map(_.getFileName.toString)
-    val statsPlanned = files.count { n =>
-      tuples.exists(t => Seq("h1", "h2").zipWithIndex.forall { case (c, i) =>
-        val r = hulls.getOrElse((n, c), KeyStats.StatRow("none", "", ""))
-        r.kind != "string" ||
-          (KeyStats.Utf8Order.compare(r.min, t(i).asInstanceOf[String]) <= 0 &&
-            KeyStats.Utf8Order.compare(t(i).asInstanceOf[String], r.max) <= 0)
-      })
-    }
-    if (files.size < 1000 || statsPlanned < files.size / 2)
-      throw new IllegalStateException(
-        s"fixture premise broken: conjunctive hulls planned $statsPlanned of " +
-          s"${files.size} (want >= half of >= 1000)")
+    requireHullsPowerless(root, tuples, 1000, "")
     val loads0 = KeyBloom.loadCalls.get()
     val (df, rs) = StatsRead.readTupleIn(spark, root, Seq("h1", "h2"),
       tupleFrame(spark, Seq("h1", "h2"), Seq("string", "string"), tuples))

@@ -118,22 +118,6 @@ object KeyBloom {
   private[sinks] def stringBytes(s: String): Array[Byte] =
     s.getBytes(StandardCharsets.UTF_8)
 
-  /** Probe the slice of `keys` (sorted under `ord`) a file's [lo,hi] hull
-    * admits; true iff any key might be present. Parquet writer-truncated
-    * bounds only WIDEN the slice, never narrow it. Early-exits on the first
-    * maybe. Shared by the merge and delete prunes. */
-  private[sinks] def sliceMaybe[K](b: BloomRow, keys: Array[K], lo: K, hi: K,
-      ord: Ordering[K], bytes: K => Array[Byte]): Boolean = {
-    var l = 0; var h = keys.length // lower_bound(lo)
-    while (l < h) { val m = (l + h) >>> 1; if (ord.lt(keys(m), lo)) l = m + 1 else h = m }
-    var i = l
-    while (i < keys.length && ord.lteq(keys(i), hi)) {
-      if (b.mightContain(bytes(keys(i)))) return true
-      i += 1
-    }
-    false
-  }
-
   /** The k bit positions of a key, packed as (wordIdx, bitMask) — the build
     * side's explode payload; the probe side recomputes the same walk in
     * [[BloomRow.mightContain]]. */
@@ -307,19 +291,20 @@ object KeyBloom {
     missing.size
   }
 
-  /** parquet-NATIVE bloom write options for every column the sidecar
-    * blooms — the ROW-GROUP-level complement of the file-level sidecar,
-    * and the documented 10⁶-file scale path: the sidecar prunes FILES from
-    * the driver without IO; inside a touched multi-row-group file (128 MB
-    * row groups in a 1 GB file at production sizing) the parquet reader
-    * prunes ROW GROUPS with the native bloom when Spark pushes an
-    * equality/IN filter — standard parquet-mr machinery, no custom reader.
-    * Staging rewrites apply these automatically whenever the predecessor
-    * version carries a `_KEYBLOOM` row for the column (sidecar presence IS
-    * the opt-in — a metadata-only decision); table builders can pass the
-    * same options to any initial write. At local test sizes every file is
-    * one row group, so the spec verifies presence + read correctness; the
-    * payoff surface is the multi-row-group file.
+  /** parquet-NATIVE bloom write options for every column either bloom
+    * backend of `liveDir` covers (the `_KEYBLOOM` rows in `blooms`, the
+    * [[BloomManifest]] header) — the ROW-GROUP-level complement of the
+    * file-level blooms, and the documented 10⁶-file scale path: the
+    * file-level blooms prune FILES without data IO; inside a touched
+    * multi-row-group file (128 MB row groups in a 1 GB file at production
+    * sizing) the parquet reader prunes ROW GROUPS with the native bloom
+    * when Spark pushes an equality/IN filter — standard parquet-mr
+    * machinery, no custom reader.
+    * Every staging rewrite (delete, merge, compaction, recluster, append)
+    * writes with these, so bloom presence on the predecessor IS the opt-in
+    * — a metadata-only decision. At local test sizes every file is one row
+    * group, so the spec verifies presence + read correctness; the payoff
+    * surface is the multi-row-group file.
     *
     * `ndvEstimate` MUST be passed: parquet-mr with no expected-NDV and
     * adaptive sizing off allocates the MAXIMUM bloom (~1 MB per column per
@@ -327,22 +312,17 @@ object KeyBloom {
     * bloom per bloomed column. Callers estimate from the sidecar rowCounts
     * of the files being rewritten (an upper bound on per-row-group NDV —
     * oversized is wasted bytes, undersized is fpp; the bound errs small). */
-  private[sinks] def nativeWriteOptions(
+  private[sinks] def rewriteOptions(liveDir: Path,
       blooms: Map[(String, String), BloomRow],
-      ndvEstimate: Long): Map[String, String] =
-    nativeWriteOptionsCols(blooms.keys.map(_._2).toSet, ndvEstimate)
-
-  /** [[nativeWriteOptions]] from a column set — manifest-bloomed columns
-    * ([[BloomManifest.coveredColumns]]) compose with the TSV map's. */
-  private[sinks] def nativeWriteOptionsCols(cols: Set[String],
       ndvEstimate: Long): Map[String, String] = {
     val ndv = math.max(1024L, ndvEstimate)
     // composite sidecar names are VIRTUAL — no physical column to
     // native-bloom; their components may still be bloomed individually
-    cols.filterNot(CompositeKey.isComposite).toSeq.sorted.flatMap { c =>
-      Seq(s"parquet.bloom.filter.enabled#$c" -> "true",
-        s"parquet.bloom.filter.expected.ndv#$c" -> ndv.toString)
-    }.toMap
+    (blooms.keys.map(_._2).toSet ++ BloomManifest.coveredColumns(liveDir))
+      .filterNot(CompositeKey.isComposite).toSeq.sorted.flatMap { c =>
+        Seq(s"parquet.bloom.filter.enabled#$c" -> "true",
+          s"parquet.bloom.filter.expected.ndv#$c" -> ndv.toString)
+      }.toMap
   }
 
   /** NDV estimate for a rewrite over `files`: the sidecar rowCounts where

@@ -188,6 +188,21 @@ object KeyStats {
       }
       .collect().toMap
 
+  /** Per-(file, column) stat rows for `cols`: the sidecar's rows first, then
+    * ONE footer open per file missing any requested column (all columns
+    * extracted together) — except files in `skip`, which keep what the
+    * sidecar holds; with the number of files opened. */
+  private[sinks] def rowsFor(spark: SparkSession, side: Map[(String, String), StatRow],
+      files: Seq[Path], cols: Seq[String], skip: Set[String] = Set.empty)
+      : (Map[(String, String), StatRow], Int) = {
+    val unknown = files.filter { f =>
+      val n = f.getFileName.toString
+      !skip(n) && cols.exists(c => !side.contains((n, c)))
+    }
+    (side.filter { case ((_, c), _) => cols.contains(c) } ++
+      statRowsFor(spark, unknown, cols), unknown.size)
+  }
+
   /** Single-column [[statRowsFor]], keyed by file name only. */
   def statRowsFor(spark: SparkSession, files: Seq[Path],
       keyCol: String): Map[String, StatRow] =

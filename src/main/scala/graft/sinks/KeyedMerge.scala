@@ -22,20 +22,14 @@ import org.apache.spark.sql.functions._
   * utils/database.py:737-896 — Postgres gives it row-granular writes; this
   * is the file-granular lakehouse re-expression).
   *
-  * Pruning decision (sidecar first, footer fallback — the same ladder as
-  * delete/read): a live file is REWRITTEN iff its [min,max] on `keyCol` can
-  * contain a changeset key; everything else is LINKED (metadata-only, O(1)
-  * per file). Two regimes for "can contain":
-  *
-  *  - ≤ [[DriverKeyThreshold]] distinct change keys: the sorted key array is
-  *    enumerated on the driver (a CDC micro-batch's key set — driver-sized
-  *    by nature) and each file's range is probed by binary search, exactly
-  *    [[TargetedDelete.LongKeys]]'s stats probe;
-  *  - beyond it: the assignment inverts — the per-file boundary index (the
-  *    sidecar the driver already holds) is closed over by a key→files lookup
-  *    (binary search + bounded overlap walk) and run as a SPARK JOB over the
-  *    changeset; only intersecting FILE NAMES come back to the driver, never
-  *    keys. On a clustered layout the walk is O(log files) per key.
+  * Pruning decision: a live file is REWRITTEN iff [[FileAdmission.assign]]
+  * admits it — the one ladder every keyed read, delete and merge shares
+  * (stats hull, bloom manifest, TSV bloom), over one key column or several;
+  * everything else is LINKED (metadata-only, O(1) per file). Up to
+  * [[DriverKeyThreshold]] change rows the keys are collected on the driver
+  * (a CDC micro-batch's key set — driver-sized by nature); beyond it the
+  * per-file boundary index is broadcast into a SPARK JOB over the
+  * changeset's distinct keys, and only intersecting FILE NAMES come back.
   *
   * The merge kernel `applyFn(base, changes)` sees ONLY the intersecting
   * files' rows as `base` and must honor the contract that makes link-reuse
@@ -65,13 +59,14 @@ import org.apache.spark.sql.functions._
   * the streamed CDC apply ([[CdcApply]]) runs on it. */
 object KeyedMerge {
 
-  /** The merge's audit row. `rewrittenFiles` counts files whose stats
-    * intersected a change key (plus conservative unknowns); `reusedFiles`
-    * were hard-linked; `footerReads` is 0 when the sidecar indexed `keyCol`
-    * (the manifest-stats path). `totalFiles` counts the BASE version's files;
-    * the output may hold more or fewer (inserts, 0-row rewrites).
-    * `bloomSkipped` counts files min/max stats would have rewritten that the
-    * `_KEYBLOOM` sidecar proved disjoint — the unclustered-key prune. */
+  /** The merge's audit row. `rewrittenFiles` counts the files the
+    * admission kept (plus conservative unknowns); `reusedFiles` were
+    * hard-linked; `footerReads` is 0 when the sidecar indexed every key
+    * column (the manifest-stats path). `totalFiles` counts the BASE
+    * version's files; the output may hold more or fewer (inserts, 0-row
+    * rewrites). `bloomSkipped` counts files the stats hull admitted that
+    * a bloom backend (`_KEYBLOOM` or the manifest) proved disjoint — the
+    * unclustered-key prune. */
   final case class MergeStats(version: String, totalFiles: Int,
       rewrittenFiles: Int, reusedFiles: Int, footerReads: Int,
       bloomSkipped: Int = 0)
@@ -100,246 +95,12 @@ object KeyedMerge {
     ka != null && ka == kb
   }
 
-  /** The boundary-index walk shared by both distributed regimes: sorted by
-    * min under `ord`, prefix-max bounds the overlap walk — O(log F) per key
-    * on a clustered layout. Pure and Serializable (closed over by the
-    * lookup UDF). */
-  private def boundaryLookup[K](mins: Array[K], maxs: Array[K],
-      names: Array[String], prefixMax: Array[K], ord: Ordering[K])
-      (key: K): Array[String] = {
-    var lo = 0; var hi = mins.length
-    while (lo < hi) { // upper_bound on min
-      val m = (lo + hi) >>> 1
-      if (ord.lteq(mins(m), key)) lo = m + 1 else hi = m
-    }
-    var j = lo - 1
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    while (j >= 0 && ord.gteq(prefixMax(j), key)) {
-      if (ord.gteq(maxs(j), key)) out += names(j)
-      j -= 1
-    }
-    out.toArray
-  }
-
-  private def boundaryIndex[K: scala.reflect.ClassTag](
-      stat: Seq[(String, KeyStats.StatRow)], decode: String => K,
-      ord: Ordering[K]): (Array[K], Array[K], Array[String], Array[K]) = {
-    val sorted = stat.map { case (n, r) => (decode(r.min), decode(r.max), n) }
-      .sortBy(_._1)(ord).toArray
-    val mins = sorted.map(_._1); val maxs = sorted.map(_._2)
-    val names = sorted.map(_._3)
-    val prefixMax = maxs.clone()
-    var i = 1
-    while (i < prefixMax.length) {
-      prefixMax(i) = ord.max(prefixMax(i - 1), prefixMax(i)); i += 1
-    }
-    (mins, maxs, names, prefixMax)
-  }
-
-  /** Which live files can contain a change key, and how many files the bloom
-    * sidecar pruned past min/max. The key family comes from the changeset's
-    * schema: BIGINT/INT keys probe "long" stat rows, STRING keys probe
-    * "string" rows under [[KeyStats.Utf8Order]] (the byte order parquet
-    * computed them with — the poi/doc-hash upsert path); any other key type,
-    * and any file neither stats nor bloom can disprove, is conservatively
-    * touched. A `_KEYBLOOM` row of the matching kind is probed AFTER min/max
-    * (with the key slice the range admits): on an unclustered key — every
-    * file's hull spans the key space, min/max prunes nothing — the bloom is
-    * the only thing standing between a point changeset and a full-table
-    * rewrite. Returns touched file NAMES — the only thing that ever reaches
-    * the driver on the distributed path — plus the STABLE changeset the
-    * caller must feed downstream. The changeset is evaluated once more by
-    * the merge kernel / the pruned join, and a non-stable source (a
-    * directory a writer is appending to) evaluated differently could
-    * surface a key the prune never saw — a linked file would keep the old
-    * row while the kernel inserts it (Delta materializes the MERGE source
-    * for exactly this reason). Two costs, by regime: the DRIVER regime's
-    * probe provably read EVERY row (the limit returned under the
-    * threshold), so consistency needs only a key-membership filter on the
-    * kernel's input — keys unseen by the prune are deferred, NULL-key rows
-    * pass (they match nothing, affect no linked file) — zero extra jobs;
-    * the DISTRIBUTED regime eagerly localCheckpoints before the lookup job
-    * so the assignment and the kernel read the same bytes. Shared with
-    * [[StatsRead.joinPruned]] (dynamic file pruning: the same decision,
-    * read-side). */
-  private[sinks] final case class Assignment(touched: Set[String],
-      bloomSkipped: Int, stableChanges: DataFrame)
-
-  private[sinks] def touchedNames(files: Seq[Path], rows: Map[String, KeyStats.StatRow],
-      keyCol: String, changes: DataFrame, driverKeyThreshold: Int,
-      blooms: Map[(String, String), KeyBloom.BloomRow],
-      liveDir: Option[Path] = None): Assignment = {
-    import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
-    val kind = changes.schema(keyCol).dataType match {
-      case LongType | IntegerType => "long"
-      case StringType => "string"
-      case _ => // no stats family: nothing prunes, any evaluation is consistent
-        return Assignment(files.map(_.getFileName.toString).toSet, 0, changes)
-    }
-    val bloomFor: Map[String, KeyBloom.BloomRow] =
-      blooms.collect { case ((f, c), b) if c == keyCol && b.kind == kind => f -> b }
-    // sharded-manifest availability (header presence only — the probe job
-    // itself runs once per driver-regime prune; the distributed regime's
-    // bulk changesets stay on the boundary-index path, where per-file
-    // bloom probing is the lookup job's own business)
-    val manifestAvail = liveDir.exists(BloomManifest.exists)
-    val named = files.map(f => f.getFileName.toString -> rows(f.getFileName.toString))
-    val (stat, blind) = named.partition(_._2.kind == kind)
-    val blindNames = blind.map(_._1).toSet
-    if (stat.isEmpty && bloomFor.isEmpty && !manifestAvail)
-      return Assignment(blindNames, 0, changes)
-    // regime probe: one SHUFFLE-FREE job (CollectLimit, no distinct — a
-    // micro-batch's rows come back raw and dedup on the driver; a distinct
-    // here would cost a 32-partition exchange per micro-batch). The
-    // threshold therefore counts change ROWS, the conservative upper bound
-    // on distinct keys.
-    val probe = changes.select((kind match {
-      case "long" => col(keyCol).cast("long")
-      case _ => col(keyCol)
-    }).as("k")).na.drop().limit(driverKeyThreshold + 1).collect()
-    if (probe.length <= driverKeyThreshold) {
-      // driver regime: binary-search each file's range against the sorted
-      // key array — the KeySet stats probes, shared with the delete path —
-      // then probe the range-admitted key slice against the file's bloom.
-      // Blind files (no usable stats) are saved by a bloom alone when every
-      // key misses it.
-      def decide[K](keys: Array[K], ks: TargetedDelete.KeySet, ord: Ordering[K],
-          decode: String => K, bytes: K => Array[Byte]): Assignment = {
-        val statsTouched = stat.collect {
-          case (n, r) if TargetedDelete.rowIntersects(r, ks) => (n, r)
-        }
-        // the distributed manifest probe composes conjunctively with the
-        // TSV bloom and the stats hull: a covered, non-admitted file is
-        // provably disjoint from every probed key. Gated on a non-empty
-        // candidate set — a changeset the hulls already cleared never
-        // pays the probe job.
-        val manifest =
-          if (!manifestAvail || (statsTouched.isEmpty && blind.isEmpty)) None
-          else BloomManifest.probe(changes.sparkSession, liveDir.get, keyCol,
-            kind, keys.toSeq.map(bytes))
-        def mOk(n: String): Boolean =
-          manifest.forall(p => !p.covered(n) || p.admitted(n))
-        val touched = statsTouched.collect {
-          case (n, r) if mOk(n) && bloomFor.get(n).forall(b =>
-            KeyBloom.sliceMaybe(b, keys, decode(r.min), decode(r.max), ord, bytes)) => n
-        }.toSet
-        val blindTouched = blind.collect {
-          case (n, _) if mOk(n) && bloomFor.get(n).forall(b =>
-            keys.exists(k => b.mightContain(bytes(k)))) => n
-        }.toSet
-        val wouldTouch = statsTouched.size + blind.size
-        // consistency filter, not a checkpoint: the probe saw every row, so
-        // restricting the downstream evaluation to the probed keys (NULLs
-        // pass — they match nothing) makes source drift harmless for free.
-        // Tiered like every other key filter: a literal predicate while the
-        // set is small, a broadcast LEFT SEMI beyond IsinKeyThreshold (a
-        // 10^5-literal In expression would cost Catalyst per micro-batch)
-        val stable =
-          if (ks.preferPredicate)
-            changes.filter(col(keyCol).isNull || ks.matchPredicate(keyCol))
-          else changes.filter(col(keyCol).isNull)
-            .unionAll(TargetedDelete.matched(changes, keyCol, ks))
-        Assignment(touched ++ blindTouched,
-          wouldTouch - touched.size - blindTouched.size, stable)
-      }
-      if (kind == "long") {
-        val keys = probe.map(_.getLong(0)).distinct.sorted
-        decide[Long](keys, TargetedDelete.LongKeys(keys), Ordering.Long,
-          _.toLong, KeyBloom.longBytes)
-      } else {
-        val keys = probe.map(_.getString(0)).distinct.sorted(KeyStats.Utf8Order).toArray
-        decide[String](keys, TargetedDelete.StringKeys(keys), KeyStats.Utf8Order,
-          identity, KeyBloom.stringBytes)
-      }
-    } else {
-      // distributed regime: materialize the DISTINCT KEY SET only (eager
-      // localCheckpoint — one evaluation, lineage severed, auto-GC'd), not
-      // the full changeset: the consistency contract needs the downstream
-      // evaluation restricted to keys the lookup saw, which a semi join
-      // against the checkpointed keys provides at a fraction of the
-      // storage; full-row materialization would write every probe column
-      // to executor storage even for a probe cheaper to evaluate twice.
-      // The distinct also dedups the per-key UDF work in the lookup job.
-      val keyed = changes.select((kind match {
-        case "long" => col(keyCol).cast("long")
-        case _ => col(keyCol)
-      }).as(keyCol)).na.drop().distinct().localCheckpoint(true)
-      val stable = changes.filter(col(keyCol).isNull)
-        .unionAll(changes.join(keyed, Seq(keyCol), "left_semi"))
-      // key→files lookup over the boundary index,
-      // ACTUALLY broadcast (sc.broadcast — a plain closure capture would
-      // re-serialize the 10⁵-entry index into every task), run as a Spark
-      // job — only (file name, bloom verdict) pairs are collected. The
-      // lookup is a closure UDF: this is the PRUNING METADATA pass over the
-      // changeset's keys, not the data path. Each range hit is bloom-probed
-      // in the same pass; a file is touched iff ANY key both lands in its
-      // range and survives its bloom. Blind files stay conservatively
-      // touched here (their bloom would need an every-key probe per file —
-      // the driver regime's job; stats coverage is complete on any
-      // self-maintained table, so this corner is commit-without-statsCols
-      // only).
-      val collected =
-        if (kind == "long") {
-          val bc = keyed.sparkSession.sparkContext.broadcast(
-            (boundaryIndex[Long](stat, _.toLong, Ordering.Long), bloomFor))
-          val filesFor = udf { (k: java.lang.Long) =>
-            if (k == null) Array.empty[(String, Boolean)]
-            else {
-              val ((mins, maxs, names, pmax), bl) = bc.value
-              boundaryLookup(mins, maxs, names, pmax, Ordering.Long)(k.longValue)
-                .map(n => (n, bl.get(n).forall(
-                  _.mightContain(KeyBloom.longBytes(k.longValue)))))
-            }
-          }
-          val out = keyed.select(explode(filesFor(col(keyCol))).as("m"))
-            .groupBy(col("m._1").as("f")).agg(max(col("m._2")).as("t")).collect()
-          bc.unpersist(blocking = false)
-          out
-        } else {
-          val bc = keyed.sparkSession.sparkContext.broadcast(
-            (boundaryIndex[String](stat, identity, KeyStats.Utf8Order), bloomFor))
-          val filesFor = udf { (k: String) =>
-            if (k == null) Array.empty[(String, Boolean)]
-            else {
-              val ((mins, maxs, names, pmax), bl) = bc.value
-              boundaryLookup(mins, maxs, names, pmax, KeyStats.Utf8Order)(k)
-                .map(n => (n, bl.get(n).forall(
-                  _.mightContain(KeyBloom.stringBytes(k)))))
-            }
-          }
-          val out = keyed.select(explode(filesFor(col(keyCol))).as("m"))
-            .groupBy(col("m._1").as("f")).agg(max(col("m._2")).as("t")).collect()
-          bc.unpersist(blocking = false)
-          out
-        }
-      val touchedStat = collected.collect {
-        case r if r.getBoolean(1) => r.getString(0)
-      }.toSet
-      // bulk manifest probe: the checkpointed distinct keys join the
-      // sharded manifest distributed-to-distributed — the >10^5-key
-      // changeset gets the same layout-independent clearing as a point
-      // merge, with nothing but admitted names on the driver. Gated on a
-      // non-empty candidate set like the driver regime.
-      val mProbe =
-        if (!manifestAvail || (touchedStat.isEmpty && blindNames.isEmpty)) None
-        else BloomManifest.probeBulk(changes.sparkSession, liveDir.get,
-          keyCol, kind, keyed)
-      def mOk(n: String): Boolean =
-        mProbe.forall(p => !p.covered(n) || p.admitted(n))
-      val touchedAll = (blindNames ++ touchedStat).filter(mOk)
-      Assignment(touchedAll,
-        collected.length - touchedStat.size +
-          (blindNames.size + touchedStat.size - touchedAll.size), stable)
-    }
-  }
-
   /** Stage the post-merge state of `liveDir` into `stageDir`: rewrite ONLY
-    * the stats-intersecting files through `applyFn`, hard-link the rest,
-    * write the next version's self-maintained `_KEYSTATS`. `keyCols.size
-    * == 1` is the single-key fast path ([[touchedNames]]); more columns
-    * dispatch to the COMPOSITE assignment ([[CompositeKey.touched]] —
-    * conjunctive hull veto + tuple bloom). The stats row's version is
-    * filled in by the caller once the commit publishes. */
+    * the files [[FileAdmission.assign]] admits through `applyFn`, hard-link
+    * the rest, write the next version's self-maintained `_KEYSTATS`. One
+    * key column or several (a 1-tuple or a composite key) take the same
+    * assignment. The stats row's version is filled in by the caller once
+    * the commit publishes. */
   private def stageMerge(spark: SparkSession, liveDir: Path, stageDir: Path,
       keyCols: Seq[String], changes: DataFrame,
       applyFn: (DataFrame, DataFrame) => DataFrame,
@@ -351,23 +112,13 @@ object KeyedMerge {
       throw new IllegalStateException(
         s"keyed merge against a fileless version at $liveDir")
     val sideAll = KeyStats.loadStats(liveDir)
-    val keySet = keyCols.toSet
-    val side = sideAll.filter { case ((_, c), _) => keySet(c) }
-    val unknown = files.filter(f =>
-      keyCols.exists(c => !side.contains((f.getFileName.toString, c))))
-    val rows = side ++ KeyStats.statRowsFor(spark, unknown, keyCols)
+    val (rows, opened) = KeyStats.rowsFor(spark, sideAll, files, keyCols)
     val blooms = KeyBloom.loadBlooms(liveDir)
     // the assignment also hands back the STABLE changeset the kernel must
-    // consume (key-filtered in the driver regime, checkpointed in the
-    // distributed one) — see touchedNames' consistency contract
-    val Assignment(touched, bloomSkipped, stable) =
-      if (keyCols.size == 1)
-        touchedNames(files,
-          rows.map { case ((f, _), r) => f -> r }, keyCols.head, changes,
-          driverKeyThreshold, blooms, Some(liveDir))
-      else CompositeKey.touched(files, rows, keyCols, changes,
-        driverKeyThreshold, blooms, Some(liveDir))
-    val (rewrite, reused) = files.partition(f => touched(f.getFileName.toString))
+    // consume — see FileAdmission.Assignment's consistency contract
+    val asg = FileAdmission.assign(spark, liveDir, files, rows, keyCols,
+      changes, driverKeyThreshold, blooms)
+    val (rewrite, reused) = files.partition(f => asg.touched(f.getFileName.toString))
     Files.createDirectories(stageDir)
     // base = ONLY the intersecting files' rows; stats-disjoint files cannot
     // hold a matched key, so the kernel never needs to see them
@@ -388,7 +139,7 @@ object KeyedMerge {
         val target = (touchedRows.sum + MergeTargetRowsPerFile - 1) / MergeTargetRowsPerFile
         math.max(1L, math.min(rewrite.size.toLong, target)).toInt
       }
-    val merged0 = applyFn(base, stable)
+    val merged0 = applyFn(base, asg.stableChanges)
     // LINK-REUSE SCHEMA GUARD: linked files keep the table's physical types;
     // a kernel that drifts a column's type (e.g. coalescing an INT column
     // with a LONG literal) would publish a MIXED-schema version the full-
@@ -408,8 +159,7 @@ object KeyedMerge {
     // bloomed tables get parquet-NATIVE blooms in their rewrite output too
     // (row-group-level skipping inside touched files — the 10^6-file path),
     // NDV-sized from the touched files' sidecar rowCounts
-    val wOpts = KeyBloom.nativeWriteOptionsCols(
-      blooms.keys.map(_._2).toSet ++ BloomManifest.coveredColumns(liveDir),
+    val wOpts = KeyBloom.rewriteOptions(liveDir, blooms,
       KeyBloom.ndvFor(rewrite, n => rows((n, keyCols.head)).rowCount))
     val keyExprs = keyCols.map(col)
     if (outParts == 1) {
@@ -455,8 +205,8 @@ object KeyedMerge {
       .filter(outCols).toSeq.sorted
     val freshRows = KeyStats.statRowsFor(spark, freshFiles, indexedCols)
     KeyStats.writeStats(stageDir, carried ++ reusedKeyRows ++ freshRows)
-    MergeStats("", files.size, rewrite.size, reused.size, unknown.size,
-      bloomSkipped)
+    MergeStats("", files.size, rewrite.size, reused.size, opened,
+      asg.bloomSkipped)
   }
 
   /** Every merge appends its prune outcome to the table's operations log
@@ -471,11 +221,10 @@ object KeyedMerge {
 
   /** Stats-pruned merge: apply `changes` onto the live version through
     * `applyFn`, rewriting only key-intersecting files, under `writer`'s
-    * commit mode. One key column takes the single-key assignment
-    * ([[touchedNames]]); several take the composite one (conjunctive hull
-    * veto + composite bloom, [[CompositeKey.touched]]) — the reference's
-    * (poi_id, url) mention upsert rides the pruned path instead of the full
-    * rewrite. Under [[AtomicTable.Writer.Occ]] a lost race re-prunes
+    * commit mode. One key column or several (conjunctive hull veto +
+    * composite bloom, [[CompositeKey]]) take the same assignment — the
+    * reference's (poi_id, url) mention upsert rides the pruned path instead
+    * of the full rewrite. Under [[AtomicTable.Writer.Occ]] a lost race re-prunes
     * against the winner's version (its file set differs), so the changeset
     * lands exactly once alongside interleaved merges and deletes; stats
     * reflect the attempt that won. The table must have a committed base

@@ -19,8 +19,8 @@ import graft.sinks.TargetedDelete.{KeySet, LongRange, StringRange}
   * contain the key at all": Spark's own parquet filter pushdown only prunes
   * row groups INSIDE files it has already planned, listed, and opened.
   *
-  * Decision cost mirrors the delete path exactly (shared [[TargetedDelete
-  * .pruneFiles]]): one small sequential sidecar read when the column is
+  * Decision cost mirrors the delete path exactly (shared
+  * [[FileAdmission.admit]]): one small sequential sidecar read when the column is
   * indexed (zero footer reads at any file count), per-file footer metadata
   * reads as the hybrid fallback, executor-parallel past
   * [[KeyStats.ParallelFooterThreshold]]. The row-level tail re-applies the
@@ -55,17 +55,10 @@ object StatsRead {
     * its flat-layout guard, its part files, and its `_KEYSTATS` sidecar. */
   private final case class Resolved(version: String, dir: Path, files: Seq[Path],
       side: Map[(String, String), KeyStats.StatRow]) {
-    /** Per-(file, column) stat rows for `cols`: the sidecar first, ONE
-      * footer open per file missing any requested column (all columns
-      * extracted together — [[KeyStats.footerStatRows]]); with the number
-      * of files that took a footer open. */
-    def rowsFor(spark: SparkSession, cols: Seq[String])
-        : (Map[(String, String), KeyStats.StatRow], Int) = {
-      val unknown = files.filter(f =>
-        cols.exists(c => !side.contains((f.getFileName.toString, c))))
-      (side.filter { case ((_, c), _) => cols.contains(c) } ++
-        KeyStats.statRowsFor(spark, unknown, cols), unknown.size)
-    }
+    /** [[KeyStats.rowsFor]] over this version's files and sidecar. */
+    def rowsFor(spark: SparkSession, cols: Seq[String], skip: Set[String] = Set.empty)
+        : (Map[(String, String), KeyStats.StatRow], Int) =
+      KeyStats.rowsFor(spark, side, files, cols, skip)
   }
 
   private def resolveStats(root: String, op: String,
@@ -116,11 +109,13 @@ object StatsRead {
     * would. Asking for a pruned/never-committed version fails loudly,
     * matching [[AtomicTable.readVersion]]'s contract.
     *
-    * The ladder is chosen from the table, not by the caller: ONE enumerated
-    * predicate ([[TargetedDelete.LongKeys]]/[[TargetedDelete.StringKeys]])
-    * on the live version whose `_KEYBLOOM` sidecar or sharded manifest
-    * covers the column takes the bloom ladder ([[readBloom]]); everything
-    * else the min/max stats ladder. The row-level tail is exact either way,
+    * The files are decided by [[FileAdmission.admit]], the ladder every
+    * keyed read, delete and merge shares: the min/max hulls of every
+    * predicate, then — for ONE enumerated predicate
+    * ([[TargetedDelete.LongKeys]]/[[TargetedDelete.StringKeys]]) — the
+    * sharded manifest and the `_KEYBLOOM` sidecar where they cover the
+    * column (a bloom-covered file the sidecar is silent on opens no
+    * footer: the bloom decides it). The row-level tail is exact either way,
     * so the ladder decides how many files are planned, never which rows
     * come back. Build `ks` with [[TargetedDelete.KeySet.longs]] /
     * [[TargetedDelete.KeySet.strings]]; ranges and prefixes are
@@ -133,24 +128,23 @@ object StatsRead {
       version: Option[String] = None): (DataFrame, ReadStats) = {
     require(preds.nonEmpty, "a stats-pruned read needs at least one predicate")
     val r = resolveStats(root, "stats-pruned read", version)
-    val bloomRead = preds match {
-      case Seq((c, ks)) if version.isEmpty => readBloom(spark, r, c, ks)
-      case _ => None
-    }
-    bloomRead.getOrElse {
-      val (rows, opened) = r.rowsFor(spark, preds.map(_._1))
-      val touched = r.files.filter { f =>
-        preds.forall { case (c, ks) =>
-          TargetedDelete.rowIntersects(rowOf(rows, f, c), ks)
-        }
+    val (cols, sets) = preds.unzip
+    val keys = FileAdmission.enumerated(sets)
+    // an absent sidecar or manifest costs one existence check each
+    val blooms =
+      if (keys.isEmpty) Map.empty[(String, String), KeyBloom.BloomRow]
+      else KeyBloom.loadBlooms(r.dir)
+    val (rows, opened) = r.rowsFor(spark, cols,
+      keys.fold(Set.empty[String])(FileAdmission.bloomCovered(r.dir, blooms, cols, _)))
+    val admitted = FileAdmission.admit(spark, r.dir, r.files, rows, cols, sets, keys, blooms)
+    val touched = r.files.filter(f => admitted.touched(f.getFileName.toString))
+    val df =
+      if (touched.isEmpty) emptyLike(spark, r)
+      else preds.foldLeft(Footers.read(spark, touched)) {
+        case (d, (c, ks)) => TargetedDelete.matched(d, c, ks)
       }
-      val df =
-        if (touched.isEmpty) emptyLike(spark, r)
-        else preds.foldLeft(Footers.read(spark, touched)) {
-          case (d, (c, ks)) => TargetedDelete.matched(d, c, ks)
-        }
-      (df, ReadStats(r.version, r.files.size, touched.size, opened))
-    }
+    (df, ReadStats(r.version, r.files.size, touched.size, opened,
+      admitted.manifestFiles))
   }
 
   /** [[read]] of one STRING key set on the live version — stats compare
@@ -165,18 +159,18 @@ object StatsRead {
   /** DYNAMIC FILE PRUNING, join-shaped (Delta's DFP, decided from the
     * manifest instead of at runtime): join `probe` against the live version
     * on `keyCol`, constructing the scan over ONLY the files whose stats —
-    * bloom-checked where a `_KEYBLOOM` row exists — admit a probe key. The
-    * file-level prune is a superset of the join's matches and the join
-    * itself is the exact row-level filter, so no predicate re-application
-    * is needed. The decision is [[KeyedMerge.touchedNames]], the merge
-    * prune read-side: probe keys ≤ `driverKeyThreshold` enumerate on the
-    * driver; beyond, the assignment runs as a Spark job over the broadcast
-    * boundary index and only file names return. The join strategy is left
-    * to Catalyst (a micro-batch probe auto-broadcasts; a large probe
-    * shuffles — correct either way). Probe-source drift between the prune
-    * and the join is neutralized by the assignment's consistency contract
-    * (key-filtered in the driver regime, checkpointed in the distributed
-    * one — [[KeyedMerge.touchedNames]]). */
+    * bloom-checked where a bloom backend covers the column — admit a probe
+    * key. The file-level prune is a superset of the join's matches and the
+    * join itself is the exact row-level filter, so no predicate
+    * re-application is needed. The decision is [[FileAdmission.assign]],
+    * the merge prune read-side: probe keys ≤ `driverKeyThreshold`
+    * enumerate on the driver; beyond, the assignment runs as a Spark job
+    * over the broadcast boundary index and only file names return. The
+    * join strategy is left to Catalyst (a micro-batch probe
+    * auto-broadcasts; a large probe shuffles — correct either way).
+    * Probe-source drift between the prune and the join is neutralized by
+    * the assignment's stable probe frame (key-filtered in the driver
+    * regime, checkpointed in the distributed one). */
   def joinPruned(spark: SparkSession, root: String, keyCol: String,
       probe: DataFrame,
       driverKeyThreshold: Int = KeyedMerge.DriverKeyThreshold)
@@ -185,137 +179,36 @@ object StatsRead {
       s"probe frame must carry the join key column $keyCol")
     val r = resolveStats(root, "pruned join")
     val (rows, opened) = r.rowsFor(spark, Seq(keyCol))
-    val KeyedMerge.Assignment(touched, _, stableProbe) =
-      KeyedMerge.touchedNames(r.files, rows.map { case ((f, _), row) => f -> row },
-        keyCol, probe, driverKeyThreshold, KeyBloom.loadBlooms(r.dir), Some(r.dir))
-    val touchedFiles = r.files.filter(f => touched(f.getFileName.toString))
+    val asg = FileAdmission.assign(spark, r.dir, r.files, rows, Seq(keyCol),
+      probe, driverKeyThreshold, KeyBloom.loadBlooms(r.dir))
+    val touchedFiles = r.files.filter(f => asg.touched(f.getFileName.toString))
     val base =
       if (touchedFiles.isEmpty) emptyLike(spark, r)
       else Footers.read(spark, touchedFiles)
-    (base.join(stableProbe, Seq(keyCol), "inner"),
+    (base.join(asg.stableChanges, Seq(keyCol), "inner"),
       ReadStats(r.version, r.files.size, touchedFiles.size, opened))
-  }
-
-  // ---- bloom-pruned point lookups (r18 — r17 verdict item 2) -------------
-
-  /** [[read]]'s BLOOM LADDER for a point-lookup batch min/max cannot help
-    * with: a file is planned only if its `_KEYBLOOM` row ([[KeyBloom]]) or
-    * the sharded manifest ([[BloomManifest]]) admits at least one probe
-    * key — layout-INDEPENDENT skipping, the move that serves the dedup
-    * gate's "is this doc-hash already in the corpus?" on a corpus that is
-    * NOT clustered by that hash. Files without a (matching-kind) bloom fall
-    * back to the min/max stats ladder (sidecar, then footer — conservative
-    * hybrid, like every other pruning path); the row-level predicate
-    * re-applies inside survivors, so a bloom false positive costs one extra
-    * file scan, never a wrong row. None when neither bloom backend covers
-    * `keyCol` for this key kind: the stats ladder decides alone. */
-  private def readBloom(spark: SparkSession, r: Resolved, keyCol: String,
-      ks: TargetedDelete.KeySet): Option[(DataFrame, ReadStats)] = {
-    val (kind, keyBytes) = ks match {
-      case TargetedDelete.LongKeys(sorted) => ("long", sorted.toSeq.map(KeyBloom.longBytes))
-      case TargetedDelete.StringKeys(sorted) =>
-        ("string", sorted.toSeq.map(KeyBloom.stringBytes))
-      // a range or prefix holds unboundedly many keys: no bloom disproves it
-      case _ => return None
-    }
-    // an absent sidecar or manifest costs one existence check each
-    val blooms = KeyBloom.loadBlooms(r.dir)
-    val mCovered = BloomManifest.coveredFiles(r.dir, keyCol, kind)
-    if (mCovered.isEmpty &&
-        !blooms.exists { case ((_, c), b) => c == keyCol && b.kind == kind })
-      return None
-    // backend ladder: the DISTRIBUTED manifest probe first (one Spark job,
-    // only admitted names reach the driver — the 10⁶-file path), the
-    // driver-materialized TSV sidecar for files the manifest doesn't
-    // cover (the small-table fast path), the min/max stats ladder last
-    val (manifested, rest0) = r.files.partition(f => mCovered(f.getFileName.toString))
-    val (bloomed, rest) = rest0.partition { f =>
-      blooms.get((f.getFileName.toString, keyCol)).exists(_.kind == kind)
-    }
-    // the two ladders COMPOSE on bloomed files: a sidecar min/max row that
-    // already disproves the key set vetoes a bloom false positive for free
-    // (no footer read is ever paid for a bloomed file — the bloom alone
-    // decides when the sidecar is silent)
-    val sideAll = r.side.collect {
-      case ((f, c), row) if c == keyCol => f -> row
-    }
-    // the probe job runs only when the stats hull leaves candidates, and
-    // a torn manifest (crash between header and shards) degrades to
-    // planning every candidate — conservative, never a wrong skip
-    val candidates = manifested.filter { f =>
-      sideAll.get(f.getFileName.toString)
-        .forall(TargetedDelete.rowIntersects(_, ks))
-    }
-    val manifestTouched =
-      if (candidates.isEmpty) Seq.empty[Path]
-      else BloomManifest.probe(spark, r.dir, keyCol, kind, keyBytes) match {
-        case Some(p) => candidates.filter(f => p.admitted(f.getFileName.toString))
-        case None => candidates.filter { f =>
-          // probe declined (key set past MaxProbeKeys, or a torn/legacy
-          // manifest): a covered file keeps its TSV-bloom second chance
-          // when it has one; otherwise planned conservatively
-          val n = f.getFileName.toString
-          blooms.get((n, keyCol)).filter(_.kind == kind)
-            .forall(b => keyBytes.exists(b.mightContain))
-        }
-      }
-    val bloomTouched = bloomed.filter { f =>
-      val n = f.getFileName.toString
-      sideAll.get(n).forall(TargetedDelete.rowIntersects(_, ks)) &&
-        keyBytes.exists(blooms((n, keyCol)).mightContain)
-    }
-    // hybrid fallback for bloom-less files: the min/max ladder
-    val (restTouched, opened) =
-      if (rest.isEmpty) (Seq.empty[Path], 0)
-      else {
-        val unknown = rest.filterNot(f => sideAll.contains(f.getFileName.toString))
-        val rows = sideAll ++ KeyStats.statRowsFor(spark, unknown, keyCol)
-        (rest.filter(f => TargetedDelete.rowIntersects(
-          rows(f.getFileName.toString), ks)), unknown.size)
-      }
-    val touched = manifestTouched ++ bloomTouched ++ restTouched
-    val df =
-      if (touched.isEmpty) emptyLike(spark, r)
-      else TargetedDelete.matched(Footers.read(spark, touched), keyCol, ks)
-    Some((df, ReadStats(r.version, r.files.size, touched.size, opened,
-      manifested.size)))
   }
 
   /** COMPOSITE-KEY point-lookup batch (r19 verdict item 1): plan only the
     * files whose per-column hulls CONJUNCTIVELY admit some probe tuple,
     * tightened by the composite bloom sidecar/manifest
-    * ([[CompositeKey.touched]] — the merge prune, read-side). `tuples` is
-    * a frame of the key columns. The row-level tail is exact tuple
-    * membership via a semi join against the assignment's stable key set;
-    * `manifestFiles` counts files whose decision the DISTRIBUTED composite
-    * manifest covered. */
+    * ([[FileAdmission.assign]] — the merge prune, read-side). `tuples` is
+    * a frame of the key columns, evaluated ONCE: a driver-sized tuple set
+    * is collected by the assignment and the row tail filters on the same
+    * collected tuples, so the file decision and the row tail agree by
+    * construction (a non-stable probe source evaluated twice could
+    * otherwise return a tuple's rows from planned files while silently
+    * missing them in unplanned ones); past the threshold the tail
+    * semi-joins the assignment's checkpointed keys. `manifestFiles`
+    * counts files whose decision the DISTRIBUTED composite manifest
+    * covered. */
   def readTupleIn(spark: SparkSession, root: String, keyCols: Seq[String],
       tuples: DataFrame): (DataFrame, ReadStats) = {
     require(keyCols.size >= 2, "use read for one column")
     val r = resolveStats(root, "composite-pruned read")
     val (rows, opened) = r.rowsFor(spark, keyCols)
-    val kindsOpt = CompositeKey.kindsOf(tuples.schema, keyCols)
-    // ONE evaluation of the probe frame (the stable-changeset contract,
-    // read-side): a driver-sized tuple set is collected HERE and
-    // re-presented to the prune as a LOCAL relation, so the file decision
-    // and the row tail share the same tuple bytes by construction — a
-    // non-stable probe source evaluated twice could otherwise return a
-    // tuple's rows from planned files while silently missing them in
-    // unplanned ones. Past the threshold the distributed assignment
-    // checkpoints, and ITS stable frame is the row tail.
-    val collected: Option[Seq[Seq[Any]]] = kindsOpt.flatMap { kinds =>
-      val probe = tuples.select(CompositeKey.keySelect(kinds, keyCols): _*)
-        .na.drop("any").limit(KeyedMerge.DriverKeyThreshold + 1).collect()
-      if (probe.length > KeyedMerge.DriverKeyThreshold) None
-      else Some(probe.map(r => keyCols.indices.map(r.get): Seq[Any]).toSeq.distinct)
-    }
-    val probeFrame = (kindsOpt, collected) match {
-      case (Some(kinds), Some(ts)) =>
-        CompositeKey.tupleFrame(spark, keyCols, kinds, ts)
-      case _ => tuples
-    }
-    val asg = CompositeKey.touched(r.files, rows, keyCols, probeFrame,
-      KeyedMerge.DriverKeyThreshold, KeyBloom.loadBlooms(r.dir), Some(r.dir))
+    val asg = FileAdmission.assign(spark, r.dir, r.files, rows, keyCols, tuples,
+      KeyedMerge.DriverKeyThreshold, KeyBloom.loadBlooms(r.dir))
     val touchedFiles = r.files.filter(f => asg.touched(f.getFileName.toString))
     val base =
       if (touchedFiles.isEmpty) emptyLike(spark, r)
@@ -323,23 +216,19 @@ object StatsRead {
     // row-level tail, tiered like every other key filter: a small tuple
     // set becomes a literal OR-of-ANDs (each conjunct's equalities push
     // into the surviving files' row-group stats); larger driver-sized sets
-    // semi-join the SAME local tuple relation the prune used; only the
-    // distributed regime joins the assignment's stable frame
-    val out = collected match {
-      case Some(ts) if ts.isEmpty => base.where(lit(false))
-      case Some(ts) if ts.size <= TargetedDelete.IsinKeyThreshold =>
-        base.filter(CompositeKey.matchPredicate(keyCols, ts))
-      case Some(_) => base.join(broadcast(probeFrame), keyCols, "left_semi")
+    // semi-join a local relation of the same tuples; only the distributed
+    // regime joins the assignment's stable frame
+    val out = asg.keys match {
+      case Some(t) if t.rows.size <= TargetedDelete.IsinKeyThreshold =>
+        base.filter(CompositeKey.matchPredicate(keyCols, t.rows))
+      case Some(t) => base.join(broadcast(
+        CompositeKey.tupleFrame(spark, keyCols, t.kinds, t.rows)), keyCols, "left_semi")
       case None => base.join(
         asg.stableChanges.select(keyCols.map(col): _*).na.drop("any").distinct(),
         keyCols, "left_semi")
     }
-    val manifested = kindsOpt
-      .map(k => BloomManifest.coveredFiles(r.dir,
-        CompositeKey.colName(keyCols), CompositeKey.kindName(k)))
-      .getOrElse(Set.empty[String])
     (out, ReadStats(r.version, r.files.size, touchedFiles.size, opened,
-      r.files.count(f => manifested(f.getFileName.toString))))
+      asg.manifestFiles))
   }
 
   /** A metadata-count's audit row: `metadataFiles` contributed their match

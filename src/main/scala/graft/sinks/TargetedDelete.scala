@@ -359,76 +359,6 @@ object TargetedDelete {
     case _ => false
   }
 
-  private[sinks] final case class Pruned(touched: Seq[Path], reused: Seq[Path],
-      footerReads: Int, keyRows: Map[String, StatRow],
-      allSideRows: Map[(String, String), StatRow], bloomSkipped: Int = 0,
-      blooms: Map[(String, String), KeyBloom.BloomRow] = Map.empty)
-
-  /** Can the file's `_KEYBLOOM` row disprove EVERY key of the set within
-    * the file's stats hull? Only enumerated sets probe (a range/prefix
-    * holds unboundedly many keys — a bloom cannot disprove it); a file with
-    * unusable stats probes ALL keys (the bloom is its only chance at a
-    * link). Conservative-false everywhere else. */
-  private def bloomClears(b: KeyBloom.BloomRow, row: StatRow, ks: KeySet): Boolean =
-    (ks, b.kind) match {
-      case (LongKeys(sorted), "long") =>
-        if (row.kind == "long")
-          !KeyBloom.sliceMaybe(b, sorted, row.min.toLong, row.max.toLong,
-            Ordering.Long, KeyBloom.longBytes)
-        else !sorted.exists(k => b.mightContain(KeyBloom.longBytes(k)))
-      case (StringKeys(sorted), "string") =>
-        if (row.kind == "string")
-          !KeyBloom.sliceMaybe(b, sorted, row.min, row.max,
-            KeyStats.Utf8Order, KeyBloom.stringBytes)
-        else !sorted.exists(k => b.mightContain(KeyBloom.stringBytes(k)))
-      case _ => false
-    }
-
-  /** Partition the live files into (touched, reusable): sidecar rows decide
-    * for free; only files the sidecar doesn't cover fall back to footer
-    * reads (hybrid — a partial index still prunes maximally). Min/max
-    * survivors with a `_KEYBLOOM` row get a second chance: on an
-    * UNCLUSTERED key (hash hulls span the key space, min/max prunes
-    * nothing — the GDPR delete-by-doc-hash shape) the bloom is the only
-    * thing standing between a point delete and a full-table rewrite. The
-    * loaded sidecar rides along in the result so the staging pass never
-    * re-reads it. */
-  private[sinks] def pruneFiles(spark: SparkSession, liveDir: Path, files: Seq[Path],
-      keyCol: String, ks: KeySet): Pruned = {
-    val sideAll = KeyStats.loadStats(liveDir)
-    val side = sideAll.collect {
-      case ((f, c), row) if c == keyCol => f -> row
-    }
-    val unknown = files.filterNot(f => side.contains(f.getFileName.toString))
-    val rows = side ++ KeyStats.statRowsFor(spark, unknown, keyCol)
-    val (touched0, reused0) =
-      files.partition(f => rowIntersects(rows(f.getFileName.toString), ks))
-    // sharded-manifest probe for enumerated key sets (one distributed job,
-    // no driver bloom materialization); a covered, non-admitted file is
-    // provably key-free. Ranges/prefixes can't bloom-probe (unbounded key
-    // sets), and a delete the stats hull already fully cleared never pays
-    // the probe job — both stay on the stats ladder.
-    val manifest =
-      if (touched0.isEmpty) None
-      else ks match {
-        case LongKeys(sorted) => BloomManifest.probe(spark, liveDir, keyCol,
-          "long", sorted.toSeq.map(KeyBloom.longBytes))
-        case StringKeys(sorted) => BloomManifest.probe(spark, liveDir, keyCol,
-          "string", sorted.toSeq.map(KeyBloom.stringBytes))
-        case _ => None
-      }
-    val blooms = KeyBloom.loadBlooms(liveDir)
-    val (bloomCleared, touched) =
-      if (blooms.isEmpty && manifest.isEmpty) (Seq.empty[Path], touched0)
-      else touched0.partition { f =>
-        val n = f.getFileName.toString
-        manifest.exists(p => p.covered(n) && !p.admitted(n)) ||
-          blooms.get((n, keyCol)).exists(b => bloomClears(b, rows(n), ks))
-      }
-    Pruned(touched, reused0 ++ bloomCleared, unknown.size, rows, sideAll,
-      bloomCleared.size, blooms)
-  }
-
   /** The survivor filter over the touched files' rows. */
   private def survivors(df: DataFrame, keyCol: String, ks: KeySet): DataFrame =
     if (ks.preferPredicate) df.filter(ks.survivorPredicate(keyCol))
@@ -458,16 +388,22 @@ object TargetedDelete {
       keyCol: String, ks: KeySet): DeleteStats = {
     requireFlatLayout(liveDir, "targeted delete")
     val files = partFiles(liveDir)
-    val pr = pruneFiles(spark, liveDir, files, keyCol, ks)
-    val (dropped0, rewrite0) = pr.touched.partition(f =>
-      rowContained(pr.keyRows(f.getFileName.toString), ks))
+    val sideAll = KeyStats.loadStats(liveDir)
+    val (rows, opened) = KeyStats.rowsFor(spark, sideAll, files, Seq(keyCol))
+    def keyRow(n: String): StatRow = rows((n, keyCol))
+    val blooms = KeyBloom.loadBlooms(liveDir)
+    val admitted = FileAdmission.admit(spark, liveDir, files, rows, Seq(keyCol),
+      Seq(ks), FileAdmission.enumerated(Seq(ks)), blooms)
+    val (touched, reused) = files.partition(f => admitted.touched(f.getFileName.toString))
+    val (dropped0, rewrite0) = touched.partition(f =>
+      rowContained(keyRow(f.getFileName.toString), ks))
     // a delete that would drop EVERY file must still publish a READABLE
     // version: demote one dropped file to the rewrite path so its 0-row
     // rewrite leaves a schema-bearing part file (a fileless directory has
     // no footer to take a schema from — the table would be permanently
     // unreadable)
     val (dropped, rewrite) =
-      if (rewrite0.isEmpty && pr.reused.isEmpty && dropped0.nonEmpty)
+      if (rewrite0.isEmpty && reused.isEmpty && dropped0.nonEmpty)
         (dropped0.tail, dropped0.take(1))
       else (dropped0, rewrite0)
     Files.createDirectories(stageDir)
@@ -476,31 +412,29 @@ object TargetedDelete {
       // keep parquet-native blooms in the surviving rewrite too
       val rewriteOut = stageDir.resolve("rewrite")
       survivors(Footers.read(spark, rewrite), keyCol, ks)
-        .write.options(KeyBloom.nativeWriteOptionsCols(
-          pr.blooms.keys.map(_._2).toSet ++ BloomManifest.coveredColumns(liveDir),
-          KeyBloom.ndvFor(rewrite, n => pr.keyRows(n).rowCount)))
+        .write.options(KeyBloom.rewriteOptions(liveDir, blooms,
+          KeyBloom.ndvFor(rewrite, n => keyRow(n).rowCount)))
         .mode("overwrite").parquet(rewriteOut.toString)
       moveStagedParts(rewriteOut, stageDir)
     }
-    pr.reused.foreach(linkInto(stageDir, _))
-    val reusedNames = pr.reused.map(_.getFileName.toString).toSet
+    reused.foreach(linkInto(stageDir, _))
+    val reusedNames = reused.map(_.getFileName.toString).toSet
     // bloom lifecycle: linked files carry rows, fresh rewrites get rows
     // REBUILT on every column the predecessor bloomed (self-maintaining)
-    KeyBloom.maintainStage(spark, liveDir, stageDir, reusedNames, pr.blooms)
-    val carried = pr.allSideRows.filter { case ((f, _), _) => reusedNames(f) }
-    val reusedKeyRows = reusedNames.toSeq
-      .map(n => (n, keyCol) -> pr.keyRows(n)).toMap
+    KeyBloom.maintainStage(spark, liveDir, stageDir, reusedNames, blooms)
+    val carried = sideAll.filter { case ((f, _), _) => reusedNames(f) }
+    val reusedKeyRows = reusedNames.toSeq.map(n => (n, keyCol) -> keyRow(n)).toMap
     val freshFiles = partFiles(stageDir).filterNot(p => reusedNames(p.getFileName.toString))
     // executor-parallel past the threshold — a scattered delete rewrites
     // many files and their index rows must not serialize on the driver.
     // Rebuilt on EVERY predecessor-indexed column (one footer open per
     // file serves all — a delete must not degrade the OTHER columns'
     // zero-footer-read reads; r18 verdict item 2)
-    val indexedCols = (pr.allSideRows.keys.map(_._2).toSet + keyCol).toSeq.sorted
+    val indexedCols = (sideAll.keys.map(_._2).toSet + keyCol).toSeq.sorted
     val freshRows = KeyStats.statRowsFor(spark, freshFiles, indexedCols)
     KeyStats.writeStats(stageDir, carried ++ reusedKeyRows ++ freshRows)
-    DeleteStats("", files.size, rewrite.size, pr.reused.size, pr.footerReads,
-      dropped.size, pr.bloomSkipped)
+    DeleteStats("", files.size, rewrite.size, reused.size, opened,
+      dropped.size, admitted.bloomSkipped)
   }
 
   /** Move a staged rewrite's part files up into `stageDir`, then remove the
@@ -571,7 +505,7 @@ object TargetedDelete {
 
   /** COMPOSITE-KEY targeted delete (r19 verdict item 1): remove exact key
     * TUPLES — the "(poi_id, url) pair withdrawn" shape. `tuples` is a frame
-    * of the key columns; the prune is [[CompositeKey.touched]]'s
+    * of the key columns; the prune is [[FileAdmission.assign]]'s
     * conjunctive hull veto + composite bloom, and the anti-join kernel
     * rides the keyed-merge staging (link reuse, self-maintained sidecars,
     * single-writer orphan policy — all shared). Rows with a NULL component

@@ -76,6 +76,17 @@ class JobBudgetSpec extends AnyFunSuite {
     assert(n == 1, s"lookup ran $n jobs")
   }
 
+  test("a 10-key string erasure on an indexed, bloom-less table runs at most one job") {
+    val root = Files.createTempDirectory("budgeterase").resolve("t").toString
+    AtomicTable.commit(poi(4000, 8), root, Seq("google_place_id"))
+    val keys = (0 until 10).map(i => f"g${i * 397 + 11}%05d")
+    val (st, n) = jobs(TargetedDelete.deleteStringKeys(spark, root, "google_place_id", keys))
+    info(s"the erasure ran $n jobs")
+    assert(st.footerReads == 0 && st.totalFiles == 8, st)
+    assert(AtomicTable.read(spark, root).count() == 3990)
+    assert(n <= 1, s"the erasure ran $n jobs")
+  }
+
   test("building AtomicTable.read runs no job") {
     val root = Files.createTempDirectory("budgetread").resolve("t").toString
     AtomicTable.commit(poi(100, 3), root)

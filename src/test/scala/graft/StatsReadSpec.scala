@@ -3,7 +3,8 @@ package graft
 import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.sinks.{AtomicTable, KeyStats, StatsRead, TargetedDelete}
+import graft.sinks.{AtomicTable, BloomManifest, KeyBloom, KeyStats, KeyedMerge,
+  StatsRead, TargetedDelete}
 import graft.sinks.TargetedDelete.{KeySet, LongRange, StringPrefix, StringRange}
 
 /** The read-path data-skipping contracts the driver's hash gate can't see:
@@ -453,5 +454,52 @@ class StatsReadSpec extends AnyFunSuite {
     assert(rsH.footerReads == 0 && rsH.filesRead <= 5,
       s"bloom did not prune the hash-keyed DFP join: $rsH")
     assert(dfH.count() == 3L)
+  }
+  /** 16 files clustered on a string key `k`, 250 keys per file; the bloom
+    * backend under test is sized at 1024 bits, ~25% false positives, so a
+    * probe of every key and a probe of the keys a file's hull admits
+    * decide differently. */
+  private def admissionTable(root: String, backend: String, tuple: Boolean): Unit = {
+    deleteAll(Paths.get(root))
+    AtomicTable.commit(
+      spark.range(4000L).select(format_string("k%05d", col("id")).as("k"),
+        (col("id") % 3).as("g"), col("id").as("v"))
+        .repartitionByRange(16, col("k")).sortWithinPartitions(col("k")),
+      root, statsCols = Seq("k", "g"))
+    val cols = if (tuple) Seq("g", "k") else Seq("k")
+    backend match {
+      case "tsv" if tuple => KeyBloom.indexKeyBloomTuple(spark, root, cols, 1024)
+      case "tsv" => KeyBloom.indexKeyBloom(spark, root, "k", 1024)
+      case "manifest" if tuple => BloomManifest.indexBloomManifestTuple(spark, root, cols, 1024)
+      case "manifest" => BloomManifest.indexBloomManifest(spark, root, "k", 1024)
+      case _ => 0
+    }
+  }
+
+  test("admission parity: read, delete and merge admit the same files on every bloom backend") {
+    import spark.implicits._
+    // three present keys, and one absent key inside each file's hull
+    val keys = Seq("k00100", "k01700", "k03333") ++
+      (0 until 16).map(i => f"k${i * 250 + 10}%05dx")
+    Seq("tsv", "manifest", "none").foreach { backend =>
+      val root = s"spark-warehouse/test_s16_admit_$backend"
+      admissionTable(root, backend, tuple = false)
+      val (df, rs) = StatsRead.readStringKeyIn(spark, root, "k", keys)
+      assert(df.count() == 3L && rs.footerReads == 0, s"$backend: $rs")
+      val ds = TargetedDelete.deleteStringKeys(spark, root, "k", keys)
+      admissionTable(root, backend, tuple = false)
+      val ms = KeyedMerge.merge(spark, root, Seq("k"), keys.toDF("k"), (base, _) => base)
+      assert(rs.filesRead == ds.rewrittenFiles + ds.droppedFiles &&
+        rs.filesRead == ms.rewrittenFiles,
+        s"$backend: read $rs, delete $ds, merge $ms")
+      // the same tuples through the two-column forms
+      admissionTable(root, backend, tuple = true)
+      val tuples = keys.map(k => (k.drop(1).take(5).toLong % 3, k)).toDF("g", "k")
+      val (tf, trs) = StatsRead.readTupleIn(spark, root, Seq("g", "k"), tuples)
+      assert(tf.count() == 3L && trs.footerReads == 0, s"$backend: $trs")
+      val tds = TargetedDelete.deleteTupleKeys(spark, root, Seq("g", "k"), tuples)
+      assert(trs.filesRead == tds.rewrittenFiles,
+        s"$backend: tuple read $trs, tuple delete $tds")
+    }
   }
 }
