@@ -76,8 +76,17 @@ object Classify {
         col("oldest14.reviews_count").as("oldest_reviews"))
   }
 
-  /** Full A1–A6 scoring: poi ⋈ mentionFeatures ⋈ snapshotFeatures → one wide
-    * select. Returns one row per poi with all scores, badges, eligibility. */
+  /** Full A1–A6 scoring: poi ⋈ mentionFeatures ⋈ snapshotFeatures → staged
+    * projections. Returns one row per poi with all scores, badges,
+    * eligibility.
+    *
+    * Each score that later formulas reuse (authority, review,
+    * days-since-first-seen, momentum, gatto) is staged as a column of its
+    * own and referenced by name downstream: a Column value used in several
+    * formulas is otherwise inlined into each (gatto holds three score
+    * trees, eligibility gatto's and two of them again), and the optimizer
+    * walks that text on every pass and every adaptive re-plan. Staging
+    * changes no arithmetic, so the values are bit-identical. */
   def scores(poi: DataFrame, mentions: DataFrame, snapshots: DataFrame, asOf: String): DataFrame = {
     val asOfTs = to_timestamp(lit(asOf))
     val mf = mentionFeatures(mentions, asOf)
@@ -97,6 +106,14 @@ object Classify {
     val reviewAdj = when(col("category").isin("bar", "night_club"), reviewRaw * 0.85).otherwise(reviewRaw)
     val review = when(col("rating").isNull, 0.0).otherwise(clamp(reviewAdj, 0, 100))
 
+    val daysSinceFirstSeen = datediff(to_date(asOfTs), to_date(col("first_seen_at")))
+    val staged = joined
+      .withColumn("__authority", authority)
+      .withColumn("__review", review)
+      .withColumn("__days_first_seen", daysSinceFirstSeen)
+    val (authorityS, reviewS, daysS) =
+      (col("__authority"), col("__review"), col("__days_first_seen"))
+
     // A3 momentum (:133-257)
     val delta14 = when(col("n_snapshots_14d") >= 2,
       greatest(col("newest_reviews") - col("oldest_reviews"), lit(0))).otherwise(lit(0))
@@ -104,45 +121,49 @@ object Classify {
     val bonus = when(coalesce(col("n_recent_high08"), lit(0L)) >= 2, 15.0).otherwise(0.0)
     val withCat = when(col("category") === "bakery", (baseMomentum + bonus) * 1.15)
       .otherwise(baseMomentum + bonus)
-    val daysSinceFirstSeen = datediff(to_date(asOfTs), to_date(col("first_seen_at")))
-    val insufficientFallback = when(col("first_seen_at").isNotNull && daysSinceFirstSeen < 30, 50.0)
+    val insufficientFallback = when(col("first_seen_at").isNotNull && daysS < 30, 50.0)
       .otherwise(0.0)
     val momentum = clamp(
       when(coalesce(col("n_snapshots_total"), lit(0L)) < 2, insufficientFallback).otherwise(withCat),
       0, 100)
+    val momentumS = col("__momentum")
 
     // A4 gatto (:393-396)
-    val gatto = clamp(lit(0.5) * authority + lit(0.3) * review + lit(0.2) * momentum, 0, 100)
+    val gatto = clamp(lit(0.5) * authorityS + lit(0.3) * reviewS + lit(0.2) * momentumS, 0, 100)
+    val gattoS = col("__gatto")
 
     // A5 badges (:398-460) — badge checks default rating to 0 when null
     val rating0 = coalesce(col("rating"), lit(0.0))
-    val badgeNew = col("first_seen_at").isNotNull && daysSinceFirstSeen <= 60 &&
+    val badgeNew = col("first_seen_at").isNotNull && daysS <= 60 &&
       coalesce(col("n_recent_quality06"), lit(0L)) >= 1
-    val badgeTrending = momentum >= 65.0 || coalesce(col("n_recent_high08"), lit(0L)) >= 2
+    val badgeTrending = momentumS >= 65.0 || coalesce(col("n_recent_high08"), lit(0L)) >= 2
     val badgeHiddenGem = rating0 >= 4.6 && coalesce(col("reviews_count"), lit(0)) < 500 &&
       coalesce(col("n_press_local"), lit(0L)) >= 1
     val badgeLocalFav = rating0 >= 4.4 && coalesce(col("n_local"), lit(0L)) >= 2
 
     // A6 eligibility (:462-474)
-    val eligibility = when(gatto >= 60.0 && (authority >= 40.0 || review >= 70.0), "approved")
-      .when(gatto >= 50.0, "eligible")
+    val eligibility = when(gattoS >= 60.0 && (authorityS >= 40.0 || reviewS >= 70.0), "approved")
+      .when(gattoS >= 50.0, "eligible")
       .otherwise("hold")
 
-    joined.select(
-      col("id"), col("name"), col("category"), col("city"),
-      round(authority, 6).as("authority_score"),
-      round(review, 6).as("review_score"),
-      round(momentum, 6).as("momentum_score"),
-      round(gatto, 6).as("gatto_score"),
-      badgeNew.as("badge_new"),
-      badgeTrending.as("badge_trending"),
-      badgeHiddenGem.as("badge_hidden_gem"),
-      badgeLocalFav.as("badge_local_favorite"),
-      concat_ws(",",
-        when(badgeNew, "new"), when(badgeTrending, "trending"),
-        when(badgeHiddenGem, "hidden_gem"), when(badgeLocalFav, "local_favorite")).as("badges"),
-      eligibility.as("eligibility_status_new"),
-      col("eligibility_status").as("eligibility_status_old"))
+    staged
+      .withColumn("__momentum", momentum)
+      .withColumn("__gatto", gatto)
+      .select(
+        col("id"), col("name"), col("category"), col("city"),
+        round(authorityS, 6).as("authority_score"),
+        round(reviewS, 6).as("review_score"),
+        round(momentumS, 6).as("momentum_score"),
+        round(gattoS, 6).as("gatto_score"),
+        badgeNew.as("badge_new"),
+        badgeTrending.as("badge_trending"),
+        badgeHiddenGem.as("badge_hidden_gem"),
+        badgeLocalFav.as("badge_local_favorite"),
+        concat_ws(",",
+          when(badgeNew, "new"), when(badgeTrending, "trending"),
+          when(badgeHiddenGem, "hidden_gem"), when(badgeLocalFav, "local_favorite")).as("badges"),
+        eligibility.as("eligibility_status_new"),
+        col("eligibility_status").as("eligibility_status_old"))
   }
 
   /** A7 — city percentiles + status-transition counts

@@ -49,29 +49,30 @@ object Collections {
     * The predicate + score run as ONE codegen'd pass over the tag array
     * ([[graft.expr.Expressions.TagMatchScore]]: null = ineligible) — the
     * interpreted `exists`/`aggregate(filter(...))` lambdas it replaces
-    * multiply per (poi × template) with real collection catalogs. */
+    * multiply per (poi × template) with real collection catalogs.
+    *
+    * The top-8 is one `row_number` window over ONE exchange on
+    * `collection_id`, and the member count a second window over the same
+    * partitioning (no aggregate joined back). It stays parallel at catalog
+    * scale because Spark's InferWindowGroupLimit turns `rnk <= 8` into a
+    * `WindowGroupLimit` whose Partial half runs BELOW the exchange: each
+    * map task keeps at most 8 rows per collection before the shuffle, so
+    * the single task that finally sorts a collection sees at most
+    * 8 × (map tasks) rows, not every matched row of it (JobBudgetSpec pins
+    * the plan shape). The order key (match_score desc, poi_id asc) is
+    * total, so the result is deterministic. */
   def generate(pois: DataFrame, tmpl: DataFrame): DataFrame = {
     val matched = pois.join(broadcast(tmpl))
       .withColumn("match_score", round(graft.expr.functions.tag_match_score(
         col("tags"), col("required_tags"), col("excluded_tags"), col("min_confidence")), 6))
       .filter(col("match_score").isNotNull)
-    // Two-phase top-8: a per-(collection, salt) prune first, then the exact
-    // global top-8 over ≤ 32×8 survivors per collection. A single window
-    // partitioned only by collection_id would sort every matched row of a
-    // collection in ONE task — with catalog-scale templates × city-scale POIs
-    // that serializes the whole sort; the salted prune keeps it parallel and
-    // is lossless (the global top-8 is always within the union of per-salt
-    // top-8s; the deterministic order key makes the result identical).
-    val ord = Seq(col("match_score").desc, col("poi_id").asc)
-    val wSalt = Window.partitionBy(col("collection_id"), col("salt")).orderBy(ord: _*)
-    val pruned = matched.withColumn("salt", pmod(hash(col("poi_id")), lit(32)))
-      .withColumn("srnk", row_number().over(wSalt)).filter(col("srnk") <= 8)
-      .drop("salt", "srnk")
-    val w = Window.partitionBy(col("collection_id")).orderBy(ord: _*)
-    val ranked = pruned.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= 8)
-    val sizes = ranked.groupBy(col("collection_id")).agg(count(lit(1)).as("n_members"))
+    val byCollection = Window.partitionBy(col("collection_id"))
+    matched
+      .withColumn("rnk", row_number().over(
+        byCollection.orderBy(col("match_score").desc, col("poi_id").asc)))
+      .filter(col("rnk") <= 8)
+      .withColumn("n_members", count(lit(1)).over(byCollection))
       .filter(col("n_members") >= 2)
-    ranked.join(sizes, Seq("collection_id"))
       .select(col("collection_id"), col("poi_id"), col("match_score"),
         col("rnk").cast("long").as("rnk"), col("n_members"))
   }

@@ -63,10 +63,15 @@ object MentionDedup {
     * a row dropped by one key does NOT claim its other key). Because both
     * seen-sets are keyed by domain, the global sequential scan decomposes
     * exactly into independent per-domain scans — implemented as
-    * `flatMapGroups` per domain over ord-sorted rows (bounded group size:
-    * ≤ max-candidates-per-poi per batch), which distributes while preserving
-    * the reference's sequential semantics bit-for-bit.
-    * W4DedupModelSpec property-checks this against a direct model. */
+    * `flatMapSortedGroups` on the `domain` column, which distributes while
+    * preserving the reference's sequential semantics bit-for-bit.
+    *
+    * The groups are STREAMED: grouping on the column itself needs no key
+    * deserialization per row (no `AppendColumns`), Spark's own sort orders
+    * each group by `ord` (spilling when a Zipf-hot domain outgrows memory),
+    * and each group's rows are filtered one at a time, so only the two
+    * seen-sets of the current domain are held. W4DedupModelSpec
+    * property-checks this against a direct model. */
   def inBatchDedup(cands: DataFrame): DataFrame = {
     val normUrl = {
       val noFrag = regexp_replace(col("url"), "#.*$", "")
@@ -78,21 +83,14 @@ object MentionDedup {
     val spark = cands.sparkSession
     import spark.implicits._
     val prepared = cands.withColumn("norm_url", normUrl).withColumn("norm_title", normTitle)
-    val cols = prepared.columns
-    val ordIdx = cols.indexOf("ord")
-    val urlIdx = cols.indexOf("norm_url")
-    val titleIdx = cols.indexOf("norm_title")
-    val domIdx = cols.indexOf("domain")
+    val urlIdx = prepared.columns.indexOf("norm_url")
+    val titleIdx = prepared.columns.indexOf("norm_title")
     implicit val enc = org.apache.spark.sql.Encoders.row(prepared.schema)
-    prepared.groupByKey(_.getString(domIdx))
-      .flatMapGroups { (_, rows) =>
-        val sorted = rows.toSeq.sortBy(r => r.getAs[Any](ordIdx) match {
-          case i: Int => i.toLong
-          case l: Long => l
-        })
+    prepared.groupBy(col("domain")).as[String, org.apache.spark.sql.Row]
+      .flatMapSortedGroups(col("ord")) { (_, rows) =>
         val seenUrls = scala.collection.mutable.Set[String]()
         val seenTitles = scala.collection.mutable.Set[String]()
-        sorted.iterator.filter { r =>
+        rows.filter { r =>
           val u = r.getString(urlIdx)
           val t = r.getString(titleIdx)
           val keep = !seenUrls.contains(u) && !seenTitles.contains(t)

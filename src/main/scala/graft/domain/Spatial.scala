@@ -1,9 +1,10 @@
 package graft.domain
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
-import graft.expr.TextAlgo
+import org.apache.spark.unsafe.types.UTF8String
+import graft.expr.VecAlgo
 
 /** Spatial association J1 (SURVEY §2.3; reference: server-side RPC
   * `update_poi_urban_areas` invoked at db.py:247-278 / associate_pois.py:16-44,
@@ -12,13 +13,13 @@ import graft.expr.TextAlgo
   * admin_level 9 polygons assign `district_name`, admin_level 10 assign
   * `neighbourhood_name`.
   *
-  * Implementation: polygons are broadcast (98 for Paris) as ring arrays; the
-  * exact containment test is the ray-cast expression over the broadcast side,
-  * then a window picks the smallest containing area per (poi, admin_level).
-  * At 100 TB the identical callers switch to the H3-prefilter path: cover each
-  * polygon with CellGrid cells once, equi-join poi.cell = cover.cell, and only
-  * then run the exact test — same results, shuffle on cell ids instead of a
-  * broadcast nested loop (SURVEY §4 custom-work item 2).
+  * Implementation: [[assign]] broadcasts the polygons (98 for Paris) as ring
+  * arrays, runs the ray-cast expression over the broadcast side, then picks
+  * the smallest containing area per (poi, admin_level). At 100 TB callers use
+  * the H3-prefilter path [[assignViaCells]]: each polygon is covered with
+  * CellGrid cells once into a broadcast cell index, and each point runs the
+  * exact test only against the polygons of its own cell — same results, no
+  * nested loop and no shuffle (SURVEY §4 custom-work item 2).
   */
 object Spatial {
 
@@ -152,18 +153,12 @@ object Spatial {
         ringArea(ring.map(_.toArray).toArray)).apply(col("ring")))
   }
 
-  /** The 100 TB path (SURVEY §4 custom-work item 2, §7.5): pre-bucket both
-    * sides by grid cell and turn the containment join into an EQUI-join.
-    * Each polygon is covered ONCE by the cells its bbox touches (cheap,
-    * per-polygon); pois compute their cell id (pure index math); the join is
-    * `poi.cell = cover.cell` — shuffled/broadcast hash join, partitionable —
-    * and only then does the exact ray-cast run, on bbox-colocated pairs
-    * instead of the cross product. Identical results to [[assign]]
-    * (SpatialParitySpec asserts it). */
-  /** The pre-ray-cast candidate set of [[assignViaCells]]: poi.cell =
-    * cover.cell equi-join rows. Exposed so SpatialVolumeSpec can assert the
-    * prefilter PRUNES (candidates ≪ |pois|×|areas|) — the claim that makes
-    * the cell path the 100 TB plan. */
+  /** The pre-ray-cast candidate set of the cell path, as a relation:
+    * poi.cell = cover.cell equi-join rows carrying the ring and the
+    * per-cell interior flag. [[assignViaCells]] runs the same test inside
+    * its kernel; this form lets SpatialParitySpec assert the prefilter
+    * PRUNES (candidates ≪ |pois|×|areas|) and the benchmark count
+    * candidates and hits. */
   private[graft] def cellCandidates(pois: DataFrame, areas: DataFrame,
       res: Int): DataFrame = {
     val coverUdf = udf { (ring: Seq[Seq[Double]]) =>
@@ -204,8 +199,8 @@ object Spatial {
     * 106k candidates, 72% skip; res 13 → 97k candidates, 88% skip.
     *
     * The budget is the SCALE KNOB (`spark.graft.spatial.coverCellBudget`):
-    * finer res trades a bigger cover relation — a fixed polygon-side
-    * broadcast/build cost per query — against per-candidate ray-cast savings
+    * finer res trades a bigger cover index — a fixed polygon-side build
+    * and broadcast cost per query — against per-candidate ray-cast savings
     * that scale with the POINT side. At bench scale (60k points) the trade
     * measured upside-down: res 12's 181k-cell cover build+broadcast costs
     * ~1.4 s/run while the saved ray-casts are worth ~0.1 s, so the local
@@ -217,15 +212,32 @@ object Spatial {
     * ONE resolution serves the whole join, chosen from the polygon-side
     * statistic: per-polygon resolutions would force the point side — the
     * 100 TB side — to compute one cell id per resolution in use,
-    * multiplying the big side's work to optimize the tiny side. The stats
-    * aggregate is one action over the polygon relation (bounded: city
-    * geometry), paid once per query. The statistic is measured in meters
-    * (projected shoelace) — the `area` column stays the oracle-shared
-    * degree² tie-break and is NOT reused here. */
+    * multiplying the big side's work to optimize the tiny side. The rings
+    * are collected in one action over the polygon relation (bounded: city
+    * geometry) and the statistic is computed on the driver by
+    * [[coverResOf]], the helper [[assignViaCells]] uses on its own
+    * collect. The statistic is measured in meters (projected shoelace) —
+    * the `area` column stays the oracle-shared degree² tie-break and is
+    * NOT reused here. */
+  private[graft] def adaptiveCoverRes(areas: DataFrame): Int =
+    if (!areas.columns.contains("ring")) CoverResMin
+    else coverResOf(areas.select(col("ring")).collect().toSeq.map(ringOf),
+      coverCellBudget(areas.sparkSession))
+
   private val CoverResMin = 11
   private val CoverResMax = 13
 
-  private val ringAreaM2Udf = udf { (ring: Seq[Seq[Double]]) =>
+  private def coverCellBudget(spark: SparkSession): Double =
+    spark.conf.get("spark.graft.spatial.coverCellBudget", "512").toDouble
+
+  /** The `array<array<double>>` ring in the first field of a collected row
+    * as [lng, lat] vertex arrays; null for a null ring. */
+  private def ringOf(r: Row): Array[Array[Double]] =
+    if (r.isNullAt(0)) null
+    else r.getAs[scala.collection.Seq[scala.collection.Seq[Double]]](0).map(_.toArray).toArray
+
+  /** Shoelace area in m² of the ring projected onto the grid's plane. */
+  private def ringAreaM2(ring: Array[Array[Double]]): Double = {
     val p = ring.map(v => graft.expr.CellGrid.project(v(1), v(0)))
     var s = 0.0
     var i = 0
@@ -236,29 +248,143 @@ object Spatial {
     math.abs(s) / 2.0
   }
 
-  private[graft] def adaptiveCoverRes(areas: DataFrame): Int = {
-    if (!areas.columns.contains("ring")) return CoverResMin
-    val budget = areas.sparkSession.conf
-      .get("spark.graft.spatial.coverCellBudget", "512").toDouble
-    val row = areas.select(ringAreaM2Udf(col("ring")).as("m2"))
-      .agg(expr("percentile(m2, 0.5)")).first()
-    if (row.isNullAt(0)) CoverResMin
+  /** Median m² area of the non-null rings, interpolated exactly as Spark's
+    * `percentile(x, 0.5)`: at position pos = (n−1)/2 over the sorted
+    * values, (hi−pos)·v_lo + (pos−lo)·v_hi; None when there is no ring. */
+  private[graft] def medianAreaM2(rings: Seq[Array[Array[Double]]]): Option[Double] = {
+    val m2 = rings.filter(_ != null).map(ringAreaM2).toArray
+    if (m2.isEmpty) None
     else {
-      val med = row.getDouble(0)
-      var res = CoverResMin
-      while (res < CoverResMax &&
-        med / graft.expr.CellGrid.hexAreaM2(res + 1) <= budget) res += 1
-      res
+      java.util.Arrays.sort(m2)
+      val pos = (m2.length - 1) * 0.5
+      val (lo, hi) = (math.floor(pos).toInt, math.ceil(pos).toInt)
+      Some(if (lo == hi) m2(lo) else (hi - pos) * m2(lo) + (pos - lo) * m2(hi))
     }
   }
 
+  /** The cover resolution for these rings under a cell budget (see
+    * [[adaptiveCoverRes]]). */
+  private def coverResOf(rings: Seq[Array[Array[Double]]], budget: Double): Int =
+    medianAreaM2(rings) match {
+      case None => CoverResMin
+      case Some(med) =>
+        var res = CoverResMin
+        while (res < CoverResMax &&
+          med / graft.expr.CellGrid.hexAreaM2(res + 1) <= budget) res += 1
+        res
+    }
+
+  /** The broadcast side of [[assignViaCells]]: the admin-level 9/10
+    * polygons by ordinal (ring, level and the (area, area_id, area_name)
+    * tie-break keys) and the cover index from a cell id to the
+    * `ordinal << 1 | interior` of every polygon whose cover holds the cell. */
+  private final class CoverIndex(
+      res: Int,
+      cells: java.util.HashMap[String, Array[Int]],
+      rings: Array[ArrayData],
+      levels: Array[Int],
+      areas: Array[java.lang.Double],
+      ids: Array[UTF8String],
+      names: Array[UTF8String]) extends Serializable {
+
+    /** (district_name, neighbourhood_name) of the point at (lat, lng): the
+      * smallest containing polygon per level, ties broken by
+      * `min(struct(area, area_id, area_name))`'s ordering. */
+    def assign(lat: Double, lng: Double): (String, String) = {
+      val hits = cells.get(graft.expr.CellGrid.latLngToCell(lat, lng, res))
+      var district = -1
+      var hood = -1
+      if (hits != null) {
+        var h = 0
+        while (h < hits.length) {
+          val o = hits(h) >>> 1
+          if ((hits(h) & 1) == 1 || VecAlgo.pointInRing(lng, lat, rings(o))) {
+            if (levels(o) == 9) { if (district < 0 || precedes(o, district)) district = o }
+            else if (hood < 0 || precedes(o, hood)) hood = o
+          }
+          h += 1
+        }
+      }
+      (nameOf(district), nameOf(hood))
+    }
+
+    private def nameOf(o: Int): String =
+      if (o < 0 || names(o) == null) null else names(o).toString
+
+    /** Spark's ascending struct ordering: nulls first, doubles by
+      * [[SQLOrderingUtil.compareDoubles]], strings by UTF-8 bytes. */
+    private def precedes(a: Int, b: Int): Boolean = {
+      def nullsFirst(x: AnyRef, y: AnyRef): Int =
+        if (x == null) { if (y == null) 0 else -1 } else if (y == null) 1 else 2
+      var c = nullsFirst(areas(a), areas(b))
+      if (c == 2) c = SQLOrderingUtil.compareDoubles(areas(a), areas(b))
+      if (c == 0) c = ids(a).compareTo(ids(b))
+      if (c == 0) {
+        c = nullsFirst(names(a), names(b))
+        if (c == 2) c = names(a).compareTo(names(b))
+      }
+      c < 0
+    }
+  }
+
+  /** The [[CoverIndex]] of the collected polygons (`ring`, `area_id`,
+    * `area_name`, `admin_level`, `area`) at `res`. Polygons outside admin
+    * levels 9 and 10, or with a null ring or area_id, can never name a POI
+    * and are left out. */
+  private def coverIndex(polys: Array[Row], res: Int): CoverIndex = {
+    val kept = polys.filter(r => !r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(3) &&
+      (r.getInt(3) == 9 || r.getInt(3) == 10))
+    val rings = kept.map(ringOf)
+    val cells = new java.util.HashMap[String, Array[Int]]()
+    rings.zipWithIndex.foreach { case (ring, o) =>
+      graft.expr.CellGrid.polygonCoverFlagged(ring, res).foreach { case (cell, interior) =>
+        val hit = o << 1 | (if (interior) 1 else 0)
+        cells.merge(cell, Array(hit), (a, b) => a ++ b)
+      }
+    }
+    new CoverIndex(res, cells,
+      rings.map(r => new GenericArrayData(r.map(v => ArrayData.toArrayData(v)))),
+      kept.map(_.getInt(3)),
+      kept.map(r => if (r.isNullAt(4)) null else java.lang.Double.valueOf(r.getDouble(4))),
+      kept.map(r => UTF8String.fromString(r.getString(1))),
+      kept.map(r => UTF8String.fromString(r.getString(2))))
+  }
+
+  /** Cell-path spatial assignment (SURVEY §4 custom-work item 2, §7.5):
+    * identical results to [[assign]] for unique `poi_id`s
+    * (SpatialParitySpec asserts it), without a polygon × point loop.
+    *
+    * One action collects the polygon relation (tiny by contract: city
+    * geometry); the driver picks the cover resolution from it (unless
+    * `res` > 0 fixes one, see [[adaptiveCoverRes]]), covers each polygon
+    * once with [[graft.expr.CellGrid.polygonCoverFlagged]] and broadcasts
+    * one [[CoverIndex]]. Each POI row is then assigned by one per-row
+    * kernel: its cell at `res` looks up the covering polygons, an interior
+    * cell admits a polygon outright, a boundary cell runs the exact
+    * ray-cast, and the smallest containing polygon per level wins. The
+    * plan is a projection of `pois` — no join, exchange or explode — so a
+    * query pays the polygon collect plus its own action.
+    *
+    * Contract: the answer is per ROW. [[assign]] joins its per-`poi_id`
+    * winners back, so the two agree when `poi_id` is unique (every caller
+    * passes unique ids); a `poi_id` repeated with different coordinates
+    * gets each row's own answer here. A null `poi_id`, null coordinates or
+    * no containing polygon give null names, as the key join did. Each
+    * (area_id, admin_level) names one polygon, as it did when the cell
+    * join re-attached rings by that key. */
   def assignViaCells(pois: DataFrame, areas: DataFrame, spark: SparkSession,
       res: Int = 0): DataFrame = {
-    val r = if (res > 0) res else adaptiveCoverRes(areas)
-    val contained = cellCandidates(pois, areas, r)
-      .filter(col("cell_interior") ||
-        graft.expr.functions.point_in_ring(col("lng"), col("lat"), col("ring")))
-    bestPerLevel(pois, contained)
+    val polys = areas.select(col("ring"), col("area_id"), col("area_name"),
+      col("admin_level"), col("area")).collect()
+    val r = if (res > 0) res else coverResOf(polys.toSeq.map(ringOf), coverCellBudget(spark))
+    val index = spark.sparkContext.broadcast(coverIndex(polys, r))
+    val kernel = udf { (lat: java.lang.Double, lng: java.lang.Double) =>
+      if (lat == null || lng == null) null else index.value.assign(lat, lng)
+    }
+    val names = when(col("poi_id").isNotNull, kernel(col("lat"), col("lng")))
+    pois.select(col("poi_id"), col("lat"), col("lng"), names.as("names"))
+      .select(col("poi_id"), col("lat"), col("lng"),
+        col("names._1").as("district_name"), col("names._2").as("neighbourhood_name"))
   }
 
   def qSpatialAssign(spark: SparkSession, dir: String): DataFrame =
@@ -376,8 +502,8 @@ object Spatial {
     * form). The bbox prefilter is INCLUSIVE (>=/<=) so it is a true superset
     * of containment even for points exactly on a bbox edge. The
     * smallest-area window replays assignViaCells' tie-break — NOTE the
-    * coupling: bestPerLevel breaks area ties by struct(area, area_id,
-    * area_name) while this window orders by (area, area_name); they agree
+    * coupling: its kernel, like bestPerLevel, breaks area ties by
+    * (area, area_id, area_name) while this window orders by (area, area_name); they agree
     * because [[loadUrbanAreasJsonl]] sets area_id = name. If area_id ever
     * becomes a distinct OSM id, add it to this ORDER BY. Shared by
     * j1_paris_vol and the composed e2e pipeline oracle. */

@@ -16,8 +16,9 @@ import graft.expr.Expressions.{CellOf, PointInRing, PolygonCoverFlagged}
   * (bare, or as one conjunct of a larger ON clause) plans as an
   * O(|points|·|areas|) nested loop — every point ray-casts every
   * polygon. [[graft.domain.Spatial.assignViaCells]] is the manual escape
-  * hatch; this rule rewrites the plan so SQL-surface users (and any caller
-  * of `Spatial.assign`) get the same shape without asking:
+  * hatch (a broadcast cell-index kernel); this rule rewrites the plan so
+  * SQL-surface users (and any caller of `Spatial.assign`) get a cell-keyed
+  * plan without asking:
   *
   *  - the areas side gains `explode(polygon_cover_cells(ring, res))` — each
   *    polygon covered once by the cells it touches;
@@ -100,10 +101,10 @@ object CellJoinRewrite extends Rule[LogicalPlan] {
 
   /** Does any conjunct already give the join an equi-key (references from
     * both sides on opposite ends of an equality)? Such a join is already
-    * hash-joinable — including assignViaCells' own `cell = cell` join with
-    * the exact ray-cast pushed into its condition, and our own rewrite
-    * output — and must NOT gain a second cover (stacked explodes blow up
-    * the candidate space). The rewrite targets pure theta joins only. */
+    * hash-joinable — including `Spatial.cellCandidates`' own `cell = cell`
+    * join and our own rewrite output — and must NOT gain a second cover
+    * (stacked explodes blow up the candidate space). The rewrite targets
+    * pure theta joins only. */
   private def hasEquiKey(cond: Expression, left: LogicalPlan,
       right: LogicalPlan): Boolean =
     splitConjunctivePredicates(cond).exists {

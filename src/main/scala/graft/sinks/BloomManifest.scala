@@ -49,7 +49,7 @@ import org.apache.spark.sql.functions._
   * mask, and a file is ADMITTED iff some key hits ALL k of its positions
   * (`countDistinct(position) == k` — an absent row is a zero word, a
   * miss, and inner-join absence encodes it for free). [[probe]] builds
-  * positions on the driver (point lookups), [[probeBulk]] explodes them
+  * positions on the driver (point lookups), [[probeBulkBytes]] explodes them
   * executor-side from a key DataFrame (the >10⁵-key merge regime); both
   * share one admission pipeline. Driver traffic is the admitted names —
   * O(result), not O(files·bits). Callers gate the job on a non-empty
@@ -90,7 +90,7 @@ object BloomManifest {
 
   /** Probe keys beyond this are a bulk changeset, not a point lookup —
     * the position list is driver-built, so [[probe]] declines and the
-    * caller uses [[probeBulk]] or stays on the stats ladder. */
+    * caller uses [[probeBulkBytes]] or stays on the stats ladder. */
   val MaxProbeKeys: Int = KeyedMerge.DriverKeyThreshold
 
   /** Past this many shard files a staging pass COMPACTS the manifest
@@ -432,28 +432,14 @@ object BloomManifest {
   }
 
   /** BULK probe — the >10⁵-key regime the driver-built position list
-    * cannot serve: `keys` arrive as a one-column DataFrame (the merge's
-    * checkpointed distinct key set), explode to positions EXECUTOR-side,
-    * and join the manifest distributed-to-distributed. Same admission
-    * rule as [[probe]] via the shared pipeline. No idx pushdown (a bulk
-    * key set touches most word indices anyway — the join IS the filter). */
-  def probeBulk(spark: SparkSession, versionDir: Path, keyCol: String,
-      kind: String, keys: DataFrame): Option[Probe] = {
-    val toBytes =
-      if (kind == "long") udf((key: java.lang.Long) =>
-        if (key == null) null else KeyBloom.longBytes(key))
-      else udf((s: String) =>
-        if (s == null) null else KeyBloom.stringBytes(s))
-    probeBulkBytes(spark, versionDir, keyCol, kind,
-      keys.toDF("__k").select(toBytes(col("__k")).as("__k")))
-  }
-
-  /** The BYTES-generic bulk probe both the typed form and the
-    * distributed assignment feed ([[FileAdmission.assign]]): the
-    * key frame arrives as ONE binary column of canonical bytes, explodes
-    * to positions executor-side, and joins the manifest
-    * distributed-to-distributed — the probe layer never knows whether the
-    * bytes frame a single value or a length-framed tuple. */
+    * cannot serve, fed by the distributed assignment
+    * ([[FileAdmission.assign]]): the key frame arrives as ONE binary
+    * column of canonical bytes ([[CompositeKey.keyBytes]]: a single
+    * value's raw bytes or a length-framed tuple, the probe layer never
+    * knows which), explodes to positions executor-side, and joins the
+    * manifest distributed-to-distributed. Same admission rule as [[probe]]
+    * via the shared pipeline. No idx pushdown (a bulk key set touches most
+    * word indices anyway — the join IS the filter). */
   def probeBulkBytes(spark: SparkSession, versionDir: Path, keyCol: String,
       kind: String, keyBytes: DataFrame): Option[Probe] = {
     val header = loadHeader(versionDir).collect {

@@ -93,7 +93,7 @@ object CompositeKey {
   /** A key's bloom bytes, for every build and probe site: one column's
     * canonical bytes (8-byte big-endian long, UTF-8 string), several
     * columns' [[tupleBytes]]. */
-  private[sinks] def keyBytes(kinds: Seq[String], values: Seq[Any]): Array[Byte] =
+  private[graft] def keyBytes(kinds: Seq[String], values: Seq[Any]): Array[Byte] =
     if (kinds.size == 1) canonicalBytes(kinds.head, values.head)
     else tupleBytes(kinds, values)
 

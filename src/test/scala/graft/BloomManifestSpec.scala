@@ -5,7 +5,7 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.sinks.{AtomicTable, BloomManifest, KeyBloom, KeyedMerge,
+import graft.sinks.{AtomicTable, BloomManifest, CompositeKey, KeyBloom, KeyedMerge,
   Maintenance, StatsRead, TargetedDelete}
 import graft.sinks.TargetedDelete.LongRange
 
@@ -173,13 +173,14 @@ class BloomManifestSpec extends AnyFunSuite {
   test("bulk probe: the distributed merge regime clears files through the manifest too") {
     val root = "spark-warehouse/test_bmanifest_bulk"
     buildManifested(root)
-    // probeBulk parity with the point probe on the same key set
+    // bulk probe parity with the point probe on the same key set, the
+    // bulk side fed the key bytes the distributed assignment feeds it
     val keys = Seq(md5hex("77"), md5hex("2048"), md5hex("absent"))
     val dir = liveDir(root)
     val point = BloomManifest.probe(spark, dir, "h", "string", keys.map(utf8)).get
     import spark.implicits._
-    val bulk = BloomManifest.probeBulk(spark, dir, "h", "string",
-      keys.toDF("h")).get
+    val bulk = BloomManifest.probeBulkBytes(spark, dir, "h", "string",
+      keys.map(k => CompositeKey.keyBytes(Seq("string"), Seq(k))).toDF("h")).get
     assert(bulk.covered == point.covered && bulk.admitted == point.admitted,
       s"bulk/point probe divergence: $bulk vs $point")
     // force the DISTRIBUTED regime (driverKeyThreshold = 0): the merge

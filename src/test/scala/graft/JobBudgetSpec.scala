@@ -8,6 +8,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.MetadataBuilder
 
+import graft.domain.{Collections, MentionDedup, Spatial}
 import graft.ops.TextDedup
 import graft.sinks.{AtomicTable, Footers, KeyedMerge, StatsRead, TargetedDelete}
 import graft.sources.HttpSource
@@ -24,10 +25,10 @@ object JobBudgetSpec {
   val noSleep: Long => Unit = _ => ()
 }
 
-/** How many Spark jobs the sink and corpus layers launch, counted by a
-  * listener, and that the footer-schema reads ([[Footers]], and
-  * [[Tables]]' loads of Spark-written directories) see the schema Spark's
-  * own inference would. */
+/** How many Spark jobs the sink, corpus and city-stage layers launch,
+  * counted by a listener, and that the footer-schema reads ([[Footers]],
+  * and [[Tables]]' loads of Spark-written directories) see the schema
+  * Spark's own inference would. */
 class JobBudgetSpec extends AnyFunSuite {
   import JobBudgetSpec._
 
@@ -218,5 +219,84 @@ class JobBudgetSpec extends AnyFunSuite {
     val expected = (0L until 400L by 5L).flatMap(i => Seq((i, i, 2L), (i + 100000, i, 2L)))
     assert(rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq == expected.sorted)
     assert(n <= 11, s"ddDupClusters ran $n jobs")
+  }
+
+  /** Every operator of `df`'s executed plan, stages and the final adaptive
+    * plan included; call after an action. */
+  private def ops(df: DataFrame) = PlanTestUtils.flatten(df.queryExecution.executedPlan)
+
+  test("assignViaCells plus its collect runs at most 2 jobs, with no exchange and no explode") {
+    // a cover join runs a percentile job, a broadcast per side and a
+    // shuffle back onto the POIs; the kernel runs only the collect
+    val pois = Spatial.volPoints(spark, 4000)
+    val areas = Spatial.areasDf(spark)
+    val ((df, rows), n) = jobs {
+      val df = Spatial.assignViaCells(pois, areas, spark)
+      (df, df.collect())
+    }
+    info(s"assignViaCells ran $n jobs")
+    assert(n <= 2, s"assignViaCells ran $n jobs")
+    val names = ops(df).map(_.getClass.getSimpleName)
+    assert(!names.exists(o => o.contains("Exchange") || o.contains("Generate")),
+      s"the kernel plan shuffles or explodes: ${names.distinct}")
+    def canon(rs: Array[org.apache.spark.sql.Row]) =
+      rs.map(r => (r.getLong(0), Option(r.getString(3)), Option(r.getString(4)))).toSet
+    assert(rows.length == 4000)
+    assert(canon(rows) == canon(Spatial.assign(pois, areas, spark).collect()))
+  }
+
+  test("Collections.generate runs at most 3 jobs over one exchange, truncated map-side") {
+    // 20k tagged POIs: the scale guarantee that replaces a salted first
+    // phase is a Partial WindowGroupLimit below the single exchange
+    val pois = spark.range(20000).select(col("id").cast("string").as("poi_id"),
+      expr("""array(
+        named_struct('tag', 'romantic', 'confidence', CAST(id % 100 AS DOUBLE) / 100.0),
+        named_struct('tag', 'wine', 'confidence', CAST(id % 89 AS DOUBLE) / 89.0),
+        named_struct('tag', 'brunch', 'confidence', CAST(id % 31 AS DOUBLE) / 31.0),
+        named_struct('tag', 'terrace', 'confidence', CAST(id % 53 AS DOUBLE) / 53.0))""")
+        .as("tags"))
+    val ((df, rows), n) = jobs {
+      val df = Collections.generate(pois, Collections.templatesDf(spark))
+      (df, df.collect())
+    }
+    info(s"Collections.generate ran $n jobs")
+    assert(n <= 3, s"Collections.generate ran $n jobs")
+    val plan = ops(df)
+    val exchanges = plan.collect {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
+    }
+    assert(exchanges.size == 1, s"expected one exchange, got ${exchanges.size}:\n${plan.head}")
+    val keys = exchanges.head.outputPartitioning match {
+      case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning =>
+        h.expressions.flatMap(_.references.map(_.name))
+      case p => fail(s"exchange partitioned by $p")
+    }
+    assert(keys == Seq("collection_id"), s"exchange keyed on $keys")
+    val partial = PlanTestUtils.flatten(exchanges.head).collect {
+      case w: org.apache.spark.sql.execution.window.WindowGroupLimitExec
+          if w.mode == org.apache.spark.sql.execution.window.Partial => w
+    }
+    assert(partial.size == 1, s"no Partial WindowGroupLimit below the exchange:\n${plan.head}")
+    // two templates match, each keeps its top 8 in rank order
+    val byColl = rows.groupBy(_.getString(0))
+    assert(byColl.keySet == Set("romantic_evenings", "sunny_brunch"), byColl.keySet)
+    byColl.values.foreach { rs =>
+      val ranked = rs.sortBy(_.getLong(3))
+      assert(ranked.map(_.getLong(3)).toSeq == (1L to 8L) && rs.forall(_.getLong(4) == 8L))
+      assert(ranked.map(_.getDouble(2)).sliding(2).forall(p => p(0) >= p(1)))
+    }
+  }
+
+  test("inBatchDedup plus its collect runs at most 2 jobs") {
+    val cands = spark.range(6000).select(col("id").as("ord"),
+      concat(lit("d"), (col("id") % 7).cast("string"), lit(".com")).as("domain"),
+      concat(lit("https://x/"), (col("id") % 900).cast("string")).as("url"),
+      concat(lit("Title "), (col("id") % 700).cast("string")).as("title"))
+    val (rows, n) = jobs(MentionDedup.inBatchDedup(cands).collect())
+    info(s"inBatchDedup ran $n jobs")
+    assert(n <= 2, s"inBatchDedup ran $n jobs")
+    // no two rows share (domain, url); rows 700 apart share (domain,
+    // title), so the first 700 claim every title and all later rows drop
+    assert(rows.map(_.getAs[Long]("ord")).toSet == (0L until 700L).toSet)
   }
 }

@@ -2,6 +2,18 @@
 """Calibration-normalized cross-round bench compare (NOT part of the library).
 
 Usage: python3 tools/benchdiff.py BENCH_rA.json BENCH_rB.json [--reprobe[=SFDIR]]
+       python3 tools/benchdiff.py --perfbench RESULTS.txt [--base SIDE] [--spec BENCHMARK.json]
+
+Perfbench mode reads A/B runs of the repository benchmark (perfbench/run.py).
+Each line of RESULTS.txt is `SIDE PAIR WORKLOAD JSON`: a side label (e.g.
+parent, change), the pair index, the workload, and the JSON line run.py
+printed last. For each workload x end-to-end metric of BENCHMARK.json it
+prints both sides' medians and quartiles, how many pairs the other side won,
+the median of the per-pair ratios (other / base), and the verdict against
+the metric's bound; then each side's count of incorrect runs and fail ratio.
+The base side is --base, else the first side in the file. A GAIN takes at
+least 10 pairs: the metric is better in at least nine tenths of them and its
+median moved by more than the base side's interquartile range.
 
 With --reprobe, every REGRESSED flag is auto-adjudicated: the flagged set is
 re-run in isolation (SPARK_GRAFT_BENCH_ONLY, n=10 samples) on SFDIR (default
@@ -243,7 +255,100 @@ def reprobe(flagged_rows, b_path, threshold, sfdir, cal_a=None):
               "adjudications printed above only")
 
 
+def quartiles(xs):
+    """(q1, median, q3) of a sample, linear interpolation between order
+    statistics (the inclusive method, defined for one value too)."""
+    xs = sorted(xs)
+    if len(xs) == 1:
+        return xs[0], xs[0], xs[0]
+    q1, med, q3 = statistics.quantiles(xs, n=4, method="inclusive")
+    return q1, med, q3
+
+
+def load_perfbench(path):
+    """{workload: {side: {pair: result}}} from `SIDE PAIR WORKLOAD JSON`
+    lines, and the sides in order of first appearance."""
+    runs, sides = {}, []
+    for n, line in enumerate(open(path), 1):
+        line = line.strip()
+        if not line or line.startswith("#"):
+            continue
+        parts = line.split(None, 3)
+        if len(parts) < 4:
+            sys.exit(f"{path}:{n}: expected SIDE PAIR WORKLOAD JSON")
+        side, pair, workload, blob = parts
+        try:
+            res = json.loads(blob)
+        except ValueError:
+            sys.exit(f"{path}:{n}: the result is not a JSON object")
+        if side not in sides:
+            sides.append(side)
+        runs.setdefault(workload, {}).setdefault(side, {})[pair] = res
+    return runs, sides
+
+
+def perfbench_main(args):
+    if not args:
+        sys.exit(__doc__)
+    path, base, spec_path = args[0], None, os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "BENCHMARK.json")
+    rest = args[1:]
+    while rest:
+        if rest[0] == "--base" and len(rest) > 1:
+            base, rest = rest[1], rest[2:]
+        elif rest[0] == "--spec" and len(rest) > 1:
+            spec_path, rest = rest[1], rest[2:]
+        else:
+            sys.exit(__doc__)
+    spec = json.load(open(spec_path))
+    runs, sides = load_perfbench(path)
+    if len(sides) != 2:
+        sys.exit(f"expected two sides, found {sides}")
+    base = base or sides[0]
+    if base not in sides:
+        sys.exit(f"--base {base} is not one of {sides}")
+    other = sides[1] if sides[0] == base else sides[0]
+    print(f"# base={base} other={other}; ratio = {other} / {base}; "
+          "quartiles [q1, q3] by the inclusive method")
+    print(f"{'workload':8} {'metric':12} {base + ' median [q1, q3]':>28} "
+          f"{other + ' median [q1, q3]':>28} {'won':>6} {'ratio':>6}  verdict")
+    for workload in sorted(runs):
+        by_side = runs[workload]
+        pairs = sorted(set(by_side.get(base, {})) & set(by_side.get(other, {})),
+                       key=lambda p: (len(p), p))
+        if not pairs:
+            print(f"{workload:8} no complete pair")
+            continue
+        for m in spec["end_to_end"]:
+            name, lower = m["name"], m["better"] == "lower"
+            a = [by_side[base][p]["metrics"][name]["value"] for p in pairs]
+            b = [by_side[other][p]["metrics"][name]["value"] for p in pairs]
+            qa, qb = quartiles(a), quartiles(b)
+            won = sum(1 for x, y in zip(a, b) if (y < x if lower else y > x))
+            ratio = statistics.median(y / x for x, y in zip(a, b) if x)
+            worse = (qb[1] / qa[1] - 1) if lower else (1 - qb[1] / qa[1])
+            if worse > m["bound"]:
+                verdict = f"WORSE beyond bound {m['bound']}"
+            else:
+                verdict = f"within bound {m['bound']}"
+            shift, iqr = abs(qb[1] - qa[1]), qa[2] - qa[0]
+            if worse < 0 and won >= 0.9 * len(pairs) and shift > iqr:
+                verdict += "; GAIN" if len(pairs) >= 10 else "; gain-shaped, < 10 pairs"
+            fmt = lambda q: f"{q[1]:9.4g} [{q[0]:.4g}, {q[2]:.4g}]"
+            print(f"{workload:8} {name:12} {fmt(qa):>28} {fmt(qb):>28} "
+                  f"{won:>2}/{len(pairs):<3} {ratio:6.3f}  {verdict}")
+        for side in (base, other):
+            rs = list(by_side[side].values())
+            bad = sum(1 for r in rs if not r.get("correct"))
+            att = sum(r.get("attempted", 0) for r in rs)
+            fail = sum(r.get("failed", 0) for r in rs)
+            print(f"{workload:8} {side}: {len(rs)} runs, {bad} incorrect, "
+                  f"fail_ratio {fail / max(att, 1):.4g}")
+
+
 def main():
+    if len(sys.argv) > 1 and sys.argv[1] == "--perfbench":
+        return perfbench_main(sys.argv[2:])
     if len(sys.argv) < 3:
         sys.exit(__doc__)
     do_reprobe, sfdir = False, "/root/testdata/sf0.1"
