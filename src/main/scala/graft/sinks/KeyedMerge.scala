@@ -139,7 +139,16 @@ object KeyedMerge {
         val target = (touchedRows.sum + MergeTargetRowsPerFile - 1) / MergeTargetRowsPerFile
         math.max(1L, math.min(rewrite.size.toLong, target)).toInt
       }
-    val merged0 = applyFn(base, asg.stableChanges)
+    // single-task path: a rewrite that fits one output file, assigned on the
+    // driver (so the changeset is driver-sized), is written by one task
+    // anyway. With both kernel inputs in one partition they report
+    // SinglePartition, so the kernel's join, window or aggregate plans no
+    // exchange and the merge runs as ONE job instead of a shuffle-map job
+    // per exchange plus the write.
+    val singleTask = outParts == 1 && asg.keys.isDefined
+    val merged0 =
+      if (singleTask) applyFn(base.coalesce(1), asg.stableChanges.coalesce(1))
+      else applyFn(base, asg.stableChanges)
     // LINK-REUSE SCHEMA GUARD: linked files keep the table's physical types;
     // a kernel that drifts a column's type (e.g. coalescing an INT column
     // with a LONG literal) would publish a MIXED-schema version the full-
@@ -162,12 +171,15 @@ object KeyedMerge {
     val wOpts = KeyBloom.rewriteOptions(liveDir, blooms,
       KeyBloom.ndvFor(rewrite, n => rows((n, keyCols.head)).rowCount))
     val keyExprs = keyCols.map(col)
-    if (outParts == 1) {
-      // single-output fast path (the streaming cadence): RangePartitioner
-      // computes NO range bounds at <=1 partition, so this is one kernel
-      // evaluation with the JOIN still parallel upstream of the 1-partition
-      // exchange — no sampling pass, nothing to persist (coalesce(1) would
-      // instead pull the whole kernel join into a single task)
+    if (singleTask) {
+      merged0.coalesce(1).sortWithinPartitions(keyExprs: _*)
+        .write.options(wOpts).mode("overwrite").parquet(rewriteOut.toString)
+    } else if (outParts == 1) {
+      // one output file from a distributed-regime assignment (a changeset
+      // too large to collect): RangePartitioner computes NO range bounds at
+      // <=1 partition, so this is one kernel evaluation with the join still
+      // parallel upstream of the 1-partition exchange — no sampling pass,
+      // nothing to persist
       merged0.repartitionByRange(1, keyExprs: _*).sortWithinPartitions(keyExprs: _*)
         .write.options(wOpts).mode("overwrite").parquet(rewriteOut.toString)
     } else {

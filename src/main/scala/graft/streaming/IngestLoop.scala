@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -23,14 +22,13 @@ import graft.sources.HttpSource
   *
   * One micro-batch evaluates each step once, on first use, so a table that
   * already absorbed the batch never forces it (a redelivery both tables skip
-  * runs no job and sends no request):
+  * runs no job and sends no request). It runs 5 jobs:
   *
   *  1. the ledger (|api_types| rows) is read and collected — one job;
-  *  2. admission is one window over the micro-batch, with the ledger's
-  *     rows as literals, collected — a shuffle-map job and a result job.
-  *     The rows reach the driver: the admitted set is bounded by the daily
-  *     quota, and the new ledger is derived from these rows
-  *     ([[nextLedger]]) instead of re-running the window;
+  *  2. the micro-batch is collected — one scan job, no shuffle — and
+  *     admitted on the driver ([[admit]]), one admission row per request;
+  *     the admitted set is bounded by the daily quota, and the new ledger
+  *     is derived from the same rows ([[nextLedger]]);
   *  3. the admitted URLs are fetched and parsed, and the changeset is
   *     collected once — one job, each admitted request sent once (one
   *     transport + rate limiter per partition). The stats-pruned merge's
@@ -38,8 +36,9 @@ import graft.sources.HttpSource
   *     the same rows and the probe runs no job;
   *  4. the poi upsert is the stats-pruned keyed merge: the touched files
   *     (read with their footer schema, no inference job) full-outer-joined
-  *     with the changeset — a shuffled join, one job per exchange plus the
-  *     write;
+  *     with the changeset. A micro-batch's rewrite fits one output file, so
+  *     the join, sort and write run as one single-task job with no exchange
+  *     ([[graft.sinks.KeyedMerge]]'s single-task path);
   *  5. the new ledger is written from the driver — one job.
   */
 object IngestLoop {
@@ -56,34 +55,34 @@ object IngestLoop {
   final case class AdmissionRow(api_type: String, day_idx: Long, prior: Long,
     admitted: Boolean, url: String)
 
-  /** Quota-gate a time-ordered request batch against the persisted ledger.
-    * Ledger rows are (api_type, day_idx, used); a request's day past the
-    * ledger day refills the bucket (UTC-midnight reset), same-day requests
-    * continue the count. Returns the batch annotated with `day_idx`, `seq`,
-    * `prior` (the ledger count carried into its day) and `admitted`. */
-  def admit(batch: DataFrame, ledger: Seq[LedgerRow], limit: Int): DataFrame = {
-    val w = Window.partitionBy(col("api_type"), col("day_idx"))
-      .orderBy(col("ts_us").asc, col("request_id").asc)
-    // the ledger holds one row per api_type: its fields enter the plan as
-    // per-api_type literals (NULL for an api_type it has never seen)
-    def ledgerField(f: LedgerRow => Long): Column =
-      ledger.foldLeft(lit(null).cast("long")) { (acc, r) =>
-        when(col("api_type") === r.api_type, lit(f(r))).otherwise(acc)
-      }
-    val (ledDay, ledUsed) = (ledgerField(_.day_idx), ledgerField(_.used))
-    batch
-      .withColumn("day_idx", expr(s"ts_us div $DayUs"))
-      .withColumn("seq", row_number().over(w))
+  /** Quota-gate a request batch against the persisted ledger, on the
+    * driver. Each (api_type, UTC day) bucket takes its requests in
+    * (ts_us, request_id) order; ledger rows are (api_type, day_idx, used): a
+    * request's day past the ledger day refills the bucket (UTC-midnight
+    * reset), same-day requests continue the count. `day_idx` is `ts_us`
+    * divided by [[DayUs]] truncating toward zero, as Spark's `div` does.
+    * Returns one row per request, in batch order, with `prior` (the ledger
+    * count carried into its day) and `admitted`. */
+  def admit(batch: Seq[FetchRequest], ledger: Seq[LedgerRow],
+      limit: Int): Seq[AdmissionRow] = {
+    // one row per api_type; a null api_type matches no ledger row
+    val led = ledger.filter(_.api_type != null).map(r => r.api_type -> r).toMap
+    val indexed = batch.zipWithIndex
+    val seq = indexed.groupBy { case (r, _) => (r.api_type, r.ts_us / DayUs) }
+      .values.flatMap(_.sortBy { case (r, _) => (r.ts_us, r.request_id) }
+        .zipWithIndex.map { case ((_, i), k) => i -> (k + 1L) }).toMap
+    indexed.map { case (r, i) =>
+      val day = r.ts_us / DayUs
+      val l = Option(r.api_type).flatMap(led.get)
       // the ledger count carries over only within the same UTC day
-      .withColumn("prior",
-        when(ledDay === col("day_idx"), ledUsed).otherwise(0L))
-      // a request timestamped BEFORE the ledger's day is a late arrival for a
-      // bucket that already closed — never admit it, and ([[nextLedger]])
+      val prior = l.filter(_.day_idx == day).fold(0L)(_.used)
+      // a request timestamped BEFORE the ledger's day is a late arrival for
+      // a bucket that already closed — never admit it, and ([[nextLedger]])
       // never let it regress the ledger. The stream form
       // (QuotaBucket.admissionStream) guards `d > day` the same way.
-      .withColumn("admitted",
-        (ledDay.isNull || col("day_idx") >= ledDay) &&
-          col("prior") + col("seq") <= limit)
+      AdmissionRow(r.api_type, day, prior,
+        l.forall(day >= _.day_idx) && prior + seq(i) <= limit, r.url)
+    }
   }
 
   /** The ledger after a batch, from its admission rows. Each touched
@@ -119,9 +118,7 @@ object IngestLoop {
       if (AtomicTable.currentVersion(ledgerRoot).isEmpty) Nil
       else AtomicTable.read(spark, ledgerRoot).as[LedgerRow].collect().toSeq
     lazy val admission: Seq[AdmissionRow] =
-      admit(batch, ledger, limit)
-        .select("api_type", "day_idx", "prior", "admitted", "url")
-        .as[AdmissionRow].collect().toSeq
+      admit(batch.as[FetchRequest].collect().toSeq, ledger, limit)
     lazy val changes: DataFrame = {
       val fetched = HttpSource.fetch(
         admission.filter(_.admitted).map(_.url).toDF("url"), "url",

@@ -1,14 +1,16 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.sinks.AtomicTable
 import graft.sources.HttpSource
 import graft.sources.HttpSource.HttpResponse
 import graft.streaming.IngestLoop
-import graft.streaming.IngestLoop.FetchRequest
+import graft.streaming.IngestLoop.{AdmissionRow, FetchRequest, LedgerRow}
 
 /** End-to-end ingestion loop: quota gate → backoff fetch → parse → atomic
   * upsert, across micro-batches and a UTC-midnight refill — the composed
@@ -205,5 +207,77 @@ class IngestLoopSpec extends AnyFunSuite {
     assert(sent.isEmpty, s"a redelivered batch sent ${sent.size} requests")
     assert(AtomicTable.read(spark, poiRoot).count() == 19)
     assert(AtomicTable.read(spark, ledgerRoot).as[(String, Long, Long)].collect().toSeq == led.toSeq)
+  }
+
+  /** Admission as one Spark plan: a `row_number` per (api_type, UTC day)
+    * bucket in (ts_us, request_id) order, the ledger's rows folded in as
+    * per-api_type literals. The reference the driver [[IngestLoop.admit]]
+    * must match. */
+  private def windowAdmit(batch: DataFrame, ledger: Seq[LedgerRow], limit: Int): DataFrame = {
+    val w = Window.partitionBy(col("api_type"), col("day_idx"))
+      .orderBy(col("ts_us").asc, col("request_id").asc)
+    def ledgerField(f: LedgerRow => Long): Column =
+      ledger.foldLeft(lit(null).cast("long")) { (acc, r) =>
+        when(col("api_type") === r.api_type, lit(f(r))).otherwise(acc)
+      }
+    val (ledDay, ledUsed) = (ledgerField(_.day_idx), ledgerField(_.used))
+    batch
+      .withColumn("day_idx", expr(s"ts_us div $DayUs"))
+      .withColumn("seq", row_number().over(w))
+      .withColumn("prior", when(ledDay === col("day_idx"), ledUsed).otherwise(0L))
+      .withColumn("admitted",
+        (ledDay.isNull || col("day_idx") >= ledDay) && col("prior") + col("seq") <= limit)
+  }
+
+  test("driver admission returns the window formulation's rows") {
+    import spark.implicits._
+    def req(id: Long, api: String, ts: Long) = FetchRequest(id, api, ts, s"u$id")
+    val d100 = 100 * DayUs
+    val cases: Seq[(String, Seq[FetchRequest], Seq[LedgerRow], Int)] = Seq(
+      ("ties on ts_us broken by request_id",
+        Seq(req(5, "places", d100 + 10), req(3, "places", d100 + 10),
+          req(4, "places", d100 + 10), req(1, "places", d100 + 5)),
+        Seq(LedgerRow("places", 100, 1)), 3),
+      ("two api_types, one absent from the ledger",
+        Seq(req(1, "places", d100 + 1), req(2, "serp", d100 + 2), req(3, "places", d100 + 3),
+          req(4, "serp", d100 + 4), req(5, "serp", d100 + 5)),
+        Seq(LedgerRow("places", 100, 2)), 3),
+      ("a batch spanning UTC midnight refills the bucket",
+        Seq(req(1, "places", d100 + DayUs - 2), req(2, "places", d100 + DayUs - 1),
+          req(3, "places", d100 + DayUs), req(4, "places", d100 + DayUs + 1)),
+        Seq(LedgerRow("places", 100, 2)), 3),
+      ("a late request before the ledger day",
+        Seq(req(1, "places", 99 * DayUs + 7), req(2, "places", d100 + 7)),
+        Seq(LedgerRow("places", 100, 1)), 3),
+      ("the exact limit boundary",
+        (1 to 4).map(i => req(i, "places", d100 + i)),
+        Seq(LedgerRow("places", 100, 2)), 5),
+      ("negative ts_us truncates toward zero",
+        Seq(req(1, "places", -5), req(2, "places", 5), req(3, "places", -DayUs - 3)),
+        Seq(LedgerRow("places", 0, 1)), 2))
+    def bag(rs: Seq[AdmissionRow]) = rs.groupBy(identity).map { case (r, xs) => r -> xs.size }
+    val got = cases.map { case (name, batch, ledger, limit) =>
+      val want = windowAdmit(batch.toDF(), ledger, limit)
+        .select("api_type", "day_idx", "prior", "admitted", "url").as[AdmissionRow].collect().toSeq
+      val adm = IngestLoop.admit(batch, ledger, limit)
+      assert(adm.map(_.url) == batch.map(_.url), s"$name: not one row per request in batch order")
+      assert(bag(adm) == bag(want), s"$name:\n  driver $adm\n  window $want")
+      name -> adm.map(a => a.url -> a).toMap
+    }.toMap
+    def admitted(name: String) = got(name).values.filter(_.admitted).map(_.url).toSet
+    assert(admitted("ties on ts_us broken by request_id") == Set("u1", "u3"))
+    assert(admitted("two api_types, one absent from the ledger") == Set("u1", "u2", "u4", "u5"))
+    assert(admitted("a batch spanning UTC midnight refills the bucket") == Set("u1", "u3", "u4"))
+    assert(admitted("the exact limit boundary") == Set("u1", "u2", "u3"))
+    val late = got("a late request before the ledger day")
+    assert(!late("u1").admitted && late("u2").admitted)
+    assert(IngestLoop.nextLedger(Seq(LedgerRow("places", 100, 1)), late.values.toSeq) ==
+      Seq(LedgerRow("places", 100, 2)), "a late request regressed the ledger")
+    assert(IngestLoop.nextLedger(Seq(LedgerRow("places", 100, 1)), Seq(late("u1"))) ==
+      Seq(LedgerRow("places", 100, 1)), "a late-only batch regressed the ledger")
+    // Spark's `div` truncates: -5 µs is day 0 (the ledger's day), not day -1
+    val neg = got("negative ts_us truncates toward zero")
+    assert(neg.values.map(a => a.url -> a.day_idx).toMap == Map("u1" -> 0L, "u2" -> 0L, "u3" -> -1L))
+    assert(admitted("negative ts_us truncates toward zero") == Set("u1"))
   }
 }

@@ -5,12 +5,17 @@ import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.sql.types.MetadataBuilder
 
 import graft.domain.{Collections, MentionDedup, Spatial}
 import graft.ops.TextDedup
-import graft.sinks.{AtomicTable, Footers, KeyedMerge, StatsRead, TargetedDelete}
+import graft.sinks.{AtomicTable, Footers, KeyedMerge, MergeSink, StatsRead, TargetedDelete}
 import graft.sources.HttpSource
 import graft.sources.HttpSource.HttpResponse
 import graft.streaming.IngestLoop
@@ -96,7 +101,7 @@ class JobBudgetSpec extends AnyFunSuite {
     assert(df.count() == 100)
   }
 
-  test("one ingest micro-batch runs at most 12 jobs; a redelivered one runs none") {
+  test("one ingest micro-batch runs at most 5 jobs; a redelivered one runs none") {
     import spark.implicits._
     val base = Files.createTempDirectory("budgetingest")
     val (poiRoot, ledgerRoot) = (s"$base/poi", s"$base/ledger")
@@ -110,11 +115,88 @@ class JobBudgetSpec extends AnyFunSuite {
     process(0) // the ledger's first version
     val (_, n) = jobs(process(1))
     info(s"one micro-batch ran $n jobs")
-    assert(n <= 12, s"a micro-batch ran $n jobs")
+    assert(n <= 5, s"a micro-batch ran $n jobs")
     val (_, again) = jobs(process(1))
     assert(again == 0, s"a redelivered micro-batch ran $again jobs")
     assert(AtomicTable.read(spark, ledgerRoot).as[(String, Long, Long)].collect().toSeq ==
       Seq(("places", 100L, 40L)))
+  }
+
+  /** The executed plan of every SQL execution `body` runs, the writes
+    * included (AQE-aware: call [[ops]] on each). */
+  private def plans[A](body: => A): (A, Seq[SparkPlan]) = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val l = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        seen.add(qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      val out = body
+      org.apache.spark.GraftTestBridge.drainListenerBus(spark.sparkContext)
+      (out, seen.toArray(Array.empty[SparkPlan]).toSeq)
+    } finally spark.listenerManager.unregister(l)
+  }
+
+  private def flat(p: SparkPlan) = PlanTestUtils.flatten(p)
+
+  private def isWrite(p: SparkPlan): Boolean =
+    flat(p).exists(_.isInstanceOf[DataWritingCommandExec])
+
+  /** Part files of `root`'s version `v`. */
+  private def parts(root: String, v: String): Int = {
+    val st = Files.list(Paths.get(root, v))
+    try st.toArray.count(_.toString.endsWith(".parquet")) finally st.close()
+  }
+
+  test("a stats-pruned upsert of a 20-row local changeset runs one job with no exchange") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("budgetmerge").resolve("t").toString
+    AtomicTable.commit(poi(4000, 8), root, Seq("google_place_id"))
+    // 15 updates inside one file's key range, 5 inserts just past it
+    val changes = (1000 until 1020).map(i => (f"g$i%05d" + (if (i < 1015) "" else "x"),
+        s"Renamed $i", 5.0)).toDF("google_place_id", "name", "rating")
+      .withColumn("first_ingested_at", lit(null).cast("timestamp"))
+    val ((ms, qs), n) = jobs(plans(KeyedMerge.merge(spark, root, Seq("google_place_id"),
+      changes, (b, c) => MergeSink.upsert(b, c, "google_place_id",
+        updateCols = Seq("name", "rating"), asOf = "2025-06-01 00:00:00"))))
+    assert(ms.rewrittenFiles == 1 && ms.totalFiles == 8 && ms.footerReads == 0, ms)
+    assert(n == 1, s"the merge ran $n jobs")
+    val writes = qs.filter(isWrite)
+    assert(writes.size == 1, s"${writes.size} writes")
+    qs.foreach { q =>
+      val ex = flat(q).collect { case e: Exchange => e }
+      assert(ex.isEmpty, s"the merge plans an exchange:\n$q")
+    }
+    val out = AtomicTable.read(spark, root)
+    assert(out.count() == 4005)
+    assert(out.where(col("name").startsWith("Renamed")).count() == 20)
+    assert(parts(root, ms.version) == 8)
+  }
+
+  test("a merge whose rewrite needs two output files keeps its range exchange") {
+    import spark.implicits._
+    // two files of 2.2M rows each: touched rows pass MergeTargetRowsPerFile
+    val perFile = 2200000L
+    assert(2 * perFile > KeyedMerge.MergeTargetRowsPerFile)
+    val root = Files.createTempDirectory("budgetmerge2").resolve("t").toString
+    AtomicTable.commit(spark.range(2 * perFile).select(col("id"), (col("id") % 7).as("v"))
+      .repartitionByRange(2, col("id")).sortWithinPartitions("id"), root, Seq("id"))
+    val changes = Seq((5L, 100L), (2 * perFile - 5, 200L), (2 * perFile + 1, 300L)).toDF("id", "nv")
+    val (ms, qs) = plans(KeyedMerge.merge(spark, root, Seq("id"), changes,
+      (b, c) => b.join(c, Seq("id"), "full_outer")
+        .select(col("id"), coalesce(col("nv"), col("v")).as("v"))))
+    assert(ms.rewrittenFiles == 2 && ms.reusedFiles == 0, ms)
+    val ranged = qs.filter(isWrite).flatMap(flat).collect {
+      case e: ShuffleExchangeExec => e.outputPartitioning
+    }.collect { case r: RangePartitioning => r.numPartitions }
+    assert(ranged == Seq(2), s"the write plans range exchanges into $ranged partitions")
+    val out = AtomicTable.read(spark, root)
+    assert(parts(root, ms.version) == 2)
+    assert(out.count() == 2 * perFile + 1)
+    assert(out.where(col("v") >= 100).select("id").as[Long].collect().sorted.toSeq ==
+      Seq(5L, 2 * perFile - 5, 2 * perFile + 1))
   }
 
   test("the footer schema equals Spark's inferred schema on every producer's output") {
