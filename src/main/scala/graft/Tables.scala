@@ -108,7 +108,14 @@ object Tables {
     * fan-out shuffle per consumer); over it the relation is returned
     * UNCHANGED — consumers recompute it, which is exactly the safe
     * behavior at scale. The estimate is the optimizer's `sizeInBytes`
-    * (file-size-derived at the leaves), available before any job runs. */
+    * (file-size-derived at the leaves), available before any job runs.
+    *
+    * "Lazy" holds only for the relation's last stage. Under AQE the call
+    * itself finalizes the adaptive plan: every shuffle and broadcast stage
+    * beneath the relation runs at once, in a SQL execution of its own (in
+    * an event log, one execution of 1–4 jobs opened by this call, before
+    * the consuming action's). The staged blocks are then written by the
+    * first job that reads the relation. */
   def stageLocal(df: DataFrame): DataFrame = {
     val limit = df.sparkSession.conf
       .get("spark.graft.stage.maxBytes", (1L << 30).toString).toLong

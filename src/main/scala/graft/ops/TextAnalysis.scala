@@ -104,10 +104,16 @@ object TextAnalysis {
     * composite, lang argmax) is a column over the same pass, and the only
     * shuffle is the dup-survivor window keyed by content hash. */
   def tcCleanCorpus(spark: SparkSession, dir: String): DataFrame =
-    cleanCorpusOf(Tables.documentsFanned(spark, dir))
+    cleanChainOf(Tables.documentsFanned(spark, dir)).select(col("doc_id"),
+      (col("drop_reason") === "").as("keep"),
+      col("drop_reason"),
+      col("n_words"), col("quality_score"), col("predicted_lang"))
 
-  /** [[tcCleanCorpus]] over a given documents relation. */
-  private def cleanCorpusOf(docs: DataFrame): DataFrame = {
+  /** The clean chain's signals and first-match `drop_reason` as columns
+    * beside every column of `docs` — the one window (the dup survivor,
+    * keyed by content hash) that [[tcCleanCorpus]] and the curation frame
+    * both read. */
+  private def cleanChainOf(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val stop = Seq("the", "a", "of", "and")
       .map(w => s"'$w'").mkString("array(", ", ", ")")
@@ -136,7 +142,7 @@ object TextAnalysis {
     }
     val winner = greatest(best: _*)
     val w = Window.partitionBy(col("exact_fp")).orderBy(col("doc_id").asc)
-    val decided = withScores
+    withScores
       .withColumn("predicted_lang",
         when(winner.getField("s") > 0, winner.getField("l")).otherwise("und"))
       .withColumn("dup_rank", row_number().over(w))
@@ -147,10 +153,6 @@ object TextAnalysis {
           .when(col("quality_score") < 0.7, "low_quality")
           .when(col("predicted_lang") === "und", "unknown_lang")
           .otherwise(""))
-    decided.select(col("doc_id"),
-      (col("drop_reason") === "").as("keep"),
-      col("drop_reason"),
-      col("n_words"), col("quality_score"), col("predicted_lang"))
   }
 
   /** Gopher/MassiveText-style repetition filters: duplicate-word and
@@ -189,44 +191,71 @@ object TextAnalysis {
     * near-dup-dropped is still removed — the standard scale approximation;
     * at 100 TB a connected-components pass would replace it only if cluster
     * canonicalization mattered). Shuffles stay those of the two parts: the
-    * survivor semi-join is hash-keyed on doc_id, the pair join on the
-    * shingle. */
+    * clean chain's dup-survivor window, and the pair join on the shingle. */
   def tcCorpusNeardup(spark: SparkSession, dir: String): DataFrame =
-    corpusNeardupOf(Tables.documentsFanned(spark, dir))
+    withNearDup(curationFrameOf(Tables.documentsFanned(spark, dir)))
+      .select(col("doc_id"), (col("drop_reason") === "").as("final_keep"), col("drop_reason"))
 
-  /** [[tcCorpusNeardup]] over a given documents relation, which feeds both
-    * the clean chain and the survivor semi-join. */
-  private def corpusNeardupOf(docs: DataFrame): DataFrame = {
-    // the chain verdicts and the survivor shingles each feed multiple
-    // consumers and are recomputed per branch here; measured at sf0.1 the
-    // recompute is free (persisting them changed nothing warm) — at 100 TB
-    // a real curation run would WRITE the survivor corpus between stages
-    // (the natural checkpoint), not cache it
-    // staged (size-gated lazy localCheckpoint): `cleaned` feeds BOTH the
-    // survivor semi-join and the final verdict join — without the cut each
-    // consumer re-runs the whole clean chain (scan + quality/lang signals +
-    // the dup-survivor window); the staged relation is |docs| × 3 columns
-    val cleaned = Tables.stageLocal(
-      cleanCorpusOf(docs).select("doc_id", "keep", "drop_reason"))
-    val survivors = docs
-      .join(cleaned.filter(col("keep")).select("doc_id"), Seq("doc_id"), "left_semi")
-    val nearDup = TextDedup.ngramJaccardPairsOf(survivors)
+  /** The per-document frame every curation report reads, staged once
+    * (size-gated lazy `localCheckpoint`) over the clean chain's window:
+    * `doc_id`, `lang`, `source`, the chain's `drop_reason`, `n_toks` (the
+    * whitespace token count), the mix coin's verdict `sampled`, and the
+    * word-3-gram `shingles` of clean survivors only (NULL for a dropped
+    * doc, so only survivors pay for shingling and no survivor semi-join is
+    * needed). The stage feeds both sides of the near-dup self-join and the
+    * verdict itself; uncut, each consumer re-runs the clean chain. */
+  private def curationFrameOf(docs: DataFrame): DataFrame =
+    Tables.stageLocal(cleanChainOf(docs).select(col("doc_id"), col("lang"), col("source"),
+      col("drop_reason"), col("n_words").as("n_toks"), mixSampled.as("sampled"),
+      when(col("drop_reason") === "", graft.expr.functions.word_shingles(col("text")))
+        .as("shingles")))
+
+  /** The clean chain's `drop_reason` extended by the near-dup stage: a
+    * clean survivor that Jaccard-pairs with a lower-id survivor (the
+    * frame's `shingles`, through [[TextDedup.shinglePairsOf]]) becomes
+    * `near_dup`. The one near-dup ladder of [[tcCorpusNeardup]] and
+    * [[curationVerdict]]. */
+  private def withNearDup(frame: DataFrame): DataFrame = {
+    val nearDup = TextDedup.shinglePairsOf(frame)
       .select(col("id_b").as("doc_id")).distinct()
       .withColumn("nd", lit(true))
-    cleaned.join(nearDup, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        (col("keep") && col("nd").isNull).as("final_keep"),
+    frame.join(nearDup, Seq("doc_id"), "left")
+      .withColumn("drop_reason",
         when(col("drop_reason") =!= "", col("drop_reason"))
           .when(col("nd").isNotNull, "near_dup")
-          .otherwise("").as("drop_reason"))
+          .otherwise(""))
+      .drop("nd")
   }
 
   /** THE COMPOSED CURATION RUN — every corpus stage as ONE declared plan,
     * the corpus-side analogue of `pipe_e2e` (reference: the end-to-end
     * dataset build `scripts/build_dataset.py`-style chain, re-grounded in
     * this engine's corpus operators). Per document, a first-match drop
-    * ladder across five stages, then sequence-packing offsets over the
-    * FINAL corpus only:
+    * ladder across five stages ([[curationVerdict]]), then sequence-packing
+    * offsets over the FINAL corpus only. Dropped docs carry NULL offsets;
+    * kept docs get their global token offset from the same two-level scan
+    * as [[tcPackOffsets]], fed the verdict's own `n_toks` of the kept docs
+    * (no second pass over the corpus) and keyed by surviving doc ids
+    * (sparse blocks are fine — the block-total prefix never assumes
+    * density). The final pack join is a hash join on doc_id. */
+  def tcCorpusE2e(spark: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.stageLocal(Tables.documentsFanned(spark, dir))
+    // staged: the verdict feeds the final join AND the packing scan —
+    // uncut, the second consumer re-runs the entire five-stage ladder
+    // (clean chain + near-dup pair join included). |docs| × 5 columns.
+    // Not through Tables.stageLocal: the optimizer sizes a join as the
+    // product of its sides, so the gate reads this per-doc relation as far
+    // larger than it is (past the 1 GiB default on a corpus of a few
+    // hundred KB) and leaves it unstaged.
+    val verdict = curationVerdict(docs).localCheckpoint(false)
+    val packed = packScanOf(verdict.filter(col("final_keep"))
+      .select(col("doc_id"), col("n_toks").as("n_tokens")))
+    verdict.select(col("doc_id"), col("final_keep"), col("drop_stage"))
+      .join(packed, Seq("doc_id"), "left")
+  }
+
+  /** The per-document first-match drop ladder of [[tcCorpusE2e]] — shared
+    * with the data card so the two reports cannot drift:
     *
     *   1. clean chain   — exact-dup / length / quality / language gates
     *   2. near-dup      — 3-gram Jaccard over clean survivors (stage-2
@@ -236,72 +265,48 @@ object TextAnalysis {
     *   4. decontaminate — shares an 8-gram with any eval doc
     *   5. mix           — per-language md5-coin downsampling
     *
-    * Stages 1–2 are set-dependent and composed exactly as their standalone
-    * operators define them; stages 3–5 are per-doc verdicts, so evaluating
-    * them over the full corpus (reusing the standalone operators' plans
-    * unchanged) is value-identical to evaluating them over stage-2
+    * Stages 1–2 are set-dependent and read the staged [[curationFrameOf]]
+    * exactly as [[tcCorpusNeardup]] does. Stages 3–5 are per-doc verdicts:
+    * the holdout is a predicate, the mix coin is a column of the frame
+    * (the expression [[tcSampleMix]] reports), and contamination is a
+    * broadcast left join of the distinct contaminated ids (the 8-gram rows
+    * [[tcDecontaminate]] counts, reduced to the flag). Evaluating them over
+    * the full corpus is value-identical to evaluating them over stage-2
     * survivors — the ladder order alone decides the attributed stage.
-    * Dropped docs carry NULL offsets; kept docs get their global token
-    * offset from the same two-level scan as [[tcPackOffsets]], now keyed
-    * by surviving doc ids (sparse blocks are fine — the block-total prefix
-    * never assumes density). Shuffle inventory is the union of the parts:
-    * nothing new beyond the stages themselves, and the final verdict/pack
-    * joins are hash joins on doc_id. */
-  def tcCorpusE2e(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.stageLocal(Tables.documentsFanned(spark, dir))
-    // staged: the verdict feeds the final join AND the kept-tokens semi-join
-    // — uncut, the second consumer re-runs the entire five-stage ladder
-    // (clean chain + near-dup pair join included). |docs| × 3 columns.
-    // Not through Tables.stageLocal: the optimizer sizes a join as the
-    // product of its sides, so the gate reads this per-doc relation as far
-    // larger than it is (past the 1 GiB default on a corpus of a few
-    // hundred KB) and leaves it unstaged.
-    val verdict = curationVerdict(docs).localCheckpoint(false)
-    val keptTokens = docs
-      .join(verdict.filter(col("final_keep")).select("doc_id"), Seq("doc_id"), "left_semi")
-      .select(col("doc_id"),
-        size(split(trim(col("text")), "\\s+")).cast("long").as("n_tokens"))
-    verdict.join(packScanOf(keptTokens), Seq("doc_id"), "left")
-  }
-
-  /** The per-document first-match drop ladder of [[tcCorpusE2e]] — shared
-    * with the data card so the two reports cannot drift. `docs` is the
-    * documents relation every stage reads: the callers stage it once
-    * (fanned, size-gated), so the corpus is scanned and shuffled once per
-    * report instead of once per stage. */
-  private def curationVerdict(docs: DataFrame): DataFrame =
-    corpusNeardupOf(docs).select(col("doc_id"), col("drop_reason"))
-      // eval docs have no decontam row
-      .join(decontaminateOf(docs).select(col("doc_id"), col("contaminated")),
-        Seq("doc_id"), "left")
-      .join(sampleMixOf(docs).select(col("doc_id"), col("sampled")), Seq("doc_id"))
+    * `docs` is the documents relation every stage reads: the callers stage
+    * it once (fanned, size-gated), so the corpus is scanned and shuffled
+    * once per report. Output: `doc_id`, `lang`, `n_toks`, `final_keep`,
+    * `drop_stage`. */
+  private def curationVerdict(docs: DataFrame): DataFrame = {
+    val contaminated = decontamGramsOf(docs, eval = false)
+      .join(broadcast(decontamGramsOf(docs, eval = true).select("g")), Seq("g"), "left_semi")
+      .select(col("doc_id")).distinct()
+      .withColumn("ct", lit(true))
+    withNearDup(curationFrameOf(docs))
+      .join(broadcast(contaminated), Seq("doc_id"), "left")
       .withColumn("drop_stage",
         when(col("drop_reason") =!= "", col("drop_reason"))
           .when(col("doc_id") % EvalMod === 0, "eval_holdout")
-          .when(coalesce(col("contaminated"), lit(false)), "contaminated")
+          .when(col("ct").isNotNull, "contaminated")
           .when(!col("sampled"), "mix_sampled_out")
           .otherwise(""))
-      .select(col("doc_id"), (col("drop_stage") === "").as("final_keep"),
-        col("drop_stage"))
+      .select(col("doc_id"), col("lang"), col("n_toks"),
+        (col("drop_stage") === "").as("final_keep"), col("drop_stage"))
+  }
 
   /** DATASET DATA CARD — the datasheet a released pretraining corpus ships
     * (what went in, what each stage removed, in whose language): per
     * (lang, stage) document and token mass under [[curationVerdict]]'s
     * attribution, 'kept' being the surviving corpus. Tokens are counted for
     * DROPPED docs too — the card's point is what each gate cost, not just
-    * what survived. One hash join of the verdict against the corpus on
-    * doc_id, one map-side-combinable aggregate on the (lang, stage) pair —
+    * what survived. The verdict carries `lang` and `n_toks`, so the card is
+    * one map-side-combinable aggregate on the (lang, stage) pair over it —
     * the report relation is O(langs × stages) regardless of corpus size. */
-  def tcDatacard(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.stageLocal(Tables.documentsFanned(spark, dir))
-    curationVerdict(docs)
-      .join(docs.select(col("doc_id"), col("lang"),
-        size(split(trim(col("text")), "\\s+")).cast("long").as("n_toks")),
-        Seq("doc_id"))
+  def tcDatacard(spark: SparkSession, dir: String): DataFrame =
+    curationVerdict(Tables.stageLocal(Tables.documentsFanned(spark, dir)))
       .groupBy(col("lang"),
         when(col("drop_stage") === "", "kept").otherwise(col("drop_stage")).as("stage"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_toks")).as("n_tokens"))
-  }
 
   /** Per-language sampling rates (percent) for the corpus mix — the
     * downsample-high-resource shape of a pretraining data mix. */
@@ -314,21 +319,27 @@ object TextAnalysis {
     * coins decorrelate the sample from id ordering and survive repartitioning
     * — the property that makes a 100 TB mix reproducible run-to-run. */
   def tcSampleMix(spark: SparkSession, dir: String): DataFrame =
-    sampleMixOf(Tables.documents(spark, dir))
-
-  /** [[tcSampleMix]] over a given documents relation. */
-  private def sampleMixOf(docs: DataFrame): DataFrame = {
-    val rate = mixRates.foldLeft(lit(0)) { case (acc, (l, r)) =>
-      when(col("lang") === l, r).otherwise(acc)
-    }
-    val hex = md5(col("doc_id").cast("string").cast("binary"))
-    val coin = (ascii(substring(hex, 1, 1)) * 256 + ascii(substring(hex, 2, 1))) % 100
-    docs
+    Tables.documents(spark, dir)
       .select(col("doc_id"), col("lang"),
-        coin.cast("long").as("coin"),
-        rate.cast("long").as("rate"),
-        (coin < rate).as("sampled"))
+        mixCoin.cast("long").as("coin"),
+        mixRate.cast("long").as("rate"),
+        mixSampled.as("sampled"))
+
+  /** A document's 0–99 mix coin: the first two bytes of the md5 of its id,
+    * mod 100. */
+  private def mixCoin: Column = {
+    val hex = md5(col("doc_id").cast("string").cast("binary"))
+    (ascii(substring(hex, 1, 1)) * 256 + ascii(substring(hex, 2, 1))) % 100
   }
+
+  /** A document's sampling rate: its language's entry in [[mixRates]], 0
+    * for any other language. */
+  private def mixRate: Column = mixRates.foldLeft(lit(0)) { case (acc, (l, r)) =>
+    when(col("lang") === l, r).otherwise(acc)
+  }
+
+  /** The mix verdict, shared by [[tcSampleMix]] and the curation frame. */
+  private def mixSampled: Column = mixCoin < mixRate
 
   val StratumK = 20
 
@@ -395,17 +406,10 @@ object TextAnalysis {
     * the corpus side streams through a map-side hash join — no shuffle of
     * corpus grams. Per-doc output carries the evidence (distinct grams hit,
     * distinct eval docs hit), not just the flag. */
-  def tcDecontaminate(spark: SparkSession, dir: String): DataFrame =
-    decontaminateOf(Tables.documentsFanned(spark, dir))
-
-  /** [[tcDecontaminate]] over a given documents relation. */
-  private def decontaminateOf(docs: DataFrame): DataFrame = {
-    def grams(df: org.apache.spark.sql.DataFrame) = df.select(col("doc_id"),
-      explode(graft.expr.functions.word_ngrams(col("text"), lit(DecontamN))).as("g"))
-    val evalG = grams(docs.filter(col("doc_id") % EvalMod === 0))
-      .withColumnRenamed("doc_id", "eval_id")
-    val corpusG = grams(docs.filter(col("doc_id") % EvalMod =!= 0))
-    val hits = corpusG.join(broadcast(evalG), Seq("g"))
+  def tcDecontaminate(spark: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.documentsFanned(spark, dir)
+    val evalG = decontamGramsOf(docs, eval = true).withColumnRenamed("doc_id", "eval_id")
+    val hits = decontamGramsOf(docs, eval = false).join(broadcast(evalG), Seq("g"))
       .groupBy(col("doc_id"))
       .agg(countDistinct(col("g")).as("n_hit_grams"),
         countDistinct(col("eval_id")).as("n_eval_docs"))
@@ -418,6 +422,16 @@ object TextAnalysis {
         coalesce(col("n_hit_grams"), lit(0L)).as("n_hit_grams"),
         coalesce(col("n_eval_docs"), lit(0L)).as("n_eval_docs"),
         (coalesce(col("n_hit_grams"), lit(0L)) > 0).as("contaminated"))
+  }
+
+  /** The word-`DecontamN`-gram rows `(doc_id, g)` of the eval docs
+    * (`eval`) or of the corpus docs (`!eval`), through the one-pass
+    * codegen'd WordNgrams expression — both sides of [[tcDecontaminate]]
+    * and of the curation verdict's contamination flag. */
+  private def decontamGramsOf(docs: DataFrame, eval: Boolean): DataFrame = {
+    val isEval = col("doc_id") % EvalMod === 0
+    docs.filter(if (eval) isEval else !isEval).select(col("doc_id"),
+      explode(graft.expr.functions.word_ngrams(col("text"), lit(DecontamN))).as("g"))
   }
 
   /** Per-language training-token budget of the MIXED corpus — the planning

@@ -136,32 +136,33 @@ object TextDedup {
     ngramJaccardPairsOf(docsFanned(spark, dir))
 
   /** The pair dataflow of [[ddNgramJaccard]] over an arbitrary DOCUMENT
-    * relation (doc_id, lang, source, text) — reused by the composed
-    * corpus-construction pipeline, which runs it over the cleaning chain's
-    * survivors only. `word_shingles` is evaluated ONCE per doc: the
-    * (doc_id, lang, source, shingles) projection is staged (size-gated, one
-    * row per doc), and both the explosion and the per-doc sizes derive
-    * from it — the sizes as `size(shingles)` instead of a groupBy over the
-    * full explosion. The explosion itself feeds both join sides once, via
-    * exchange reuse; it stays unstaged — materializing it measured slower
-    * than recomputing the codegen'd explode, r21. Docs in candidate pairs
-    * share ≥1 shingle, so the n_sh=0 rows the projection adds for
-    * shingle-less docs never join. */
-  private[ops] def ngramJaccardPairsOf(docs: DataFrame): DataFrame = {
-    val shingles = Tables.stageLocal(docs.select(col("doc_id"), col("lang"), col("source"),
-      graft.expr.functions.word_shingles(col("text")).as("shingles")))
+    * relation (doc_id, lang, source, text) — reused by [[ddDupClusters]].
+    * `word_shingles` is evaluated ONCE per doc: the (doc_id, lang, source,
+    * shingles) projection is staged (size-gated, one row per doc) and feeds
+    * [[shinglePairsOf]]. */
+  private[ops] def ngramJaccardPairsOf(docs: DataFrame): DataFrame =
+    shinglePairsOf(Tables.stageLocal(docs.select(col("doc_id"), col("lang"), col("source"),
+      graft.expr.functions.word_shingles(col("text")).as("shingles"))))
+
+  /** Jaccard ≥ 0.2 pairs `(lang, source, id_a, id_b, jac)` of a per-doc
+    * shingle relation (doc_id, lang, source, shingles) — the composed
+    * curation run feeds it its staged frame, whose `shingles` is NULL for
+    * docs the clean chain dropped (they explode to no rows). Each doc's
+    * set size `size(shingles)` rides the explosion as `n_a`/`n_b` and the
+    * pair aggregate groups on it, so no per-doc size lookup joins back (it
+    * is a function of the id, so the grouping is unchanged). The explosion
+    * feeds both join sides once, via exchange reuse; it stays unstaged —
+    * materializing it measured slower than recomputing the codegen'd
+    * explode, r21. */
+  private[ops] def shinglePairsOf(shingles: DataFrame): DataFrame = {
     val sh = shingles.select(col("doc_id"), col("lang"), col("source"),
-      explode(col("shingles")).as("s"))
-    val n = shingles.select(col("doc_id"), size(col("shingles")).cast("long").as("n_sh"))
-    val a = sh.select(col("doc_id").as("id_a"), col("lang"), col("source"), col("s"))
-    val b = sh.select(col("doc_id").as("id_b"), col("lang"), col("source"), col("s"))
-    val inter = a.join(b, Seq("lang", "source", "s"))
+      size(col("shingles")).cast("long").as("n"), explode(col("shingles")).as("s"))
+    val a = sh.select(col("doc_id").as("id_a"), col("lang"), col("source"), col("n").as("n_a"), col("s"))
+    val b = sh.select(col("doc_id").as("id_b"), col("lang"), col("source"), col("n").as("n_b"), col("s"))
+    a.join(b, Seq("lang", "source", "s"))
       .filter(col("id_a") < col("id_b"))
-      .groupBy(col("lang"), col("source"), col("id_a"), col("id_b"))
+      .groupBy(col("lang"), col("source"), col("id_a"), col("id_b"), col("n_a"), col("n_b"))
       .agg(count(lit(1)).as("n_inter"))
-    inter
-      .join(n.select(col("doc_id").as("id_a"), col("n_sh").as("n_a")), Seq("id_a"))
-      .join(n.select(col("doc_id").as("id_b"), col("n_sh").as("n_b")), Seq("id_b"))
       .withColumn("jac", col("n_inter").cast("double") /
         (col("n_a") + col("n_b") - col("n_inter")).cast("double"))
       .filter(col("jac") >= 0.2)
@@ -495,6 +496,25 @@ object TextDedup {
   private[graft] def roundKernel(spark: SparkSession): DataFrame =
     smallStar(largeStar(canonPairs(plantedClusterEdges(spark).toDF("src", "dst"))))
 
+  /** `(edges, violations)` of a canonical (src < dst, distinct) edge set,
+    * in one aggregate: the set is a STAR FOREST — each component one
+    * center joined to its leaves — iff no node is both a src and a dst and
+    * every dst has exactly one src, and `violations` counts the nodes that
+    * break either condition. Per node it gathers is-src and in-degree; the
+    * in-degrees sum to the edge count. */
+  private[ops] def starTest(edges: DataFrame): (Long, Long) = {
+    val r = edges
+      .select(explode(array(
+        struct(col("src").as("v"), lit(1).as("out"), lit(0L).as("in")),
+        struct(col("dst").as("v"), lit(0).as("out"), lit(1L).as("in")))).as("e"))
+      .groupBy(col("e.v"))
+      .agg(max(col("e.out")).as("is_src"), sum(col("e.in")).as("indeg"))
+      .agg(sum(col("indeg")),
+        count(when(col("indeg") > 1 || (col("is_src") === 1 && col("indeg") > 0), 1)))
+      .first()
+    (if (r.isNullAt(0)) 0L else r.getLong(0), r.getLong(1))
+  }
+
   /** Min-label convergence over an undirected pair graph: every node ends
     * with comp = min node id reachable from it, and size = the node count of
     * its component, in labels (id, comp, size) — a unique result independent
@@ -507,10 +527,13 @@ object TextDedup {
     * diameter — static-edge label propagation (the round-8 shape) is
     * Θ(diameter) rounds on a chain no matter how labels are compressed,
     * which is exactly what the planted 59-diameter chains in
-    * [[plantedClusterEdges]] expose (DedupClusterVolSpec pins the bound: 7
-    * rounds where propagation needs ~52). Per-round work stays O(edges):
-    * two edge-mass window gathers, no quadratic star expansion. The driver
-    * loop reads only the edge-set fingerprint aggregate, never data. */
+    * [[plantedClusterEdges]] expose (6 rounds there, where propagation
+    * needs ~52; DedupClusterVolSpec bounds it). Per-round work stays
+    * O(edges): two edge-mass window gathers, no quadratic star expansion.
+    * The loop stops at the first STAR FOREST — the state the label step
+    * reads — tested exactly by [[starTest]]; an input that already is one
+    * runs zero rounds. The driver reads only that aggregate, never data.
+    * Returns the labels and the number of rounds run. */
   private[ops] def minLabelConverge(pairs: DataFrame): (DataFrame, Int) = {
     // ONE localCheckpoint per round (the round output): the iterate is
     // consumed multiple times per round, so without lineage truncation the
@@ -519,29 +542,18 @@ object TextDedup {
     // dfcapPairsOf: at real cluster scale this is a reliable checkpoint or
     // staged table.
     val caller = pairs.sparkSession
-    // convergence signal: an order-independent (count, hash-xor) fingerprint
-    // of the edge set — ONE cheap aggregate per round instead of a
-    // symmetric-difference join (xor, not sum: overflow-free under ANSI,
-    // and the set is distinct so cancellation needs a hash collision). A
-    // fingerprint match is then CONFIRMED by the exact set difference once,
-    // so a collision degrades to an extra round, never a wrong result.
-    def fingerprint(e: DataFrame): (Long, Long) = {
-      val r = e.agg(count(lit(1)),
-        expr("bit_xor(xxhash64(src, dst))")).first()
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-    }
     // Setup is ONE action: the canonical pairs are staged lazily, and the
-    // first fingerprint (caller-side) both materializes the staging and
+    // first star test (caller-side) both materializes the staging and
     // yields the edge count that sizes the loop partitions.
     val staged = canonPairs(pairs.toDF("src", "dst")).localCheckpoint(false)
-    var fp = fingerprint(staged)
+    val (nEdges, bad) = starTest(staged)
     // The whole loop runs on a tuned CHILD session ([[LoopSession]]: AQE
     // off, shuffle width from the edge count — the session's 32 partitions
     // made this loop 5× slower than 2 on a 60k-edge graph; confs never
     // leave the child, advisor r11/r12).
     val loop = LoopSession.forCaller(caller)
     loop.synchronized {
-    LoopSession.tune(caller, loop, fp._1)
+    LoopSession.tune(caller, loop, nEdges)
     // re-root via the InternalRow RDD (GraftSessionBridge): RDDs are
     // context-scoped, so the checkpointed edge set moves sessions without
     // the public-Row conversion pass the old createDataFrame(staged.rdd)
@@ -552,7 +564,7 @@ object TextDedup {
     val nodes = edges.select(col("src").as("id"))
       .union(edges.select(col("dst").as("id"))).distinct()
     var rounds = 0
-    var converged = fp._1 == 0L
+    var converged = bad == 0L
     while (!converged) {
         rounds += 1
         val tR = System.nanoTime()
@@ -561,17 +573,13 @@ object TextDedup {
         // so the round no longer needs the ls staging checkpoint (r22; the
         // old groupBy+join form consumed ls twice and exchange reuse did
         // not fire across the aliased consumers — re-tested, 0.5 → 1.0 s
-        // per round without the staging). The fingerprint aggregate below
-        // is the round's single materializing action.
-        val next = smallStar(largeStar(edges)).localCheckpoint(false)
-        val nfp = fingerprint(next)
-        if (nfp == fp) {
-          converged = next.except(edges).union(edges.except(next)).isEmpty
-        }
-        fp = nfp
-        edges = next
+        // per round without the staging). The star test below is the
+        // round's single materializing action.
+        edges = smallStar(largeStar(edges)).localCheckpoint(false)
+        val (n, b) = starTest(edges)
+        converged = b == 0L
         if (sys.env.contains("GRAFT_CC_DEBUG"))
-          println(f"[cc] round $rounds: ${(System.nanoTime() - tR) / 1e9}%.2f s, edges=${fp._1}")
+          println(f"[cc] round $rounds: ${(System.nanoTime() - tR) / 1e9}%.2f s, edges=$n")
     }
     // terminal state = stars centered on each component's min: a node's
     // label is its min neighbor (leaves → center), or itself (the center);

@@ -14,7 +14,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.sql.types.MetadataBuilder
 
 import graft.domain.{Collections, MentionDedup, Spatial}
-import graft.ops.TextDedup
+import graft.ops.{TextAnalysis, TextDedup}
 import graft.sinks.{AtomicTable, Footers, KeyedMerge, MergeSink, StatsRead, TargetedDelete}
 import graft.sources.HttpSource
 import graft.sources.HttpSource.HttpResponse
@@ -282,9 +282,11 @@ class JobBudgetSpec extends AnyFunSuite {
     assert(loaded.count() == 10)
   }
 
-  test("ddDupClusters plus its collect runs at most 11 jobs on a Spark-written corpus") {
+  test("ddDupClusters plus its collect runs at most 9 jobs on a Spark-written corpus") {
     // 19 with schema inference on the load, a five-job loop setup and a
-    // caller-side cluster-size join
+    // caller-side cluster-size join; 11 with a fingerprint stop, one round
+    // that changed nothing and its except confirm. The corpus's pair graph
+    // is already a star forest, so the star-forest stop runs no round.
     // 400 documents of twelve words no other document shares, plus a
     // near-duplicate of every fifth one (its text with one word appended,
     // id + 100000), written by Spark as a generated corpus is
@@ -300,7 +302,71 @@ class JobBudgetSpec extends AnyFunSuite {
     info(s"ddDupClusters ran $n jobs")
     val expected = (0L until 400L by 5L).flatMap(i => Seq((i, i, 2L), (i + 100000, i, 2L)))
     assert(rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq == expected.sorted)
-    assert(n <= 11, s"ddDupClusters ran $n jobs")
+    assert(n <= 9, s"ddDupClusters ran $n jobs")
+  }
+
+  /** A Spark-written corpus that every stage of the curation ladder drops
+    * from: 300 English documents of 30 words, each 3-gram holding a word
+    * no other document has and every third word a stopword or language
+    * marker, so the clean chain keeps them; a near-duplicate (one word
+    * appended, same site) of every fifth; a copy on another site of each
+    * eval document (it shares the eval document's 8-grams but not its
+    * near-duplicate block); an exact duplicate and a short document. */
+  private def curationCorpus(): String = {
+    val dir = Files.createTempDirectory("budgetcuration").toString
+    val common = "array('the', 'fast', 'a', 'small')"
+    val docs = spark.range(300).select(col("id").as("doc_id"),
+      expr(s"""concat_ws(' ', transform(sequence(0, 29), k ->
+        CASE WHEN k % 3 = 1 THEN $common[(k DIV 3) % 4] ELSE concat('w', id, '_', k) END))""")
+        .as("text"),
+      lit("en").as("lang"), lit("web").as("source"))
+    val nearDups = docs.filter(col("doc_id") % 5 === 0).select((col("doc_id") + 100000).as("doc_id"),
+      concat(col("text"), lit(" zz")).as("text"), col("lang"), col("source"))
+    val evalCopies = docs.filter(col("doc_id") % TextAnalysis.EvalMod === 0)
+      .select((col("doc_id") + 200000).as("doc_id"),
+        concat(col("text"), lit(" yy")).as("text"), col("lang"), lit("news").as("source"))
+    val odd = docs.filter(col("doc_id") === 1).select(lit(300001L).as("doc_id"), col("text"),
+      col("lang"), col("source"))
+      .union(docs.filter(col("doc_id") === 1).select(lit(300002L).as("doc_id"),
+        lit("the fast a small w_short").as("text"), col("lang"), col("source")))
+    docs.union(nearDups).union(evalCopies).union(odd)
+      .withColumn("n_chars", length(col("text")).cast("long"))
+      .coalesce(1).write.parquet(s"$dir/documents.parquet")
+    dir
+  }
+
+  test("tcDatacard plus its collect runs at most 12 jobs") {
+    // 18 before the per-document curation frame: a staged clean
+    // chain, a survivor semi-join with its own shingle staging, per-document
+    // size lookups, a contamination aggregate and a fifth corpus join
+    val dir = curationCorpus()
+    val (rows, n) = jobs(TextAnalysis.tcDatacard(spark, dir).collect())
+    info(s"tcDatacard ran $n jobs")
+    val byStage = rows.map(r => r.getString(1) -> r.getLong(2)).toMap
+    assert(rows.forall(_.getString(0) == "en"))
+    assert(byStage.values.sum == 366L, byStage)
+    assert(byStage("near_dup") == 60L && byStage("eval_holdout") == 4L &&
+      byStage("contaminated") == 4L && byStage("exact_dup") == 1L && byStage("too_short") == 1L,
+      byStage)
+    assert(byStage("kept") > 0L && byStage("mix_sampled_out") > 0L, byStage)
+    assert(n <= 12, s"tcDatacard ran $n jobs")
+  }
+
+  test("tcCorpusE2e plus its collect runs at most 17 jobs") {
+    // 25 before the per-document curation frame, which also packs
+    // the verdict's own token counts instead of semi-joining the corpus
+    val dir = curationCorpus()
+    val (rows, n) = jobs(TextAnalysis.tcCorpusE2e(spark, dir).collect())
+    info(s"tcCorpusE2e ran $n jobs")
+    assert(rows.length == 366)
+    val kept = rows.filter(_.getBoolean(1))
+    assert(kept.nonEmpty && kept.forall(r => !r.isNullAt(4)))
+    assert(rows.filterNot(_.getBoolean(1)).forall(_.isNullAt(4)))
+    // kept docs pack back to back in id order
+    val offs = kept.sortBy(_.getLong(0)).map(r => (r.getLong(3), r.getLong(4)))
+    assert(offs.head._2 == 0L)
+    offs.sliding(2).foreach { case Array((n0, s0), (_, s1)) => assert(s1 == s0 + n0) }
+    assert(n <= 17, s"tcCorpusE2e ran $n jobs")
   }
 
   /** Every operator of `df`'s executed plan, stages and the final adaptive

@@ -10,10 +10,14 @@ which case the newest is read. For each job it
 prints the submit time (ms from the first printed job), the gap since the
 previous job ended (driver time with no job running), the duration, the
 stages and tasks that ran, the SQL execution id and the call site (for a
-streaming micro-batch Spark records the query's `start` as the call site).
-Then it prints the wall time and plan shape of each SQL execution that
-owns a printed job, and the jobs of each Structured Streaming micro-batch
-among them.
+streaming micro-batch Spark records the query's `start` as the call site,
+and for the stage jobs of an adaptive plan `CompletableFuture.java:1768`).
+Then it prints, for each SQL execution that owns a printed job, its wall
+time, its first two engine frames (the `details` stack of the execution's
+start, past Spark, Scala, JDK and benchmark-harness frames, innermost
+first: which `stageLocal`, loop action or write opened it; in parentheses
+Spark's own short call site when no engine frame is left) and its plan
+shape, and the jobs of each Structured Streaming micro-batch among them.
 
 --jobs FIRST:LAST limits the listing to job ids FIRST..LAST (either side
 may be left out: `40:` or `:12`).
@@ -30,6 +34,8 @@ import sys
 
 SQL_START = "org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart"
 SQL_END = "org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd"
+# frames of these packages are not the engine's own call site
+FOREIGN = ("org.apache.spark.", "scala.", "java.", "jdk.", "sun.", "graft.perfbench.")
 
 
 def log_files(path):
@@ -60,6 +66,24 @@ def plan_shape(info):
             leaves.add(n.get("nodeName", "?").strip())
         stack.extend(kids)
     return f"{info.get('nodeName', '?')} <- {', '.join(sorted(leaves))}"
+
+
+def engine_frames(details, n=2):
+    """The first `n` engine frames of a SQL execution's call-site stack,
+    each as `Class.method:line` (`graft.ops.TextDedup$.starTest(TextDedup.scala:516)`
+    reads `TextDedup.starTest:516`), innermost first, joined by ` < `."""
+    out = []
+    for frame in (details or "").splitlines():
+        frame = frame.strip()
+        if not frame or frame.startswith(FOREIGN):
+            continue
+        name, _, loc = frame.partition("(")
+        cls, _, meth = name.rpartition(".")
+        line = loc.rstrip(")").rpartition(":")[2]
+        out.append(f"{cls.rpartition('.')[2].rstrip('$')}.{meth}:{line}")
+        if len(out) == n:
+            break
+    return " < ".join(out)
 
 
 def events(files):
@@ -104,6 +128,8 @@ def load(files):
                 jobs[j]["tasks"] += 1
         elif kind == SQL_START:
             sqls[e["executionId"]] = {"start": e["time"], "end": None,
+                                      "site": engine_frames(e.get("details"))
+                                      or f"({e.get('description', '?')})",
                                       "plan": plan_shape(e.get("sparkPlanInfo"))}
         elif kind == SQL_END:
             if e["executionId"] in sqls:
@@ -144,7 +170,9 @@ def main():
             prev_end = max(prev_end or 0, j["end"])
     owned = sorted({jobs[i]["sql"] for i in ids if jobs[i]["sql"] is not None})
     if owned:
-        print(f"\n{'sql':>5} {'start_ms':>9} {'wall_ms':>7} {'jobs':>4}  plan (root <- leaves)")
+        width = max([len("engine call site")] + [len(sqls[s]["site"]) for s in owned if s in sqls])
+        print(f"\n{'sql':>5} {'start_ms':>9} {'wall_ms':>7} {'jobs':>4}  "
+              f"{'engine call site':<{width}}  plan (root <- leaves)")
         for s in owned:
             x = sqls.get(s)
             n = sum(1 for i in ids if jobs[i]["sql"] == s)
@@ -152,7 +180,8 @@ def main():
                 print(f"{s:>5} {'':>9} {'':>7} {n:>4}  (no execution events)")
                 continue
             wall = "" if x["end"] is None else str(x["end"] - x["start"])
-            print(f"{s:>5} {x['start'] - origin:>9} {wall:>7} {n:>4}  {x['plan'][:90]}")
+            print(f"{s:>5} {x['start'] - origin:>9} {wall:>7} {n:>4}  "
+                  f"{x['site']:<{width}}  {x['plan'][:70]}")
     batches = {}
     for i in ids:
         if jobs[i]["batch"] is not None:
