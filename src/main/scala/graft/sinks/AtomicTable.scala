@@ -618,6 +618,16 @@ object AtomicTable {
     Footers.readDir(spark, Paths.get(root, v))
   }
 
+  /** [[read]] as a local relation decoded on the driver when the live
+    * version's files fit [[DriverRead]]'s gate, so collecting it runs no
+    * job; a larger version is scanned as [[read]] scans it. */
+  def readLocal(spark: SparkSession, root: String): DataFrame = {
+    val dir = Paths.get(root, currentVersion(root).getOrElse(
+      throw new IllegalStateException(s"no committed version at $root")))
+    DriverRead.read(spark, TargetedDelete.partFiles(dir), Nil)
+      .getOrElse(Footers.readDir(spark, dir))
+  }
+
   /** Committed version directories present on disk, oldest first. Live is
     * whatever `_CURRENT` names; the rest are retained predecessors. */
   def versions(root: String): Seq[String] = {

@@ -381,7 +381,8 @@ object CdcApply {
           ((lit(InsertBase) + col("id")) * 11L).as("n_chars")))
     // fixture premise: min/max stats CANNOT skip on the scattered hash key
     val probes = changes.select(col("doc_hash")).collect().map(_.getString(0)).toSeq
-    val (_, rsStats) = StatsRead.readStringKeyIn(spark, root, "doc_hash", probes)
+    val rsStats = StatsRead.admission(spark, root,
+      Seq("doc_hash" -> TargetedDelete.KeySet.strings(probes)))
     if (rsStats.filesRead < rsStats.totalFiles - 2)
       throw new IllegalStateException(
         s"fixture premise broken: min/max stats pruned a scattered key ($rsStats)")

@@ -433,7 +433,7 @@ object Compaction {
     // premise: a high block read plans the interleaved (≥2-file) layout
     val blockFrom = lowCut * 2
     val blockTo = blockFrom + math.max(2L, maxId / 10)
-    val (_, rsBefore) = StatsRead.read(spark, root,
+    val rsBefore = StatsRead.admission(spark, root,
       Seq("id" -> TargetedDelete.LongRange(blockFrom, blockTo)))
     if (rsBefore.footerReads != 0 || rsBefore.filesRead < 2)
       throw new IllegalStateException(
@@ -456,7 +456,7 @@ object Compaction {
       case _ => ()
     }
     // payoff 2: the same block read plans strictly fewer files
-    val (_, rsAfter) = StatsRead.read(spark, root,
+    val rsAfter = StatsRead.admission(spark, root,
       Seq("id" -> TargetedDelete.LongRange(blockFrom, blockTo)))
     if (rsAfter.footerReads != 0 || rsAfter.filesRead >= rsBefore.filesRead)
       throw new IllegalStateException(

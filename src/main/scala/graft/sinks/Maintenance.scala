@@ -522,7 +522,7 @@ object Maintenance {
     if (hDrift.action != "recluster" || hDrift.overlapRatio <= OverlapThreshold)
       throw new IllegalStateException(
         s"merge drift not detected from metadata: $hDrift")
-    val (_, rsBefore) = StatsRead.read(spark, root,
+    val rsBefore = StatsRead.admission(spark, root,
       Seq("id" -> TargetedDelete.LongRange(blockFrom, blockTo)))
     // the drifted wide file plus the block's own natural file: >= 2 planned
     if (rsBefore.footerReads != 0 || rsBefore.filesRead < 2)
@@ -537,7 +537,7 @@ object Maintenance {
     // legitimately straddle one recluster output boundary — the gate must
     // not depend on where RangePartitioner's per-run sample lands), never
     // more, and never more than before
-    val (_, rsAfter) = StatsRead.read(spark, root,
+    val rsAfter = StatsRead.admission(spark, root,
       Seq("id" -> TargetedDelete.LongRange(blockFrom, blockTo)))
     if (rsAfter.footerReads != 0 || rsAfter.filesRead > 2 ||
         rsAfter.filesRead > rsBefore.filesRead)

@@ -38,10 +38,23 @@ import graft.sinks.TargetedDelete.{KeySet, LongRange, StringRange}
   * Reference anchor: the reference pipeline's point lookups are Postgres
   * index scans (utils/database.py); on a parquet lakehouse the manifest
   * min/max IS the coarse index.
+  *
+  * A read whose admitted files are small is answered on the driver
+  * ([[DriverRead]]): when their byte total is at most
+  * `spark.sql.autoBroadcastJoinThreshold` (the size at which Spark itself
+  * collects a scan to the driver for a broadcast), Spark's vectorized
+  * parquet reader decodes them in the calling thread, keeps the rows the
+  * key sets match, and the frame is a `LocalRelation`: collecting it runs
+  * no job. A one-file point lookup then pays the decode of one small file
+  * instead of a one-task job around it. Past the gate (or at `-1`) the
+  * read is a scan, as before. The answer is the same either way, rows,
+  * column order, types and nullability (DriverReadSpec). [[Footers.read]]
+  * itself stays a scan: the bloom builds group its rows by
+  * `input_file_name()`, which a local relation does not carry.
   */
 object StatsRead {
 
-  /** The read's audit row: how many live files the scan actually planned
+  /** The read's audit row: how many live files the read actually planned
     * (`filesRead`) out of `totalFiles`, and how many pruning decisions
     * needed a real parquet footer read (`footerReads` — 0 when the sidecar
     * covers the column). `manifestFiles` counts files whose bloom decision
@@ -122,10 +135,38 @@ object StatsRead {
     * [[TargetedDelete.LongRange]], [[TargetedDelete.StringRange]] (under
     * UTF-8 byte order) and [[TargetedDelete.StringPrefix]] (complete by
     * construction — an inclusive upper bound cannot cover a prefix block,
-    * astral suffixes sort above U+FFFF). */
+    * astral suffixes sort above U+FFFF).
+    *
+    * Admitted files under the driver-read gate are decoded now, by
+    * [[DriverRead]], which applies every key set's match predicate as it
+    * reads, so the local frame is already the row-level tail; a scan gets
+    * the tail as [[TargetedDelete.matched]]. */
   def read(spark: SparkSession, root: String,
       preds: Seq[(String, TargetedDelete.KeySet)],
       version: Option[String] = None): (DataFrame, ReadStats) = {
+    val (r, touched, st) = admitFiles(spark, root, preds, version)
+    val df =
+      if (touched.isEmpty) emptyLike(spark, r)
+      else DriverRead.read(spark, touched, preds).getOrElse(
+        preds.foldLeft(Footers.read(spark, touched)) {
+          case (d, (c, ks)) => TargetedDelete.matched(d, c, ks)
+        })
+    (df, st)
+  }
+
+  /** [[read]]'s audit row alone: the same resolve and admission, no frame
+    * and no file decoded — for callers that only check how a read would
+    * prune. */
+  def admission(spark: SparkSession, root: String,
+      preds: Seq[(String, TargetedDelete.KeySet)],
+      version: Option[String] = None): ReadStats =
+    admitFiles(spark, root, preds, version)._3
+
+  /** The resolved version, the files [[FileAdmission.admit]] plans for
+    * `preds`, and the audit row. */
+  private def admitFiles(spark: SparkSession, root: String,
+      preds: Seq[(String, TargetedDelete.KeySet)],
+      version: Option[String]): (Resolved, Seq[Path], ReadStats) = {
     require(preds.nonEmpty, "a stats-pruned read needs at least one predicate")
     val r = resolveStats(root, "stats-pruned read", version)
     val (cols, sets) = preds.unzip
@@ -138,12 +179,7 @@ object StatsRead {
       keys.fold(Set.empty[String])(FileAdmission.bloomCovered(r.dir, blooms, cols, _)))
     val admitted = FileAdmission.admit(spark, r.dir, r.files, rows, cols, sets, keys, blooms)
     val touched = r.files.filter(f => admitted.touched(f.getFileName.toString))
-    val df =
-      if (touched.isEmpty) emptyLike(spark, r)
-      else preds.foldLeft(Footers.read(spark, touched)) {
-        case (d, (c, ks)) => TargetedDelete.matched(d, c, ks)
-      }
-    (df, ReadStats(r.version, r.files.size, touched.size, opened,
+    (r, touched, ReadStats(r.version, r.files.size, touched.size, opened,
       admitted.manifestFiles))
   }
 
@@ -566,7 +602,7 @@ object StatsRead {
       root, statsCols = Seq("doc_hash"))
     val probes = BloomProbeIds.map(i => KeyBloom.md5hex(i.toString))
     // the premise: min/max stats CANNOT skip on the scattered key
-    val (_, rsStats) = readStringKeyIn(spark, root, "doc_hash", probes)
+    val rsStats = admission(spark, root, Seq("doc_hash" -> KeySet.strings(probes)))
     if (rsStats.filesRead < rsStats.totalFiles - 2)
       throw new IllegalStateException(
         s"fixture premise broken: min/max stats pruned a scattered key ($rsStats)")
@@ -748,7 +784,7 @@ object StatsRead {
         "fixture premise broken: min/max pruned the scattered key")
     // FP envelope at saturated word density: absent keys admit ~nothing
     val absent = Seq("sat-absent-a", "sat-absent-b", "sat-absent-c").map(KeyBloom.md5hex)
-    val (_, rsAbs) = readStringKeyIn(spark, root, "row_hash", absent)
+    val rsAbs = admission(spark, root, Seq("row_hash" -> KeySet.strings(absent)))
     if (rsAbs.footerReads != 0 || rsAbs.filesRead > 2 ||
         rsAbs.manifestFiles != rsAbs.totalFiles)
       throw new IllegalStateException(

@@ -670,7 +670,7 @@ object TargetedDelete {
       .select(col("doc_hash")).collect().map(_.getString(0)).toSeq
     // premise: WITHOUT a bloom this delete rewrites ~everything (probe via
     // the read path's planner — same stats, no mutation)
-    val (_, rsStats) = StatsRead.readStringKeyIn(spark, root, "doc_hash", delHashes)
+    val rsStats = StatsRead.admission(spark, root, Seq("doc_hash" -> KeySet.strings(delHashes)))
     if (rsStats.filesRead < rsStats.totalFiles - 2)
       throw new IllegalStateException(
         s"fixture premise broken: min/max pruned a scattered hash ($rsStats)")

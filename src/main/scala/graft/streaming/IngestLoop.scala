@@ -22,9 +22,10 @@ import graft.sources.HttpSource
   *
   * One micro-batch evaluates each step once, on first use, so a table that
   * already absorbed the batch never forces it (a redelivery both tables skip
-  * runs no job and sends no request). It runs 5 jobs:
+  * runs no job and sends no request). It runs 4 jobs:
   *
-  *  1. the ledger (|api_types| rows) is read and collected — one job;
+  *  1. the ledger (|api_types| rows) is decoded on the driver and collected
+  *     from a local relation — no job ([[AtomicTable.readLocal]]);
   *  2. the micro-batch is collected — one scan job, no shuffle — and
   *     admitted on the driver ([[admit]]), one admission row per request;
   *     the admitted set is bounded by the daily quota, and the new ledger
@@ -116,7 +117,7 @@ object IngestLoop {
     import spark.implicits._
     lazy val ledger: Seq[LedgerRow] =
       if (AtomicTable.currentVersion(ledgerRoot).isEmpty) Nil
-      else AtomicTable.read(spark, ledgerRoot).as[LedgerRow].collect().toSeq
+      else AtomicTable.readLocal(spark, ledgerRoot).as[LedgerRow].collect().toSeq
     lazy val admission: Seq[AdmissionRow] =
       admit(batch.as[FetchRequest].collect().toSeq, ledger, limit)
     lazy val changes: DataFrame = {

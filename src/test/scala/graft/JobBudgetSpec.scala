@@ -70,16 +70,23 @@ class JobBudgetSpec extends AnyFunSuite {
       .repartitionByRange(files, col("google_place_id"))
       .sortWithinPartitions("google_place_id")
 
-  test("a stats-pruned keyed lookup plus its collect runs exactly one job") {
+  test("a keyed lookup's collect runs no job under the driver-read gate, one job at -1") {
     val root = Files.createTempDirectory("budgetlookup").resolve("t").toString
     AtomicTable.commit(poi(4000, 8), root, Seq("google_place_id"))
-    val ((rows, st), n) = jobs {
+    def lookup() = jobs {
       val (df, st) = StatsRead.readStringKeyIn(spark, root, "google_place_id", Seq("g01234"))
       (df.collect(), st)
     }
+    // the one admitted file is far below spark.sql.autoBroadcastJoinThreshold
+    val ((rows, st), n) = lookup()
     assert(st.filesRead == 1 && st.totalFiles == 8, st)
     assert(rows.map(_.getString(0)).toSeq == Seq("g01234"))
-    assert(n == 1, s"lookup ran $n jobs")
+    assert(n == 0, s"a driver-served lookup ran $n jobs")
+    // at -1 the read is a scan: its collect is one one-task job
+    val ((scanned, _), m) = PlanTestUtils.withConf(spark,
+      "spark.sql.autoBroadcastJoinThreshold", "-1")(lookup())
+    assert(scanned.toSeq == rows.toSeq)
+    assert(m == 1, s"a scanned lookup ran $m jobs")
   }
 
   test("a 10-key string erasure on an indexed, bloom-less table runs at most one job") {
@@ -101,7 +108,7 @@ class JobBudgetSpec extends AnyFunSuite {
     assert(df.count() == 100)
   }
 
-  test("one ingest micro-batch runs at most 5 jobs; a redelivered one runs none") {
+  test("one ingest micro-batch runs at most 4 jobs; a redelivered one runs none") {
     import spark.implicits._
     val base = Files.createTempDirectory("budgetingest")
     val (poiRoot, ledgerRoot) = (s"$base/poi", s"$base/ledger")
@@ -115,7 +122,7 @@ class JobBudgetSpec extends AnyFunSuite {
     process(0) // the ledger's first version
     val (_, n) = jobs(process(1))
     info(s"one micro-batch ran $n jobs")
-    assert(n <= 5, s"a micro-batch ran $n jobs")
+    assert(n <= 4, s"a micro-batch ran $n jobs")
     val (_, again) = jobs(process(1))
     assert(again == 0, s"a redelivered micro-batch ran $again jobs")
     assert(AtomicTable.read(spark, ledgerRoot).as[(String, Long, Long)].collect().toSeq ==

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 
@@ -15,4 +16,12 @@ object PlanTestUtils {
       case a: AdaptiveSparkPlanExec => flatten(a.executedPlan)
       case _ => Nil
     }))
+
+  /** Run `body` with the session conf `key` set to `value`, restoring the
+    * previous setting after. */
+  def withConf[A](spark: SparkSession, key: String, value: String)(body: => A): A = {
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }

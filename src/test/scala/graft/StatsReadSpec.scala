@@ -47,8 +47,12 @@ class StatsReadSpec extends AnyFunSuite {
     assert(df.exceptAll(full).isEmpty && full.exceptAll(df).isEmpty,
       "stats pruning changed the result set")
     // the two prunings COMPOSE: the row-level range predicate must reach
-    // the parquet reader of the already-file-pruned scan (row-group stats)
-    val pushed = df.queryExecution.executedPlan.collect {
+    // the parquet reader of the already-file-pruned scan (row-group stats).
+    // A read this small is served on the driver without a scan, so the
+    // scan is read where the driver-read gate is off.
+    val (scan, _) = PlanTestUtils.withConf(spark, "spark.sql.autoBroadcastJoinThreshold", "-1")(
+      StatsRead.read(spark, root, Seq("id" -> LongRange(1000L, 1200L))))
+    val pushed = scan.queryExecution.executedPlan.collect {
       case s: org.apache.spark.sql.execution.FileSourceScanExec =>
         s.metadata.getOrElse("PushedFilters", "")
     }.mkString(";")

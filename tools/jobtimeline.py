@@ -18,6 +18,10 @@ start, past Spark, Scala, JDK and benchmark-harness frames, innermost
 first: which `stageLocal`, loop action or write opened it; in parentheses
 Spark's own short call site when no engine frame is left) and its plan
 shape, and the jobs of each Structured Streaming micro-batch among them.
+The same table lists, with 0 jobs, each SQL execution that starts in the
+printed span and owns no job at all: a collect served from a local
+relation (a driver-read keyed lookup) runs as an execution without a job,
+and would otherwise drop out of the timeline.
 
 --jobs FIRST:LAST limits the listing to job ids FIRST..LAST (either side
 may be left out: `40:` or `:12`).
@@ -168,12 +172,18 @@ def main():
               f"{j['tasks']:>5} {sql:>5}  {j['site']}")
         if j["end"] is not None:
             prev_end = max(prev_end or 0, j["end"])
-    owned = sorted({jobs[i]["sql"] for i in ids if jobs[i]["sql"] is not None})
-    if owned:
-        width = max([len("engine call site")] + [len(sqls[s]["site"]) for s in owned if s in sqls])
+    owned = {jobs[i]["sql"] for i in ids if jobs[i]["sql"] is not None}
+    # job-less executions from the first printed job up to the next unprinted one
+    with_jobs = {j["sql"] for j in jobs.values()}
+    until = min((j["submit"] for i, j in jobs.items() if i > ids[-1]), default=None)
+    jobless = {s for s, x in sqls.items() if s not in with_jobs and x["start"] >= origin
+               and (until is None or x["start"] < until)}
+    listed = sorted(owned | jobless)
+    if listed:
+        width = max([len("engine call site")] + [len(sqls[s]["site"]) for s in listed if s in sqls])
         print(f"\n{'sql':>5} {'start_ms':>9} {'wall_ms':>7} {'jobs':>4}  "
               f"{'engine call site':<{width}}  plan (root <- leaves)")
-        for s in owned:
+        for s in listed:
             x = sqls.get(s)
             n = sum(1 for i in ids if jobs[i]["sql"] == s)
             if x is None:
@@ -195,6 +205,9 @@ def main():
     busy = sum((jobs[i]["end"] - jobs[i]["submit"]) for i in ids if jobs[i]["end"])
     print(f"\n{len(ids)} jobs, {sum(jobs[i]['tasks'] for i in ids)} tasks over {span} ms "
           f"(job time {busy} ms, overlapping jobs counted each)")
+    if jobless:
+        wall = sum(sqls[s]["end"] - sqls[s]["start"] for s in jobless if sqls[s]["end"])
+        print(f"{len(jobless)} SQL executions without a job (wall {wall} ms)")
 
 
 if __name__ == "__main__":
