@@ -42,9 +42,9 @@ import org.apache.spark.sql.functions._
   * absent or half-deleted manifest.
   *
   * PROBE — one equi-join, no bloom ever crosses to the driver: each probe
-  * key explodes to its k `(bits, k, idx, mask)` positions (same
-  * [[KeyBloom.hashPair]] double-hash walk as the build side, per distinct
-  * (bits, k) in the header); positions join manifest rows on
+  * key explodes to its k `(bits, k, idx, mask)` positions (the build
+  * side's one walk, [[KeyBloom.positions]], per distinct (bits, k) in the
+  * header); positions join manifest rows on
   * `(bits, k, idx)`; a key hits a file's position iff the word covers the
   * mask, and a file is ADMITTED iff some key hits ALL k of its positions
   * (`countDistinct(position) == k` — an absent row is a zero word, a
@@ -192,80 +192,17 @@ object BloomManifest {
       case ((f, c), h) if c == keyCol && h.kind == kind => f
     }.toSet
 
-  /** The k (idx, mask) word positions of a key at (bits, k) — the SAME
-    * double-hash walk as [[KeyBloom.BloomRow.mightContain]]; build and
-    * probe must be this one function applied on either side. */
-  private def positions(bytes: Array[Byte], bits: Int, k: Int): Array[(Int, Long)] = {
-    val (h1, h2) = KeyBloom.hashPair(bytes)
-    Array.tabulate(k) { i =>
-      val pos = (((h1 + i * h2) % bits + bits) % bits).toInt
-      (pos >>> 6, 1L << (pos & 63))
-    }
-  }
-
-  /** ONE distributed build pass over `files` for `keyCol`: explode keys to
-    * word positions, `bit_or`-reduce per (file, idx) — only non-zero words
-    * become rows, and none of them ever reaches the driver. Returns the
-    * row frame and the key kind. */
-  private def buildRowsDf(spark: SparkSession, files: Seq[Path], keyCol: String,
+  /** [[KeyBloom.wordRows]] in the manifest's row shape: the column, kind,
+    * bits and k as literals beside each non-zero word. None of them ever
+    * reaches the driver. Returns the rows and the key kind. */
+  private def manifestRows(spark: SparkSession, files: Seq[Path], cname: String,
       bits: Int, k: Int): (DataFrame, String) = {
-    require(bits >= 64 && (bits & (bits - 1)) == 0,
-      s"bits must be a power of two >= 64: $bits")
-    import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
-    val kind = Footers.schema(spark, files.head)(keyCol).dataType match {
-      case LongType | IntegerType => "long"
-      case StringType => "string"
-      case t => throw new IllegalArgumentException(
-        s"bloom manifest supports BIGINT/INT/STRING keys, not $t")
-    }
-    val masks =
-      if (kind == "long") udf((key: java.lang.Long) =>
-        if (key == null) Array.empty[(Int, Long)]
-        else positions(KeyBloom.longBytes(key), bits, k))
-      else udf((s: String) =>
-        if (s == null) Array.empty[(Int, Long)]
-        else positions(KeyBloom.stringBytes(s), bits, k))
-    val masked = Footers.read(spark, files)
-      .select(input_file_name().as("f"), explode(masks(col(keyCol))).as("m"))
-    (rowsFromMasks(masked, keyCol, kind, bits, k), kind)
+    val (rows, kind) =
+      KeyBloom.wordRows(spark, files, CompositeKey.componentsOf(cname), bits, k)
+    (rows.select(lit(cname).as("cname"), lit(kind).as("kind"),
+      lit(bits).as("bits"), lit(k).as("k"), col("file"), col("idx"), col("word")),
+      kind)
   }
-
-  /** The shared row shape both build regimes reduce into. */
-  private def rowsFromMasks(masked: DataFrame, cname: String, kind: String,
-      bits: Int, k: Int): DataFrame =
-    masked.groupBy(col("f"), col("m._1").as("idx"))
-      .agg(expr("bit_or(m._2)").as("word"))
-      .select(lit(cname).as("cname"), lit(kind).as("kind"),
-        lit(bits).as("bits"), lit(k).as("k"),
-        expr("url_decode(element_at(split(f, '/'), -1))").as("file"),
-        col("idx"), col("word"))
-
-  /** [[buildRowsDf]] dispatching on the column name: a COMPOSITE name
-    * ([[CompositeKey.Sep]]-joined components) hashes the length-framed
-    * canonical tuple bytes under the single composite cname — the probe
-    * side ([[probe]]/[[probeBulkBytes]]) is already generic over
-    * (cname, kind, bytes) and needs nothing. */
-  private def buildRowsDfFor(spark: SparkSession, files: Seq[Path],
-      cname: String, bits: Int, k: Int): (DataFrame, String) =
-    if (!CompositeKey.isComposite(cname)) buildRowsDf(spark, files, cname, bits, k)
-    else {
-      require(bits >= 64 && (bits & (bits - 1)) == 0,
-        s"bits must be a power of two >= 64: $bits")
-      val keyCols = CompositeKey.componentsOf(cname)
-      val schema = Footers.schema(spark, files.head)
-      val kinds = CompositeKey.kindsOf(schema, keyCols).getOrElse(
-        throw new IllegalArgumentException(
-          s"composite bloom manifest supports BIGINT/INT/STRING components, got " +
-            keyCols.map(c => schema(c).dataType).mkString(", ")))
-      val kind = CompositeKey.kindName(kinds)
-      val masks = udf((b: Array[Byte]) =>
-        if (b == null) Array.empty[(Int, Long)] else positions(b, bits, k))
-      val bytesCol = CompositeKey.bytesUdf(kinds)(
-        struct(CompositeKey.keySelect(kinds, keyCols): _*))
-      val masked = Footers.read(spark, files)
-        .select(input_file_name().as("f"), explode(masks(bytesCol)).as("m"))
-      (rowsFromMasks(masked, cname, kind, bits, k), kind)
-    }
 
   /** Write `rows` as a shard generation, range-sharded and sorted on
     * (cname, idx) so probe pushdown prunes row groups. No explicit shard
@@ -296,29 +233,18 @@ object BloomManifest {
     pruneGens(mPath, Set(gen) ++ prev)
   }
 
-  /** Build (or extend) the LIVE version's bloom MANIFEST for `keyCol` at
-    * `bits` — the 10⁶-file twin of [[KeyBloom.indexKeyBloom]]. Metadata
-    * augmentation only; the build is distributed end to end (the driver
-    * handles file NAMES). Extending an existing manifest rewrites it as
-    * the next generation in one executor pass (read ∪ fresh rows →
-    * re-shard) under the atomic header flip. Returns the number of files
-    * indexed. */
-  def indexBloomManifest(spark: SparkSession, root: String, keyCol: String,
-      bits: Int = KeyBloom.DefaultBits, k: Int = KeyBloom.NumHashes): Int =
-    indexManifestFor(spark, root, keyCol, bits, k)
-
-  /** [[indexBloomManifest]]'s COMPOSITE twin: manifest-bloom the key TUPLE
-    * under one manifest column — the >= 10⁶-file path for composite point
-    * merges/deletes/reads ([[CompositeKey]]). */
-  def indexBloomManifestTuple(spark: SparkSession, root: String,
-      keyCols: Seq[String], bits: Int = KeyBloom.DefaultBits,
-      k: Int = KeyBloom.NumHashes): Int = {
-    require(keyCols.size >= 2, "composite manifest needs >= 2 key columns")
-    indexManifestFor(spark, root, CompositeKey.colName(keyCols), bits, k)
-  }
-
-  private def indexManifestFor(spark: SparkSession, root: String, keyCol: String,
-      bits: Int, k: Int): Int = {
+  /** Build (or extend) the LIVE version's bloom MANIFEST for `keyCols` at
+    * `bits` — the 10⁶-file twin of [[KeyBloom.indexKeyBloom]]: one column,
+    * or a key TUPLE under one manifest column (the path for composite point
+    * merges/deletes/reads, [[CompositeKey]]). Metadata augmentation only;
+    * the build is distributed end to end (the driver handles file NAMES).
+    * Extending an existing manifest rewrites it as the next generation in
+    * one executor pass (read ∪ fresh rows → re-shard) under the atomic
+    * header flip. Returns the number of files indexed. */
+  def indexBloomManifest(spark: SparkSession, root: String, keyCols: Seq[String],
+      bits: Int = KeyBloom.DefaultBits, k: Int = KeyBloom.NumHashes): Int = {
+    require(keyCols.nonEmpty, "a bloom needs at least one key column")
+    val cname = CompositeKey.colName(keyCols)
     val live = AtomicTable.currentVersion(root).getOrElse(
       throw new IllegalStateException(s"no live version at $root"))
     val liveDir = java.nio.file.Paths.get(root, live)
@@ -333,9 +259,9 @@ object BloomManifest {
     // top-level shard is provably stale.
     if (shardDir(liveDir).isDefined)
       shardFiles(manifestPath(liveDir)).foreach(Files.deleteIfExists(_))
-    val missing = files.filter(f => !header.contains((f.getFileName.toString, keyCol)))
+    val missing = files.filter(f => !header.contains((f.getFileName.toString, cname)))
     if (missing.isEmpty) return 0
-    val (freshRows, kind) = buildRowsDfFor(spark, missing, keyCol, bits, k)
+    val (freshRows, kind) = manifestRows(spark, missing, cname, bits, k)
     // carry: live generation first; a LEGACY (pre-generation) manifest's
     // top-level shards migrate into the new generation; a header with no
     // rows anywhere is STALE COVERAGE and must be dropped, not republished
@@ -350,12 +276,12 @@ object BloomManifest {
     }
     val all = carriedRows.fold(freshRows)(_.unionByName(freshRows))
     publishGen(spark, liveDir, all, carriedHeader ++ missing.map(f =>
-      (f.getFileName.toString, keyCol) -> HeaderRow(kind, bits, k)))
+      (f.getFileName.toString, cname) -> HeaderRow(kind, bits, k)))
     // a migrated legacy layout leaves its top-level shards behind — gone
     // now that the generation holds their rows
     if (shardDir(liveDir).isDefined) legacy.foreach(Files.deleteIfExists(_))
     // first-bloom witness for the advisor's structural-vs-drift call
-    Maintenance.recordBloomBaseline(spark, root, keyCol)
+    Maintenance.recordBloomBaseline(spark, root, cname)
     missing.size
   }
 
@@ -389,7 +315,7 @@ object BloomManifest {
     val pos: Seq[(Int, Int, Int, Long, Int, Int)] = for {
       (bits, k) <- combos
       (kb, keyId) <- keyBytes.zipWithIndex
-      (pws, i) <- positions(kb, bits, k).zipWithIndex
+      (pws, i) <- KeyBloom.positions(kb, bits, k).zipWithIndex
     } yield (bits, k, pws._1, pws._2, keyId, i)
     import spark.implicits._
     val posDf = broadcast(pos.toDF("bits", "k", "idx", "mask", "keyId", "p"))
@@ -453,7 +379,7 @@ object BloomManifest {
     val posPerCombo = combos.map { case (bits, k) =>
       val posUdf = udf((b: Array[Byte]) =>
         if (b == null) Array.empty[(Int, Long, Int)]
-        else positions(b, bits, k).zipWithIndex
+        else KeyBloom.positions(b, bits, k).zipWithIndex
           .map { case ((i, m), p) => (i, m, p) })
       keyed.select(col("__k"), explode(posUdf(col("__k"))).as("m"))
         .select(lit(bits).as("bits"), lit(k).as("k"),
@@ -498,21 +424,11 @@ object BloomManifest {
         val legacy = shardFiles(manifestPath(liveDir))
         if (legacy.isEmpty) return else manifestPath(liveDir)
       }
-    val freshFiles = TargetedDelete.partFiles(stageDir)
-      .filterNot(p => reusedNames(p.getFileName.toString))
-    // graceful lapse for dropped/retyped columns (mirrors the TSV path)
-    val freshCols: Set[String] =
-      if (freshFiles.isEmpty) Set.empty
-      else KeyBloom.bloomableCols(spark, freshFiles.head)
-    // composite columns survive iff every component does (same graceful
-    // lapse as the TSV path)
-    val cols = header.keys.map(_._2).toSeq.distinct.sorted
-      .filter(c => CompositeKey.componentsOf(c).forall(freshCols.contains))
-    val freshPerCol = cols.map { c =>
-      val hs = header.collect { case ((_, cc), h) if cc == c => h }
-      val bits = hs.map(_.bits).max
-      val k = hs.map(_.k).max
-      (c, bits, k, buildRowsDfFor(spark, freshFiles, c, bits, k))
+    // the TSV path's survival rule: dropped/retyped columns lapse
+    val (freshFiles, cols) = KeyBloom.rebuilds(spark, stageDir, reusedNames,
+      header.map { case ((_, c), h) => (c, h.bits, h.k) })
+    val freshPerCol = cols.map { case (c, bits, k) =>
+      (c, bits, k, manifestRows(spark, freshFiles, c, bits, k))
     }
     val outM = manifestPath(stageDir)
     val outGen = outM.resolve("g1")

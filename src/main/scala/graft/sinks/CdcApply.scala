@@ -98,26 +98,6 @@ object CdcApply {
   def streamRoot(dir: String): String =
     "spark-warehouse/s23_cdc_stream_" + new java.io.File(dir).getName
 
-  /** The feed cut into three micro-batch files: seq-1 changes split by key
-    * parity, then ALL seq-2 entries (the class-2 deletes) last — so a key's
-    * update and its later delete land in DIFFERENT micro-batches and the
-    * per-batch apply must net to the delete across committed state. */
-  private def writeFeedSlice(feedDir: String, feed: DataFrame, i: Int): Unit = {
-    import java.nio.file.{Files, Paths}
-    val slice = i match {
-      case 0 => feed.filter(col("seq") === 1 && col("id") % 2 === 0)
-      case 1 => feed.filter(col("seq") === 1 && col("id") % 2 === 1)
-      case 2 => feed.filter(col("seq") === 2)
-    }
-    val f = s"$feedDir/b$i"
-    slice.coalesce(1).write.mode("overwrite").parquet(f)
-    // mtime order = delivery order under maxFilesPerTrigger=1
-    val it = Files.list(Paths.get(f))
-    try it.forEach(p => Files.setLastModifiedTime(p,
-      java.nio.file.attribute.FileTime.fromMillis(1700000000000L + i * 60000L)))
-    finally it.close()
-  }
-
   /** STREAMED CDC APPLY, driver-gated: the synthesized changeset arrives as
     * files through an AvailableNow file stream (maxFilesPerTrigger=1), each
     * micro-batch applied onto the COMMITTED table state and committed through
@@ -154,7 +134,11 @@ object CdcApply {
     // three slices read the same tiny materialized changeset. Size-gated —
     // the synthesized feed spans the key space, i.e. table-sized at scale.
     val feed = Tables.stageLocal(changeFeed(spark, dir))
-    // the two pre-restart slices land in ONE partitioned write job (the
+    // the feed as three micro-batch files: seq-1 changes split by key
+    // parity, then ALL seq-2 entries (the class-2 deletes) last — so a
+    // key's update and its later delete land in DIFFERENT micro-batches and
+    // the per-batch apply must net to the delete across committed state.
+    // The two pre-restart slices land in ONE partitioned write job (the
     // third is written mid-corridor, after the crash window — see below)
     FeedSlices.writeSlices(feed.filter(col("seq") === 1)
       .withColumn(FeedSlices.SliceCol, (col("id") % 2).cast("int")), feedDir, 2)
@@ -195,7 +179,7 @@ object CdcApply {
     // stale CRC must go too or the re-commit's rename fails on it.
     Files.delete(Paths.get(ckpt, "commits", "1"))
     Files.deleteIfExists(Paths.get(ckpt, "commits", ".1.crc"))
-    writeFeedSlice(feedDir, feed, 2)
+    FeedSlices.writeSlice(feed.filter(col("seq") === 2), feedDir, 2)
     runStream() // redelivers 1 (must skip), then applies 2
     if (redelivered.get != 1 || applied.get != 3)
       throw new IllegalStateException(
@@ -387,7 +371,7 @@ object CdcApply {
       throw new IllegalStateException(
         s"fixture premise broken: min/max stats pruned a scattered key ($rsStats)")
     // bits sized from observed rows-per-file so the gates hold at ANY SF
-    KeyBloom.indexKeyBloom(spark, root, "doc_hash",
+    KeyBloom.indexKeyBloom(spark, root, Seq("doc_hash"),
       KeyBloom.bitsFor(nRows / BloomMergeFiles + 1))
     val prev = AtomicTable.currentVersion(root).get
     val ms = KeyedMerge.merge(spark, root, Seq("doc_hash"), changes, upsertDocs)

@@ -28,13 +28,12 @@ import graft.Tables
   *    under ONE sidecar/manifest column — the component names joined by
   *    [[Sep]] — hashing the LENGTH-FRAMED concatenation of each
   *    component's canonical bytes (8-byte big-endian longs, UTF-8
-  *    strings; framing keeps ("ab","c")≠("a","bc")). The same
-  *    double-hash walk as every other bloom, so [[BloomManifest.probe]]
-  *    serves composite probes UNCHANGED — only the build side needed a
-  *    tuple entry point ([[KeyBloom.indexKeyBloomTuple]],
-  *    [[BloomManifest.indexBloomManifestTuple]]); staging passes
-  *    self-maintain composite rows whenever every component survives the
-  *    rewrite.
+  *    strings; framing keeps ("ab","c")≠("a","bc")). One build serves
+  *    both arities and both backends ([[KeyBloom.wordRows]] over
+  *    [[keyBytes]]) with the same double-hash walk as every probe, so
+  *    [[KeyBloom.indexKeyBloom]] and [[BloomManifest.indexBloomManifest]]
+  *    take one column or a tuple alike; staging passes self-maintain
+  *    composite rows whenever every component survives the rewrite.
   *
   * One key column and several take the same admission
   * ([[FileAdmission]]): a single key is a 1-tuple. NULL semantics match
@@ -72,6 +71,12 @@ object CompositeKey {
     * identity, so a probe whose changeset types drifted from the build's
     * ignores the rows (conservative) instead of hashing different bytes. */
   def kindName(kinds: Seq[String]): String = "tuple:" + kinds.mkString(",")
+
+  /** The bloom column and row kind of a key over `keyCols`: one column
+    * keeps its own name and kind, several share [[colName]] and
+    * [[kindName]]. */
+  private[sinks] def bloomId(keyCols: Seq[String], kinds: Seq[String]): (String, String) =
+    (colName(keyCols), if (kinds.size == 1) kinds.head else kindName(kinds))
 
   private def canonicalBytes(kind: String, v: Any): Array[Byte] = kind match {
     case "long" => KeyBloom.longBytes(v.asInstanceOf[Number].longValue)
@@ -299,7 +304,7 @@ object CompositeKey {
   /** COMPOSITE BLOOM ON SCATTERED COLUMNS, decided DISTRIBUTED: the corpus
     * carries two hash keys (h1, h2) no layout clusters — per-column hulls
     * admit ~every file even CONJUNCTIVELY (asserted premise) — and the
-    * tuple bloom manifest ([[BloomManifest.indexBloomManifestTuple]],
+    * tuple bloom manifest ([[BloomManifest.indexBloomManifest]] on (h1, h2):
     * length-framed concatenated bytes under one manifest column) is the
     * only thing standing between a point tuple lookup and a full scan.
     * THROWS unless the premise holds, the read plans <= 6 of >= 24 files
@@ -326,7 +331,7 @@ object CompositeKey {
       " — the tuple bloom is not load-bearing here")
     KeyBloom.loadCalls.get() // touch to force init before the flat check
     val loads0 = KeyBloom.loadCalls.get()
-    BloomManifest.indexBloomManifestTuple(spark, root, Seq("h1", "h2"),
+    BloomManifest.indexBloomManifest(spark, root, Seq("h1", "h2"),
       KeyBloom.bitsFor(nRows / BloomTupleFiles + 1))
     val (df, rs) = StatsRead.readTupleIn(spark, root, Seq("h1", "h2"),
       tupleFrame(spark, Seq("h1", "h2"), Seq("string", "string"), tuples))
@@ -381,7 +386,7 @@ object CompositeKey {
         root, statsCols = Seq("h1", "h2"))
       // PRODUCTION bloom sizing (the bitsFor cap) — the sizing whose dense
       // TSV twin could never ride the driver at this file count
-      BloomManifest.indexBloomManifestTuple(spark, root, Seq("h1", "h2"),
+      BloomManifest.indexBloomManifest(spark, root, Seq("h1", "h2"),
         bits = 1 << 26)
     }
   }

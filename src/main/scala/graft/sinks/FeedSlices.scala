@@ -23,8 +23,9 @@ import org.apache.spark.sql.functions._
   *
   * A slice value absent from the data would produce no partition directory
   * (where the old per-slice write emitted one empty parquet file), so the
-  * rare empty slice falls back to exactly that old write — the corridor
-  * batch counts cannot drift. */
+  * rare empty slice falls back to exactly that old write, [[writeSlice]] —
+  * the corridor batch counts cannot drift. A feed slice that must land
+  * later (after a simulated crash) is written with it alone. */
 private[graft] object FeedSlices {
 
   /** The slice column callers attach; consumed by the partitioned write. */
@@ -53,13 +54,17 @@ private[graft] object FeedSlices {
       AtomicTable.deleteRecursively(dst)
       if (Files.exists(src)) {
         Files.move(src, dst)
-      } else {
-        // empty slice: reproduce the old per-slice write (one empty file)
-        df.filter(col(SliceCol) === i).drop(SliceCol).coalesce(1)
-          .write.mode("overwrite").parquet(dst.toString)
-      }
-      stampDir(dst, i)
+        stampDir(dst, i)
+      } else writeSlice(df.filter(col(SliceCol) === i).drop(SliceCol), feedDir, i)
     }
     AtomicTable.deleteRecursively(tmp)
+  }
+
+  /** Write one slice `df` as `<feedDir>/b<i>`: one parquet file (an empty
+    * one when `df` is empty) stamped with slice i's delivery mtime. */
+  def writeSlice(df: DataFrame, feedDir: String, i: Int): Unit = {
+    val dst = Paths.get(feedDir, s"b$i")
+    df.coalesce(1).write.mode("overwrite").parquet(dst.toString)
+    stampDir(dst, i)
   }
 }

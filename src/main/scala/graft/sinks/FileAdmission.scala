@@ -49,11 +49,6 @@ private[sinks] object FileAdmission {
 
   private def decode(kind: String, v: String): Any = if (kind == "long") v.toLong else v
 
-  /** The bloom column and row kind a key over `keyCols` probes. */
-  private def bloomId(keyCols: Seq[String], kinds: Seq[String]): (String, String) =
-    (CompositeKey.colName(keyCols),
-      if (kinds.size == 1) kinds.head else CompositeKey.kindName(kinds))
-
   private def tuples(kinds: Seq[String], rows: Seq[Seq[Any]]): Tuples =
     Tuples(kinds, rows.distinct.sortBy(_.head)(order(kinds.head)).toIndexedSeq)
 
@@ -69,7 +64,7 @@ private[sinks] object FileAdmission {
     * for one of them when the sidecar is silent: the bloom decides it. */
   def bloomCovered(dir: Path, blooms: Map[(String, String), KeyBloom.BloomRow],
       keyCols: Seq[String], keys: Tuples): Set[String] = {
-    val (cname, kind) = bloomId(keyCols, keys.kinds)
+    val (cname, kind) = CompositeKey.bloomId(keyCols, keys.kinds)
     blooms.collect { case ((f, c), b) if c == cname && b.kind == kind => f }.toSet ++
       BloomManifest.coveredFiles(dir, cname, kind)
   }
@@ -122,7 +117,7 @@ private[sinks] object FileAdmission {
     keys match {
       case None => Admitted(hull.toSet, 0, 0)
       case Some(t) =>
-        val (cname, kind) = bloomId(keyCols, t.kinds)
+        val (cname, kind) = CompositeKey.bloomId(keyCols, t.kinds)
         val covered = BloomManifest.coveredFiles(dir, cname, kind)
         val manifest =
           if (!hull.exists(covered)) None
@@ -233,7 +228,7 @@ private[sinks] object FileAdmission {
       val distinctKeys = keyed.distinct().localCheckpoint(true)
       val stable = changes.filter(anyNull)
         .unionAll(changes.join(distinctKeys, keyCols, "left_semi"))
-      val (cname, kind) = bloomId(keyCols, kinds)
+      val (cname, kind) = CompositeKey.bloomId(keyCols, kinds)
       val speaks = keyCols.zip(kinds).map { case (c, k) =>
         names.flatMap(n => rows.get((n, c)).filter(_.kind == k).map(n -> _))
       }

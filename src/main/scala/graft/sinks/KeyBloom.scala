@@ -4,9 +4,8 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
 
 /** PER-FILE BLOOM SIDECAR — point-lookup skipping on UNCLUSTERED keys (r17
   * verdict item 2). Min/max statistics prune nothing on a randomly-ordered
@@ -70,16 +69,8 @@ object KeyBloom {
     * ("long" | "string") — a probe of the other family ignores the row
     * (conservative fallback) rather than probing bytes hashed differently. */
   final case class BloomRow(kind: String, bits: Int, k: Int, words: Array[Long]) {
-    def mightContain(keyBytes: Array[Byte]): Boolean = {
-      val (h1, h2) = hashPair(keyBytes)
-      var i = 0
-      while (i < k) {
-        val pos = (((h1 + i * h2) % bits + bits) % bits).toInt
-        if ((words(pos >>> 6) & (1L << (pos & 63))) == 0L) return false
-        i += 1
-      }
-      true
-    }
+    def mightContain(keyBytes: Array[Byte]): Boolean =
+      positions(keyBytes, bits, k).forall { case (w, m) => (words(w) & m) != 0L }
   }
 
   /** Double hash: FNV-1a 64 under two offset bases, each finalized with a
@@ -118,12 +109,13 @@ object KeyBloom {
   private[sinks] def stringBytes(s: String): Array[Byte] =
     s.getBytes(StandardCharsets.UTF_8)
 
-  /** The k bit positions of a key, packed as (wordIdx, bitMask) — the build
-    * side's explode payload; the probe side recomputes the same walk in
-    * [[BloomRow.mightContain]]. */
-  private def wordMasks(bytes: Array[Byte], bits: Int): Array[(Int, Long)] = {
+  /** The k bit positions of a key at `bits`, packed as (wordIdx, bitMask)
+    * — the one double-hash walk: the build ([[wordRows]]), the TSV probe
+    * ([[BloomRow.mightContain]]) and both manifest probes apply this
+    * function, so their bits agree by construction. */
+  private[sinks] def positions(bytes: Array[Byte], bits: Int, k: Int): Array[(Int, Long)] = {
     val (h1, h2) = hashPair(bytes)
-    Array.tabulate(NumHashes) { i =>
+    Array.tabulate(k) { i =>
       val pos = (((h1 + i * h2) % bits + bits) % bits).toInt
       (pos >>> 6, 1L << (pos & 63))
     }
@@ -131,15 +123,6 @@ object KeyBloom {
 
   private def enc(s: String): String = java.net.URLEncoder.encode(s, "UTF-8")
   private def dec(s: String): String = java.net.URLDecoder.decode(s, "UTF-8")
-
-  /** The columns of `file` whose type family both bloom backends accept —
-    * ONE schema open shared by the TSV and manifest maintenance passes
-    * (a retyped column lapses like a dropped one). */
-  private[sinks] def bloomableCols(spark: SparkSession, file: Path): Set[String] =
-    Footers.schema(spark, file).fields.collect {
-      case f if Set[org.apache.spark.sql.types.DataType](
-        LongType, IntegerType, StringType)(f.dataType) => f.name
-    }.toSet
 
   /** TEST-ONLY instrumentation (the [[KeyStats.footerOpens]] pattern):
     * how many times the TSV sidecar was driver-materialized. The sharded
@@ -178,116 +161,73 @@ object KeyBloom {
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** The build core: ONE distributed pass over `files` for `keyCol` at
-    * `bits` (`input_file_name` grouping — no per-file jobs), `bit_or`-
-    * reduced to non-zero words. A 0-row file gets an all-zero bloom (every
-    * probe misses — whole-file skip, correct by construction). */
-  private def buildRows(spark: SparkSession, files: Seq[Path], keyCol: String,
-      bits: Int): Map[(String, String), BloomRow] = {
-    require(bits >= 64 && (bits & (bits - 1)) == 0, s"bits must be a power of two >= 64: $bits")
-    if (files.isEmpty) return Map.empty
-    val kind = Footers.schema(spark, files.head)(keyCol).dataType match {
-      case LongType | IntegerType => "long"
-      case StringType => "string"
-      case t => throw new IllegalArgumentException(
-        s"bloom index supports BIGINT/INT/STRING keys, not $t")
-    }
-    val masks =
-      if (kind == "long") udf((k: java.lang.Long) =>
-        if (k == null) Array.empty[(Int, Long)] else wordMasks(longBytes(k), bits))
-      else udf((s: String) =>
-        if (s == null) Array.empty[(Int, Long)] else wordMasks(stringBytes(s), bits))
-    val collected = Footers.read(spark, files)
-      .select(input_file_name().as("f"), explode(masks(col(keyCol))).as("m"))
-      .groupBy(col("f"), col("m._1").as("w"))
-      .agg(expr("bit_or(m._2)").as("word"))
-      .collect()
-    val byFile = collected.groupBy(r => Paths.get(new java.net.URI(r.getString(0)).getPath)
-      .getFileName.toString)
-    files.map { f =>
-      val name = f.getFileName.toString
-      val words = new Array[Long](bits >>> 6)
-      byFile.getOrElse(name, Array.empty).foreach { r =>
-        words(r.getInt(1)) |= r.getLong(2)
-      }
-      (name, keyCol) -> BloomRow(kind, bits, NumHashes, words)
-    }.toMap
-  }
-
-  /** [[buildRows]] for a COMPOSITE key: one distributed pass hashing the
-    * LENGTH-FRAMED canonical tuple bytes ([[CompositeKey.tupleBytes]]) —
-    * rows land under the single composite column name with the tuple's
-    * kind string, so probes of drifted component types ignore them. A row
-    * with any NULL component contributes nothing (a null tuple is not a
-    * key). */
-  private def buildRowsTuple(spark: SparkSession, files: Seq[Path],
-      keyCols: Seq[String], bits: Int): Map[(String, String), BloomRow] = {
+  /** THE bloom build, one distributed pass shared by both backends: each
+    * key of `keyCols` in `files` hashes as [[CompositeKey.keyBytes]] (one
+    * column's canonical bytes, several columns' length-framed tuple; a
+    * NULL anywhere is not a key), explodes to its k [[positions]], and a
+    * map-side-combinable `bit_or` per (file, idx) reduces to the non-zero
+    * words — `input_file_name` grouping, no per-file jobs. Returns the
+    * `(file, idx, word)` rows, `file` the part file's decoded name, and the
+    * key kind: the component's for one column, [[CompositeKey.kindName]]
+    * for several, so a probe whose key types drifted ignores the rows. */
+  private[sinks] def wordRows(spark: SparkSession, files: Seq[Path],
+      keyCols: Seq[String], bits: Int, k: Int): (DataFrame, String) = {
     require(bits >= 64 && (bits & (bits - 1)) == 0,
       s"bits must be a power of two >= 64: $bits")
-    if (files.isEmpty) return Map.empty
-    val schema = Footers.schema(spark, files.head)
-    val kinds = CompositeKey.kindsOf(schema, keyCols).getOrElse(
+    val data = Footers.read(spark, files)
+    val kinds = CompositeKey.kindsOf(data.schema, keyCols).getOrElse(
       throw new IllegalArgumentException(
-        s"composite bloom supports BIGINT/INT/STRING components, got " +
-          keyCols.map(c => schema(c).dataType).mkString(", ")))
-    val cname = CompositeKey.colName(keyCols)
-    val kind = CompositeKey.kindName(kinds)
+        s"bloom index supports BIGINT/INT/STRING keys, got " +
+          keyCols.map(c => data.schema(c).dataType).mkString(", ")))
     val masks = udf((b: Array[Byte]) =>
-      if (b == null) Array.empty[(Int, Long)] else wordMasks(b, bits))
+      if (b == null) Array.empty[(Int, Long)] else positions(b, bits, k))
     val bytesCol = CompositeKey.bytesUdf(kinds)(
       struct(CompositeKey.keySelect(kinds, keyCols): _*))
-    val collected = Footers.read(spark, files)
-      .select(input_file_name().as("f"), explode(masks(bytesCol)).as("m"))
-      .groupBy(col("f"), col("m._1").as("w"))
+    val rows = data.select(input_file_name().as("f"), explode(masks(bytesCol)).as("m"))
+      .groupBy(col("f"), col("m._1").as("idx"))
       .agg(expr("bit_or(m._2)").as("word"))
-      .collect()
-    val byFile = collected.groupBy(r =>
-      Paths.get(new java.net.URI(r.getString(0)).getPath).getFileName.toString)
+      .select(expr("url_decode(element_at(split(f, '/'), -1))").as("file"),
+        col("idx"), col("word"))
+    (rows, CompositeKey.bloomId(keyCols, kinds)._2)
+  }
+
+  /** The sidecar rows of `files` for `keyCols` at `bits`: [[wordRows]]
+    * collected per file. A file with no key gets an all-zero bloom (every
+    * probe misses — whole-file skip, correct by construction). */
+  private def sidecarRows(spark: SparkSession, files: Seq[Path],
+      keyCols: Seq[String], bits: Int): Map[(String, String), BloomRow] = {
+    val (rows, kind) = wordRows(spark, files, keyCols, bits, NumHashes)
+    val byFile = rows.collect().groupBy(_.getString(0))
     files.map { f =>
       val name = f.getFileName.toString
       val words = new Array[Long](bits >>> 6)
       byFile.getOrElse(name, Array.empty).foreach { r =>
         words(r.getInt(1)) |= r.getLong(2)
       }
-      (name, cname) -> BloomRow(kind, bits, NumHashes, words)
+      (name, CompositeKey.colName(keyCols)) -> BloomRow(kind, bits, NumHashes, words)
     }.toMap
   }
 
-  /** [[indexKeyBloom]]'s COMPOSITE twin: bloom the key TUPLE under one
-    * sidecar column (the [[CompositeKey.Sep]]-joined component names).
-    * Returns the number of files indexed. */
-  def indexKeyBloomTuple(spark: SparkSession, root: String,
-      keyCols: Seq[String], bits: Int = DefaultBits): Int = {
-    require(keyCols.size >= 2, "composite bloom needs >= 2 key columns")
+  /** Build (or extend) the LIVE version's `_KEYBLOOM` for `keyCols` over the
+    * not-yet-indexed files — one column, or a key TUPLE under one sidecar
+    * column (the [[CompositeKey.Sep]]-joined component names). Returns the
+    * number of files indexed. Metadata augmentation only — data files are
+    * never touched. */
+  def indexKeyBloom(spark: SparkSession, root: String, keyCols: Seq[String],
+      bits: Int = DefaultBits): Int = {
+    require(keyCols.nonEmpty, "a bloom needs at least one key column")
     val live = AtomicTable.currentVersion(root).getOrElse(
       throw new IllegalStateException(s"no live version at $root"))
     val liveDir = Paths.get(root, live)
-    TargetedDelete.requireFlatLayout(liveDir, "composite bloom indexing")
+    TargetedDelete.requireFlatLayout(liveDir, "bloom indexing")
     val cname = CompositeKey.colName(keyCols)
     val old = loadBlooms(liveDir)
     val missing = TargetedDelete.partFiles(liveDir)
       .filter(f => !old.contains((f.getFileName.toString, cname)))
     if (missing.isEmpty) return 0
-    writeBlooms(liveDir, old ++ buildRowsTuple(spark, missing, keyCols, bits))
-    missing.size
-  }
-
-  /** Build (or extend) the LIVE version's `_KEYBLOOM` for `keyCol` over the
-    * not-yet-indexed files. Returns the number of files indexed. Metadata
-    * augmentation only — data files are never touched. */
-  def indexKeyBloom(spark: SparkSession, root: String, keyCol: String,
-      bits: Int = DefaultBits): Int = {
-    val live = AtomicTable.currentVersion(root).getOrElse(
-      throw new IllegalStateException(s"no live version at $root"))
-    val liveDir = Paths.get(root, live)
-    TargetedDelete.requireFlatLayout(liveDir, "bloom indexing")
-    val old = loadBlooms(liveDir)
-    val missing = TargetedDelete.partFiles(liveDir)
-      .filter(f => !old.contains((f.getFileName.toString, keyCol)))
-    if (missing.isEmpty) return 0
-    writeBlooms(liveDir, old ++ buildRows(spark, missing, keyCol, bits))
+    writeBlooms(liveDir, old ++ sidecarRows(spark, missing, keyCols, bits))
     // first-bloom witness for the advisor's structural-vs-drift call
-    Maintenance.recordBloomBaseline(spark, root, keyCol)
+    Maintenance.recordBloomBaseline(spark, root, cname)
     missing.size
   }
 
@@ -361,26 +301,34 @@ object KeyBloom {
     BloomManifest.maintainStage(spark, liveDir, stageDir, reusedNames)
     if (old.isEmpty) return
     val carried = old.filter { case ((f, _), _) => reusedNames(f) }
+    val (freshFiles, cols) = rebuilds(spark, stageDir, reusedNames,
+      old.map { case ((_, c), b) => (c, b.bits, b.k) })
+    val fresh = cols.flatMap { case (c, bits, _) =>
+      sidecarRows(spark, freshFiles, CompositeKey.componentsOf(c), bits)
+    }.toMap
+    if (carried.nonEmpty || fresh.nonEmpty) writeBlooms(stageDir, carried ++ fresh)
+  }
+
+  /** The survival rule of a staging pass, shared by both backends: the
+    * files the stage wrote fresh, and each predecessor bloom column (from
+    * its `(column, bits, k)` rows) that rebuilds over them at the widest
+    * bits and k it had. A column survives iff every component is still
+    * present with a bloomable type — a full-rewrite merge may DROP, RENAME
+    * or retype a bloomed column, and its rows then lapse instead of
+    * failing the merge (r18 advisory); a composite survives iff every
+    * component does. Opens one footer, none when nothing was written fresh. */
+  private[sinks] def rebuilds(spark: SparkSession, stageDir: Path,
+      reusedNames: Set[String], sizes: Iterable[(String, Int, Int)])
+      : (Seq[Path], Seq[(String, Int, Int)]) = {
     val freshFiles = TargetedDelete.partFiles(stageDir)
       .filterNot(p => reusedNames(p.getFileName.toString))
-    // a full-rewrite merge (reused empty — the link-reuse schema guard
-    // never ran) may legitimately DROP or RENAME a bloomed column; absent
-    // columns are skipped (their bloom rows lapse) instead of failing the
-    // whole merge from inside buildRows (r18 advisory)
-    val freshCols: Set[String] =
-      if (freshFiles.isEmpty) Set.empty
-      else bloomableCols(spark, freshFiles.head)
-    // a COMPOSITE bloom column survives iff EVERY component survives the
-    // rewrite with a bloomable type — then its rows rebuild from the
-    // framed tuple bytes exactly like the build side
-    val fresh = old.keys.map(_._2).toSeq.distinct.sorted
-      .filter(c => CompositeKey.componentsOf(c).forall(freshCols.contains))
-      .flatMap { c =>
-        val bits = old.collect { case ((_, cc), b) if cc == c => b.bits }.max
-        if (CompositeKey.isComposite(c))
-          buildRowsTuple(spark, freshFiles, CompositeKey.componentsOf(c), bits)
-        else buildRows(spark, freshFiles, c, bits)
-      }.toMap
-    if (carried.nonEmpty || fresh.nonEmpty) writeBlooms(stageDir, carried ++ fresh)
+    if (freshFiles.isEmpty) return (freshFiles, Seq.empty)
+    val schema = Footers.schema(spark, freshFiles.head)
+    val cols = sizes.groupBy(_._1).toSeq.sortBy(_._1).collect {
+      case (c, s) if CompositeKey.componentsOf(c).forall(schema.fieldNames.contains) &&
+          CompositeKey.kindsOf(schema, CompositeKey.componentsOf(c)).isDefined =>
+        (c, s.map(_._2).max, s.map(_._3).max)
+    }
+    (freshFiles, cols)
   }
 }

@@ -144,10 +144,12 @@ object Maintenance {
   }
 
   /** Record the key's overlap ratio at bloom-build time — called by
-    * [[KeyBloom.indexKeyBloom]] and [[BloomManifest.indexBloomManifest]];
-    * first write wins (the FIRST baseline is the witness), and a key with
-    * no orderable hulls records nothing (an unindexed scatter key must
-    * not fake a low baseline). */
+    * [[KeyBloom.indexKeyBloom]] and [[BloomManifest.indexBloomManifest]]
+    * under the bloom's column name; first write wins (the FIRST baseline
+    * is the witness), and a key with no orderable hulls records nothing (an
+    * unindexed scatter key must not fake a low baseline). A tuple's
+    * composite name has no `_KEYSTATS` hull, so a tuple build records no
+    * baseline. */
   private[graft] def recordBloomBaseline(spark: SparkSession, root: String,
       keyCol: String): Unit =
     if (logLines(root, "baseline", keyCol).isEmpty) {
@@ -350,14 +352,15 @@ object Maintenance {
     val live = Paths.get(root, AtomicTable.currentVersion(root).get)
     val mHeader = BloomManifest.loadHeader(live)
       .collect { case ((_, c), h) if c == keyCol => h }
+    val keyCols = CompositeKey.componentsOf(keyCol)
     if (mHeader.nonEmpty)
-      BloomManifest.indexBloomManifest(spark, root, keyCol,
+      BloomManifest.indexBloomManifest(spark, root, keyCols,
         mHeader.map(_.bits).max, mHeader.map(_.k).max)
     else {
       val bits = KeyBloom.loadBlooms(live)
         .collect { case ((_, c), b) if c == keyCol => b.bits }
         .foldLeft(KeyBloom.DefaultBits)(math.max)
-      KeyBloom.indexKeyBloom(spark, root, keyCol, bits)
+      KeyBloom.indexKeyBloom(spark, root, keyCols, bits)
     }
   }
 
@@ -374,7 +377,7 @@ object Maintenance {
     while (h.action != "none" && !ran(h.action)) {
       ran += h.action
       h.action match {
-        case "index" => TargetedDelete.indexKeyStats(spark, root, keyCol)
+        case "index" => TargetedDelete.indexKeyStats(spark, root, Seq(keyCol))
         case "bloom" => healBloom(spark, root, keyCol)
         case "compact" =>
           Compaction.compactVersion(spark, root, targetBytes, Some(keyCol))
@@ -437,7 +440,7 @@ object Maintenance {
       while (Set("index", "bloom")(h.action) && !ran(h.action)) {
         ran += h.action
         h.action match {
-          case "index" => TargetedDelete.indexKeyStats(spark, root, c)
+          case "index" => TargetedDelete.indexKeyStats(spark, root, Seq(c))
           case "bloom" => healBloom(spark, root, c)
         }
         h = adviseMulti(spark, root, Seq(keyCols.head, c), targetBytes)(1)._2

@@ -213,16 +213,28 @@ object StatsRead {
       : (DataFrame, ReadStats) = {
     require(probe.columns.contains(keyCol),
       s"probe frame must carry the join key column $keyCol")
-    val r = resolveStats(root, "pruned join")
-    val (rows, opened) = r.rowsFor(spark, Seq(keyCol))
-    val asg = FileAdmission.assign(spark, r.dir, r.files, rows, Seq(keyCol),
-      probe, driverKeyThreshold, KeyBloom.loadBlooms(r.dir))
-    val touchedFiles = r.files.filter(f => asg.touched(f.getFileName.toString))
+    val (base, asg, st) = assigned(spark, root, "pruned join", Seq(keyCol),
+      probe, driverKeyThreshold)
+    (base.join(asg.stableChanges, Seq(keyCol), "inner"), st)
+  }
+
+  /** The step [[joinPruned]] and [[readTupleIn]] share: resolve the live
+    * version, assign `probe` over `keyCols` ([[FileAdmission.assign]]),
+    * and scan the touched files — an empty frame of the table's schema
+    * when none is touched. Returns the scan, the assignment and the audit
+    * row. */
+  private def assigned(spark: SparkSession, root: String, op: String,
+      keyCols: Seq[String], probe: DataFrame, driverKeyThreshold: Int)
+      : (DataFrame, FileAdmission.Assignment, ReadStats) = {
+    val r = resolveStats(root, op)
+    val (rows, opened) = r.rowsFor(spark, keyCols)
+    val asg = FileAdmission.assign(spark, r.dir, r.files, rows, keyCols, probe,
+      driverKeyThreshold, KeyBloom.loadBlooms(r.dir))
+    val touched = r.files.filter(f => asg.touched(f.getFileName.toString))
     val base =
-      if (touchedFiles.isEmpty) emptyLike(spark, r)
-      else Footers.read(spark, touchedFiles)
-    (base.join(asg.stableChanges, Seq(keyCol), "inner"),
-      ReadStats(r.version, r.files.size, touchedFiles.size, opened))
+      if (touched.isEmpty) emptyLike(spark, r) else Footers.read(spark, touched)
+    (base, asg, ReadStats(r.version, r.files.size, touched.size, opened,
+      asg.manifestFiles))
   }
 
   /** COMPOSITE-KEY point-lookup batch (r19 verdict item 1): plan only the
@@ -241,14 +253,8 @@ object StatsRead {
   def readTupleIn(spark: SparkSession, root: String, keyCols: Seq[String],
       tuples: DataFrame): (DataFrame, ReadStats) = {
     require(keyCols.size >= 2, "use read for one column")
-    val r = resolveStats(root, "composite-pruned read")
-    val (rows, opened) = r.rowsFor(spark, keyCols)
-    val asg = FileAdmission.assign(spark, r.dir, r.files, rows, keyCols, tuples,
-      KeyedMerge.DriverKeyThreshold, KeyBloom.loadBlooms(r.dir))
-    val touchedFiles = r.files.filter(f => asg.touched(f.getFileName.toString))
-    val base =
-      if (touchedFiles.isEmpty) emptyLike(spark, r)
-      else Footers.read(spark, touchedFiles)
+    val (base, asg, st) = assigned(spark, root, "composite-pruned read", keyCols,
+      tuples, KeyedMerge.DriverKeyThreshold)
     // row-level tail, tiered like every other key filter: a small tuple
     // set becomes a literal OR-of-ANDs (each conjunct's equalities push
     // into the surviving files' row-group stats); larger driver-sized sets
@@ -263,8 +269,7 @@ object StatsRead {
         asg.stableChanges.select(keyCols.map(col): _*).na.drop("any").distinct(),
         keyCols, "left_semi")
     }
-    (out, ReadStats(r.version, r.files.size, touchedFiles.size, opened,
-      asg.manifestFiles))
+    (out, st)
   }
 
   /** A metadata-count's audit row: `metadataFiles` contributed their match
@@ -608,7 +613,7 @@ object StatsRead {
         s"fixture premise broken: min/max stats pruned a scattered key ($rsStats)")
     // bits sized from the observed rows-per-file so the filesRead gate
     // below holds at ANY scale factor, not just the tested ones
-    KeyBloom.indexKeyBloom(spark, root, "doc_hash",
+    KeyBloom.indexKeyBloom(spark, root, Seq("doc_hash"),
       KeyBloom.bitsFor(nRows / BloomFiles + 1))
     val (df, rs) = readStringKeyIn(spark, root, "doc_hash", probes)
     if (rs.footerReads != 0 || rs.filesRead > 6 || rs.filesRead < 1)
@@ -676,7 +681,7 @@ object StatsRead {
           .repartitionByRange(ShardFiles, col("l_orderkey"), col("l_linenumber"))
           .sortWithinPartitions(col("l_orderkey"), col("l_linenumber")),
         root, statsCols = Seq("row_hash"))
-      BloomManifest.indexBloomManifest(spark, root, "row_hash", bits = 1 << 26)
+      BloomManifest.indexBloomManifest(spark, root, Seq("row_hash"), bits = 1 << 26)
     }
   }
 
@@ -760,7 +765,7 @@ object StatsRead {
         .repartitionByRange(SatFiles, col("l_orderkey"), col("l_linenumber"))
         .sortWithinPartitions(col("l_orderkey"), col("l_linenumber")),
       root, statsCols = Seq("row_hash"))
-    BloomManifest.indexBloomManifest(spark, root, "row_hash", bits = SatBits)
+    BloomManifest.indexBloomManifest(spark, root, Seq("row_hash"), bits = SatBits)
     val live = Paths.get(root, AtomicTable.currentVersion(root).get)
     // saturation premise: the manifest holds ~the dense row count
     val mDir = BloomManifest.shardDir(live).getOrElse(

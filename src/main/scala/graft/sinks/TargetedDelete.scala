@@ -322,10 +322,6 @@ object TargetedDelete {
     missing.size
   }
 
-  /** Single-column [[indexKeyStats]]. */
-  def indexKeyStats(spark: SparkSession, root: String, keyCol: String): Int =
-    indexKeyStats(spark, root, Seq(keyCol))
-
   /** Does a stat row admit any delete key? "none" is conservative-true. */
   private[sinks] def rowIntersects(row: StatRow, ks: KeySet): Boolean = row.kind match {
     case "long" =>
@@ -613,7 +609,7 @@ object TargetedDelete {
       Tables.documents(spark, dir)
         .repartitionByRange(8, col("doc_id"))
         .sortWithinPartitions(col("doc_id")), root)
-    indexKeyStats(spark, root, "doc_id")
+    indexKeyStats(spark, root, Seq("doc_id"))
     val stats = delete(spark, root, "doc_id", KeySet.longs(deleteSet))
     if (stats.footerReads != 0)
       throw new IllegalStateException(
@@ -674,7 +670,7 @@ object TargetedDelete {
     if (rsStats.filesRead < rsStats.totalFiles - 2)
       throw new IllegalStateException(
         s"fixture premise broken: min/max pruned a scattered hash ($rsStats)")
-    KeyBloom.indexKeyBloom(spark, root, "doc_hash",
+    KeyBloom.indexKeyBloom(spark, root, Seq("doc_hash"),
       KeyBloom.bitsFor(nRows / 16 + 1))
     val stats = delete(spark, root, "doc_hash", KeySet.strings(delHashes))
     if (stats.footerReads != 0 || stats.bloomSkipped < 1 ||

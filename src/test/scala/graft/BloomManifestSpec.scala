@@ -48,7 +48,7 @@ class BloomManifestSpec extends AnyFunSuite {
     AtomicTable.commit(
       df.repartitionByRange(32, col("id")).sortWithinPartitions(col("id")),
       root, statsCols = Seq("h"))
-    assert(BloomManifest.indexBloomManifest(spark, root, "h", bits) == 32)
+    assert(BloomManifest.indexBloomManifest(spark, root, Seq("h"), bits) == 32)
   }
 
   private def liveDir(root: String): Path =
@@ -59,7 +59,7 @@ class BloomManifestSpec extends AnyFunSuite {
     buildManifested(root)
     // build the TSV backend at the SAME bits on a sibling copy of the
     // same files and compare per-file verdicts for a mixed key set
-    KeyBloom.indexKeyBloom(spark, root, "h", 1 << 16)
+    KeyBloom.indexKeyBloom(spark, root, Seq("h"), 1 << 16)
     val dir = liveDir(root)
     val tsv = KeyBloom.loadBlooms(dir)
     val keys = (Seq(0L, 17L, 3999L).map(i => md5hex(i.toString)) ++
@@ -281,7 +281,7 @@ class BloomManifestSpec extends AnyFunSuite {
     val root2 = "spark-warehouse/test_bmanifest_legacy2"
     buildManifested(root2)
     degenerate(liveDir(root2))
-    assert(BloomManifest.indexBloomManifest(spark, root2, "id") == 32)
+    assert(BloomManifest.indexBloomManifest(spark, root2, Seq("id")) == 32)
     val d2 = liveDir(root2)
     assert(BloomManifest.shardDir(d2).isDefined)
     assert(parts(BloomManifest.manifestPath(d2)).isEmpty,
@@ -350,7 +350,7 @@ class BloomManifestSpec extends AnyFunSuite {
       col("id"), md5(col("id").cast("string")).as("h"), (col("id") % 7).as("grp"))
     AtomicTable.commit(df.repartitionByRange(2, col("id"))
       .sortWithinPartitions(col("id")), root, statsCols = Seq("id"))
-    BloomManifest.indexBloomManifest(spark, root, "h")
+    BloomManifest.indexBloomManifest(spark, root, Seq("h"))
     val changes = spark.range(2L).select(
       (col("id") * 150L).as("id"), lit(-1L).as("grp"))
     val st = KeyedMerge.merge(spark, root, Seq("id"), changes,
@@ -380,8 +380,8 @@ class BloomManifestSpec extends AnyFunSuite {
     hconf.setInt("parquet.page.size", 4 * 1024)
     try {
       // 2000 rows/file at 2^14 bits: every word non-zero (dense regime)
-      assert(BloomManifest.indexBloomManifest(spark, root, "h", 1 << 14) == 16)
-      assert(BloomManifest.indexBloomManifest(spark, root, "id", 1 << 14) == 16)
+      assert(BloomManifest.indexBloomManifest(spark, root, Seq("h"), 1 << 14) == 16)
+      assert(BloomManifest.indexBloomManifest(spark, root, Seq("id"), 1 << 14) == 16)
     } finally {
       oldBlock.fold(hconf.unset("parquet.block.size"))(v => hconf.set("parquet.block.size", v))
       oldPage.fold(hconf.unset("parquet.page.size"))(v => hconf.set("parquet.page.size", v))
@@ -428,7 +428,7 @@ class BloomManifestSpec extends AnyFunSuite {
     val orphan = mDir.resolve("part-legacy-orphan.parquet")
     Files.write(orphan, Array[Byte](1, 2, 3))
     // full coverage → the r19 early-return path; the sweep must still run
-    assert(BloomManifest.indexBloomManifest(spark, root, "h", 1 << 16) == 0)
+    assert(BloomManifest.indexBloomManifest(spark, root, Seq("h"), 1 << 16) == 0)
     assert(!Files.exists(orphan), "orphan legacy shard lingered past a retry")
     // the live generation is untouched and still probes
     val probe = BloomManifest.probe(spark, dir, "h", "string",

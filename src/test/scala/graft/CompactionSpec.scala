@@ -104,7 +104,7 @@ class CompactionSpec extends AnyFunSuite {
     deleteAll(Paths.get(root, ".tmp_big"))
     deleteAll(Paths.get(root, ".tmp_small"))
     AtomicTable.publish(root, "v1")
-    TargetedDelete.indexKeyStats(spark, root, "id")
+    TargetedDelete.indexKeyStats(spark, root, Seq("id"))
     val bigFile = parts(Paths.get(root, "v1")).maxBy(Files.size(_))
     val bigKey = fileKey(bigFile)
     val nBefore = AtomicTable.read(spark, root).count()

@@ -142,7 +142,7 @@ class CompositeKeySpec extends AnyFunSuite {
       (col("id") * 2L).as("v"))
     AtomicTable.commit(df.repartitionByRange(16, col("id"))
       .sortWithinPartitions(col("id")), root, statsCols = Seq("h1", "h2"))
-    assert(KeyBloom.indexKeyBloomTuple(spark, root, Seq("h1", "h2"), 1 << 16) == 16)
+    assert(KeyBloom.indexKeyBloom(spark, root, Seq("h1", "h2"), 1 << 16) == 16)
     def hx(s: String) = java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
     import spark.implicits._
@@ -226,7 +226,7 @@ class CompositeKeySpec extends AnyFunSuite {
       (col("id") * 2L).as("v"))
     AtomicTable.commit(df.repartitionByRange(16, col("id"))
       .sortWithinPartitions(col("id")), root, statsCols = Seq("h1", "h2"))
-    assert(BloomManifest.indexBloomManifestTuple(spark, root, Seq("h1", "h2"),
+    assert(BloomManifest.indexBloomManifest(spark, root, Seq("h1", "h2"),
       1 << 16) == 16)
     def hx(s: String) = java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString

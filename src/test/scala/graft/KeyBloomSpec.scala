@@ -47,7 +47,7 @@ class KeyBloomSpec extends AnyFunSuite {
     val (_, rsStats) = StatsRead.readStringKeyIn(spark, root, "h", probes)
     assert(rsStats.filesRead >= rsStats.totalFiles - 2,
       s"fixture premise: stats should plan ~all files, got $rsStats")
-    assert(KeyBloom.indexKeyBloom(spark, root, "h") == 32)
+    assert(KeyBloom.indexKeyBloom(spark, root, Seq("h")) == 32)
     val (df, rs) = StatsRead.readStringKeyIn(spark, root, "h", probes)
     import spark.implicits._
     assert(df.select("id").as[Long].collect().toSet == Set(11L, 1234L, 3999L))
@@ -59,7 +59,7 @@ class KeyBloomSpec extends AnyFunSuite {
     assert(miss.count() == 0 && rsMiss.filesRead <= 2, rsMiss.toString)
     assert(miss.columns.contains("grp"))
     // re-index is a no-op
-    assert(KeyBloom.indexKeyBloom(spark, root, "h") == 0)
+    assert(KeyBloom.indexKeyBloom(spark, root, Seq("h")) == 0)
   }
 
   test("long keys probe under the same canonical bytes; fp costs a scan not a row") {
@@ -70,7 +70,7 @@ class KeyBloomSpec extends AnyFunSuite {
     AtomicTable.commit(
       df.repartitionByRange(32, col("h")).sortWithinPartitions(col("h"))
         .select(col("id"), col("h")), root)
-    KeyBloom.indexKeyBloom(spark, root, "id")
+    KeyBloom.indexKeyBloom(spark, root, Seq("id"))
     val (hit, rs) = StatsRead.read(spark, root, Seq("id" -> KeySet.longs(Seq(5L, 2718L))))
     import spark.implicits._
     assert(hit.select("id").as[Long].collect().toSet == Set(5L, 2718L))
@@ -99,7 +99,7 @@ class KeyBloomSpec extends AnyFunSuite {
   test("a targeted delete SELF-MAINTAINS blooms: linked carry, rewrites rebuild") {
     val root = "spark-warehouse/test_bloom_carry"
     buildHashed(root)
-    KeyBloom.indexKeyBloom(spark, root, "h")
+    KeyBloom.indexKeyBloom(spark, root, Seq("h"))
     // delete an id block deliberately MISALIGNED with file boundaries:
     // interior files drop whole, boundary files rewrite, the rest hard-link
     val del = TargetedDelete.delete(spark, root, "id", LongRange(1050L, 1949L))
@@ -136,7 +136,7 @@ class KeyBloomSpec extends AnyFunSuite {
       col("id"), md5(col("id").cast("string")).as("h"), (col("id") % 7).as("grp"))
     AtomicTable.commit(df.repartitionByRange(2, col("id"))
       .sortWithinPartitions(col("id")), root, statsCols = Seq("id"))
-    KeyBloom.indexKeyBloom(spark, root, "h")
+    KeyBloom.indexKeyBloom(spark, root, Seq("h"))
     // changeset spans both files -> full rewrite (reused empty, the
     // link-reuse schema guard never runs) and the kernel DROPS column h;
     // before the r19 fix, maintainStage's bloom rebuild threw on h
@@ -182,7 +182,7 @@ class KeyBloomSpec extends AnyFunSuite {
     // sidecar-bloomed table: the staging rewrite opts into native blooms
     val rootB = "spark-warehouse/test_bloom_native_b"
     buildHashed(rootB)
-    KeyBloom.indexKeyBloom(spark, rootB, "h")
+    KeyBloom.indexKeyBloom(spark, rootB, Seq("h"))
     val prevB = AtomicTable.currentVersion(rootB).get
     KeyedMerge.merge(spark, rootB, Seq("h"), changes(), upsert)
     val fb = freshFiles(rootB, prevB)
@@ -210,7 +210,7 @@ class KeyBloomSpec extends AnyFunSuite {
     val rows = Seq("plain", "￿-key", "😀-astral", "k\u0000null-byte")
       .zipWithIndex.map { case (s, i) => (s, i.toLong) }
     AtomicTable.commit(rows.toDF("k", "v").coalesce(1), root)
-    KeyBloom.indexKeyBloom(spark, root, "k")
+    KeyBloom.indexKeyBloom(spark, root, Seq("k"))
     rows.foreach { case (s, i) =>
       val (out, _) = StatsRead.readStringKeyIn(spark, root, "k", Seq(s))
       assert(out.select("v").as[Long].collect().toSeq == Seq(i), s"key $s")

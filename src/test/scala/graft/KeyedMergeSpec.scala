@@ -218,7 +218,7 @@ class KeyedMergeSpec extends AnyFunSuite {
       s"premise broken: min/max pruned a scattered hash key: $msNone")
     // fresh table, bloom indexed: the same merge links almost everything
     buildHashed(root + "_b")
-    graft.sinks.KeyBloom.indexKeyBloom(spark, root + "_b", "h",
+    graft.sinks.KeyBloom.indexKeyBloom(spark, root + "_b", Seq("h"),
       graft.sinks.KeyBloom.bitsFor(4000L / 16 + 1))
     val prev = AtomicTable.currentVersion(root + "_b").get
     val ms = KeyedMerge.merge(spark, root + "_b", Seq("h"),
@@ -252,7 +252,7 @@ class KeyedMergeSpec extends AnyFunSuite {
     val rootA = freshRoot("bloomdA"); val rootB = freshRoot("bloomdB")
     Seq(rootA, rootB).foreach { r =>
       buildHashed(r)
-      graft.sinks.KeyBloom.indexKeyBloom(spark, r, "h",
+      graft.sinks.KeyBloom.indexKeyBloom(spark, r, Seq("h"),
         graft.sinks.KeyBloom.bitsFor(4000L / 16 + 1))
     }
     val msA = KeyedMerge.merge(spark, rootA, Seq("h"), hashChanges(), hashUpsert)
@@ -271,7 +271,7 @@ class KeyedMergeSpec extends AnyFunSuite {
   test("bloom prune: insert-only hash changeset links every file") {
     val root = freshRoot("bloomins")
     buildHashed(root)
-    graft.sinks.KeyBloom.indexKeyBloom(spark, root, "h",
+    graft.sinks.KeyBloom.indexKeyBloom(spark, root, Seq("h"),
       graft.sinks.KeyBloom.bitsFor(4000L / 16 + 1))
     val ins = spark.range(4L).select(
       md5((lit(8000000L) + col("id")).cast("string")).as("h"), lit(-9L).as("nv"))

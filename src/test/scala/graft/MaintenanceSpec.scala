@@ -94,7 +94,7 @@ class MaintenanceSpec extends AnyFunSuite {
       md5(col("id").cast("string")).as("h"), col("id").as("v"))
       .repartitionByRange(8, col("v")), root, statsCols = Seq("h"))
     val t = targetFor(root)
-    KeyBloom.indexKeyBloom(spark, root, "h", 1 << 15)
+    KeyBloom.indexKeyBloom(spark, root, Seq("h"), 1 << 15)
     assert(Maintenance.advise(spark, root, "h", t).action == "none")
     // a partial index: drop half the bloom rows (the interrupted-build shape)
     val live = Paths.get(root, AtomicTable.currentVersion(root).get)
@@ -111,6 +111,24 @@ class MaintenanceSpec extends AnyFunSuite {
       s"re-index lost the table's bloom sizing: ${after.values.map(_.bits).toSet}")
   }
 
+  test("bloom baseline: a one-column build records it on either backend, a tuple build records none") {
+    import graft.sinks.{BloomManifest, CompositeKey, KeyBloom}
+    Seq("tsv", "manifest").foreach { backend =>
+      val root = fresh(s"baseline_$backend")
+      AtomicTable.commit(spark.range(2000L).select(col("id"),
+        md5(col("id").cast("string")).as("h"))
+        .repartitionByRange(8, col("id")).sortWithinPartitions(col("id")),
+        root, statsCols = Seq("id", "h"))
+      Seq(Seq("id"), Seq("id", "h")).foreach { cols =>
+        if (backend == "tsv") KeyBloom.indexKeyBloom(spark, root, cols, 1 << 12)
+        else BloomManifest.indexBloomManifest(spark, root, cols, 1 << 12)
+      }
+      assert(Maintenance.bloomBaseline(root, "id").isDefined, backend)
+      assert(Maintenance.bloomBaseline(root, CompositeKey.colName(Seq("id", "h"))).isEmpty,
+        backend)
+    }
+  }
+
   test("clustered-but-bloomed key: drift still heals; scattered-key overlap reads structural") {
     import graft.sinks.KeyBloom
     // clustered key carrying a bloom: merge drift gives PARTIAL overlap,
@@ -120,7 +138,7 @@ class MaintenanceSpec extends AnyFunSuite {
       .repartitionByRange(16, col("id")).sortWithinPartitions(col("id")),
       root, statsCols = Seq("id"))
     val t = targetFor(root)
-    KeyBloom.indexKeyBloom(spark, root, "id", KeyBloom.bitsFor(8000L / 16 + 1))
+    KeyBloom.indexKeyBloom(spark, root, Seq("id"), KeyBloom.bitsFor(8000L / 16 + 1))
     assert(Maintenance.advise(spark, root, "id", t).action == "none")
     val changes = spark.range(3000L, 3060L).select(col("id"), lit(-1L).as("nv"))
       .unionAll(spark.range(10L).select((lit(9000000L) + col("id")).as("id"),
@@ -142,7 +160,7 @@ class MaintenanceSpec extends AnyFunSuite {
     AtomicTable.commit(spark.range(2000L).select(
       md5(col("id").cast("string")).as("h"), col("id").as("v"))
       .repartitionByRange(8, col("v")), rootH, statsCols = Seq("h"))
-    KeyBloom.indexKeyBloom(spark, rootH, "h", KeyBloom.bitsFor(2000L / 8 + 1))
+    KeyBloom.indexKeyBloom(spark, rootH, Seq("h"), KeyBloom.bitsFor(2000L / 8 + 1))
     val hh = Maintenance.advise(spark, rootH, "h", targetFor(rootH))
     assert(hh.action == "none" &&
       hh.overlapRatio >= Maintenance.StructuralOverlapRatio,
@@ -156,7 +174,7 @@ class MaintenanceSpec extends AnyFunSuite {
       .repartitionByRange(16, col("id")).sortWithinPartitions(col("id")),
       root, statsCols = Seq("id"))
     val t = targetFor(root)
-    KeyBloom.indexKeyBloom(spark, root, "id", KeyBloom.bitsFor(8000L / 16 + 1))
+    KeyBloom.indexKeyBloom(spark, root, Seq("id"), KeyBloom.bitsFor(8000L / 16 + 1))
     // the first-bloom witness: a clustered key records a LOW baseline
     assert(Maintenance.bloomBaseline(root, "id").exists(_ < 0.5))
     // drift past the structural band with the engine's own merge: updates
@@ -295,7 +313,7 @@ class MaintenanceSpec extends AnyFunSuite {
       md5(col("id").cast("string")).as("h"), (col("id") * 2L).as("v"))
     AtomicTable.commit(df.repartitionByRange(12, col("id"))
       .sortWithinPartitions(col("id")), root, statsCols = Seq("h"))
-    BloomManifest.indexBloomManifest(spark, root, "h", 1 << 16)
+    BloomManifest.indexBloomManifest(spark, root, Seq("h"), 1 << 16)
     def hx(s: String) = java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
     def probeOnce(i: Long): Unit = {
@@ -348,7 +366,7 @@ class MaintenanceSpec extends AnyFunSuite {
       md5((col("id") + 7777L).cast("string")).as("h2"), (col("id") * 2L).as("v"))
     AtomicTable.commit(df.repartitionByRange(12, col("id"))
       .sortWithinPartitions(col("id")), root, statsCols = Seq("h1", "h2"))
-    BloomManifest.indexBloomManifestTuple(spark, root, Seq("h1", "h2"), 1 << 16)
+    BloomManifest.indexBloomManifest(spark, root, Seq("h1", "h2"), 1 << 16)
     def hx(s: String) = java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
     import spark.implicits._

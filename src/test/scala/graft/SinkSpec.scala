@@ -126,7 +126,7 @@ class SinkSpec extends AnyFunSuite {
       spark.range(1000L).select(col("id"), md5(col("id").cast("string")).as("h"))
         .repartitionByRange(4, col("id")).sortWithinPartitions(col("id")),
       root, statsCols = Seq("id"))
-    graft.sinks.KeyBloom.indexKeyBloom(spark, root, "h")
+    graft.sinks.KeyBloom.indexKeyBloom(spark, root, Seq("h"))
     def parts(dir: java.nio.file.Path): Seq[java.nio.file.Path] = {
       val st = java.nio.file.Files.list(dir)
       try {

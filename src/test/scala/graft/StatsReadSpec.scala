@@ -83,7 +83,7 @@ class StatsReadSpec extends AnyFunSuite {
       s"two clustered points + one tail point: $rs")
     assert(df.count() == 3)
     // explicit index → second read is zero-footer
-    TargetedDelete.indexKeyStats(spark, root, "id")
+    TargetedDelete.indexKeyStats(spark, root, Seq("id"))
     val (_, rs2) = StatsRead.read(spark, root, Seq("id" -> KeySet.longs(Seq(50L, 60L, 3999L))))
     assert(rs2.footerReads == 0, rs2.toString)
   }
@@ -450,7 +450,7 @@ class StatsReadSpec extends AnyFunSuite {
       spark.range(4000L).select(md5(col("id").cast("string")).as("h"),
         col("id").as("v")).repartitionByRange(16, col("v")),
       rootH, statsCols = Seq("h"))
-    graft.sinks.KeyBloom.indexKeyBloom(spark, rootH, "h",
+    graft.sinks.KeyBloom.indexKeyBloom(spark, rootH, Seq("h"),
       graft.sinks.KeyBloom.bitsFor(4000L / 16 + 1))
     val probeH = spark.range(3L)
       .select(md5((col("id") * 997L).cast("string")).as("h"), col("id").as("w"))
@@ -472,10 +472,8 @@ class StatsReadSpec extends AnyFunSuite {
       root, statsCols = Seq("k", "g"))
     val cols = if (tuple) Seq("g", "k") else Seq("k")
     backend match {
-      case "tsv" if tuple => KeyBloom.indexKeyBloomTuple(spark, root, cols, 1024)
-      case "tsv" => KeyBloom.indexKeyBloom(spark, root, "k", 1024)
-      case "manifest" if tuple => BloomManifest.indexBloomManifestTuple(spark, root, cols, 1024)
-      case "manifest" => BloomManifest.indexBloomManifest(spark, root, "k", 1024)
+      case "tsv" => KeyBloom.indexKeyBloom(spark, root, cols, 1024)
+      case "manifest" => BloomManifest.indexBloomManifest(spark, root, cols, 1024)
       case _ => 0
     }
   }

@@ -157,7 +157,7 @@ class TargetedDeleteSpec extends AnyFunSuite {
     assert(live == Set("😀", "😀zz"),
       s"UTF-16 ordering kept the deleted row: $live")
     // the sidecar path merges per-block stats under the SAME order
-    TargetedDelete.indexKeyStats(spark, root, "doc_id")
+    TargetedDelete.indexKeyStats(spark, root, Seq("doc_id"))
     val stats2 = TargetedDelete.deleteStringKeys(spark, root, "doc_id",
       Seq("😀zz"))
     assert(stats2.footerReads == 0 && stats2.rewrittenFiles == 1, stats2.toString)
@@ -264,8 +264,8 @@ class TargetedDeleteSpec extends AnyFunSuite {
     // explicit indexing on a fresh table gives the zero-read path up front
     val root2 = "spark-warehouse/test_s22_stats2"
     buildTable(root2, 4000)
-    assert(TargetedDelete.indexKeyStats(spark, root2, "id") == 8)
-    assert(TargetedDelete.indexKeyStats(spark, root2, "id") == 0) // idempotent
+    assert(TargetedDelete.indexKeyStats(spark, root2, Seq("id")) == 8)
+    assert(TargetedDelete.indexKeyStats(spark, root2, Seq("id")) == 0) // idempotent
     val d3 = TargetedDelete.delete(spark, root2, "id", KeySet.longs(100L to 200L))
     assert(d3.footerReads == 0 && d3.rewrittenFiles <= 2)
     assert(spark.read.parquet(s"$root2/${d3.version}").count() == 4000 - 101)
@@ -389,7 +389,7 @@ class TargetedDeleteSpec extends AnyFunSuite {
       s"premise broken: min/max pruned a scattered hash: $s0")
     // bloom indexed → same delete links almost everything
     build(root + "_b")
-    KeyBloom.indexKeyBloom(spark, root + "_b", "h", KeyBloom.bitsFor(4000L / 16 + 1))
+    KeyBloom.indexKeyBloom(spark, root + "_b", Seq("h"), KeyBloom.bitsFor(4000L / 16 + 1))
     val s1 = TargetedDelete.deleteStringKeys(spark, root + "_b", "h", delKeys)
     assert(s1.footerReads == 0 && s1.bloomSkipped >= 1 &&
       s1.rewrittenFiles <= 5 && s1.reusedFiles >= s1.totalFiles - 5,
