@@ -84,14 +84,17 @@ object CdcApply {
         when(col("op").isNull, col("bal_c")).otherwise(col("chg_bal")).as("bal_c"))
   }
 
-  /** Declared query: base = customer (name + exact-cents balance), feed =
-    * [[changeFeed]], output = the post-apply table. */
-  def qS23CdcApply(spark: SparkSession, dir: String): DataFrame = {
-    val base = Tables.customer(spark, dir)
+  /** The keyed base every CDC query applies onto: customer (id, name,
+    * exact-cents balance). */
+  private def customers(spark: SparkSession, dir: String): DataFrame =
+    Tables.customer(spark, dir)
       .select(col("c_custkey").as("id"), col("c_name").as("name"),
         graft.ops.Relational.quantize(col("c_acctbal"), 2).cast("long").as("bal_c"))
-    apply(base, changeFeed(spark, dir))
-  }
+
+  /** Declared query: base = customer (name + exact-cents balance), feed =
+    * [[changeFeed]], output = the post-apply table. */
+  def qS23CdcApply(spark: SparkSession, dir: String): DataFrame =
+    apply(customers(spark, dir), changeFeed(spark, dir))
 
   // ---- streamed apply under the driver gate (r15 verdict item 2) --------
 
@@ -117,14 +120,10 @@ object CdcApply {
     * CdcApplySpec additionally pins arbitrary uneven cuts; this declared form
     * pins the restart/redelivery corridor under the driver's hash gate. */
   def qS23CdcApplyStream(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
     val root = streamRoot(dir)
     AtomicTable.deleteRecursively(Paths.get(root))
     val (tableRoot, feedDir, ckpt) = (s"$root/table", s"$root/feed", s"$root/ckpt")
-    Files.createDirectories(Paths.get(feedDir))
-    val base = Tables.customer(spark, dir)
-      .select(col("c_custkey").as("id"), col("c_name").as("name"),
-        graft.ops.Relational.quantize(col("c_acctbal"), 2).cast("long").as("bal_c"))
+    val base = customers(spark, dir)
     // id-clustered + indexed base: the pruned merge's file-level decision
     // starts from the sidecar (and each merge self-maintains it)
     AtomicTable.commit(base.repartitionByRange(8, col("id"))
@@ -142,49 +141,18 @@ object CdcApply {
     // third is written mid-corridor, after the crash window — see below)
     FeedSlices.writeSlices(feed.filter(col("seq") === 1)
       .withColumn(FeedSlices.SliceCol, (col("id") % 2).cast("int")), feedDir, 2)
-    val schema = Footers.readDir(spark, Paths.get(feedDir, "b0")).schema
-    val applied = new java.util.concurrent.atomic.AtomicInteger(0)
-    val redelivered = new java.util.concurrent.atomic.AtomicInteger(0)
-    def runStream(): Unit = {
-      val q = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$feedDir/b*")
-        .writeStream
-        .foreachBatch { (b: DataFrame, bid: Long) =>
-          // STATS-PRUNED micro-batch apply (r17 verdict item 1): each batch
-          // rewrites only the files its keys intersect and hard-links the
-          // rest — the redelivery guard and the manifest batch tag are
-          // commitBatchKeyed's, same exactly-once corridor as before
-          KeyedMerge.commitBatchKeyed(spark, tableRoot, "s23-cdc-stream",
-              bid, Seq("id"), b, apply) match {
-            case Some(_) => applied.incrementAndGet()
-            case None => redelivered.incrementAndGet()
-          }
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .start()
-      if (!q.awaitTermination(180000)) {
-        // stop the straggler before throwing — a still-live query would have
-        // its checkpoint/feed/table deleted out from under it by the next
-        // invocation's cleanup, contaminating later runs with its failures
-        q.stop()
-        throw new IllegalStateException("s23 cdc AvailableNow stream timed out")
-      }
-    }
-    runStream() // micro-batches 0 and 1
+    // STATS-PRUNED micro-batch apply (r17 verdict item 1): each batch
+    // rewrites only the files its keys intersect and hard-links the rest —
+    // the redelivery guard and the manifest batch tag are commitBatchKeyed's
+    def runStream() = FeedSlices.drain(spark, feedDir, ckpt)((b, bid) =>
+      KeyedMerge.commitBatchKeyed(spark, tableRoot, "s23-cdc-stream", bid, Seq("id"), b, apply))
+    val first = runStream() // micro-batches 0 and 1
     // crash-window simulation: the sink committed batch 1 but the engine
-    // never checkpointed it — on restart Spark re-executes batch 1. The
-    // local ChecksumFileSystem shadows every commit file with a .crc; the
-    // stale CRC must go too or the re-commit's rename fails on it.
-    Files.delete(Paths.get(ckpt, "commits", "1"))
-    Files.deleteIfExists(Paths.get(ckpt, "commits", ".1.crc"))
+    // never checkpointed it — on restart Spark re-executes batch 1
+    FeedSlices.dropCommit(ckpt, 1)
     FeedSlices.writeSlice(feed.filter(col("seq") === 2), feedDir, 2)
-    runStream() // redelivers 1 (must skip), then applies 2
-    if (redelivered.get != 1 || applied.get != 3)
-      throw new IllegalStateException(
-        s"exactly-once violated: applied=${applied.get} (want 3), " +
-          s"redelivered-skips=${redelivered.get} (want 1)")
+    // redelivers 1 (must skip), then applies 2
+    (first + runStream()).require(applied = 3, redelivered = 1)
     AtomicTable.read(spark, tableRoot)
   }
 
@@ -202,38 +170,22 @@ object CdcApply {
   val StreamDeleteTo: Long = InsertBase + Inserts / 2 - 1
 
   def qS23CdcStreamDelete(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
     val root = streamRoot(dir) + "_del"
     AtomicTable.deleteRecursively(Paths.get(root))
     val (tableRoot, feedDir, ckpt) = (s"$root/table", s"$root/feed", s"$root/ckpt")
-    Files.createDirectories(Paths.get(feedDir))
-    val base = Tables.customer(spark, dir)
-      .select(col("c_custkey").as("id"), col("c_name").as("name"),
-        graft.ops.Relational.quantize(col("c_acctbal"), 2).cast("long").as("bal_c"))
+    val base = customers(spark, dir)
     AtomicTable.commit(base.repartitionByRange(8, col("id"))
       .sortWithinPartitions(col("id")), tableRoot, statsCols = Seq("id"))
     // staged + all three slices in ONE partitioned write job (r22)
     val feed = Tables.stageLocal(changeFeed(spark, dir))
     FeedSlices.writeSlices(feed.withColumn(FeedSlices.SliceCol,
       when(col("seq") === 2, 2).otherwise(col("id") % 2).cast("int")), feedDir, 3)
-    val schema = Footers.readDir(spark, Paths.get(feedDir, "b0")).schema
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$feedDir/b*")
-      .writeStream
-      .foreachBatch { (b: DataFrame, bid: Long) =>
-        // pruned merge per micro-batch; its self-maintained sidecar is what
-        // the targeted delete below prunes from (footerReads==0 enforced)
-        KeyedMerge.commitBatchKeyed(spark, tableRoot, "s23-cdc-stream-del",
-          bid, Seq("id"), b, apply)
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", ckpt)
-      .start()
-    if (!q.awaitTermination(180000)) {
-      q.stop()
-      throw new IllegalStateException("s23 cdc stream-delete stream timed out")
-    }
+    // pruned merge per micro-batch; its self-maintained sidecar is what the
+    // targeted delete below prunes from (footerReads==0 enforced)
+    FeedSlices.drain(spark, feedDir, ckpt) { (b, bid) =>
+      KeyedMerge.commitBatchKeyed(spark, tableRoot, "s23-cdc-stream-del",
+        bid, Seq("id"), b, apply)
+    }.require(applied = 3, redelivered = 0)
     val stats = TargetedDelete.delete(spark, tableRoot, "id",
       TargetedDelete.LongRange(StreamDeleteFrom, StreamDeleteTo))
     if (stats.footerReads != 0)
@@ -282,9 +234,7 @@ object CdcApply {
     import java.nio.file.Paths
     val root = streamRoot(dir) + "_merge"
     AtomicTable.deleteRecursively(Paths.get(root))
-    val base = Tables.customer(spark, dir)
-      .select(col("c_custkey").as("id"), col("c_name").as("name"),
-        graft.ops.Relational.quantize(col("c_acctbal"), 2).cast("long").as("bal_c"))
+    val base = customers(spark, dir)
     AtomicTable.commit(base.repartitionByRange(PrunedFiles, col("id"))
       .sortWithinPartitions(col("id")), root, statsCols = Seq("id"))
     val prev = AtomicTable.currentVersion(root).get

@@ -101,36 +101,30 @@ object Expectations {
   /** EXACTLY-ONCE streaming form of [[commitExpect]] — the corpus
     * admission gate inside `foreachBatch` (the r18 verdict item 3).
     * `foreachBatch` is at-least-once, and the gate writes TWO tables, so
-    * the redelivery corridor must cover BOTH commits:
+    * the batch commits through [[MultiCommit.commitBatchAll]]: two
+    * [[MultiCommit.Append]] parts under one (appId, batchId) stamp,
+    * QUARANTINE FIRST, over a lazy gate.
     *
-    *  - a batch the MAIN table has absorbed is a full redelivery — skipped
-    *    without evaluating `df` (manifest-only check), returns None;
+    *  - a batch both tables have absorbed is a full redelivery — both parts
+    *    skip on their manifests, the gate never evaluates `df`, and this
+    *    returns None (as it does whenever the main part skipped);
     *  - otherwise the gate evaluates ONCE (checkpointed) and each table
-    *    APPENDS through [[AtomicTable.commitAppendBatch]]'s (appId,
-    *    batchId) stamp, QUARANTINE FIRST — a streamed corpus accumulates
-    *    batches, and the append-only commit costs the batch's bytes, not
-    *    the table's. A crash between the two commits replays the batch:
-    *    the quarantine table skips (already stamped), the main table
-    *    applies — both tables converge to exactly one copy, and the
-    *    audit-trail rows are never published without their complement.
+    *    appends add-files-only — the batch's bytes, not the table's. A crash
+    *    between the two commits replays the batch: the quarantine part
+    *    skips (already stamped), the main part applies — both tables
+    *    converge to exactly one copy, and the audit-trail rows are never
+    *    published without their complement.
     *
-    * The per-rule counters run only when something committed. */
+    * The per-rule counters run only when the main table committed. */
   def commitExpectBatch(spark: SparkSession, df: => DataFrame, root: String,
       quarantineRoot: String, expectations: Seq[Expectation], appId: String,
       batchId: Long, statsCols: Seq[String] = Nil): Option[ExpectStats] = {
-    if (AtomicTable.lastBatch(root).exists { case (app, b) =>
-        app == appId && batchId <= b }) None
-    else {
-      val (annotated, main, quarantine) = gate(df, expectations)
-      AtomicTable.commitAppendBatch(quarantine, quarantineRoot, appId, batchId)
-      val qv = AtomicTable.currentVersion(quarantineRoot).getOrElse(
-        throw new IllegalStateException(
-          s"quarantine commit left no version at $quarantineRoot"))
-      AtomicTable.commitAppendBatch(main, root, appId, batchId, statsCols)
-      val v = AtomicTable.currentVersion(root).getOrElse(
-        throw new IllegalStateException(s"main commit left no version at $root"))
-      Some(finishStats(v, qv, annotated, expectations))
-    }
+    lazy val (annotated, main, quarantine) = gate(df, expectations)
+    val flags = MultiCommit.commitBatchAll(spark, Seq(
+      MultiCommit.Append(quarantineRoot, () => quarantine),
+      MultiCommit.Append(root, () => main, statsCols)), appId, batchId)
+    Option.when(flags.last)(finishStats(AtomicTable.currentVersion(root).get,
+      AtomicTable.currentVersion(quarantineRoot).get, annotated, expectations))
   }
 
   // ------------------------------------------------- driver query
@@ -210,12 +204,10 @@ object Expectations {
     * ([[AtomicTable.commitAppend]] — the batch's bytes, never the
     * table's). */
   def qDqExpectStream(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
     val root = expectRoot(dir) + "_stream"
     AtomicTable.deleteRecursively(Paths.get(root))
     val (mainRoot, qRoot, feedDir, ckpt) =
       (s"$root/table", s"$root/quarantine", s"$root/feed", s"$root/ckpt")
-    Files.createDirectories(Paths.get(feedDir))
     // staged (r22): the three slice writes and the final count otherwise
     // each re-scan documents; size-gated like every corpus-rooted staging
     val docs = Tables.stageLocal(Tables.documents(spark, dir)
@@ -226,40 +218,14 @@ object Expectations {
     val rules = Seq(
       Expectation("long_enough", col("n_chars") >= MinChars),
       Expectation("allowed_lang", col("lang").isin("en", "fr", "de", "es")))
-    val schema = Footers.readDir(spark, Paths.get(feedDir, "b0")).schema
-    val applied = new java.util.concurrent.atomic.AtomicInteger(0)
-    val redelivered = new java.util.concurrent.atomic.AtomicInteger(0)
-    def runStream(): Unit = {
-      val q = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$feedDir/b*")
-        .writeStream
-        .foreachBatch { (b: DataFrame, bid: Long) =>
-          commitExpectBatch(spark, b, mainRoot, qRoot, rules,
-              "dq-expect-stream", bid, statsCols = Seq("doc_id")) match {
-            case Some(_) => applied.incrementAndGet()
-            case None => redelivered.incrementAndGet()
-          }
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .start()
-      if (!q.awaitTermination(180000)) {
-        q.stop()
-        throw new IllegalStateException("dq expect stream timed out")
-      }
-    }
+    def runStream() = FeedSlices.drain(spark, feedDir, ckpt)((b, bid) => commitExpectBatch(
+      spark, b, mainRoot, qRoot, rules, "dq-expect-stream", bid, statsCols = Seq("doc_id")))
     // feed files all exist up front: the first run consumes batches 0-2;
     // dropping the LAST batch's commit record (2) then restarting on the
     // same checkpoint forces Spark to redeliver batch 2
-    runStream()
-    Files.delete(Paths.get(ckpt, "commits", "2"))
-    Files.deleteIfExists(Paths.get(ckpt, "commits", ".2.crc"))
-    runStream()
-    if (applied.get != 3 || redelivered.get != 1)
-      throw new IllegalStateException(
-        s"exactly-once violated: applied=${applied.get} (want 3), " +
-          s"redelivered-skips=${redelivered.get} (want 1)")
+    val first = runStream()
+    FeedSlices.dropCommit(ckpt, 2)
+    (first + runStream()).require(applied = 3, redelivered = 1)
     val kept = AtomicTable.read(spark, mainRoot)
     val quarantined = AtomicTable.read(spark, qRoot)
     // three count checks fused into ONE job (r22): a union of the three
@@ -309,21 +275,5 @@ object Expectations {
     "dq_expect_stream" -> expectOracleSql,
     // the oracle replays the same split AND the same sorted failed-rule
     // annotation, so the hash row value-checks the quarantine labels too
-    "dq_expect_quarantine" ->
-      s"""WITH flagged AS (
-         |  SELECT lang, n_chars,
-         |    list_sort(list_filter([
-         |      CASE WHEN NOT coalesce(n_chars >= $MinChars, FALSE)
-         |           THEN 'long_enough' END,
-         |      CASE WHEN NOT coalesce(lang IN ('en','fr','de','es'), FALSE)
-         |           THEN 'allowed_lang' END
-         |    ], x -> x IS NOT NULL)) AS failed
-         |  FROM documents)
-         |SELECT 'kept' AS bucket, lang, count(*) AS n_docs,
-         |  CAST(sum(n_chars) AS BIGINT) AS sum_chars
-         |FROM flagged WHERE len(failed) = 0 GROUP BY lang
-         |UNION ALL
-         |SELECT 'quarantined', array_to_string(failed, ','), count(*),
-         |  CAST(sum(n_chars) AS BIGINT)
-         |FROM flagged WHERE len(failed) > 0 GROUP BY 2""".stripMargin)
+    "dq_expect_quarantine" -> expectOracleSql)
 }

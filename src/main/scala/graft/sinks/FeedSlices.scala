@@ -2,13 +2,14 @@ package graft.sinks
 
 import java.nio.file.{Files, Path, Paths}
 import java.nio.file.attribute.FileTime
+import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 
-/** ONE-JOB sliced micro-batch feed writer for the streaming-corridor
-  * fixtures (r22; opt guide §1.2 "remove passes" + the per-job driver
-  * overhead the corridor profiles showed dominating their wall time).
+/** THE MICRO-BATCH CORRIDOR: the file feed every AvailableNow corridor
+  * reads, its one-job slice writer, and the one stream driver over it.
   *
   * Every AvailableNow corridor query stages its change feed as N files,
   * `<feedDir>/b0..b{N-1}`, one per micro-batch, mtime-ordered so
@@ -25,7 +26,15 @@ import org.apache.spark.sql.functions._
   * (where the old per-slice write emitted one empty parquet file), so the
   * rare empty slice falls back to exactly that old write, [[writeSlice]] —
   * the corridor batch counts cannot drift. A feed slice that must land
-  * later (after a simulated crash) is written with it alone. */
+  * later (after a simulated crash) is written with it alone.
+  *
+  * [[drain]] is the one stream over that layout, and [[Drained]] the one
+  * exactly-once check. The contract it carries is the Structured Streaming
+  * one: a replayable source (the feed files plus the checkpoint) and an
+  * idempotent sink (each kernel commits under an (appId, batchId) stamp and
+  * skips a batch its table already absorbed). [[dropCommit]] opens the
+  * crash window `foreachBatch` documents — the sink committed, the engine
+  * never recorded it — so the next drain must redeliver that batch. */
 private[graft] object FeedSlices {
 
   /** The slice column callers attach; consumed by the partitioned write. */
@@ -66,5 +75,53 @@ private[graft] object FeedSlices {
     val dst = Paths.get(feedDir, s"b$i")
     df.coalesce(1).write.mode("overwrite").parquet(dst.toString)
     stampDir(dst, i)
+  }
+
+  /** What a [[drain]] did: micro-batches whose kernel returned Some
+    * (applied) and None (skipped as already absorbed). */
+  final case class Drained(applied: Int, redelivered: Int) {
+    def +(o: Drained): Drained = Drained(applied + o.applied, redelivered + o.redelivered)
+
+    /** Throw unless the counts are exactly these. */
+    def require(applied: Int, redelivered: Int): Unit =
+      if (this != Drained(applied, redelivered))
+        throw new IllegalStateException(
+          s"exactly-once violated: applied=${this.applied} (want $applied), " +
+            s"redelivered-skips=${this.redelivered} (want $redelivered)")
+  }
+
+  /** Stream `<feedDir>/b*` to the end, one file per micro-batch in mtime
+    * order (`Trigger.AvailableNow`, checkpoint `ckpt`), through `kernel`.
+    * The schema comes from `b0`'s footer, so starting runs no inference
+    * job. A kernel failure surfaces as the query's exception; a stream that
+    * has not finished in 180 s is stopped before this throws — a live query
+    * would otherwise keep writing under a directory the next run deletes. */
+  def drain(spark: SparkSession, feedDir: String, ckpt: String)(
+      kernel: (DataFrame, Long) => Option[_]): Drained = {
+    val schema = Footers.readDir(spark, Paths.get(feedDir, "b0")).schema
+    val (applied, redelivered) = (new AtomicInteger, new AtomicInteger)
+    val q = spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", "1").parquet(s"$feedDir/b*")
+      .writeStream
+      .foreachBatch { (b: DataFrame, bid: Long) =>
+        (if (kernel(b, bid).isDefined) applied else redelivered).incrementAndGet()
+        ()
+      }
+      .trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", ckpt)
+      .start()
+    if (!q.awaitTermination(180000)) {
+      q.stop()
+      throw new IllegalStateException(s"AvailableNow stream over $feedDir timed out")
+    }
+    Drained(applied.get, redelivered.get)
+  }
+
+  /** Forget that the stream at `ckpt` committed batch `n`: delete
+    * `commits/n` and the `.n.crc` the local checksum file system shadows it
+    * with (a stale CRC would fail the re-commit's rename). */
+  def dropCommit(ckpt: String, n: Long): Unit = {
+    Files.delete(Paths.get(ckpt, "commits", n.toString))
+    Files.deleteIfExists(Paths.get(ckpt, "commits", s".$n.crc"))
   }
 }

@@ -91,10 +91,10 @@ private[sinks] object FileAdmission {
       sets: Seq[KeySet], keys: Option[Tuples],
       blooms: Map[(String, String), KeyBloom.BloomRow]): Admitted = {
     def row(n: String, c: String) = rows.getOrElse((n, c), NoStats)
-    // the keys a file's hull admits: the first component's bounds cut the
-    // sorted tuples, the other components filter (parquet-truncated string
-    // bounds only widen the slice)
-    def slice(n: String, t: Tuples): Iterator[Seq[Any]] = {
+    // the indexes of the keys a file's hull admits: the first component's
+    // bounds cut the sorted tuples, the other components filter
+    // (parquet-truncated string bounds only widen the slice)
+    def slice(n: String, t: Tuples): Iterator[Int] = {
       val ords = t.kinds.map(order)
       def within(i: Int, v: Any): Boolean = {
         val r = row(n, keyCols(i))
@@ -106,8 +106,8 @@ private[sinks] object FileAdmission {
         if (r0.kind != t.kinds.head) (0, t.rows.length)
         else (bound(t.rows, decode(r0.kind, r0.min), ords.head, inclusive = true),
           bound(t.rows, decode(r0.kind, r0.max), ords.head, inclusive = false))
-      t.rows.iterator.slice(from, until)
-        .filter(k => keyCols.indices.tail.forall(i => within(i, k(i))))
+      (from until until).iterator
+        .filter(j => keyCols.indices.tail.forall(i => within(i, t.rows(j)(i))))
     }
     val names = files.map(_.getFileName.toString)
     val hull = names.filter { n =>
@@ -119,14 +119,16 @@ private[sinks] object FileAdmission {
       case Some(t) =>
         val (cname, kind) = CompositeKey.bloomId(keyCols, t.kinds)
         val covered = BloomManifest.coveredFiles(dir, cname, kind)
+        // each tuple's bytes, once for the manifest probe and every TSV
+        // bloom — and only if one of them covers a hull file
+        lazy val bytes = t.rows.map(CompositeKey.keyBytes(t.kinds, _))
         val manifest =
           if (!hull.exists(covered)) None
-          else BloomManifest.probe(spark, dir, cname, kind,
-            t.rows.map(CompositeKey.keyBytes(t.kinds, _)))
+          else BloomManifest.probe(spark, dir, cname, kind, bytes)
         val touched = hull.filter { n =>
           manifest.forall(p => !p.covered(n) || p.admitted(n)) &&
             blooms.get((n, cname)).filter(_.kind == kind).forall(b =>
-              slice(n, t).exists(k => b.mightContain(CompositeKey.keyBytes(t.kinds, k))))
+              slice(n, t).exists(j => b.mightContain(bytes(j))))
         }
         Admitted(touched.toSet, hull.size - touched.size, names.count(covered))
     }

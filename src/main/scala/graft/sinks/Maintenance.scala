@@ -579,7 +579,6 @@ object Maintenance {
     AtomicTable.deleteRecursively(JPaths.get(root))
     val (mRoot, cRoot, feedDir, ckpt) =
       (s"$root/maintained", s"$root/control", s"$root/feed", s"$root/ckpt")
-    JFiles.createDirectories(JPaths.get(feedDir))
     // staged ×2 (r22): `base` feeds the two layout commits, the maxId agg
     // and the three feed writes (≈8 evaluations of the customer scan);
     // `layout` additionally pins the range-sample + shuffle ONCE so the
@@ -610,28 +609,17 @@ object Maintenance {
             (col("id") * 7L + i).as("bal_c")))
         .withColumn(FeedSlices.SliceCol, lit(i))
     }.reduce(_ unionAll _), feedDir, StreamBatches)
-    val schema = Footers.readDir(spark, Paths.get(feedDir, "b0")).schema
     def upsert(b: DataFrame, c: DataFrame): DataFrame =
       b.join(c.select(col("id"), col("bal_c").as("nb")), Seq("id"), "full_outer")
         .select(col("id"), coalesce(col("nb"), col("bal_c")).as("bal_c"))
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$feedDir/b*")
-      .writeStream
-      .foreachBatch { (b: DataFrame, bid: Long) =>
-        val stable = b.localCheckpoint(true) // one eval, two tables
-        KeyedMerge.commitBatchKeyed(spark, mRoot, "s18-stream-m", bid, Seq("id"),
-          stable, upsert, maintainEvery = 1, maintainTargetBytes = targetBytes)
-        KeyedMerge.commitBatchKeyed(spark, cRoot, "s18-stream-c", bid, Seq("id"),
-          stable, upsert)
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", ckpt)
-      .start()
-    if (!q.awaitTermination(180000)) {
-      q.stop()
-      throw new IllegalStateException("s18 maintenance stream timed out")
-    }
+    FeedSlices.drain(spark, feedDir, ckpt) { (b, bid) =>
+      val stable = b.localCheckpoint(true) // one eval, two tables
+      val m = KeyedMerge.commitBatchKeyed(spark, mRoot, "s18-stream-m", bid,
+        Seq("id"), stable, upsert, maintainEvery = 1, maintainTargetBytes = targetBytes)
+      KeyedMerge.commitBatchKeyed(spark, cRoot, "s18-stream-c", bid, Seq("id"),
+        stable, upsert)
+      m
+    }.require(applied = StreamBatches, redelivered = 0)
     // premise on the drift MEASUREMENT, not the action string: the wide
     // merge outputs sit near the small-file boundary, and RangePartitioner's
     // per-run sampling can rank `compact` ahead of `recluster` on the

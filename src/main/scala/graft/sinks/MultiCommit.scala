@@ -11,9 +11,11 @@ import graft.Tables
   * (appId, batchId) stamp. The reference's ingest step writes poi + cell
   * state + snapshot together (google_places_ingester.py:516-555,
   * h3_scheduler.py:349-355 — Postgres gives it one transaction); the file
-  * protocol's replacement is the REDELIVERY CORRIDOR the two-table gates
-  * ([[Expectations.commitExpectBatch]], [[graft.streaming.IngestLoop]])
-  * hand-rolled, promoted here to a first-class N-table batch commit:
+  * protocol's replacement is the REDELIVERY CORRIDOR, one first-class
+  * N-table batch commit. Both two-table gates commit through it: the
+  * expectations gate ([[Expectations.commitExpectBatch]], two appends,
+  * quarantine first) and the upkeep ingest ([[graft.streaming.IngestLoop]],
+  * keyed poi upsert then ledger replace):
   *
   *  - every part commits through its table's OWN stamped primitive
   *    ([[AtomicTable.commitBatch]] / [[AtomicTable.commitAppendBatch]] /

@@ -12,9 +12,11 @@ class CdcApplySpec extends AnyFunSuite {
   private lazy val spark = Sessions.local(4)
   private val sf = "/root/testdata/sf0.01"
 
+  private def byId(rows: Array[org.apache.spark.sql.Row]) =
+    rows.map(r => r.getLong(0) -> (r.getString(1), if (r.isNullAt(2)) null else r.getLong(2))).toMap
+
   test("every change class lands with its MERGE semantics") {
-    val out = CdcApply.qS23CdcApply(spark, sf).collect()
-      .map(r => r.getLong(0) -> (r.getString(1), if (r.isNullAt(2)) null else r.getLong(2))).toMap
+    val out = byId(CdcApply.qS23CdcApply(spark, sf).collect())
     val base = Tables.customer(spark, sf)
       .select(col("c_custkey"), col("c_name"),
         graft.ops.Relational.quantize(col("c_acctbal"), 2).cast("long"))
@@ -47,47 +49,44 @@ class CdcApplySpec extends AnyFunSuite {
     // update and its later delete land in DIFFERENT micro-batches: per-batch
     // apply over the committed state must still net to the delete. Each
     // micro-batch commits through commitBatch (exactly-once under
-    // foreachBatch's at-least-once delivery).
-    import graft.sinks.AtomicTable
+    // foreachBatch's at-least-once delivery): after the engine forgets its
+    // last commit, the restarted stream redelivers that batch and the
+    // manifest stamp skips it without a new table version.
+    import graft.sinks.{AtomicTable, FeedSlices}
     val tmp = java.nio.file.Files.createTempDirectory("graftcdc").toString
-    val (feedDir, root) = (s"$tmp/feed", s"$tmp/table")
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(feedDir))
-    val base = Tables.customer(spark, sf)
+    val (feedDir, root, ckpt) = (s"$tmp/feed", s"$tmp/table", s"$tmp/ckpt")
+    AtomicTable.commit(Tables.customer(spark, sf)
       .select(col("c_custkey").as("id"), col("c_name").as("name"),
-        graft.ops.Relational.quantize(col("c_acctbal"), 2).cast("long").as("bal_c"))
-    AtomicTable.commit(base, root)
+        graft.ops.Relational.quantize(col("c_acctbal"), 2).cast("long").as("bal_c")), root)
     val feed = CdcApply.changeFeed(spark, sf)
-    Seq(
-      feed.filter(col("seq") === 1 && col("id") % 2 === 0),
-      feed.filter(col("seq") === 1 && col("id") % 2 === 1),
-      feed.filter(col("seq") === 2)
-    ).zipWithIndex.foreach { case (slice, i) =>
-      val f = s"$feedDir/b$i"
-      slice.coalesce(1).write.mode("overwrite").parquet(f)
-      // mtime order = delivery order under maxFilesPerTrigger=1
-      val dir = java.nio.file.Paths.get(f)
-      java.nio.file.Files.list(dir).forEach(p =>
-        java.nio.file.Files.setLastModifiedTime(p,
-          java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L)))
+    FeedSlices.writeSlices(feed.withColumn(FeedSlices.SliceCol,
+      when(col("seq") === 2, 2).otherwise(col("id") % 2).cast("int")), feedDir, 3)
+    def run(): FeedSlices.Drained = FeedSlices.drain(spark, feedDir, ckpt) { (b, bid) =>
+      Option.when(AtomicTable.commitBatch(
+        CdcApply.apply(AtomicTable.read(spark, root), b), root, "cdc-stream", bid))(bid)
     }
-    val schema = spark.read.parquet(s"$feedDir/b0").schema
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$feedDir/b*")
-      .writeStream
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, bid: Long) =>
-        assert(AtomicTable.commitBatch(
-          CdcApply.apply(AtomicTable.read(spark, root), b), root, "cdc-stream", bid))
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .start()
-    assert(q.awaitTermination(120000), "AvailableNow stream timed out")
-    val streamed = AtomicTable.read(spark, root).collect()
-      .map(r => r.getLong(0) -> (r.getString(1), if (r.isNullAt(2)) null else r.getLong(2))).toMap
-    val batch = CdcApply.qS23CdcApply(spark, sf).collect()
-      .map(r => r.getLong(0) -> (r.getString(1), if (r.isNullAt(2)) null else r.getLong(2))).toMap
+    run().require(applied = 3, redelivered = 0)
+    val streamed = byId(AtomicTable.read(spark, root).collect())
+    val batch = byId(CdcApply.qS23CdcApply(spark, sf).collect())
     assert(streamed == batch,
       s"streamed != batch; first diff: ${(streamed.toSet diff batch.toSet).take(3)}")
+    val v = AtomicTable.currentVersion(root)
+    FeedSlices.dropCommit(ckpt, 2)
+    assert(run() == FeedSlices.Drained(0, 1))
+    assert(AtomicTable.currentVersion(root) == v, "the redelivered batch committed again")
+  }
+
+  test("a throwing kernel surfaces from drain and leaves no stream running") {
+    import graft.sinks.FeedSlices
+    val tmp = java.nio.file.Files.createTempDirectory("graftdrain").toString
+    FeedSlices.writeSlice(spark.range(3).toDF("id"), s"$tmp/feed", 0)
+    val e = intercept[Exception] {
+      FeedSlices.drain(spark, s"$tmp/feed", s"$tmp/ckpt") { (_, _) =>
+        throw new IllegalStateException("kernel failed")
+      }
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => Option(c.getMessage).exists(_.contains("kernel failed"))), e.toString)
+    assert(spark.streams.active.isEmpty, "the failed query is still active")
   }
 }

@@ -527,10 +527,10 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   /** Stage day `i`'s changeset (poi batch + snapshot batch, kind-tagged and
-    * null-padded to one schema) as a single feed file whose mtime drives
-    * FileStreamSource order — shared by the composed-parity and restart
-    * tests so the fixture cannot drift between them. */
-  private def writePipeDayFile(tmp: String, feedDir: String,
+    * null-padded to one schema) as feed slice `b<i>` — shared by the
+    * composed-parity and restart tests so the fixture cannot drift between
+    * them. */
+  private def writePipeDay(feedDir: String,
       dayChangesets: Seq[(String, org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)],
       i: Int): Unit = {
     val nullStr = lit(null).cast("string")
@@ -548,101 +548,35 @@ class StreamingSpec extends AnyFunSuite {
       lit(null).cast("long").as("reviews_count"), nullTs.as("updated_at"),
       col("poi_id"), col("source_id"), col("rating_value"),
       col("reviews_count").cast("long").as("rc_snap"), col("captured_at"))
-    val staging = s"$tmp/stage$i"
-    p.unionByName(s).coalesce(1).write.parquet(staging)
-    val part = new java.io.File(staging).listFiles()
-      .find(_.getName.endsWith(".parquet")).get.toPath
-    val dest = java.nio.file.Paths.get(feedDir, f"day$i%02d.parquet")
-    java.nio.file.Files.move(part, dest)
-    // mtime drives FileStreamSource order — make it strictly increasing
-    java.nio.file.Files.setLastModifiedTime(dest,
-      java.nio.file.attribute.FileTime.fromMillis(1000000L + i * 60000L))
+    graft.sinks.FeedSlices.writeSlice(p.unionByName(s), feedDir, i)
   }
 
   test("volume: composed AvailableNow cycle == batch pipe_incremental_vol") {
     // VERDICT r11 item 5: the stages are individually stream-proven, but the
     // COMPOSED cycle (day batches -> merge -> snapshot suppression -> rescore
     // selection) needed an end-to-end streaming run. Shape: the two day
-    // changesets land as one file each in a feed directory; a
-    // Trigger.AvailableNow file stream with maxFilesPerTrigger=1 delivers one
-    // day per micro-batch IN ORDER, and foreachBatch applies the exact
-    // MergeSink kernels against AtomicTable-committed state — the deployed
-    // daily-cadence topology (run_pipeline.py:549-581) as a stream. Parity:
-    // the final selection over the streamed state must be row-identical to
-    // the all-batch qIncrementalPipelineVol at sf0.01 volume.
-    import org.apache.spark.sql.functions._
-    import graft.sinks.{AtomicTable, MergeSink, SinkQueries}
+    // changesets land as one feed slice each; the AvailableNow corridor
+    // (FeedSlices.drain, one slice per micro-batch IN ORDER) applies the
+    // exact MergeSink kernels against AtomicTable-committed state — the
+    // deployed daily-cadence topology (run_pipeline.py:549-581) as a stream.
+    // Parity: the final selection over the streamed state must be
+    // row-identical to the all-batch qIncrementalPipelineVol at sf0.01 volume.
+    import graft.sinks.{AtomicTable, FeedSlices, SinkQueries}
     val sf = "/root/testdata/sf0.01"
     val tmp = java.nio.file.Files.createTempDirectory("graftpipe").toString
     val (feedDir, stateRoot, snapRoot) = (s"$tmp/feed", s"$tmp/state", s"$tmp/snaps")
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(feedDir))
-
-    // bootstrap: base state and base snapshots as committed tables
     val (state0, snap0) = SinkQueries.pipeVolBase(spark, sf)
     AtomicTable.commit(state0, stateRoot)
     AtomicTable.commit(snap0, snapRoot)
-
-    // one unified changeset file per day (poi batch + snapshot batch, tagged)
-    val nullTs = lit(null).cast("timestamp")
     val dayChangesets = SinkQueries.pipeVolDays(spark, sf)
-    dayChangesets.indices.foreach(writePipeDayFile(tmp, feedDir, dayChangesets, _))
-
-    val feedSchema = spark.read.parquet(feedDir).schema
+    dayChangesets.indices.foreach(writePipeDay(feedDir, dayChangesets, _))
     val daysSeen = scala.collection.mutable.ArrayBuffer[String]()
-    val q = spark.readStream.schema(feedSchema)
-      .option("maxFilesPerTrigger", "1").parquet(feedDir)
-      .writeStream
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, bid: Long) =>
-        val days = b.select("day").distinct().collect().map(_.getString(0))
-        assert(days.length == 1, s"micro-batch mixed days: ${days.toSeq}")
-        val day = days.head
-        daysSeen += day
-        val pois = b.filter(col("kind") === "poi")
-          .select(col("google_place_id"), col("name"), col("rating"),
-            col("reviews_count"), col("updated_at"))
-          .withColumn("first_ingested_at", nullTs)
-          .withColumn("last_scored_at", nullTs)
-        // commitBatchKeyed, not commit: foreachBatch is at-least-once, and
-        // the manifest-recorded batch id makes a redelivered micro-batch a
-        // no-op (exercised end-to-end by the restart test below); the keyed
-        // form additionally rewrites only the files the day's keys intersect
-        // — the deployed shape after r18's pruned-merge rebase
-        assert(graft.sinks.KeyedMerge.commitBatchKeyed(spark, stateRoot,
-          "pipe-cycle", bid, Seq("google_place_id"), pois,
-          (base: org.apache.spark.sql.DataFrame, inc: org.apache.spark.sql.DataFrame) =>
-            MergeSink.upsert(base, inc, "google_place_id",
-              SinkQueries.pipeVolUpdateCols, asOf = day)).nonEmpty,
-          s"fresh batch $bid skipped as redelivered")
-        val snapBatch = b.filter(col("kind") === "snap")
-          .select(col("poi_id"), col("source_id"), col("rating_value"),
-            col("rc_snap").as("reviews_count"), col("captured_at"))
-        assert(AtomicTable.commitBatch({
-          val snaps = AtomicTable.read(spark, snapRoot)
-          snaps.unionByName(MergeSink.conditionalAppend(snaps, snapBatch))
-        }, snapRoot, "pipe-cycle", bid), s"fresh batch $bid skipped as redelivered")
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .start()
-    q.awaitTermination(120000)
+    FeedSlices.drain(spark, feedDir, s"$tmp/ckpt")(
+      pipeDay(stateRoot, snapRoot, "pipe-cycle", daysSeen))
+      .require(applied = 2, redelivered = 0)
     assert(daysSeen.toSeq == Seq(SinkQueries.Day1V, SinkQueries.Day2V),
       s"days processed out of order: $daysSeen")
-
-    // the streamed state's rescoring selection vs the all-batch dataflow;
-    // reviews_count comes back long from parquet — align the batch side
-    val streamed = SinkQueries.rescoreSelection(
-      AtomicTable.read(spark, stateRoot), AtomicTable.read(spark, snapRoot),
-      SinkQueries.Day2V)
-      .withColumn("reviews_count", col("reviews_count").cast("long"))
-      .orderBy("rnk").collect()
-    val batch = SinkQueries.qIncrementalPipelineVol(spark, sf)
-      .withColumn("reviews_count", col("reviews_count").cast("long"))
-      .orderBy("rnk").collect()
-    assert(streamed.length == batch.length && streamed.length > 100,
-      s"stream=${streamed.length} batch=${batch.length}")
-    assert(streamed.sameElements(batch),
-      s"first diff: ${streamed.zip(batch).find { case (a, b) => a != b }}")
+    assertPipeParity(stateRoot, snapRoot, sf)
   }
 
   test("composed cycle restart: checkpoint resume + redelivered batch no-op") {
@@ -652,61 +586,24 @@ class StreamingSpec extends AnyFunSuite {
     // no-op against the state tables (AtomicTable.commitBatch's manifest-id
     // skip). Shape: run the AvailableNow cycle with only day 1 present, prove
     // a forced redelivery of its batch id does not even evaluate its frame,
-    // then drop day 2's file and restart on the SAME checkpoint — the resumed
-    // run processes day 2 alone and the final state is row-identical to the
-    // all-batch dataflow.
-    import org.apache.spark.sql.functions._
-    import graft.sinks.{AtomicTable, MergeSink, SinkQueries}
+    // then drop day 2's slice and restart on the SAME checkpoint — the
+    // resumed run processes day 2 alone and the final state is row-identical
+    // to the all-batch dataflow.
+    import graft.sinks.{AtomicTable, FeedSlices, SinkQueries}
     val sf = "/root/testdata/sf0.01"
     val tmp = java.nio.file.Files.createTempDirectory("graftrestart").toString
     val (feedDir, stateRoot, snapRoot) = (s"$tmp/feed", s"$tmp/state", s"$tmp/snaps")
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(feedDir))
-
     val (state0, snap0) = SinkQueries.pipeVolBase(spark, sf)
     AtomicTable.commit(state0, stateRoot)
     AtomicTable.commit(snap0, snapRoot)
-
-    val nullTs = lit(null).cast("timestamp")
     val dayChangesets = SinkQueries.pipeVolDays(spark, sf)
-    def writeDayFile(i: Int): Unit = writePipeDayFile(tmp, feedDir, dayChangesets, i)
-
     val daysSeen = scala.collection.mutable.ArrayBuffer[String]()
-    def runCycle(feedSchema: org.apache.spark.sql.types.StructType): Unit = {
-      val q = spark.readStream.schema(feedSchema)
-        .option("maxFilesPerTrigger", "1").parquet(feedDir)
-        .writeStream
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, bid: Long) =>
-          val day = b.select("day").distinct().collect().map(_.getString(0)).head
-          daysSeen += day
-          val pois = b.filter(col("kind") === "poi")
-            .select(col("google_place_id"), col("name"), col("rating"),
-              col("reviews_count"), col("updated_at"))
-            .withColumn("first_ingested_at", nullTs)
-            .withColumn("last_scored_at", nullTs)
-          graft.sinks.KeyedMerge.commitBatchKeyed(spark, stateRoot,
-            "pipe-restart", bid, Seq("google_place_id"), pois,
-            (base: org.apache.spark.sql.DataFrame, inc: org.apache.spark.sql.DataFrame) =>
-              MergeSink.upsert(base, inc, "google_place_id",
-                SinkQueries.pipeVolUpdateCols, asOf = day))
-          val snapBatch = b.filter(col("kind") === "snap")
-            .select(col("poi_id"), col("source_id"), col("rating_value"),
-              col("rc_snap").as("reviews_count"), col("captured_at"))
-          AtomicTable.commitBatch({
-            val snaps = AtomicTable.read(spark, snapRoot)
-            snaps.unionByName(MergeSink.conditionalAppend(snaps, snapBatch))
-          }, snapRoot, "pipe-restart", bid)
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .start()
-      q.awaitTermination(120000)
-    }
+    def runCycle(): FeedSlices.Drained = FeedSlices.drain(spark, feedDir, s"$tmp/ckpt")(
+      pipeDay(stateRoot, snapRoot, "pipe-restart", daysSeen))
 
     // run 1: only day 1 exists
-    writeDayFile(0)
-    val feedSchema = spark.read.parquet(feedDir).schema
-    runCycle(feedSchema)
+    writePipeDay(feedDir, dayChangesets, 0)
+    runCycle().require(applied = 1, redelivered = 0)
     assert(daysSeen.toSeq == Seq(SinkQueries.Day1V), s"run 1 saw $daysSeen")
     assert(AtomicTable.lastBatchId(stateRoot).contains(0L))
     val stateVerAfterRun1 = AtomicTable.currentVersion(stateRoot)
@@ -719,13 +616,55 @@ class StreamingSpec extends AnyFunSuite {
     assert(!AtomicTable.commitBatch(poisoned, stateRoot, "pipe-restart", 0L))
     assert(AtomicTable.currentVersion(stateRoot) == stateVerAfterRun1)
 
-    // run 2: day 2 lands, SAME checkpoint — resume must skip day 1's file
-    writeDayFile(1)
-    runCycle(feedSchema)
+    // run 2: day 2 lands, SAME checkpoint — resume must skip day 1's slice
+    writePipeDay(feedDir, dayChangesets, 1)
+    runCycle().require(applied = 1, redelivered = 0)
     assert(daysSeen.toSeq == Seq(SinkQueries.Day1V, SinkQueries.Day2V),
       s"resume re-processed or skipped a day: $daysSeen")
     assert(AtomicTable.lastBatchId(stateRoot).contains(1L))
+    assertPipeParity(stateRoot, snapRoot, sf)
+  }
 
+  /** One day micro-batch of the composed cycle: the day's poi batch upserts
+    * the state through commitBatchKeyed (foreachBatch is at-least-once; the
+    * manifest-recorded batch id makes a redelivery a no-op, and the keyed
+    * form rewrites only the files the day's keys intersect), and its
+    * snapshot batch appends past suppression through commitBatch. Some(day)
+    * when both tables applied, None when both skipped. */
+  private def pipeDay(stateRoot: String, snapRoot: String, appId: String,
+      daysSeen: scala.collection.mutable.Buffer[String])(
+      b: org.apache.spark.sql.DataFrame, bid: Long): Option[String] = {
+    import graft.sinks.{AtomicTable, KeyedMerge, MergeSink, SinkQueries}
+    val days = b.select("day").distinct().collect().map(_.getString(0))
+    assert(days.length == 1, s"micro-batch mixed days: ${days.toSeq}")
+    val day = days.head
+    daysSeen += day
+    val nullTs = lit(null).cast("timestamp")
+    val pois = b.filter(col("kind") === "poi")
+      .select(col("google_place_id"), col("name"), col("rating"),
+        col("reviews_count"), col("updated_at"))
+      .withColumn("first_ingested_at", nullTs)
+      .withColumn("last_scored_at", nullTs)
+    val state = KeyedMerge.commitBatchKeyed(spark, stateRoot, appId, bid,
+      Seq("google_place_id"), pois,
+      (base: org.apache.spark.sql.DataFrame, inc: org.apache.spark.sql.DataFrame) =>
+        MergeSink.upsert(base, inc, "google_place_id",
+          SinkQueries.pipeVolUpdateCols, asOf = day)).isDefined
+    val snapBatch = b.filter(col("kind") === "snap")
+      .select(col("poi_id"), col("source_id"), col("rating_value"),
+        col("rc_snap").as("reviews_count"), col("captured_at"))
+    val snaps = AtomicTable.commitBatch({
+      val snaps = AtomicTable.read(spark, snapRoot)
+      snaps.unionByName(MergeSink.conditionalAppend(snaps, snapBatch))
+    }, snapRoot, appId, bid)
+    assert(state == snaps, s"batch $bid: state applied=$state, snapshots applied=$snaps")
+    Option.when(state)(day)
+  }
+
+  /** The streamed state's rescoring selection == the all-batch dataflow
+    * (reviews_count comes back long from parquet — align the batch side). */
+  private def assertPipeParity(stateRoot: String, snapRoot: String, sf: String): Unit = {
+    import graft.sinks.{AtomicTable, SinkQueries}
     val streamed = SinkQueries.rescoreSelection(
       AtomicTable.read(spark, stateRoot), AtomicTable.read(spark, snapRoot),
       SinkQueries.Day2V)
